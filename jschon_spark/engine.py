@@ -111,6 +111,7 @@ class CompiledSchema:
         if prefer_variant:
             from jschon_spark.lowering.variant import (
                 VariantLowerer,
+                with_variant_verdicts,
             )
 
             key = (json_col, self.base_uri)
@@ -126,18 +127,7 @@ class CompiledSchema:
                     hit = CannotLower
                 self._json_cache[key] = hit
             if hit is not CannotLower:
-                passed, violations = hit
-                # parse materialized as its own projection so every
-                # keyword references the variant COLUMN (parsed once —
-                # see lowering/variant.validate_json_column_variant)
-                return (
-                    df.withColumn(
-                        "__variant_doc", F.try_parse_json(F.col(json_col))
-                    )
-                    .withColumn("passed", passed)
-                    .withColumn("violations", violations)
-                    .drop("__variant_doc")
-                )
+                return with_variant_verdicts(df, json_col, hit)
         return validate_json_column(
             df, json_col, self.schema, self._store, self.assert_formats
         )

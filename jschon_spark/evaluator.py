@@ -152,7 +152,7 @@ _DATE_RE = re.compile(r"^[0-9]{4}-[0-9]{2}-[0-9]{2}$")
 # RFC 3339 ranges (round 5): hour 00-23, minute 00-59, second 00-60
 # (60 = leap second, accepted at any offset — the pragmatic RFC
 # grammar; strictly it only occurs at 23:59:60 UTC), offset hour/min
-# range-checked too. Keep in sync with ColumnLowerer._FORMAT_REGEX.
+# range-checked too. Keep in sync with _FORMAT_REGEX in lowering/columns.py.
 _TIME_RE = re.compile(
     r"^([01][0-9]|2[0-3]):[0-5][0-9]:([0-5][0-9]|60)(\.[0-9]+)?"
     r"([Zz]|[+-]([01][0-9]|2[0-3]):[0-5][0-9])$"

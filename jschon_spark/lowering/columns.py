@@ -1,20 +1,22 @@
 """Lower a JSON Schema onto typed Spark columns as pure Column algebra.
 
-This is the scale path: every keyword becomes a ``pyspark.sql.Column``
-predicate plus an ``array<struct>`` of violation records, so one
+This is the scale path: :class:`ColumnLowerer` runs the shared keyword
+walker (lowering/keywords.py) over a :class:`TypedNode`, so one
 ``df.select`` evaluates the whole schema in a single
 whole-stage-codegen'd scan — no shuffle, no Python.
 
-Keyword semantics follow the reference implementation
-(/root/reference/jschon/vocabulary/validation.py, applicator.py,
-core.py) re-derived for columnar execution:
+What the typed node adds to the walker's keyword semantics:
 
 * instance-type gating (jsonschema.py:208-211): the Spark column type
-  is known at compile time, so wrong-typed keywords fold to
-  ``lit(True)`` before Catalyst ever sees them.
+  is known at compile time, so wrong-typed keywords are never emitted
+  and wrong-typed enum/const fold to constants before Catalyst ever
+  sees them.
 * NULL convention: a NULL **struct field** is an *absent* property
   (``properties`` then doesn't apply, ``required`` fails); a NULL
-  **array element** is JSON ``null``.
+  **array element** or **map value** is JSON ``null``.
+* struct fields are enumerated at compile time (patternProperties,
+  additionalProperties and propertyNames resolve per field name), and
+  ``unevaluated*`` use the walker's static coverage algebra.
 * Keywords the expression algebra can't faithfully express raise
   :class:`CannotLower`; the engine then falls back to the vectorized
   batch evaluator (lowering/batch.py) for the whole schema.
@@ -22,7 +24,7 @@ core.py) re-derived for columnar execution:
 
 from __future__ import annotations
 
-import re
+from functools import cached_property
 from typing import Any
 
 from pyspark.sql import Column
@@ -36,73 +38,15 @@ from jschon_spark.evaluator import (
     URI_REFERENCE_PATTERN,
     URI_TEMPLATE_PATTERN,
 )
-from jschon_spark.schema.catalog import SchemaCatalog, pointer_escape
-
-VIOLATION_TYPE = T.StructType(
-    [
-        T.StructField("keyword", T.StringType()),
-        T.StructField("instance_path", T.StringType()),
-        T.StructField("keyword_path", T.StringType()),
-        T.StructField("value", T.StringType()),
-        T.StructField("error", T.StringType()),
-    ]
+from jschon_spark.lowering.keywords import (  # noqa: F401 - re-exported
+    VIOLATION_DDL,
+    VIOLATION_TYPE,
+    CannotLower,
+    KeywordWalker,
+    _EMPTY_ARR,
+    _check,
+    dec18_exact,
 )
-VIOLATION_DDL = (
-    "array<struct<keyword:string,instance_path:string,"
-    "keyword_path:string,value:string,error:string>>"
-)
-
-
-class CannotLower(Exception):
-    """Schema feature outside the Column-expression subset."""
-
-
-# Regex constructs whose JAVA (rlike) reading diverges from Python
-# `re` (the reference semantics, jschon/vocabulary/validation.py:
-# 132-142): named groups / lookbehind syntax, \A/\Z anchors, AND the
-# perl classes \w \W \d \D \s \S \b \B — Java reads those ASCII-only
-# while Python reads them unicode-wide (measured: rlike '^\\w+$'
-# rejects 'héllo', '^\\d+$' rejects arabic-indic digits, '\\s'
-# misses U+00A0; round 6). Patterns using any of them route to the
-# batch evaluator, whose Python `re` IS the reference dialect. The
-# scan deliberately over-matches a literal '\\\\d' (escaped
-# backslash + d) — a false positive only costs the fast path.
-JAVA_INCOMPATIBLE = re.compile(r"\(\?P[<=!]|\\Z|\\A|\(\?<|\\[wWdDsSbB]")
-
-
-def check_regex_dialect(pattern: str) -> None:
-    """rlike is Java regex; refuse patterns whose dialect diverges
-    from Python `re` (shared by the typed and variant lowerings)."""
-    if JAVA_INCOMPATIBLE.search(pattern):
-        raise CannotLower(f"regex dialect risk in pattern {pattern!r} -> batch")
-    re.compile(pattern)  # must at least be a valid Python regex
-
-
-def dec18_exact(bound: float | int) -> bool:
-    """True iff ``bound`` is exactly representable in decimal(38,18).
-
-    Spark's double->decimal cast takes the shortest repr (=
-    ``Decimal(repr(b))``), so the decimal compare is only faithful when
-    that repr survives quantization to 18 decimal places: a tiny bound
-    like 2e-20 rounds to 0E-18 and would collapse distinct values, and
-    magnitudes >= 1e20 overflow the 20 integer digits. Integer bounds
-    within long range are always exact (scale 0).
-    """
-    import decimal
-
-    if isinstance(bound, int):
-        return abs(bound) < 2 ** 63
-    d = decimal.Decimal(repr(bound))
-    if not d.is_finite() or abs(d) >= decimal.Decimal(10) ** 20:
-        return False
-    # 38 significant digits exceed the default context precision (28):
-    # quantizing 1e18 to 18dp needs 37 digits and must not raise
-    with decimal.localcontext() as ctx:
-        ctx.prec = 60
-        try:
-            return d == d.quantize(decimal.Decimal("1e-18"))
-        except decimal.InvalidOperation:
-            return False
 
 
 def spark_json_type(dtype: T.DataType) -> str:
@@ -127,84 +71,263 @@ def spark_json_type(dtype: T.DataType) -> str:
     raise CannotLower(f"no JSON type for Spark type {dtype}")
 
 
-def _static_type_match(json_t: str, wanted: list[str]) -> bool:
-    if json_t == "integer":
-        return bool({"integer", "number"} & set(wanted))
-    if json_t == "number":
-        # a float column *may* hold whole values: integer acceptance is
-        # runtime (col == floor(col)), handled by the caller
-        return bool({"number", "integer"} & set(wanted))
-    return json_t in wanted
+def _enum_compatible(v, json_t: str) -> bool:
+    from jschon_spark.evaluator import json_type
+
+    if v is None:
+        return True
+    t = json_type(v)
+    if json_t in ("integer", "number"):
+        return t == "number"
+    return t == json_t
 
 
-def _EMPTY_ARR() -> Column:
-    # built lazily: Column construction needs an active SparkSession
-    return F.array().cast(VIOLATION_DDL)
+class TypedNode:
+    """A value read from a typed Spark column: its JSON type is the
+    dtype's, so type tests fold at compile time and the only runtime
+    case is SQL NULL (JSON null, or an absent struct field)."""
 
-
-def _violation(keyword: str, ipath: Column, kpath: str, value: Column, error: str) -> Column:
-    return F.struct(
-        F.lit(keyword).alias("keyword"),
-        ipath.alias("instance_path"),
-        F.lit(kpath).alias("keyword_path"),
-        F.substring(value.cast("string"), 1, 256).alias("value"),
-        F.lit(error).alias("error"),
-    )
-
-
-def _check(pred: Column, keyword: str, ipath: Column, kpath: str, value: Column, error: str):
-    """(valid, violations) for one leaf assertion; NULL pred counts as fail."""
-    ok = F.coalesce(pred, F.lit(False))
-    viol = F.when(ok, _EMPTY_ARR()).otherwise(
-        F.array(_violation(keyword, ipath, kpath + "/" + keyword, value, error))
-    )
-    return ok, viol
-
-
-def _concat(*viols: Column) -> Column:
-    vs = [v for v in viols if v is not None]
-    if not vs:
-        return _EMPTY_ARR()
-    if len(vs) == 1:
-        return vs[0]
-    return F.concat(*vs)
-
-
-class ColumnLowerer:
-    """Compile one schema document into (valid, violations) Columns."""
-
-    def __init__(self, catalog: SchemaCatalog, assert_formats: bool = False) -> None:
-        self.catalog = catalog
-        self.assert_formats = assert_formats
-        self._ref_stack: list[int] = []
-        # root (schema, base) captured at lower(); the dynamic-ref
-        # closure preload runs once, on first $dynamicRef/$recursiveRef
-        self._root: tuple[Any, str] | None = None
-        self._closure_done = False
-
-    def _dynamic_target(self, keyword: str, ref: Any, base_uri: str):
-        """Static (target, tbase) for a $dynamicRef/$recursiveRef, or
-        CannotLower when the runtime rebinding is genuinely dynamic
-        (round 5). Semantics mirror evaluator.py's bookending +
-        outermost-scope rebind: a ref whose rebinding provably lands on
-        its initial resolution is a plain $ref and lowers inline."""
-        if not isinstance(ref, str):
-            raise CannotLower(f"non-string {keyword} -> batch")
-        if not self._closure_done:
-            if self._root is not None:
-                self.catalog.preload_ref_closure(*self._root)
-            self._closure_done = True
-        resolver = (
-            self.catalog.static_dynamic_target
-            if keyword == "$dynamicRef"
-            else self.catalog.static_recursive_target
+    def __init__(self, col: Column, dtype: T.DataType) -> None:
+        self.col = col
+        self.dtype = dtype
+        # struct fields by name (compile-time key set); None for maps
+        self.fields = (
+            {f_.name: f_ for f_ in dtype.fields}
+            if isinstance(dtype, T.StructType) else None
         )
-        got = resolver(ref, base_uri)
-        if got is None:
-            raise CannotLower(f"{keyword} {ref!r} rebinds dynamically -> batch")
-        return got
 
-    # -- entry ------------------------------------------------------------
+    def admit(self, schema: dict, dialect: str) -> None:
+        if isinstance(self.dtype, T.MapType) and not isinstance(
+            self.dtype.keyType, T.StringType
+        ):
+            raise CannotLower("object lowering needs string map keys")
+        self.json_t = spark_json_type(self.dtype)
+        if self.json_t == "array" and isinstance(schema.get("items"), list):
+            # 2019-09 tuple items stay on the batch evaluator: no typed
+            # differential covers them yet (the variant path has one)
+            raise CannotLower("tuple items on a typed array -> batch")
+
+    def may_be(self, json_t: str) -> bool:
+        if json_t == "number":
+            return self.json_t in ("number", "integer")
+        return self.json_t == json_t
+
+    def is_type(self, json_t: str) -> Column:
+        return self.col.isNotNull()
+
+    def guard(self, json_t: str, pred: Column) -> Column:
+        # Type-gated assertions (2020-12 core §7.6: each assertion
+        # applies only to instances of its type) pass vacuously on JSON
+        # null instances — a NULL array element / map value / column is
+        # JSON null, so e.g. maxLength on null is satisfied.
+        return F.when(self.col.isNull(), F.lit(True)).otherwise(pred)
+
+    @property
+    def value(self) -> Column:
+        return self.col
+
+    @cached_property
+    def string(self) -> Column:
+        if isinstance(self.dtype, T.TimestampType):
+            return F.date_format(self.col, "yyyy-MM-dd'T'HH:mm:ss'Z'")
+        if isinstance(self.dtype, T.DateType):
+            return F.date_format(self.col, "yyyy-MM-dd")
+        return self.col
+
+    # -- type / enum / const --------------------------------------------------
+    def type_pred(self, wanted: list) -> Column:
+        json_t = self.json_t
+        if json_t == "number" and "integer" in wanted and "number" not in wanted:
+            # fmod, not floor: floor(double) yields BIGINT, which under
+            # ANSI mode ERRORS past 2^63 (1e30 IS an integer); fmod is
+            # exact at any magnitude and sign-preserving (-1e-20 % 1 =
+            # -1e-20, not integer)
+            pred = (self.col % F.lit(1.0)) == 0
+        elif json_t in ("integer", "number"):
+            # a float column *may* hold whole values: integer acceptance
+            # is the runtime branch above
+            pred = F.lit(bool({"integer", "number"} & set(wanted)))
+        else:
+            pred = F.lit(json_t in wanted)
+        # NULL value = JSON null for non-struct-field positions
+        return F.when(self.col.isNull(), F.lit("null" in wanted)).otherwise(pred)
+
+    def enum_pred(self, values: list) -> Column:
+        if self.json_t not in ("string", "number", "integer", "boolean"):
+            raise CannotLower(f"enum over {self.json_t} column requires batch evaluator")
+        # compatible members are scalars (None included) for these types
+        scalars = [v for v in values if _enum_compatible(v, self.json_t)]
+        pred = self.col.isin(*scalars) if scalars else F.lit(False)
+        if any(v is None for v in values):
+            pred = pred | self.col.isNull()
+        return pred
+
+    def const_pred(self, c: Any) -> Column:
+        if isinstance(c, (list, dict)):
+            raise CannotLower("compound const requires batch evaluator")
+        if c is None:
+            return self.col.isNull()
+        if not _enum_compatible(c, self.json_t):
+            # a scalar const of a different JSON type can never match
+            # this column's static type — fold to always-fail (struct ==
+            # false would not even analyze; found by the round-4 random
+            # differential)
+            return F.lit(False)
+        return self.col == F.lit(c)
+
+    # -- numbers -------------------------------------------------------------------
+    def multiple_of(self, m) -> Column:
+        col = self.col
+        if isinstance(m, int) and self.json_t == "integer":
+            return col % F.lit(m) == 0
+        # exact decimal modulus, mirroring Python Decimal math
+        # (reference jschon/vocabulary/validation.py:66-75).
+        # try_cast: ANSI mode errors a plain cast when a double value
+        # overflows decimal(38,12); beyond that magnitude fall back to a
+        # double modulus
+        dec_v = col.try_cast(T.DecimalType(38, 12))
+        dec_ok = (
+            dec_v % F.lit(m).cast(T.DecimalType(38, 12))
+        ) == F.lit(0).cast(T.DecimalType(38, 12))
+        # the decimal tier must ROUND-TRIP the value: a 1e-20 double
+        # casts to a non-NULL 0E-12, which is a multiple of everything.
+        # And %, not pmod, in the fallback — pmod's +m re-add rounds
+        # tiny negatives onto m exactly (fmod is exact, -0.0 == 0)
+        dec_exact = dec_v.isNotNull() & (dec_v.cast(T.DoubleType()) == col)
+        return F.when(dec_exact, dec_ok).otherwise((col % F.lit(float(m))) == 0)
+
+    def compare(self, op, bound) -> Column:
+        if isinstance(bound, float) and self.json_t == "integer":
+            # long-vs-double comparison coerces the COLUMN to double,
+            # losing precision above 2^53 (10^18-1 < 1e18 must hold;
+            # after coercion they compare equal). Compare in decimal —
+            # 18-dp rounding of the bound is finer than the double gap
+            # everywhere a long is exact, and beyond-long-range bounds
+            # fold to a compile-time constant.
+            if abs(bound) >= 1e19:
+                return F.lit(op(0, bound))
+            if dec18_exact(bound):
+                dec = T.DecimalType(38, 18)
+                return op(self.col.cast(dec), F.lit(bound).cast(dec))
+            # else: bound needs >18dp (tiny magnitudes like 2e-20 would
+            # round to 0E-18) — keep the plain long-vs-double coercion.
+            # Such bounds always have |b| < 1, and rounding a >2^53 long
+            # by 1 ulp (>=2) can never cross a sub-unit bound, so the
+            # double compare stays verdict-exact.
+        return op(self.col, F.lit(bound))
+
+    # -- strings -------------------------------------------------------------------
+    def format_check(self, fmt: str, ipath: Column, kpath: str):
+        scol = self.string
+        pred = format_pred(
+            fmt, scol,
+            trusted_calendar=isinstance(self.dtype, (T.TimestampType, T.DateType)),
+        )
+        if pred is not None:
+            fv, fw = _check(pred, "format", ipath, kpath, scol, f"not a valid {fmt}")
+        else:
+            from jschon_spark.evaluator import FORMAT_VALIDATORS
+            from jschon_spark.functions.registry import FORMAT_REGISTRY
+
+            entry = FORMAT_REGISTRY.get(fmt)
+            if entry is not None:
+                if entry.column_fn is None:
+                    raise CannotLower(f"format {fmt!r} has no Column lowering -> batch")
+                fv, fw = _check(entry.column_fn(scol), "format", ipath, kpath, scol,
+                                f"not a valid {fmt}")
+            elif fmt in FORMAT_VALIDATORS:
+                # built-in python validator without a Column form -> batch
+                raise CannotLower(f"format {fmt!r} needs the batch evaluator")
+            else:
+                # unknown format: annotation only, never asserts
+                # (reference behavior, format.py:14-32)
+                fv, fw = F.lit(True), _EMPTY_ARR()
+        return self.guard("string", fv), F.when(self.col.isNull(), _EMPTY_ARR()).otherwise(fw)
+
+    # -- arrays --------------------------------------------------------------------
+    @cached_property
+    def size(self) -> Column:
+        return F.size(self.col)
+
+    def unique_items(self) -> Column:
+        # compound elements are fine: a typed array has ONE element
+        # type, so the reference's cross-type numeric equality (1 vs
+        # 1.0) cannot arise within it
+        return self.size == F.size(F.array_distinct(self.col))
+
+    def item(self, j: int):
+        return (TypedNode(F.element_at(self.col, j + 1), self.dtype.elementType),
+                self.size > j)
+
+    def _pairs(self) -> Column:
+        return F.transform(self.col, lambda x, i: F.struct(x.alias("x"), i.alias("i")))
+
+    def each_item(self, start: int, lower):
+        elem_t = self.dtype.elementType
+        tail = F.filter(self._pairs(), lambda p: p["i"] >= start)
+        valid = F.forall(tail, lambda p: lower(TypedNode(p["x"], elem_t), p["i"])[0])
+        viol = F.flatten(
+            F.transform(tail, lambda p: lower(TypedNode(p["x"], elem_t), p["i"])[1])
+        ).cast(VIOLATION_DDL)
+        return F.coalesce(valid, F.lit(True)), F.coalesce(viol, _EMPTY_ARR())
+
+    def count_matching(self, pred) -> Column:
+        elem_t = self.dtype.elementType
+        return F.size(F.filter(self._pairs(), lambda p: pred(TypedNode(p["x"], elem_t))))
+
+    def unevaluated_items(self, walker, schema, base_uri, ipath, kpath):
+        cov_prefix, covers_rest = walker.static_coverage(schema, base_uri, item=True)
+        if covers_rest:
+            return []
+        return [walker.each_item(self, schema["unevaluatedItems"], cov_prefix,
+                                 base_uri, ipath, f"{kpath}/unevaluatedItems")]
+
+    # -- objects -------------------------------------------------------------------
+    @cached_property
+    def prop_count(self) -> Column:
+        if self.fields is None:
+            return F.size(self.col)
+        n_present = None
+        for name in self.fields:
+            p = self.col[name].isNotNull().cast("int")
+            n_present = p if n_present is None else (n_present + p)
+        return n_present
+
+    def has(self, name: str) -> Column:
+        if self.fields is None:
+            return F.map_contains_key(self.col, F.lit(name))
+        return self.col[name].isNotNull() if name in self.fields else F.lit(False)
+
+    present = has
+
+    def prop(self, name: str):
+        if self.fields is None:
+            return TypedNode(self.col[name], self.dtype.valueType), self.has(name)
+        if name not in self.fields:
+            return None
+        child = self.col[name]
+        return TypedNode(child, self.fields[name].dataType), child.isNotNull()
+
+    @cached_property
+    def entries(self) -> Column:
+        return F.map_entries(self.col)
+
+    @cached_property
+    def keys(self) -> Column:
+        return F.map_keys(self.col)
+
+    def entry_node(self, value: Column) -> "TypedNode":
+        return TypedNode(value, self.dtype.valueType)
+
+    def unevaluated_properties(self, walker, schema, base_uri):
+        names, patterns = walker.static_coverage(schema, base_uri, item=False)
+        return sorted(names), sorted(patterns), False
+
+
+class ColumnLowerer(KeywordWalker):
+    """Compile one schema document into (valid, violations) Columns
+    over a typed value."""
+
     def lower(
         self,
         schema: Any,
@@ -214,1069 +337,75 @@ class ColumnLowerer:
         ipath: Column | None = None,
         kpath: str = "",
     ) -> tuple[Column, Column]:
-        if ipath is None:
-            ipath = F.lit("")
-        if self._root is None:
-            self._root = (schema, base_uri)
-        return self._lower(schema, dtype, col, base_uri, ipath, kpath)
+        return self.walk(schema, TypedNode(col, dtype), base_uri,
+                         F.lit("") if ipath is None else ipath, kpath)
 
-    # -- core -------------------------------------------------------------
-    def _lower(
-        self,
-        schema: Any,
-        dtype: T.DataType,
-        col: Column,
-        base_uri: str,
-        ipath: Column,
-        kpath: str,
-    ) -> tuple[Column, Column]:
-        if isinstance(schema, bool):
-            if schema:
-                return F.lit(True), _EMPTY_ARR()
-            # attribute the failure to the keyword holding the false
-            # schema — evaluator parity (a bare '' keyword diverged,
-            # found by the round-4 random differential)
-            kw = kpath.rsplit("/", 1)[-1] if kpath else ""
-            return F.lit(False), F.array(
-                _violation(kw, ipath, kpath, col, "boolean schema false permits nothing")
-            )
-        if not isinstance(schema, dict):
-            raise CannotLower(f"schema must be bool or object at {kpath}")
 
-        if isinstance(schema.get("$id"), str):
-            from urllib.parse import urljoin
+_FORMAT_REGEX = {
+    # RFC 3339 ranges (round 5) — sync with evaluator._TIME_RE /
+    # _DATETIME_RE; date/date-time additionally get a calendar
+    # conjunct in format_pred
+    # [0-9] not \d everywhere below: Java \d is ASCII but the batch
+    # evaluator's Python \d is unicode-wide — [0-9] is the one
+    # spelling both engines read identically (RFC grammars are
+    # ASCII DIGIT anyway); same for the email \s -> explicit set
+    "date-time": (
+        r"^[0-9]{4}-[0-9]{2}-[0-9]{2}[Tt]([01][0-9]|2[0-3]):[0-5][0-9]:"
+        r"([0-5][0-9]|60)(\.[0-9]+)?([Zz]|[+-]([01][0-9]|2[0-3]):[0-5][0-9])$"
+    ),
+    "date": r"^[0-9]{4}-[0-9]{2}-[0-9]{2}$",
+    "time": (
+        r"^([01][0-9]|2[0-3]):[0-5][0-9]:([0-5][0-9]|60)(\.[0-9]+)?"
+        r"([Zz]|[+-]([01][0-9]|2[0-3]):[0-5][0-9])$"
+    ),
+    "uuid": r"^[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$",
+    "ipv4": r"^((25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])\.){3}(25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])$",
+    # scheme lookahead + RFC 3986 character set (sync with the
+    # evaluator's "uri" entry — raw spaces / bare % are invalid)
+    "uri": (
+        r"^(?=[A-Za-z][A-Za-z0-9+.-]*:)"
+        r"(%[0-9A-Fa-f]{2}|[A-Za-z0-9\-._~:/?#\[\]@!$&'()*+,;=])*$"
+    ),
+    # lookaheads below are Java- and Python-compatible
+    "hostname": (
+        r"^(?=.{1,253}$)([A-Za-z0-9]([A-Za-z0-9-]{0,61}[A-Za-z0-9])?\.)*"
+        r"[A-Za-z0-9]([A-Za-z0-9-]{0,61}[A-Za-z0-9])?$"
+    ),
+    "email": r"^[^@ \t\n\x0B\f\r]+@[^@ \t\n\x0B\f\r]+\.[^@ \t\n\x0B\f\r]+$",
+    "duration": r"^P(?!$)([0-9]+Y)?([0-9]+M)?([0-9]+W)?([0-9]+D)?(T(?=[0-9])([0-9]+H)?([0-9]+M)?([0-9]+(\.[0-9]+)?S)?)?$",
+    "relative-json-pointer": r"^(0|[1-9][0-9]*)(#|(/([^~/]|~[01])*)*)$",
+    # round 5: remaining 2020-12 vocabulary names — the SAME source
+    # strings the evaluator compiles (evaluator.py defines them
+    # avoiding \s/\w so Java and Python read them identically).
+    # idn-hostname deliberately has NO Column form since round 6:
+    # the RFC 5892 contextual rules and RFC 5893 Bidi rule are
+    # beyond Java regex (no combining-class or bidi-category
+    # properties), so schemas asserting it route to the batch
+    # evaluator's full implementation (evaluator._fmt_idn_hostname)
+    "uri-reference": f"^{URI_REFERENCE_PATTERN}$",
+    "iri": f"^{IRI_PATTERN}$",
+    "iri-reference": f"^{IRI_REFERENCE_PATTERN}$",
+    "uri-template": f"^{URI_TEMPLATE_PATTERN}$",
+    "idn-email": f"^{IDN_EMAIL_PATTERN}$",
+}
 
-            base_uri = urljoin(base_uri, schema["$id"]).split("#", 1)[0]
-        # custom metaschemas can re-wire keyword semantics (notably a
-        # $vocabulary declaring format-assertion makes `format` assert
-        # — honored by the evaluator since round 6): anything but the
-        # standard json-schema.org dialect URIs routes to batch
-        s_meta = schema.get("$schema")
-        if isinstance(s_meta, str) and not s_meta.startswith(
-            "https://json-schema.org/draft"
-        ):
-            raise CannotLower(f"custom metaschema {s_meta!r} -> batch")
-        json_t = spark_json_type(dtype)
-        valids: list[Column] = []
-        viols: list[Column] = []
 
-        def add(v: Column, w: Column) -> None:
-            valids.append(v)
-            viols.append(w)
+def format_pred(fmt: str, scol: Column, trusted_calendar: bool = False) -> Column | None:
+    """Full Column predicate for a built-in format, or None when the
+    format has no Column form. date/date-time carry a calendar-validity
+    conjunct (try_to_timestamp rejects 2023-02-29 exactly like the
+    evaluator's _valid_ymd); ``trusted_calendar=True`` skips it for
+    strings produced by date_format over timestamp/date columns, which
+    are calendar-valid by construction — keeps the flagship hot path
+    (warc_ts date-time assertion) a single rlike."""
+    rx = _FORMAT_REGEX.get(fmt)
+    if rx is None:
+        return None
+    pred = scol.rlike(rx)
+    if not trusted_calendar and fmt in ("date", "date-time"):
+        datepart = scol if fmt == "date" else F.substring(scol, 1, 10)
+        pred = pred & F.try_to_timestamp(datepart, F.lit("yyyy-MM-dd")).isNotNull()
+    return pred
 
-        # ---- $ref (acyclic: inline; cycles -> batch fallback) ----------
-        if "$ref" in schema:
-            target, tbase = self.catalog.resolve(schema["$ref"], base_uri)
-            tid = id(target)
-            if tid in self._ref_stack:
-                raise CannotLower(f"cyclic $ref at {kpath} requires the batch evaluator")
-            self._ref_stack.append(tid)
-            try:
-                add(*self._lower(target, dtype, col, tbase, ipath, kpath + "/$ref"))
-            finally:
-                self._ref_stack.pop()
 
-        # ---- $dynamicRef / $recursiveRef: statically-resolvable refs
-        # lower inline like $ref (round 5); genuinely dynamic rebinding
-        # raises CannotLower -> batch (evaluator.py is the semantics
-        # source of truth; cross-checked by the differential fuzzer)
-        for _dyn_kw in ("$dynamicRef", "$recursiveRef"):
-            if _dyn_kw in schema:
-                target, tbase = self._dynamic_target(
-                    _dyn_kw, schema[_dyn_kw], base_uri
-                )
-                tid = id(target)
-                if tid in self._ref_stack:
-                    raise CannotLower(f"cyclic {_dyn_kw} at {kpath} -> batch")
-                self._ref_stack.append(tid)
-                try:
-                    add(*self._lower(
-                        target, dtype, col, tbase, ipath, kpath + "/" + _dyn_kw
-                    ))
-                finally:
-                    self._ref_stack.pop()
-
-        # ---- leaf predicates -------------------------------------------
-        self._lower_validation(schema, dtype, json_t, col, ipath, kpath, add)
-
-        # ---- applicators -------------------------------------------------
-        if json_t == "array":
-            self._lower_array(schema, dtype, col, base_uri, ipath, kpath, add)
-        elif json_t == "object" and isinstance(dtype, T.StructType):
-            self._lower_struct(schema, dtype, col, base_uri, ipath, kpath, add)
-        elif json_t == "object" and isinstance(dtype, T.MapType):
-            self._lower_map(schema, dtype, col, base_uri, ipath, kpath, add)
-        elif any(
-            k in schema
-            for k in (
-                "properties",
-                "patternProperties",
-                "additionalProperties",
-                "propertyNames",
-                "unevaluatedProperties",
-                "items",
-                "prefixItems",
-                "contains",
-            )
-        ):
-            # object/array applicators on a non-container column: no-op
-            # (instance-type gating), nothing to lower
-            pass
-
-        # ---- combinators --------------------------------------------------
-        self._lower_combinators(schema, dtype, col, base_uri, ipath, kpath, add)
-
-        # ---- custom keywords (functions/registry.py) -----------------------
-        from jschon_spark.functions.registry import KEYWORD_REGISTRY
-
-        for kw_name, entry in KEYWORD_REGISTRY.items():
-            if kw_name in schema and json_t in entry.instance_types:
-                if entry.column_fn is None:
-                    raise CannotLower(
-                        f"custom keyword {kw_name!r} has no Column lowering -> batch"
-                    )
-                pred = entry.column_fn(schema[kw_name], col, dtype)
-                add(*_check(pred, kw_name, ipath, kpath, col, entry.error))
-
-        if not valids:
-            return F.lit(True), _EMPTY_ARR()
-        valid = valids[0]
-        for v in valids[1:]:
-            valid = valid & v
-        return valid, _concat(*viols)
-
-    # -- leaf validation keywords -----------------------------------------
-    def _lower_validation(self, schema, dtype, json_t, col, ipath, kpath, add):
-        def gated(pred: Column) -> Column:
-            # Type-gated leaf assertions (2020-12 core §7.6: each assertion
-            # applies only to instances of its type) pass vacuously on JSON
-            # null instances — a NULL array element / map value / column is
-            # JSON null, so e.g. maxLength on null is satisfied. Mirrors
-            # variant.py's is-type gating; type/enum/const/required keep
-            # their own explicit null handling.
-            return F.when(col.isNull(), F.lit(True)).otherwise(pred)
-
-        if "type" in schema:
-            wanted = schema["type"]
-            if isinstance(wanted, str):
-                wanted = [wanted]
-            if json_t == "number" and "integer" in wanted and "number" not in wanted:
-                # fmod, not floor: floor(double) yields BIGINT, which
-                # under ANSI mode ERRORS past 2^63 (1e30 IS an
-                # integer); fmod is exact at any magnitude and
-                # sign-preserving (-1e-20 % 1 = -1e-20, not integer)
-                pred: Column = (col % F.lit(1.0)) == 0
-            else:
-                pred = F.lit(_static_type_match(json_t, wanted))
-            # NULL value = JSON null for non-struct-field positions
-            pred = F.when(col.isNull(), F.lit("null" in wanted)).otherwise(pred)
-            add(*_check(pred, "type", ipath, kpath, col, f"type must be one of {wanted}"))
-
-        if "enum" in schema:
-            values = [v for v in schema["enum"] if self._enum_compatible(v, json_t)]
-            if json_t in ("string", "number", "integer", "boolean"):
-                scalars = [v for v in values if not isinstance(v, (list, dict))]
-                pred = col.isin(*scalars) if scalars else F.lit(False)
-                if any(v is None for v in schema["enum"]):
-                    pred = pred | col.isNull()
-                add(*_check(pred, "enum", ipath, kpath, col, "value not in enumeration"))
-            else:
-                raise CannotLower(f"enum over {json_t} column requires batch evaluator")
-
-        if "const" in schema:
-            c = schema["const"]
-            if isinstance(c, (list, dict)):
-                raise CannotLower("compound const requires batch evaluator")
-            if c is None:
-                pred = col.isNull()
-            elif not self._enum_compatible(c, json_t):
-                # a scalar const of a different JSON type can never
-                # match this column's static type — fold to always-fail
-                # (struct == false would not even analyze; found by the
-                # round-4 random differential)
-                pred = F.lit(False)
-            else:
-                pred = col == F.lit(c)
-            add(*_check(pred, "const", ipath, kpath, col, "value does not equal const"))
-
-        if json_t in ("number", "integer"):
-            if "multipleOf" in schema:
-                m = schema["multipleOf"]
-                if isinstance(m, int) and json_t == "integer":
-                    pred = col % F.lit(m) == 0
-                else:
-                    # exact decimal modulus, mirroring Python Decimal math
-                    # (/root/reference/jschon/vocabulary/validation.py:66-75).
-                    # try_cast: ANSI mode errors a plain cast when a
-                    # double value overflows decimal(38,12); beyond that
-                    # magnitude fall back to a double modulus
-                    dec_v = col.try_cast(T.DecimalType(38, 12))
-                    dec_ok = (
-                        dec_v % F.lit(m).cast(T.DecimalType(38, 12))
-                    ) == F.lit(0).cast(T.DecimalType(38, 12))
-                    # the decimal tier must ROUND-TRIP the value: a
-                    # 1e-20 double casts to a non-NULL 0E-12, which is
-                    # a multiple of everything. And %, not pmod, in the
-                    # fallback — pmod's +m re-add rounds tiny negatives
-                    # onto m exactly (fmod is exact, -0.0 == 0)
-                    dec_exact = dec_v.isNotNull() & (
-                        dec_v.cast(T.DoubleType()) == col
-                    )
-                    pred = F.when(dec_exact, dec_ok).otherwise(
-                        (col % F.lit(float(m))) == 0
-                    )
-                add(*_check(gated(pred), "multipleOf", ipath, kpath, col, f"not a multiple of {m}"))
-            for kw, op in (
-                ("maximum", lambda c, v: c <= v),
-                ("exclusiveMaximum", lambda c, v: c < v),
-                ("minimum", lambda c, v: c >= v),
-                ("exclusiveMinimum", lambda c, v: c > v),
-            ):
-                if kw in schema:
-                    bound = schema[kw]
-                    lhs, rhs = col, F.lit(bound)
-                    if isinstance(bound, float) and json_t == "integer":
-                        # long-vs-double comparison coerces the COLUMN
-                        # to double, losing precision above 2^53
-                        # (10^18-1 < 1e18 must hold; after coercion
-                        # they compare equal). Compare in decimal —
-                        # 18-dp rounding of the bound is finer than
-                        # the double gap everywhere a long is exact,
-                        # and beyond-long-range bounds fold to a
-                        # compile-time constant.
-                        if abs(bound) >= 1e19:
-                            above = bound > 0
-                            const = above if kw in ("maximum", "exclusiveMaximum") else not above
-                            lhs, rhs, op = F.lit(0), F.lit(0), (
-                                (lambda c, v: F.lit(True)) if const
-                                else (lambda c, v: F.lit(False)))
-                        elif dec18_exact(bound):
-                            dec = T.DecimalType(38, 18)
-                            lhs, rhs = col.cast(dec), F.lit(bound).cast(dec)
-                        # else: bound needs >18dp (tiny magnitudes like
-                        # 2e-20 would round to 0E-18) — keep the plain
-                        # long-vs-double coercion. Such bounds always
-                        # have |b| < 1, and rounding a >2^53 long by
-                        # 1 ulp (>=2) can never cross a sub-unit bound,
-                        # so the double compare stays verdict-exact.
-                    add(
-                        *_check(
-                            gated(op(lhs, rhs)),
-                            kw,
-                            ipath,
-                            kpath,
-                            col,
-                            f"violates {kw} {bound}",
-                        )
-                    )
-
-        if json_t == "string":
-            scol = self._as_string(col, dtype)
-            if "maxLength" in schema:
-                add(
-                    *_check(
-                        gated(F.length(scol) <= schema["maxLength"]),
-                        "maxLength", ipath, kpath, scol,
-                        f"longer than {schema['maxLength']}",
-                    )
-                )
-            if "minLength" in schema:
-                add(
-                    *_check(
-                        gated(F.length(scol) >= schema["minLength"]),
-                        "minLength", ipath, kpath, scol,
-                        f"shorter than {schema['minLength']}",
-                    )
-                )
-            if "pattern" in schema:
-                pat = schema["pattern"]
-                self._check_regex_dialect(pat)
-                add(
-                    *_check(
-                        gated(scol.rlike(pat)), "pattern", ipath, kpath, scol,
-                        f"does not match pattern {pat}",
-                    )
-                )
-            if "format" in schema and self.assert_formats:
-                fv, fw = self._lower_format(
-                    schema["format"], scol, ipath, kpath,
-                    trusted_calendar=isinstance(
-                        dtype, (T.TimestampType, T.DateType)
-                    ),
-                )
-                add(gated(fv), F.when(col.isNull(), _EMPTY_ARR()).otherwise(fw))
-
-        if json_t == "array":
-            if "maxItems" in schema:
-                add(
-                    *_check(
-                        gated(F.size(col) <= schema["maxItems"]),
-                        "maxItems", ipath, kpath, F.size(col),
-                        f"more than {schema['maxItems']} items",
-                    )
-                )
-            if "minItems" in schema:
-                add(
-                    *_check(
-                        gated(F.size(col) >= schema["minItems"]),
-                        "minItems", ipath, kpath, F.size(col),
-                        f"fewer than {schema['minItems']} items",
-                    )
-                )
-            if schema.get("uniqueItems"):
-                # compound elements are fine: a typed array has ONE
-                # element type, so the reference's cross-type numeric
-                # equality (1 vs 1.0) cannot arise within it
-                add(
-                    *_check(
-                        gated(F.size(col) == F.size(F.array_distinct(col))),
-                        "uniqueItems", ipath, kpath, col,
-                        "array items are not unique",
-                    )
-                )
-
-        if json_t == "object" and isinstance(dtype, T.StructType):
-            n_present = None
-            for f_ in dtype.fields:
-                p = col[f_.name].isNotNull().cast("int")
-                n_present = p if n_present is None else (n_present + p)
-            if "maxProperties" in schema:
-                add(
-                    *_check(
-                        gated(n_present <= schema["maxProperties"]),
-                        "maxProperties", ipath, kpath, n_present,
-                        f"more than {schema['maxProperties']} properties",
-                    )
-                )
-            if "minProperties" in schema:
-                add(
-                    *_check(
-                        gated(n_present >= schema["minProperties"]),
-                        "minProperties", ipath, kpath, n_present,
-                        f"fewer than {schema['minProperties']} properties",
-                    )
-                )
-            if "required" in schema and schema["required"]:
-                # ONE violation listing every missing name — the
-                # evaluator (like the reference) reports required once
-                # per keyword, not once per name; per-name rows made
-                # multi-missing docs diverge (found by the round-4
-                # random differential)
-                names = set(f_.name for f_ in dtype.fields)
-                present = [
-                    (req, col[req].isNotNull() if req in names else F.lit(False))
-                    for req in schema["required"]
-                ]
-                all_ok = present[0][1]
-                for _, p in present[1:]:
-                    all_ok = all_ok & p
-                missing = F.concat_ws(
-                    ", ",
-                    *[F.when(p, F.lit(None)).otherwise(F.lit(r))
-                      for r, p in present],
-                )
-                add(
-                    *_check(
-                        all_ok, "required", ipath, kpath, missing,
-                        "missing required properties",
-                    )
-                )
-            if "dependentRequired" in schema:
-                names = set(f_.name for f_ in dtype.fields)
-                for k, deps in schema["dependentRequired"].items():
-                    if k not in names:
-                        continue
-                    dep_ok = F.lit(True)
-                    for d in deps:
-                        dep_ok = dep_ok & (
-                            col[d].isNotNull() if d in names else F.lit(False)
-                        )
-                    pred = F.when(col[k].isNotNull(), dep_ok).otherwise(F.lit(True))
-                    add(
-                        *_check(
-                            pred, "dependentRequired", ipath, kpath, F.lit(k),
-                            f"property {k!r} requires {deps}",
-                        )
-                    )
-
-    # -- array applicators --------------------------------------------------
-    def _lower_array(self, schema, dtype, col, base_uri, ipath, kpath, add):
-        elem_t = dtype.elementType
-        prefix = schema.get("prefixItems", [])
-        for i, sub in enumerate(prefix):
-            elem = F.element_at(col, i + 1)
-            v, w = self._lower(
-                sub, elem_t, elem, base_uri,
-                F.concat(ipath, F.lit(f"/{i}")), f"{kpath}/prefixItems/{i}",
-            )
-            applies = F.size(col) > i
-            add(
-                F.when(applies, v).otherwise(F.lit(True)),
-                F.when(applies, w).otherwise(_EMPTY_ARR()),
-            )
-        def apply_tail(sub, start: int, label: str) -> None:
-            """Apply ``sub`` to every element at index >= start, with
-            positions in the ORIGINAL array for violation paths."""
-
-            def per_elem(x: Column, i: Column):
-                return self._lower(
-                    sub, elem_t, x, base_uri,
-                    F.concat(ipath, F.lit("/"), i.cast("string")),
-                    label,
-                )
-
-            pairs = F.transform(
-                col, lambda x, i: F.struct(x.alias("x"), i.alias("i"))
-            )
-            tail_pairs = F.filter(pairs, lambda p: p["i"] >= start)
-            valid = F.forall(tail_pairs, lambda p: per_elem(p["x"], p["i"])[0])
-            viol = F.flatten(
-                F.transform(tail_pairs, lambda p: per_elem(p["x"], p["i"])[1])
-            ).cast(VIOLATION_DDL)
-            add(
-                F.coalesce(valid, F.lit(True)),
-                F.coalesce(viol, _EMPTY_ARR()),
-            )
-
-        if "items" in schema:
-            apply_tail(schema["items"], len(prefix), f"{kpath}/items")
-        if "unevaluatedItems" in schema:
-            cov_prefix, covers_rest = self._static_item_coverage(schema, base_uri)
-            if not covers_rest:
-                apply_tail(
-                    schema["unevaluatedItems"], cov_prefix,
-                    f"{kpath}/unevaluatedItems",
-                )
-        if "contains" in schema:
-            sub = schema["contains"]
-
-            def pred(x: Column, i: Column):
-                return self._lower(
-                    sub, elem_t, x, base_uri, ipath, f"{kpath}/contains"
-                )[0]
-
-            pairs = F.transform(col, lambda x, i: F.struct(x.alias("x"), i.alias("i")))
-            n_match = F.size(F.filter(pairs, lambda p: pred(p["x"], p["i"])))
-
-            def gated(p: Column) -> Column:
-                # NULL array = JSON null: contains counts pass vacuously
-                # (F.size(NULL) is NULL and would otherwise fail the check)
-                return F.when(col.isNull(), F.lit(True)).otherwise(p)
-
-            min_c = schema.get("minContains", 1)
-            if min_c > 0:
-                add(
-                    *_check(
-                        gated(n_match > 0), "contains", ipath, kpath, n_match,
-                        "no array items match the contains schema",
-                    )
-                )
-            if "maxContains" in schema:
-                add(
-                    *_check(
-                        gated(n_match <= schema["maxContains"]),
-                        "maxContains", ipath, kpath, n_match,
-                        f"more than {schema['maxContains']} matching items",
-                    )
-                )
-            if "minContains" in schema:
-                add(
-                    *_check(
-                        gated(n_match >= min_c), "minContains", ipath, kpath, n_match,
-                        f"fewer than {min_c} matching items",
-                    )
-                )
-
-    def _static_coverage(
-        self, schema, base_uri: str, _seen: set | None = None
-    ) -> tuple[set, list]:
-        """Property coverage contributed by this schema and its
-        unconditional in-place children (allOf, $ref) — the
-        compile-time annotation algebra for unevaluatedProperties
-        (SURVEY.md §2.6). Branch-dependent applicators (anyOf/oneOf/
-        if/dependentSchemas) make coverage dynamic -> CannotLower.
-
-        Verdicts match the evaluator exactly; on documents that ALREADY
-        fail a covering branch the violation list may omit redundant
-        unevaluatedProperties entries (the document is invalid either
-        way)."""
-        _seen = _seen or set()
-        if id(schema) in _seen:
-            raise CannotLower("cyclic coverage -> batch")
-        _seen = _seen | {id(schema)}
-        if not isinstance(schema, dict):
-            return set(), []
-        if "dependentSchemas" in schema:
-            raise CannotLower("unevaluatedProperties with branch-dependent coverage -> batch")
-        names = set(schema.get("properties", {}))
-        patterns = list(schema.get("patternProperties", {}))
-        if "additionalProperties" in schema:
-            # additionalProperties covers everything it applies to
-            patterns.append("")  # matches every name
-        for sub in schema.get("allOf", []):
-            n, p = self._static_coverage(sub, base_uri, _seen)
-            names |= n
-            patterns += p
-        if "$ref" in schema:
-            target, tbase = self.catalog.resolve(schema["$ref"], base_uri)
-            n, p = self._static_coverage(target, tbase, _seen)
-            names |= n
-            patterns += p
-        for _dyn_kw in ("$dynamicRef", "$recursiveRef"):
-            if _dyn_kw in schema:
-                # statically-resolvable dynamic refs contribute coverage
-                # like $ref; dynamic rebinding raises -> batch
-                target, tbase = self._dynamic_target(
-                    _dyn_kw, schema[_dyn_kw], base_uri
-                )
-                n, p = self._static_coverage(target, tbase, _seen)
-                names |= n
-                patterns += p
-
-        # Branch applicators stay static when EVERY arm contributes
-        # identical coverage (common in practice: if/then/else refining
-        # values of the same property set). Annotations from a failed
-        # `if` don't count, so the taken-branch coverage is
-        # (if ∪ then) vs (else) — equal → unconditional.
-        def cov(sub) -> tuple[set, frozenset]:
-            n, p = self._static_coverage(sub, base_uri, _seen)
-            return n, frozenset(p)
-
-        if "if" in schema:
-            ifn, ifp = cov(schema["if"])
-            tn, tp = cov(schema["then"]) if "then" in schema else (set(), frozenset())
-            en, ep = cov(schema["else"]) if "else" in schema else (set(), frozenset())
-            true_cov = (ifn | tn, ifp | tp)
-            if true_cov != (en, ep):
-                raise CannotLower(
-                    "unevaluatedProperties with branch-dependent coverage -> batch"
-                )
-            names |= true_cov[0]
-            patterns += sorted(true_cov[1])
-        for comb in ("anyOf", "oneOf"):
-            if comb in schema:
-                covs = [cov(sub) for sub in schema[comb]]
-                if any(c != covs[0] for c in covs[1:]):
-                    raise CannotLower(
-                        "unevaluatedProperties with branch-dependent coverage -> batch"
-                    )
-                if covs:
-                    names |= covs[0][0]
-                    patterns += sorted(covs[0][1])
-        return names, patterns
-
-    def _static_item_coverage(
-        self, schema, base_uri: str, _seen: set | None = None
-    ) -> tuple[int, bool]:
-        """(covered_prefix_len, covers_rest) contributed by this schema
-        and its unconditional in-place children (allOf, $ref) — the
-        item-side twin of _static_coverage. ``contains`` coverage is
-        per-element dynamic and branch applicators make coverage
-        conditional -> CannotLower (batch fallback)."""
-        _seen = _seen or set()
-        if id(schema) in _seen:
-            raise CannotLower("cyclic coverage -> batch")
-        _seen = _seen | {id(schema)}
-        if not isinstance(schema, dict):
-            return 0, False
-        if "dependentSchemas" in schema:
-            raise CannotLower("unevaluatedItems with branch-dependent coverage -> batch")
-        if "contains" in schema:
-            raise CannotLower("unevaluatedItems alongside contains -> batch")
-        prefix = len(schema.get("prefixItems", []))
-        rest = "items" in schema
-        for sub in schema.get("allOf", []):
-            p, r = self._static_item_coverage(sub, base_uri, _seen)
-            prefix = max(prefix, p)
-            rest = rest or r
-        if "$ref" in schema:
-            target, tbase = self.catalog.resolve(schema["$ref"], base_uri)
-            p, r = self._static_item_coverage(target, tbase, _seen)
-            prefix = max(prefix, p)
-            rest = rest or r
-        for _dyn_kw in ("$dynamicRef", "$recursiveRef"):
-            if _dyn_kw in schema:
-                target, tbase = self._dynamic_target(
-                    _dyn_kw, schema[_dyn_kw], base_uri
-                )
-                p, r = self._static_item_coverage(target, tbase, _seen)
-                prefix = max(prefix, p)
-                rest = rest or r
-
-        # branch applicators: static when every arm covers identically
-        # (taken-branch = if ∪ then vs else; see _static_coverage)
-        def cov(sub) -> tuple[int, bool]:
-            return self._static_item_coverage(sub, base_uri, _seen)
-
-        if "if" in schema:
-            pi, ri = cov(schema["if"])
-            pt, rt = cov(schema["then"]) if "then" in schema else (0, False)
-            pe, re_ = cov(schema["else"]) if "else" in schema else (0, False)
-            true_cov = (max(pi, pt), ri or rt)
-            if true_cov != (pe, re_):
-                raise CannotLower(
-                    "unevaluatedItems with branch-dependent coverage -> batch"
-                )
-            prefix = max(prefix, true_cov[0])
-            rest = rest or true_cov[1]
-        for comb in ("anyOf", "oneOf"):
-            if comb in schema:
-                covs = [cov(sub) for sub in schema[comb]]
-                if any(c != covs[0] for c in covs[1:]):
-                    raise CannotLower(
-                        "unevaluatedItems with branch-dependent coverage -> batch"
-                    )
-                if covs:
-                    prefix = max(prefix, covs[0][0])
-                    rest = rest or covs[0][1]
-        return prefix, rest
-
-    # -- object applicators over structs -------------------------------------
-    def _lower_struct(self, schema, dtype, col, base_uri, ipath, kpath, add):
-        fields = {f_.name: f_ for f_ in dtype.fields}
-        covered: set[str] = set()
-        props = schema.get("properties", {})
-        for name, sub in props.items():
-            if name not in fields:
-                continue  # absent in the physical schema = never present
-            covered.add(name)
-            child = col[name]
-            v, w = self._lower(
-                sub, fields[name].dataType, child, base_uri,
-                F.concat(ipath, F.lit("/" + pointer_escape(name))),
-                f"{kpath}/properties/{pointer_escape(name)}",
-            )
-            # property subschema applies only when the property is present
-            add(
-                F.when(child.isNotNull(), v).otherwise(F.lit(True)),
-                F.when(child.isNotNull(), w).otherwise(_EMPTY_ARR()),
-            )
-        for pattern, sub in schema.get("patternProperties", {}).items():
-            self._check_regex_dialect(pattern)
-            rx = re.compile(pattern)
-            for name, f_ in fields.items():
-                if rx.search(name):
-                    covered.add(name)
-                    child = col[name]
-                    v, w = self._lower(
-                        sub, f_.dataType, child, base_uri,
-                        F.concat(ipath, F.lit("/" + pointer_escape(name))),
-                        f"{kpath}/patternProperties/{pointer_escape(pattern)}",
-                    )
-                    add(
-                        F.when(child.isNotNull(), v).otherwise(F.lit(True)),
-                        F.when(child.isNotNull(), w).otherwise(_EMPTY_ARR()),
-                    )
-        for kw in ("additionalProperties", "unevaluatedProperties"):
-            if kw in schema:
-                if kw == "unevaluatedProperties":
-                    # extend local coverage with the static coverage
-                    # from unconditional in-place children
-                    names, patterns = self._static_coverage(schema, base_uri)
-                    covered = set(covered) | {n for n in names if n in fields}
-                    for p in patterns:
-                        rx = re.compile(p)
-                        covered |= {n for n in fields if rx.search(n)}
-                sub = schema[kw]
-                for name, f_ in fields.items():
-                    if name in covered:
-                        continue
-                    child = col[name]
-                    v, w = self._lower(
-                        sub, f_.dataType, child, base_uri,
-                        F.concat(ipath, F.lit("/" + pointer_escape(name))),
-                        f"{kpath}/{kw}",
-                    )
-                    add(
-                        F.when(child.isNotNull(), v).otherwise(F.lit(True)),
-                        F.when(child.isNotNull(), w).otherwise(_EMPTY_ARR()),
-                    )
-        if "propertyNames" in schema:
-            # field names are static: evaluate each name at compile time
-            # with the driver-side evaluator (names are strings).
-            # Evaluator parity (absorb with msg): a failing name emits
-            # the 'propertyNames' row AND the subschema's own violation
-            # rows, rebased under {kpath}/propertyNames
-            from jschon_spark.evaluator import Evaluator
-
-            ev = Evaluator(self.catalog)
-            for name, f_ in fields.items():
-                o = ev.validate(schema["propertyNames"], name)
-                if not o.valid:
-                    child = col[name]
-                    ok = F.coalesce(child.isNull(), F.lit(True))
-                    rows = [
-                        _violation(
-                            "propertyNames", ipath, f"{kpath}/propertyNames",
-                            F.lit(name), f"property name {name!r} is invalid",
-                        )
-                    ] + [
-                        _violation(
-                            e.keyword,
-                            F.concat(ipath, F.lit(e.instance_path)),
-                            f"{kpath}/propertyNames{e.keyword_path}",
-                            F.lit(name), e.error,
-                        )
-                        for e in o.errors
-                    ]
-                    viol = F.when(ok, _EMPTY_ARR()).otherwise(
-                        F.array(*rows).cast(VIOLATION_DDL)
-                    )
-                    add(ok, viol)
-        if "dependentSchemas" in schema:
-            for k, sub in schema["dependentSchemas"].items():
-                if k not in fields:
-                    continue
-                v, w = self._lower(
-                    sub, dtype, col, base_uri, ipath,
-                    f"{kpath}/dependentSchemas/{pointer_escape(k)}",
-                )
-                present = col[k].isNotNull()
-                add(
-                    F.when(present, v).otherwise(F.lit(True)),
-                    F.when(present, w).otherwise(_EMPTY_ARR()),
-                )
-
-    # -- object applicators over string-keyed maps ------------------------------
-    def _lower_map(self, schema, dtype, col, base_uri, ipath, kpath, add):
-        """map<string,V> columns: presence = key membership; a NULL map
-        value is JSON null (not absent), unlike struct fields."""
-        if not isinstance(dtype.keyType, T.StringType):
-            raise CannotLower("object lowering needs string map keys")
-        vt = dtype.valueType
-        keys = F.map_keys(col)
-
-        def esc(k: Column) -> Column:
-            return F.replace(
-                F.replace(k, F.lit("~"), F.lit("~0")), F.lit("/"), F.lit("~1")
-            )
-
-        def gated(pred: Column) -> Column:
-            # NULL map value = JSON null: type-gated object keywords pass
-            # vacuously (same convention as _lower_validation.gated)
-            return F.when(col.isNull(), F.lit(True)).otherwise(pred)
-
-        if "maxProperties" in schema:
-            add(*_check(gated(F.size(col) <= schema["maxProperties"]),
-                        "maxProperties", ipath, kpath, F.size(col),
-                        f"more than {schema['maxProperties']} properties"))
-        if "minProperties" in schema:
-            add(*_check(gated(F.size(col) >= schema["minProperties"]),
-                        "minProperties", ipath, kpath, F.size(col),
-                        f"fewer than {schema['minProperties']} properties"))
-        if "required" in schema and schema["required"]:
-            # single violation per keyword (see the struct-path note)
-            present = [
-                (req, F.map_contains_key(col, F.lit(req)))
-                for req in schema["required"]
-            ]
-            all_ok = present[0][1]
-            for _, p in present[1:]:
-                all_ok = all_ok & p
-            missing = F.concat_ws(
-                ", ",
-                *[F.when(p, F.lit(None)).otherwise(F.lit(r))
-                  for r, p in present],
-            )
-            add(*_check(all_ok, "required", ipath, kpath, missing,
-                        "missing required properties"))
-        if "dependentRequired" in schema:
-            for k, deps in schema["dependentRequired"].items():
-                dep_ok = F.lit(True)
-                for d in deps:
-                    dep_ok = dep_ok & F.map_contains_key(col, F.lit(d))
-                pred = F.when(
-                    F.map_contains_key(col, F.lit(k)), dep_ok
-                ).otherwise(F.lit(True))
-                add(*_check(pred, "dependentRequired", ipath, kpath, F.lit(k),
-                            f"property {k!r} requires {deps}"))
-
-        covered_names = list(schema.get("properties", {}))
-        covered_patterns = list(schema.get("patternProperties", {}))
-
-        def apply_to_keys(key_filter, sub, kw_label: str):
-            """Apply ``sub`` to the value of every key passing key_filter;
-            emit per-key violations with dynamic instance paths."""
-            matching = F.filter(keys, key_filter)
-
-            def child(k: Column):
-                return self._lower(
-                    sub, vt, F.element_at(col, k), base_uri,
-                    F.concat(ipath, F.lit("/"), esc(k)), kw_label,
-                )
-
-            valid = F.coalesce(
-                F.forall(matching, lambda k: child(k)[0]), F.lit(True)
-            )
-            viol = F.coalesce(
-                F.flatten(
-                    F.transform(
-                        matching,
-                        lambda k: F.when(child(k)[0], _EMPTY_ARR()).otherwise(child(k)[1]),
-                    )
-                ).cast(VIOLATION_DDL),
-                _EMPTY_ARR(),
-            )
-            add(valid, viol)
-
-        # NOTE: higher-order-function lambdas must be unary — pyspark
-        # reads the Python arity, so a defaulted second param would bind
-        # the array *index*. Close over values with factories instead.
-        def _eq(n):
-            return lambda k: k == F.lit(n)
-
-        def _rx(p):
-            return lambda k: k.rlike(p)
-
-        for name, sub in schema.get("properties", {}).items():
-            apply_to_keys(
-                _eq(name), sub, f"{kpath}/properties/{pointer_escape(name)}"
-            )
-        for pattern, sub in schema.get("patternProperties", {}).items():
-            self._check_regex_dialect(pattern)
-            apply_to_keys(
-                _rx(pattern), sub,
-                f"{kpath}/patternProperties/{pointer_escape(pattern)}",
-            )
-        for kw in ("additionalProperties", "unevaluatedProperties"):
-            if kw in schema:
-                names, patterns = list(covered_names), list(covered_patterns)
-                if kw == "unevaluatedProperties":
-                    xn, xp = self._static_coverage(schema, base_uri)
-                    names += list(xn)
-                    patterns += xp
-
-                def _uncov(names=tuple(names), patterns=tuple(patterns)):
-                    def uncovered(k: Column) -> Column:
-                        cond = F.lit(True)
-                        for n in names:
-                            cond = cond & (k != F.lit(n))
-                        for p in patterns:
-                            cond = cond & (~k.rlike(p) if p else F.lit(False))
-                        return cond
-
-                    return uncovered
-
-                apply_to_keys(_uncov(), schema[kw], f"{kpath}/{kw}")
-        if "propertyNames" in schema:
-            sub = schema["propertyNames"]
-
-            def name_child(k: Column):
-                return self._lower(
-                    sub, T.StringType(), k, base_uri, ipath,
-                    f"{kpath}/propertyNames",
-                )
-
-            valid = F.coalesce(F.forall(keys, lambda k: name_child(k)[0]), F.lit(True))
-            viol = F.coalesce(
-                F.flatten(
-                    F.transform(
-                        keys,
-                        lambda k: F.when(name_child(k)[0], _EMPTY_ARR()).otherwise(
-                            F.concat(
-                                F.array(
-                                    _violation(
-                                        "propertyNames", ipath, f"{kpath}/propertyNames",
-                                        k, "property name is invalid",
-                                    )
-                                ).cast(VIOLATION_DDL),
-                                name_child(k)[1].cast(VIOLATION_DDL),
-                            )
-                        ),
-                    )
-                ).cast(VIOLATION_DDL),
-                _EMPTY_ARR(),
-            )
-            add(valid, viol)
-        if "dependentSchemas" in schema:
-            for k, sub in schema["dependentSchemas"].items():
-                v, w = self._lower(
-                    sub, dtype, col, base_uri, ipath,
-                    f"{kpath}/dependentSchemas/{pointer_escape(k)}",
-                )
-                present = F.map_contains_key(col, F.lit(k))
-                add(F.when(present, v).otherwise(F.lit(True)),
-                    F.when(present, w).otherwise(_EMPTY_ARR()))
-
-    # -- combinators -----------------------------------------------------------
-    def _lower_combinators(self, schema, dtype, col, base_uri, ipath, kpath, add):
-        if "allOf" in schema:
-            for i, sub in enumerate(schema["allOf"]):
-                add(*self._lower(sub, dtype, col, base_uri, ipath, f"{kpath}/allOf/{i}"))
-        if "anyOf" in schema:
-            parts = [
-                self._lower(sub, dtype, col, base_uri, ipath, f"{kpath}/anyOf/{i}")
-                for i, sub in enumerate(schema["anyOf"])
-            ]
-            any_ok = parts[0][0]
-            for v, _ in parts[1:]:
-                any_ok = any_ok | v
-            viol = F.when(any_ok, _EMPTY_ARR()).otherwise(
-                _concat(
-                    F.array(_violation("anyOf", ipath, f"{kpath}/anyOf", col, "no subschema matched")),
-                    *[w for _, w in parts],
-                )
-            )
-            add(F.coalesce(any_ok, F.lit(False)), viol)
-        if "oneOf" in schema:
-            parts = [
-                self._lower(sub, dtype, col, base_uri, ipath, f"{kpath}/oneOf/{i}")
-                for i, sub in enumerate(schema["oneOf"])
-            ]
-            n_ok = parts[0][0].cast("int")
-            for v, _ in parts[1:]:
-                n_ok = n_ok + v.cast("int")
-            ok = n_ok == 1
-            viol = F.when(ok, _EMPTY_ARR()).otherwise(
-                F.array(
-                    _violation(
-                        "oneOf", ipath, f"{kpath}/oneOf", n_ok,
-                        "exactly one subschema must match",
-                    )
-                )
-            )
-            add(F.coalesce(ok, F.lit(False)), viol)
-        if "not" in schema:
-            v, _ = self._lower(schema["not"], dtype, col, base_uri, ipath, f"{kpath}/not")
-            add(
-                *_check(
-                    ~v, "not", ipath, kpath, col, "instance must not match the subschema"
-                )
-            )
-        if "if" in schema:
-            cond, _ = self._lower(schema["if"], dtype, col, base_uri, ipath, f"{kpath}/if")
-            cond = F.coalesce(cond, F.lit(False))
-            if "then" in schema:
-                v, w = self._lower(schema["then"], dtype, col, base_uri, ipath, f"{kpath}/then")
-                add(
-                    F.when(cond, v).otherwise(F.lit(True)),
-                    F.when(cond, w).otherwise(_EMPTY_ARR()),
-                )
-            if "else" in schema:
-                v, w = self._lower(schema["else"], dtype, col, base_uri, ipath, f"{kpath}/else")
-                add(
-                    F.when(~cond, v).otherwise(F.lit(True)),
-                    F.when(~cond, w).otherwise(_EMPTY_ARR()),
-                )
-
-    # -- misc helpers -------------------------------------------------------
-    @staticmethod
-    def _enum_compatible(v, json_t: str) -> bool:
-        from jschon_spark.evaluator import json_type
-
-        if v is None:
-            return True
-        t = json_type(v)
-        if json_t == "integer":
-            return t == "number"
-        if json_t == "number":
-            return t == "number"
-        return t == json_t
-
-    @staticmethod
-    def _as_string(col: Column, dtype: T.DataType) -> Column:
-        if isinstance(dtype, T.TimestampType):
-            return F.date_format(col, "yyyy-MM-dd'T'HH:mm:ss'Z'")
-        if isinstance(dtype, T.DateType):
-            return F.date_format(col, "yyyy-MM-dd")
-        return col
-
-    _JAVA_INCOMPATIBLE = JAVA_INCOMPATIBLE  # back-compat alias
-
-    def _check_regex_dialect(self, pattern: str) -> None:
-        check_regex_dialect(pattern)
-
-    _FORMAT_REGEX = {
-        # RFC 3339 ranges (round 5) — sync with evaluator._TIME_RE /
-        # _DATETIME_RE; date/date-time additionally get a calendar
-        # conjunct in format_pred
-        # [0-9] not \d everywhere below: Java \d is ASCII but the batch
-        # evaluator's Python \d is unicode-wide — [0-9] is the one
-        # spelling both engines read identically (RFC grammars are
-        # ASCII DIGIT anyway); same for the email \s -> explicit set
-        "date-time": (
-            r"^[0-9]{4}-[0-9]{2}-[0-9]{2}[Tt]([01][0-9]|2[0-3]):[0-5][0-9]:"
-            r"([0-5][0-9]|60)(\.[0-9]+)?([Zz]|[+-]([01][0-9]|2[0-3]):[0-5][0-9])$"
-        ),
-        "date": r"^[0-9]{4}-[0-9]{2}-[0-9]{2}$",
-        "time": (
-            r"^([01][0-9]|2[0-3]):[0-5][0-9]:([0-5][0-9]|60)(\.[0-9]+)?"
-            r"([Zz]|[+-]([01][0-9]|2[0-3]):[0-5][0-9])$"
-        ),
-        "uuid": r"^[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$",
-        "ipv4": r"^((25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])\.){3}(25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])$",
-        # scheme lookahead + RFC 3986 character set (sync with the
-        # evaluator's "uri" entry — raw spaces / bare % are invalid)
-        "uri": (
-            r"^(?=[A-Za-z][A-Za-z0-9+.-]*:)"
-            r"(%[0-9A-Fa-f]{2}|[A-Za-z0-9\-._~:/?#\[\]@!$&'()*+,;=])*$"
-        ),
-        # lookaheads below are Java- and Python-compatible
-        "hostname": (
-            r"^(?=.{1,253}$)([A-Za-z0-9]([A-Za-z0-9-]{0,61}[A-Za-z0-9])?\.)*"
-            r"[A-Za-z0-9]([A-Za-z0-9-]{0,61}[A-Za-z0-9])?$"
-        ),
-        "email": r"^[^@ \t\n\x0B\f\r]+@[^@ \t\n\x0B\f\r]+\.[^@ \t\n\x0B\f\r]+$",
-        "duration": r"^P(?!$)([0-9]+Y)?([0-9]+M)?([0-9]+W)?([0-9]+D)?(T(?=[0-9])([0-9]+H)?([0-9]+M)?([0-9]+(\.[0-9]+)?S)?)?$",
-        "relative-json-pointer": r"^(0|[1-9][0-9]*)(#|(/([^~/]|~[01])*)*)$",
-        # round 5: remaining 2020-12 vocabulary names — the SAME source
-        # strings the evaluator compiles (evaluator.py defines them
-        # avoiding \s/\w so Java and Python read them identically).
-        # idn-hostname deliberately has NO Column form since round 6:
-        # the RFC 5892 contextual rules and RFC 5893 Bidi rule are
-        # beyond Java regex (no combining-class or bidi-category
-        # properties), so schemas asserting it route to the batch
-        # evaluator's full implementation (evaluator._fmt_idn_hostname)
-        "uri-reference": f"^{URI_REFERENCE_PATTERN}$",
-        "iri": f"^{IRI_PATTERN}$",
-        "iri-reference": f"^{IRI_REFERENCE_PATTERN}$",
-        "uri-template": f"^{URI_TEMPLATE_PATTERN}$",
-        "idn-email": f"^{IDN_EMAIL_PATTERN}$",
-    }
-
-    @classmethod
-    def format_pred(
-        cls, fmt: str, scol: Column, trusted_calendar: bool = False
-    ) -> Column | None:
-        """Full Column predicate for a built-in format, or None when
-        the format has no Column form. date/date-time carry a
-        calendar-validity conjunct (try_to_timestamp rejects
-        2023-02-29 exactly like the evaluator's _valid_ymd);
-        ``trusted_calendar=True`` skips it for strings produced by
-        date_format over timestamp/date columns, which are
-        calendar-valid by construction — keeps the flagship hot path
-        (warc_ts date-time assertion) a single rlike."""
-        rx = cls._FORMAT_REGEX.get(fmt)
-        if rx is None:
-            return None
-        pred = scol.rlike(rx)
-        if not trusted_calendar and fmt in ("date", "date-time"):
-            datepart = scol if fmt == "date" else F.substring(scol, 1, 10)
-            pred = pred & F.try_to_timestamp(
-                datepart, F.lit("yyyy-MM-dd")
-            ).isNotNull()
-        return pred
-
-    def _lower_format(
-        self, fmt: str, scol: Column, ipath: Column, kpath: str,
-        trusted_calendar: bool = False,
-    ):
-        pred = self.format_pred(fmt, scol, trusted_calendar)
-        if pred is not None:
-            return _check(pred, "format", ipath, kpath, scol, f"not a valid {fmt}")
-        from jschon_spark.functions.registry import FORMAT_REGISTRY
-        from jschon_spark.evaluator import FORMAT_VALIDATORS
-
-        entry = FORMAT_REGISTRY.get(fmt)
-        if entry is not None:
-            if entry.column_fn is None:
-                raise CannotLower(f"format {fmt!r} has no Column lowering -> batch")
-            return _check(
-                entry.column_fn(scol), "format", ipath, kpath, scol, f"not a valid {fmt}"
-            )
-        if fmt in FORMAT_VALIDATORS:
-            # built-in python validator without a Column form -> batch
-            raise CannotLower(f"format {fmt!r} needs the batch evaluator")
-        # unknown format: annotation only, never asserts (reference
-        # behavior, format.py:14-32) -> no runtime check
-        return F.lit(True), _EMPTY_ARR()
+ColumnLowerer.format_pred = staticmethod(format_pred)

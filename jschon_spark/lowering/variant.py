@@ -1,7 +1,10 @@
 """Variant lowering: dynamic JSON validated entirely JVM-side.
 
 Spark 4's VariantType lets a *dynamic* JSON column be validated with
-pure Column algebra — no Python even for schemaless documents:
+pure Column algebra — no Python even for schemaless documents.
+:class:`VariantLowerer` runs the shared keyword walker
+(lowering/keywords.py) over a :class:`VariantNode`, which reads values
+through:
 
   * ``try_parse_json``          — invalid JSON → NULL (matches the
     reference's parse-time NaN/Infinity rejection, utils.py:66-70)
@@ -10,23 +13,19 @@ pure Column algebra — no Python even for schemaless documents:
     BIGINT|DECIMAL|DOUBLE|FLOAT/ARRAY/OBJECT
   * ``try_variant_get(v, path, T)`` — typed extraction; presence =
     non-NULL type tag, JSON null = 'VOID' (distinguishable!)
-  * ``json_object_keys(doc)``   — key-set keywords (required count,
-    additionalProperties, propertyNames, min/maxProperties)
+  * ``json_object_keys(doc)``   — the key set (nested levels
+    re-serialize their variant with ``to_json``)
+  * ``array<variant>`` / ``map<string, variant>`` extraction, so
+    element and entry keywords lower onto higher-order functions.
 
-Coverage: object schemas over scalar, NESTED-OBJECT and (round 3)
-ARRAY properties — nested object levels re-serialize their variant
-with ``to_json`` for the key-set keywords, and arrays extract to
-``array<variant>`` so size/element/contains keywords lower onto
-higher-order functions. Round 4 adds schema-valued patternProperties
-(variant object -> ``map<string, variant>`` + regex-filtered entry
-HOFs) and compound enum/const (recursive structural equality) —
-still pure Column algebra end to end. Round 5 adds conservatively
-GATED unevaluatedProperties/unevaluatedItems (lowerable when no
-in-place applicator can merge child annotations at the same level)
-and statically-resolvable $dynamicRef/$recursiveRef; the genuinely
-dynamic forms raise CannotLower → the Arrow batch evaluator takes
-over. Violations match the batch evaluator's
-(keyword, instance_path, keyword_path) conventions.
+Compound enum/const lower to recursive structural equality.
+``unevaluatedProperties``/``unevaluatedItems`` are conservatively
+GATED (lowerable when no in-place applicator can merge child
+annotations at the same level); genuinely dynamic ``$dynamicRef``/
+``$recursiveRef`` and keywords outside the variant vocabulary raise
+CannotLower → the Arrow batch evaluator takes over. Violations match
+the batch evaluator's (keyword, instance_path, keyword_path)
+conventions.
 
 Number comparisons are exact through the tiered decimal(38,18)
 strategy wherever both sides are representable (see ``_num_pred``);
@@ -40,180 +39,407 @@ take the exact batch path.
 from __future__ import annotations
 
 import re
+from functools import cached_property
 from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from jschon_spark.lowering.columns import (
-    CannotLower,
+from jschon_spark.lowering.columns import format_pred
+from jschon_spark.lowering.keywords import (
+    KEYWORDS,
     VIOLATION_DDL,
+    CannotLower,
+    KeywordWalker,
     _EMPTY_ARR,
     _check,
-    _concat,
     _violation,
-    check_regex_dialect,
     dec18_exact,
 )
-from jschon_spark.schema.catalog import SchemaCatalog, pointer_escape
+from jschon_spark.schema.catalog import SchemaCatalog
 
 _KEY_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
-_SCALAR_KEYWORDS = {
-    "type", "enum", "const", "multipleOf", "maximum", "exclusiveMaximum",
-    "minimum", "exclusiveMinimum", "maxLength", "minLength", "pattern",
-    "format", "$comment", "title", "description", "default", "deprecated",
-    "examples", "readOnly", "writeOnly",
-}
+
+def _num_pred(v: Column, op, bound) -> Column:
+    """Exact numeric comparison of a variant value against a Python
+    bound, usable on ANY variant Column (HOF lambda variables included).
+
+    The double extraction rounds BIGINT values above 2^53 (10^18-1 <
+    1e18 compared equal), so compare in decimal(38,18) when the bound
+    is exactly representable at 18dp (tiny magnitudes like 2e-20 round
+    to 0E-18; |b| >= 1e20 overflows) AND the value round-trips
+    decimal->double (a 1e-20 doc casts to a non-NULL 0E-18); otherwise
+    the double compare, which is verdict-exact wherever the decimal
+    tier isn't available."""
+    if isinstance(bound, bool) or not isinstance(bound, (int, float)):
+        raise CannotLower("non-numeric bound -> batch")
+    if isinstance(bound, int) and abs(bound) > 2 ** 63 - 1:
+        raise CannotLower("integer bound beyond long -> batch")
+    dval = F.try_variant_get(v, "$", "double")
+    dbl = op(dval, F.lit(float(bound)))
+    if isinstance(bound, float) and not dec18_exact(bound):
+        import decimal as _dec
+
+        d = _dec.Decimal(repr(bound))
+        if not d.is_finite() or abs(d) >= _dec.Decimal(10) ** 20:
+            # big-magnitude float bound: variant docs can carry exact
+            # >2^53 integers as DECIMAL(38,0) (e.g. doc 10^20+1 vs
+            # exclusiveMinimum 1e20) and a double-only compare rounds
+            # them onto the bound — the batch evaluator's exact
+            # int-vs-float compare is the only faithful path
+            raise CannotLower("float bound beyond decimal(38,18) -> batch")
+        # tiny bounds (< 1e-18 resolution): both the variant and the
+        # batch path round such docs through double, so the double
+        # compare is verdict-exact here
+        return dbl
+    decval = F.try_variant_get(v, "$", "decimal(38,18)")
+    b_dec = F.lit(bound).cast("decimal(38,18)")
+    exact_val = decval.isNotNull() & (decval.cast("double") == dval)
+    return F.when(exact_val, op(decval, b_dec)).otherwise(dbl)
 
 
-def _esc_key(k: Column) -> Column:
-    """JSON-pointer-escape a dynamic key Column (~ -> ~0, / -> ~1)."""
-    return F.replace(
-        F.replace(k, F.lit("~"), F.lit("~0")), F.lit("/"), F.lit("~1")
-    )
-
-
-class VariantLowerer:
-    """Lower a flat schema onto (raw json string col, variant col)."""
-
-    def __init__(self, catalog: SchemaCatalog, assert_formats: bool = False) -> None:
-        self.catalog = catalog
-        self.assert_formats = assert_formats
-        self.dialect = "2020-12"
-        # cyclic-$ref guard (round 5 — an unguarded cycle would recurse
-        # unboundedly BUILDING Column expressions, hanging compile on
-        # Py4J round-trips instead of raising CannotLower -> batch)
-        self._ref_stack: list[int] = []
-        self._root: tuple[Any, str] | None = None
-        self._closure_done = False
-
-    def _dynamic_target(self, keyword: str, ref: Any, base_uri: str):
-        """Static (target, tbase) for $dynamicRef/$recursiveRef or
-        CannotLower — same rule as ColumnLowerer._dynamic_target."""
-        if not isinstance(ref, str):
-            raise CannotLower(f"non-string {keyword} -> batch")
-        if not self._closure_done:
-            if self._root is not None:
-                self.catalog.preload_ref_closure(*self._root)
-            self._closure_done = True
-        resolver = (
-            self.catalog.static_dynamic_target
-            if keyword == "$dynamicRef"
-            else self.catalog.static_recursive_target
+def _eq_value(v: Column, x: Any) -> Column:
+    """Exact JSON equality of a variant value against a Python JSON
+    literal — the compound enum/const lowering. Numeric equality is
+    cross-type (1 == 1.0) and exact past 2^53; bools never equal
+    numbers (type-tag gated, matching the evaluator's _json_equal)."""
+    sv = F.schema_of_variant(v)
+    if x is None:
+        return sv == "VOID"
+    if isinstance(x, bool):
+        return (sv == "BOOLEAN") & F.coalesce(
+            F.try_variant_get(v, "$", "boolean") == F.lit(x), F.lit(False)
         )
-        got = resolver(ref, base_uri)
-        if got is None:
-            raise CannotLower(f"{keyword} {ref!r} rebinds dynamically -> batch")
-        return got
+    if isinstance(x, (int, float)):
+        is_num = sv.isin("BIGINT", "DOUBLE", "FLOAT") | sv.startswith("DECIMAL")
+        return is_num & F.coalesce(
+            _num_pred(v, lambda c, b: c == b, x), F.lit(False)
+        )
+    if isinstance(x, str):
+        return (sv == "STRING") & F.coalesce(
+            F.try_variant_get(v, "$", "string") == F.lit(x), F.lit(False)
+        )
+    if isinstance(x, list):
+        arr = F.try_variant_get(v, "$", "array<variant>")
+        pred = sv.startswith("ARRAY") & arr.isNotNull() & (
+            F.size(arr) == F.lit(len(x))
+        )
+        for i, xi in enumerate(x):
+            # F.get: 0-based, NULL (not error) when out of bounds
+            pred = pred & F.coalesce(_eq_value(F.get(arr, i), xi), F.lit(False))
+        return pred
+    if isinstance(x, dict):
+        # key-count equality via the re-serialized key set (object key
+        # order is irrelevant to JSON equality)
+        pred = sv.startswith("OBJECT") & F.coalesce(
+            F.size(F.json_object_keys(F.to_json(v))) == F.lit(len(x)),
+            F.lit(False),
+        )
+        for k, xv in x.items():
+            if not _KEY_RE.match(k):
+                raise CannotLower(f"compound const key {k!r} -> batch")
+            child = F.try_variant_get(v, f"$.{k}", "variant")
+            pred = (
+                pred
+                & F.schema_of_variant(child).isNotNull()
+                & F.coalesce(_eq_value(child, xv), F.lit(False))
+            )
+        return pred
+    raise CannotLower(f"const of type {type(x).__name__} -> batch")
 
-    def _num_pred(self, v: Column, op, bound) -> Column:
-        """Exact numeric comparison of a variant value against a
-        Python bound — the tiered decimal(38,18)/double strategy of
-        ``num_cmp`` (see the comment there), usable on ANY variant
-        Column (HOF lambda variables included)."""
-        if isinstance(bound, bool) or not isinstance(bound, (int, float)):
-            raise CannotLower("non-numeric bound -> batch")
-        if isinstance(bound, int) and abs(bound) > 2 ** 63 - 1:
-            raise CannotLower("integer bound beyond long -> batch")
-        dval = F.try_variant_get(v, "$", "double")
-        dbl = op(dval, F.lit(float(bound)))
-        if isinstance(bound, float) and not dec18_exact(bound):
-            import decimal as _dec
 
-            d = _dec.Decimal(repr(bound))
-            if not d.is_finite() or abs(d) >= _dec.Decimal(10) ** 20:
-                # big-magnitude float bound: variant docs can carry
-                # exact >2^53 integers as DECIMAL(38,0) (e.g. doc
-                # 10^20+1 vs exclusiveMinimum 1e20) and a double-only
-                # compare rounds them onto the bound — the batch
-                # evaluator's exact int-vs-float compare is the only
-                # faithful path
-                raise CannotLower("float bound beyond decimal(38,18) -> batch")
-            # tiny bounds (< 1e-18 resolution): both the variant and
-            # the batch path round such docs through double, so the
-            # double compare is verdict-exact here
-            return dbl
-        decval = F.try_variant_get(v, "$", "decimal(38,18)")
-        b_dec = F.lit(bound).cast("decimal(38,18)")
-        exact_val = decval.isNotNull() & (decval.cast("double") == dval)
-        return F.when(exact_val, op(decval, b_dec)).otherwise(dbl)
+class VariantNode:
+    """A VariantType value; ``raw`` is the document's JSON string at the
+    root (its key set needs no re-serialization), None below it."""
 
-    def _eq_value(self, v: Column, x: Any) -> Column:
-        """Exact JSON equality of a variant value against a Python JSON
-        literal — the compound enum/const lowering (round 4). Numeric
-        equality is cross-type (1 == 1.0) and exact past 2^53; bools
-        never equal numbers (type-tag gated, matching the evaluator's
-        _json_equal)."""
-        sv = F.schema_of_variant(v)
+    json_t = dtype = None  # no static type: custom keywords never lower
+    fields = None  # the key set is dynamic
+
+    def __init__(self, val: Column, raw: Column | None = None) -> None:
+        self.col = val
+        self.raw = raw
+        self._tags: dict[str, Column] = {}
+
+    def admit(self, schema: dict, dialect: str) -> None:
+        allowed = KEYWORDS - {"uniqueItems"}
+        if dialect != "2019-09":
+            allowed = allowed - {"additionalItems"}
+        unsupported = set(schema) - allowed
+        if unsupported:
+            raise CannotLower(f"variant lowering does not support {sorted(unsupported)}")
+
+    def may_be(self, json_t: str) -> bool:
+        return True
+
+    # -- runtime type tags -------------------------------------------------------
+    @cached_property
+    def tag(self) -> Column:
+        return F.schema_of_variant(self.col)
+
+    def is_type(self, json_t: str) -> Column:
+        # one Column per tag test and level
+        if json_t not in self._tags:
+            self._tags[json_t] = self._type_test(json_t)
+        return self._tags[json_t]
+
+    def _type_test(self, json_t: str) -> Column:
+        sv = self.tag
+        if json_t == "number":
+            return sv.isin("BIGINT", "DOUBLE", "FLOAT") | sv.startswith("DECIMAL")
+        if json_t == "integer":
+            # fmod (%), not floor: floor(double) yields BIGINT, which
+            # overflows past 2^63 (1e30 IS an integer). And %, not pmod:
+            # pmod adds the modulus back, and -1e-20 + 1.0 ROUNDS to 1.0,
+            # misclassifying tiny negatives as integers; fmod is exact
+            # and sign-preserving (-0.0 == 0)
+            return self.is_type("number") & ((self.dval % F.lit(1.0)) == 0)
+        if json_t == "object":
+            return sv.startswith("OBJECT") | (sv == "OBJECT<>")
+        if json_t == "array":
+            return sv.startswith("ARRAY")
+        return sv == {"null": "VOID", "boolean": "BOOLEAN", "string": "STRING"}[json_t]
+
+    def guard(self, json_t: str, pred: Column) -> Column:
+        # keyword applies only to its instance type; else vacuous
+        if json_t in ("string", "number"):
+            pred = F.coalesce(pred, F.lit(False))
+        return F.when(self.is_type(json_t), pred).otherwise(F.lit(True))
+
+    @cached_property
+    def dval(self) -> Column:
+        return F.try_variant_get(self.col, "$", "double")
+
+    @cached_property
+    def value(self) -> Column:
+        return F.try_variant_get(self.col, "$", "string")
+
+    @property
+    def string(self) -> Column:
+        return self.value
+
+    # -- type / enum / const --------------------------------------------------
+    def type_pred(self, wanted: list) -> Column:
+        pred = self.is_type(wanted[0])
+        for t in wanted[1:]:
+            pred = pred | self.is_type(t)
+        return pred
+
+    def const_pred(self, x: Any) -> Column:
         if x is None:
-            return sv == "VOID"
+            return self.is_type("null")
         if isinstance(x, bool):
-            return (sv == "BOOLEAN") & F.coalesce(
-                F.try_variant_get(v, "$", "boolean") == F.lit(x), F.lit(False)
-            )
+            return self.is_type("boolean") & (
+                F.try_variant_get(self.col, "$", "boolean") == x)
         if isinstance(x, (int, float)):
-            is_num = sv.isin("BIGINT", "DOUBLE", "FLOAT") | sv.startswith("DECIMAL")
-            return is_num & F.coalesce(
-                self._num_pred(v, lambda c, b: c == b, x), F.lit(False)
-            )
+            return self.is_type("number") & _num_pred(self.col, lambda c, b: c == b, x)
         if isinstance(x, str):
-            return (sv == "STRING") & F.coalesce(
-                F.try_variant_get(v, "$", "string") == F.lit(x), F.lit(False)
+            return self.is_type("string") & (self.value == x)
+        # compound member: recursive structural equality
+        return F.coalesce(_eq_value(self.col, x), F.lit(False))
+
+    def enum_pred(self, values: list) -> Column:
+        pred = F.lit(False)
+        for x in values:
+            pred = pred | self.const_pred(x)
+        return pred
+
+    # -- numbers -------------------------------------------------------------------
+    def multiple_of(self, m) -> Column:
+        # 12-dp modulus both sides, value sourced exactly when it fits:
+        # casting through double first would round big ints (…999 % 2
+        # reported 0). The 12-dp rounding itself is deliberate — it
+        # makes double-parsed literals like 19.99 behave as
+        # Decimal("19.99"), matching the evaluator. try_cast: ANSI mode
+        # makes a plain cast ERROR on overflow (a 1e30 doc would kill
+        # the job). Three exactness tiers:
+        # (1) |v| < 1e26: decimal(38,12) modulus;
+        # (2) larger but within decimal range: doubles > 2^53 are
+        #     integral and Spark's double->decimal cast uses
+        #     shortest-repr (same semantics as Python Decimal(repr(x))),
+        #     so a scale-0 modulus against m at its own minimal scale is
+        #     exact — magnitude-guarded so ANSI promotion can't overflow;
+        # (3) beyond that: double modulus, approximate like any engine
+        #     computing on parsed doubles.
+        from decimal import Decimal as _D
+
+        dval = self.dval
+        m_dec = _D(repr(m)) if isinstance(m, float) else _D(m)
+        m_scale = max(0, -m_dec.as_tuple().exponent)
+        mval = F.coalesce(
+            F.try_variant_get(self.col, "$", "decimal(38,18)").try_cast("decimal(38,12)"),
+            dval.try_cast("decimal(38,12)"),
+        )
+        dec_ok = (mval % F.lit(m).cast("decimal(38,12)")) == 0
+        # %, not pmod: pmod adds the modulus back and -1e-20 + m rounds
+        # to m exactly, declaring tiny negatives multiples of anything;
+        # fmod is exact and sign-preserving
+        dbl_ok = (dval % F.lit(float(m))) == 0
+        # each decimal tier must ROUND-TRIP the value (a 1e-20 doc casts
+        # to a non-NULL 0E-12, which is a multiple of everything) —
+        # otherwise fall through to the next tier
+        mval_exact = mval.isNotNull() & (mval.cast("double") == dval)
+        branch = F.when(mval_exact, dec_ok)
+        if m_scale <= 12 and len(m_dec.as_tuple().digits) <= 38 - m_scale:
+            v0 = dval.try_cast("decimal(38,0)")
+            big_guard = (
+                v0.isNotNull()
+                & (v0.cast("double") == dval)
+                & (F.abs(dval) < F.lit(float(10 ** (36 - m_scale))))
             )
-        if isinstance(x, list):
-            arr = F.try_variant_get(v, "$", "array<variant>")
-            pred = sv.startswith("ARRAY") & arr.isNotNull() & (
-                F.size(arr) == F.lit(len(x))
+            big_ok = (v0 % F.lit(float(m)).cast(f"decimal(38,{m_scale})")) == 0
+            branch = branch.when(big_guard, big_ok)
+        return branch.otherwise(dbl_ok)
+
+    def compare(self, op, bound) -> Column:
+        return _num_pred(self.col, op, bound)
+
+    def format_check(self, fmt: str, ipath: Column, kpath: str):
+        # full predicate incl. the date/date-time calendar conjunct
+        fpred = format_pred(fmt, self.string)
+        if fpred is None:
+            raise CannotLower(f"format {fmt!r} -> batch")
+        return _check(self.guard("string", fpred), "format", ipath, kpath,
+                      self.string, f"not a valid {fmt}")
+
+    # -- arrays: try_variant_get(v, "$", "array<variant>") is a real Spark
+    # array of per-element variants (NULL when not an array). JSON-null
+    # elements are VOID-tagged variants, NOT SQL NULLs, so F.get()
+    # returning NULL means out-of-bounds only.
+    @cached_property
+    def arr(self) -> Column:
+        return F.try_variant_get(self.col, "$", "array<variant>")
+
+    @cached_property
+    def size(self) -> Column:
+        return F.size(self.arr)
+
+    def item(self, j: int):
+        return VariantNode(F.get(self.arr, j)), self.is_type("array") & (self.size > j)
+
+    def each_item(self, start: int, lower):
+        def result(e: Column, i: Column) -> Column:
+            v, w = lower(VariantNode(e), i + start)
+            return F.struct(
+                F.coalesce(v, F.lit(False)).alias("v"),
+                w.cast(VIOLATION_DDL).alias("w"),
             )
-            for i, xi in enumerate(x):
-                # F.get: 0-based, NULL (not error) when out of bounds
-                pred = pred & F.coalesce(
-                    self._eq_value(F.get(arr, i), xi), F.lit(False)
-                )
-            return pred
-        if isinstance(x, dict):
-            # key-count equality via the re-serialized key set (object
-            # key order is irrelevant to JSON equality)
-            pred = sv.startswith("OBJECT") & F.coalesce(
-                F.size(F.json_object_keys(F.to_json(v))) == F.lit(len(x)),
-                F.lit(False),
+
+        rest = F.slice(self.arr, start + 1, F.greatest(self.size - start, F.lit(0)))
+        per = F.transform(rest, result)
+        allok = F.forall(per, lambda s: s["v"])
+        pred = self.guard("array", F.coalesce(allok, F.lit(True)))
+        wcol = F.when(
+            self.is_type("array") & ~F.coalesce(allok, F.lit(True)),
+            F.flatten(F.transform(F.filter(per, lambda s: ~s["v"]), lambda s: s["w"])),
+        ).otherwise(_EMPTY_ARR()).cast(VIOLATION_DDL)
+        return F.coalesce(pred, F.lit(False)), wcol
+
+    def count_matching(self, pred) -> Column:
+        return F.size(F.filter(
+            self.arr, lambda e: F.coalesce(pred(VariantNode(e)), F.lit(False))
+        ))
+
+    def unevaluated_items(self, walker, schema, base_uri, ipath, kpath):
+        """Conservative gate (mirroring unevaluatedProperties): no
+        in-place applicator may merge child item annotations at this
+        level, and (2020-12) no contains sibling — its matches count as
+        evaluated there, a per-element dynamic fact; 2019-09 collects
+        only items/additionalItems/unevaluatedItems annotations, so
+        contains is inert (reference legacy.py:115-147). Coverage is
+        valid-aware like the evaluator's: evaluated_items.add(i) happens
+        only when the sibling application SUCCEEDED on the element."""
+        walker.local_coverage_gate(schema, "unevaluatedItems")
+        if walker.dialect != "2019-09" and "contains" in schema:
+            raise CannotLower("unevaluatedItems with contains -> batch")
+        uei = schema["unevaluatedItems"]
+        if uei is True:
+            return []
+        if isinstance(schema.get("items"), list):
+            prefix, rest_kw = schema["items"], "additionalItems"
+        else:
+            prefix, rest_kw = schema.get("prefixItems") or [], "items"
+
+        def result(e: Column, i: Column) -> Column:
+            node = VariantNode(e)
+            covered = F.lit(False)
+            for j, psub in enumerate(prefix):
+                covered = F.when(i == j, walker.passes(psub, node, base_uri)).otherwise(covered)
+            if rest_kw in schema:
+                covered = F.when(
+                    i >= len(prefix), walker.passes(schema[rest_kw], node, base_uri)
+                ).otherwise(covered)
+            cv, cw = walker.visit(uei, node, base_uri,
+                                  F.concat(ipath, F.lit("/"), i.cast("string")),
+                                  f"{kpath}/unevaluatedItems")
+            ok = covered | F.coalesce(cv, F.lit(False))
+            return F.struct(
+                ok.alias("ok"),
+                F.when(ok, _EMPTY_ARR()).otherwise(cw).cast(VIOLATION_DDL).alias("w"),
             )
-            for k, xv in x.items():
-                if not _KEY_RE.match(k):
-                    raise CannotLower(f"compound const key {k!r} -> batch")
-                child = F.try_variant_get(v, f"$.{k}", "variant")
-                pred = (
-                    pred
-                    & F.schema_of_variant(child).isNotNull()
-                    & F.coalesce(self._eq_value(child, xv), F.lit(False))
-                )
-            return pred
-        raise CannotLower(f"const of type {type(x).__name__} -> batch")
+
+        res = F.transform(self.arr, result)
+        pred = self.guard("array", F.coalesce(F.forall(res, lambda r: r["ok"]), F.lit(True)))
+        bad = F.flatten(
+            F.transform(F.filter(res, lambda r: ~r["ok"]), lambda r: r["w"])
+        ).cast(VIOLATION_DDL)
+        return [(F.coalesce(pred, F.lit(False)), F.when(pred, _EMPTY_ARR()).otherwise(bad))]
+
+    # -- objects -------------------------------------------------------------------
+    @cached_property
+    def keys(self) -> Column:
+        return F.json_object_keys(self.raw if self.raw is not None else F.to_json(self.col))
+
+    @cached_property
+    def prop_count(self) -> Column:
+        return F.size(self.keys)
+
+    def _child(self, name: str) -> Column:
+        if not _KEY_RE.match(name):
+            # checked BEFORE building the column: a None path makes
+            # try_variant_get raise PySparkTypeError, which the engine's
+            # CannotLower fallback would not catch
+            raise CannotLower(f"property name {name!r} needs batch path")
+        return F.try_variant_get(self.col, f"$.{name}", "variant")
+
+    def has(self, name: str) -> Column:
+        return F.schema_of_variant(self._child(name)).isNotNull()
+
+    def present(self, name: str) -> Column:
+        return self.is_type("object") & self.has(name)
+
+    def prop(self, name: str):
+        child = VariantNode(self._child(name))
+        return child, self.present(name)
+
+    @cached_property
+    def entries(self) -> Column:
+        return F.map_entries(F.try_variant_get(self.col, "$", "map<string, variant>"))
+
+    def entry_node(self, value: Column) -> "VariantNode":
+        return VariantNode(value)
+
+    def unevaluated_properties(self, walker, schema, base_uri):
+        """Conservative gate: additionalProperties:true evaluates every
+        uncovered key (handled by the walker); any other form -> batch.
+        Coverage counts only VALIDLY evaluated siblings."""
+        walker.local_coverage_gate(schema, "unevaluatedProperties")
+        if schema.get("additionalProperties", True) is not True:
+            raise CannotLower(
+                "unevaluatedProperties alongside non-trivial additionalProperties -> batch")
+        return (list(schema.get("properties") or {}),
+                list(schema.get("patternProperties") or {}), True)
+
+
+class VariantLowerer(KeywordWalker):
+    """Lower a schema onto (raw json string col, variant col)."""
 
     def lower(
         self, schema: Any, doc: Column, v: Column, base_uri: str = ""
     ) -> tuple[Column, Column]:
         """(passed, violations) for one document; doc is the raw JSON
         string, v = try_parse_json(doc)."""
-        # dialect derived like the evaluator (_dialect_of): it gates
-        # the 2019-09 tuple-items/additionalItems forms below; nested
-        # $schema switches raise CannotLower -> batch
-        s = schema.get("$schema") if isinstance(schema, dict) else None
-        # non-string $schema is ignored, mirroring the evaluator's
-        # isinstance gate (a TypeError here would crash compile instead
-        # of falling back to batch)
-        if isinstance(s, str) and not s.startswith(
-            "https://json-schema.org/draft"
-        ):
-            # custom metaschema may declare format-assertion -> batch
-            raise CannotLower("custom root metaschema -> batch")
-        self.dialect = (
-            "2019-09" if (isinstance(s, str) and "2019-09" in s) else "2020-12"
-        )
-        if self._root is None:
-            self._root = (schema, base_uri)
-        valid, viols = self._lower_value(schema, v, doc, F.lit(""), "", base_uri)
+        valid, viols = self.walk(schema, VariantNode(v, doc), base_uri, F.lit(""))
         parse_fail = doc.isNotNull() & v.isNull()
         passed = F.when(doc.isNull(), F.lit(None).cast("boolean")).otherwise(
             F.when(parse_fail, F.lit(False)).otherwise(valid)
@@ -228,879 +454,6 @@ class VariantLowerer:
         )
         return passed, violations
 
-    # -- core: lower a schema against a variant VALUE --------------------
-    def _lower_value(
-        self,
-        schema: Any,
-        val: Column,
-        raw_doc: Column | None,
-        ipath: Column,
-        kpath: str,
-        base_uri: str = "",
-    ) -> tuple[Column, Column]:
-        if isinstance(schema, bool):
-            if schema:
-                return F.lit(True), _EMPTY_ARR()
-            return F.lit(False), F.array(
-                _violation(kpath.rsplit("/", 1)[-1], ipath, kpath, val.cast("string"),
-                           "boolean schema false permits nothing")
-            )
-        if not isinstance(schema, dict):
-            raise CannotLower("schema must be bool or object")
-
-        if isinstance(schema.get("$schema"), str):
-            if not schema["$schema"].startswith("https://json-schema.org/draft"):
-                # custom metaschemas can re-wire keyword semantics
-                # (format-assertion $vocabulary, round 6) -> batch
-                raise CannotLower("custom metaschema -> batch")
-            sub_d = "2019-09" if "2019-09" in schema["$schema"] else "2020-12"
-            if sub_d != self.dialect:
-                raise CannotLower("nested dialect switch -> batch")
-        if self.dialect == "2019-09" and "prefixItems" in schema:
-            # not a 2019-09 keyword: the evaluator treats it as an
-            # annotation; enforcing it here would diverge
-            raise CannotLower("prefixItems under 2019-09 -> batch")
-
-        unsupported = set(schema) - _SCALAR_KEYWORDS - {
-            "required", "dependentRequired", "maxProperties", "minProperties",
-            "properties", "additionalProperties", "propertyNames",
-            "patternProperties", "dependentSchemas", "unevaluatedProperties",
-            "maxItems", "minItems", "prefixItems", "items",
-            "contains", "maxContains", "minContains", "unevaluatedItems",
-            "allOf", "anyOf", "oneOf", "not", "if", "then", "else",
-            # $anchor is evaluation-inert: registration happened in
-            # the catalog at compile; only the URI machinery reads it
-            # ($dynamicAnchor/$recursiveAnchor likewise — the REFS are
-            # handled below, statically or CannotLower)
-            "$defs", "$id", "$schema", "$ref", "$anchor",
-            "$dynamicRef", "$recursiveRef",
-            "$dynamicAnchor", "$recursiveAnchor",
-        }
-        if self.dialect == "2019-09":
-            unsupported -= {"additionalItems"}
-        if unsupported:
-            raise CannotLower(f"variant lowering does not support {sorted(unsupported)}")
-
-        sv = F.schema_of_variant(val)
-        present = sv.isNotNull()
-        is_num = sv.isin("BIGINT", "DOUBLE", "FLOAT") | sv.startswith("DECIMAL")
-        is_str = sv == "STRING"
-        is_bool = sv == "BOOLEAN"
-        is_null = sv == "VOID"
-        is_obj = sv.startswith("OBJECT") | (sv == "OBJECT<>")
-        is_arr = sv.startswith("ARRAY")
-        dval = F.try_variant_get(val, "$", "double")
-        strval = F.try_variant_get(val, "$", "string")
-
-        valids: list[Column] = []
-        viols: list[Column] = []
-
-        def add(c: Column, w: Column) -> None:
-            valids.append(c)
-            viols.append(w)
-
-        for _ref_kw in ("$ref", "$dynamicRef", "$recursiveRef"):
-            if _ref_kw not in schema:
-                continue
-            if _ref_kw == "$ref":
-                target, tbase = self.catalog.resolve(schema["$ref"], base_uri)
-            else:
-                # statically-resolvable dynamic refs inline like $ref
-                # (round 5); dynamic rebinding -> CannotLower -> batch
-                target, tbase = self._dynamic_target(
-                    _ref_kw, schema[_ref_kw], base_uri
-                )
-            tid = id(target)
-            if tid in self._ref_stack:
-                raise CannotLower(f"cyclic {_ref_kw} -> batch")
-            self._ref_stack.append(tid)
-            try:
-                add(*self._lower_value(
-                    target, val, raw_doc, ipath, kpath + "/" + _ref_kw, tbase
-                ))
-            finally:
-                self._ref_stack.pop()
-
-        if "type" in schema:
-            wanted = schema["type"]
-            if isinstance(wanted, str):
-                wanted = [wanted]
-            parts = []
-            for t in wanted:
-                parts.append(
-                    {
-                        "null": is_null,
-                        "boolean": is_bool,
-                        "string": is_str,
-                        "number": is_num,
-                        # fmod (%), not floor: floor(double) yields
-                        # BIGINT, which overflows past 2^63 (1e30 IS an
-                        # integer). And %, not pmod: pmod adds the
-                        # modulus back, and -1e-20 + 1.0 ROUNDS to 1.0,
-                        # misclassifying tiny negatives as integers;
-                        # fmod is exact and sign-preserving (-0.0 == 0)
-                        "integer": is_num & ((dval % F.lit(1.0)) == 0),
-                        "object": is_obj,
-                        "array": is_arr,
-                    }[t]
-                )
-            pred = parts[0]
-            for p in parts[1:]:
-                pred = pred | p
-            add(*_check(pred, "type", ipath, kpath, strval, f"type must be one of {wanted}"))
-
-        # Exact numeric comparison: the double extraction rounds BIGINT
-        # values above 2^53 (10^18-1 < 1e18 compared equal), so compare
-        # in decimal(38,18) when the value fits — 18-dp rounding is
-        # finer than the double gap wherever |x| < 1e19, and order/
-        # equality of distinct doubles is preserved. Values or bounds
-        # beyond that magnitude fall back to the double compare.
-        decval = F.try_variant_get(val, "$", "decimal(38,18)")
-
-        def num_cmp(op, bound):
-            # Tier selection (see _num_pred): bound must be exactly
-            # representable at 18dp (tiny magnitudes like 2e-20 round
-            # to 0E-18; |b| >= 1e20 overflows) AND the value must
-            # round-trip decimal->double (a 1e-20 doc casts to a
-            # non-NULL 0E-18); otherwise the double compare, which is
-            # verdict-exact wherever the decimal tier isn't available.
-            return self._num_pred(val, op, bound)
-
-        def num_eq(x):
-            return num_cmp(lambda c, b: c == b, x)
-
-        if "enum" in schema:
-            values = schema["enum"]
-            pred = F.lit(False)
-            for x in values:
-                if x is None:
-                    pred = pred | is_null
-                elif isinstance(x, bool):
-                    pred = pred | (is_bool & (F.try_variant_get(val, "$", "boolean") == x))
-                elif isinstance(x, (int, float)):
-                    pred = pred | (is_num & num_eq(x))
-                elif isinstance(x, str):
-                    pred = pred | (is_str & (strval == x))
-                else:
-                    # compound member: recursive structural equality
-                    # (round 4 — was a batch fallback)
-                    pred = pred | F.coalesce(self._eq_value(val, x), F.lit(False))
-            add(*_check(pred, "enum", ipath, kpath, strval, "value not in enumeration"))
-
-        if "const" in schema:
-            x = schema["const"]
-            if x is None:
-                pred = is_null
-            elif isinstance(x, bool):
-                pred = is_bool & (F.try_variant_get(val, "$", "boolean") == x)
-            elif isinstance(x, (int, float)):
-                pred = is_num & num_eq(x)
-            elif isinstance(x, str):
-                pred = is_str & (strval == x)
-            else:
-                pred = F.coalesce(self._eq_value(val, x), F.lit(False))
-            add(*_check(pred, "const", ipath, kpath, strval, "value does not equal const"))
-
-        def gated(cond: Column, applies: Column) -> Column:
-            # keyword applies only to its instance type; else vacuous
-            return F.when(applies, F.coalesce(cond, F.lit(False))).otherwise(F.lit(True))
-
-        if "multipleOf" in schema:
-            m = schema["multipleOf"]
-            # 12-dp modulus both sides, value sourced exactly when it
-            # fits: casting through double first would round big ints
-            # (…999 % 2 reported 0). The 12-dp rounding itself is
-            # deliberate — it makes double-parsed literals like 19.99
-            # behave as Decimal("19.99"), matching the evaluator.
-            # try_cast: ANSI mode makes a plain cast ERROR on overflow
-            # (a 1e30 doc would kill the job). Three exactness tiers:
-            # (1) |v| < 1e26: decimal(38,12) modulus;
-            # (2) larger but within decimal range: doubles > 2^53 are
-            #     integral and Spark's double->decimal cast uses
-            #     shortest-repr (same semantics as Python
-            #     Decimal(repr(x))), so a scale-0 modulus against m at
-            #     its own minimal scale is exact — magnitude-guarded
-            #     so ANSI promotion can't overflow;
-            # (3) beyond that: double modulus, approximate like any
-            #     engine computing on parsed doubles.
-            from decimal import Decimal as _D
-
-            m_dec = _D(repr(m)) if isinstance(m, float) else _D(m)
-            m_scale = max(0, -m_dec.as_tuple().exponent)
-            mval = F.coalesce(
-                decval.try_cast("decimal(38,12)"),
-                dval.try_cast("decimal(38,12)"),
-            )
-            dec_ok = (mval % F.lit(m).cast("decimal(38,12)")) == 0
-            # %, not pmod: pmod adds the modulus back and -1e-20 + m
-            # rounds to m exactly, declaring tiny negatives multiples
-            # of anything; fmod is exact and sign-preserving
-            dbl_ok = (dval % F.lit(float(m))) == 0
-            # each decimal tier must ROUND-TRIP the value (a 1e-20 doc
-            # casts to a non-NULL 0E-12, which is a multiple of
-            # everything) — otherwise fall through to the next tier
-            mval_exact = mval.isNotNull() & (mval.cast("double") == dval)
-            branch = F.when(mval_exact, dec_ok)
-            if m_scale <= 12 and len(m_dec.as_tuple().digits) <= 38 - m_scale:
-                v0 = dval.try_cast("decimal(38,0)")
-                big_guard = (
-                    v0.isNotNull()
-                    & (v0.cast("double") == dval)
-                    & (F.abs(dval) < F.lit(float(10 ** (36 - m_scale))))
-                )
-                big_ok = (
-                    v0 % F.lit(float(m)).cast(f"decimal(38,{m_scale})")
-                ) == 0
-                branch = branch.when(big_guard, big_ok)
-            pred = gated(branch.otherwise(dbl_ok), is_num)
-            add(*_check(pred, "multipleOf", ipath, kpath, strval, f"not a multiple of {m}"))
-        for kw, op in (
-            ("maximum", lambda c, m: c <= m),
-            ("exclusiveMaximum", lambda c, m: c < m),
-            ("minimum", lambda c, m: c >= m),
-            ("exclusiveMinimum", lambda c, m: c > m),
-        ):
-            if kw in schema:
-                pred = gated(num_cmp(op, schema[kw]), is_num)
-                add(*_check(pred, kw, ipath, kpath, strval, f"violates {kw} {schema[kw]}"))
-
-        if "maxLength" in schema:
-            add(*_check(gated(F.length(strval) <= schema["maxLength"], is_str),
-                        "maxLength", ipath, kpath, strval,
-                        f"longer than {schema['maxLength']}"))
-        if "minLength" in schema:
-            add(*_check(gated(F.length(strval) >= schema["minLength"], is_str),
-                        "minLength", ipath, kpath, strval,
-                        f"shorter than {schema['minLength']}"))
-        if "pattern" in schema:
-            pat = schema["pattern"]
-            check_regex_dialect(pat)
-            add(*_check(gated(strval.rlike(pat), is_str),
-                        "pattern", ipath, kpath, strval,
-                        f"does not match pattern {pat}"))
-        if "format" in schema and self.assert_formats:
-            from jschon_spark.lowering.columns import ColumnLowerer
-
-            # full predicate incl. the date/date-time calendar conjunct
-            fpred = ColumnLowerer.format_pred(schema["format"], strval)
-            if fpred is None:
-                raise CannotLower(f"format {schema['format']!r} -> batch")
-            add(*_check(gated(fpred, is_str),
-                        "format", ipath, kpath, strval,
-                        f"not a valid {schema['format']}"))
-
-        # ---- object keywords (need the raw doc for the key set) --------
-        obj_kws = {"required", "dependentRequired", "maxProperties",
-                   "minProperties", "properties", "additionalProperties",
-                   "propertyNames", "patternProperties", "dependentSchemas",
-                   "unevaluatedProperties"}
-        if obj_kws & set(schema):
-            # key set: the root has the raw JSON string; nested objects
-            # re-serialize their variant (to_json(variant) is JVM-side),
-            # so props-style schemas with nested levels stay lowerable
-            keys_src = raw_doc if raw_doc is not None else F.to_json(val)
-            keys = F.json_object_keys(keys_src)
-
-            def prop_tag(name: str) -> Column:
-                if not _KEY_RE.match(name):
-                    raise CannotLower(f"property name {name!r} needs batch path")
-                return F.schema_of_variant(F.try_variant_get(val, f"$.{name}", "variant"))
-
-            if "required" in schema and schema["required"]:
-                # single violation per keyword listing the missing
-                # names — evaluator parity (found by the round-4
-                # random differential: multi-missing docs diverged)
-                present = [
-                    (req, prop_tag(req).isNotNull())
-                    for req in schema["required"]
-                ]
-                all_ok = present[0][1]
-                for _, p in present[1:]:
-                    all_ok = all_ok & p
-                missing = F.substring(
-                    F.concat_ws(
-                        ", ",
-                        *[F.when(p, F.lit(None)).otherwise(F.lit(r))
-                          for r, p in present],
-                    ),
-                    1, 256,
-                )
-                pred = F.when(is_obj, all_ok).otherwise(F.lit(True))
-                add(*_check(pred, "required", ipath, kpath, missing,
-                            "missing required properties"))
-            if "dependentRequired" in schema:
-                for k, deps in schema["dependentRequired"].items():
-                    dep_ok = F.lit(True)
-                    for d in deps:
-                        dep_ok = dep_ok & prop_tag(d).isNotNull()
-                    pred = F.when(is_obj & prop_tag(k).isNotNull(), dep_ok).otherwise(F.lit(True))
-                    add(*_check(pred, "dependentRequired", ipath, kpath, F.lit(k),
-                                f"property {k!r} requires {deps}"))
-            if "maxProperties" in schema:
-                pred = F.when(is_obj, F.size(keys) <= schema["maxProperties"]).otherwise(F.lit(True))
-                add(*_check(pred, "maxProperties", ipath, kpath, F.size(keys),
-                            f"more than {schema['maxProperties']} properties"))
-            if "minProperties" in schema:
-                pred = F.when(is_obj, F.size(keys) >= schema["minProperties"]).otherwise(F.lit(True))
-                add(*_check(pred, "minProperties", ipath, kpath, F.size(keys),
-                            f"fewer than {schema['minProperties']} properties"))
-            covered: list[str] = []
-            if "properties" in schema:
-                for name, sub in schema["properties"].items():
-                    covered.append(name)
-                    if not _KEY_RE.match(name):
-                        # check BEFORE building the column: a None path makes
-                        # try_variant_get raise PySparkTypeError, which the
-                        # engine's CannotLower fallback would not catch
-                        raise CannotLower(f"property name {name!r} -> batch")
-                    child = F.try_variant_get(val, f"$.{name}", "variant")
-                    cv, cw = self._lower_value(
-                        sub, child, None,
-                        F.concat(ipath, F.lit("/" + pointer_escape(name))),
-                        f"{kpath}/properties/{pointer_escape(name)}",
-                        base_uri,
-                    )
-                    applies = is_obj & prop_tag(name).isNotNull()
-                    add(F.when(applies, cv).otherwise(F.lit(True)),
-                        F.when(applies, cw).otherwise(_EMPTY_ARR()))
-            # patternProperties — all three forms lower (round 4):
-            # {pat: true} contributes pattern coverage for
-            # additionalProperties; {pat: false} forbids matching keys
-            # outright (evaluator keyword = the escaped pattern);
-            # schema-valued patterns cast the variant object to
-            # map<string, variant> and evaluate the subschema over the
-            # regex-matched entries with higher-order functions — the
-            # per-key dynamic access Spark's constant-path variant_get
-            # can't express directly.
-            pattern_cover: list[str] = []
-            if "patternProperties" in schema:
-                for pat, sub in schema["patternProperties"].items():
-                    check_regex_dialect(pat)
-                    if sub is True:
-                        pattern_cover.append(pat)
-                    elif sub is False:
-                        pattern_cover.append(pat)
-
-                        # NB: bind the pattern via a closure factory —
-                        # a defaulted lambda param would read as the
-                        # 2-arg (element, index) HOF form
-                        def _matcher(p: str):
-                            return lambda k: k.rlike(p)
-
-                        _esc0 = _esc_key
-
-                        def _false_viol(p: str):
-                            # mirror the batch evaluator: the pattern is a
-                            # pointer TOKEN in keyword_path (and the
-                            # attributed keyword), so '~'/'/' escape
-                            # (evaluator.py boolean-false attribution)
-                            p_esc = pointer_escape(p)
-
-                            def build(k: Column) -> Column:
-                                return F.struct(
-                                    F.lit(p_esc).alias("keyword"),
-                                    F.concat(ipath, F.lit("/"), _esc0(k)).alias("instance_path"),
-                                    F.lit(f"{kpath}/patternProperties/{p_esc}").alias("keyword_path"),
-                                    F.substring(k, 1, 256).alias("value"),
-                                    F.lit("boolean schema false permits nothing").alias("error"),
-                                )
-                            return build
-
-                        bad = F.filter(keys, _matcher(pat))
-                        pred = F.when(is_obj, F.size(bad) == 0).otherwise(F.lit(True))
-                        per_key = F.transform(bad, _false_viol(pat)).cast(VIOLATION_DDL)
-                        add(
-                            F.coalesce(pred, F.lit(False)),
-                            F.when(pred, _EMPTY_ARR()).otherwise(per_key),
-                        )
-                    else:
-                        pattern_cover.append(pat)
-                        p_esc = pointer_escape(pat)
-                        ents = F.map_entries(
-                            F.try_variant_get(val, "$", "map<string, variant>")
-                        )
-
-                        def _ent_matcher(p: str):
-                            return lambda e: e["key"].rlike(p)
-
-                        def _ent_result(p_esc_: str, sub_: Any):
-                            def build(e: Column) -> Column:
-                                cv, cw = self._lower_value(
-                                    sub_, e["value"], None,
-                                    F.concat(ipath, F.lit("/"), _esc_key(e["key"])),
-                                    f"{kpath}/patternProperties/{p_esc_}",
-                                    base_uri,
-                                )
-                                return F.struct(
-                                    F.coalesce(cv, F.lit(False)).alias("ok"),
-                                    cw.cast(VIOLATION_DDL).alias("w"),
-                                )
-                            return build
-
-                        res = F.transform(
-                            F.filter(ents, _ent_matcher(pat)),
-                            _ent_result(p_esc, sub),
-                        )
-                        pred = F.when(
-                            is_obj,
-                            F.coalesce(
-                                F.forall(res, lambda r: r["ok"]), F.lit(True)
-                            ),
-                        ).otherwise(F.lit(True))
-                        bad_w = F.flatten(
-                            F.transform(
-                                F.filter(res, lambda r: ~r["ok"]),
-                                lambda r: r["w"],
-                            )
-                        ).cast(VIOLATION_DDL)
-                        add(
-                            F.coalesce(pred, F.lit(False)),
-                            F.when(pred, _EMPTY_ARR()).otherwise(bad_w),
-                        )
-
-            def _rest_properties(
-                kw_name: str, ap: Any, valid_aware: bool,
-                ap_true_present: bool = False,
-            ) -> None:
-                """Evaluate ``ap`` over entries NOT covered by literal
-                properties / patternProperties — shared by
-                additionalProperties (name-match coverage, like the
-                evaluator's matched_by_props) and the conservatively
-                gated unevaluatedProperties (round 4), whose coverage
-                counts only VALIDLY evaluated children
-                (evaluated_props.add happens only when o.valid).
-                ``ap_true_present``: an additionalProperties:true
-                sibling validly evaluates every NON-name-matched key,
-                so only name-matched-but-failed keys stay unevaluated.
-                """
-                if ap is True:
-                    return
-                ents = F.map_entries(
-                    F.try_variant_get(val, "$", "map<string, variant>")
-                )
-                props = schema.get("properties") or {}
-                pats = schema.get("patternProperties") or {}
-
-                def _uncov(e: Column) -> Column:
-                    cond = F.lit(True)
-                    name_match = F.lit(False)
-                    for name in props:
-                        m = e["key"] == F.lit(name)
-                        name_match = name_match | m
-                        if valid_aware:
-                            ok_n, _ = self._lower_value(
-                                props[name], e["value"], None,
-                                F.lit(""), "", base_uri)
-                            m = m & F.coalesce(ok_n, F.lit(False))
-                        cond = cond & ~m
-                    # invariant: `covered` holds exactly the keys of
-                    # schema["properties"] (populated at the properties
-                    # loop above), already handled by the loop over
-                    # `props` — no separate pass needed
-                    for pat in pats:
-                        m = e["key"].rlike(pat)
-                        name_match = name_match | m
-                        if valid_aware:
-                            sp = pats[pat]
-                            if sp is True:
-                                ok_p = F.lit(True)
-                            elif sp is False:
-                                ok_p = F.lit(False)
-                            else:
-                                ok_p, _ = self._lower_value(
-                                    sp, e["value"], None, F.lit(""), "",
-                                    base_uri)
-                                ok_p = F.coalesce(ok_p, F.lit(False))
-                            m = m & ok_p
-                        cond = cond & ~m
-                    if ap_true_present:
-                        cond = cond & name_match
-                    return cond
-
-                extra = F.filter(ents, _uncov)
-                if ap is False:
-                    pred = F.when(is_obj, F.size(extra) == 0).otherwise(F.lit(True))
-                    msg = ("additional properties are not allowed"
-                           if kw_name == "additionalProperties"
-                           else "boolean schema false permits nothing")
-                    per_key = F.transform(
-                        extra,
-                        lambda e: F.struct(
-                            F.lit(kw_name).alias("keyword"),
-                            F.concat(ipath, F.lit("/"), _esc_key(e["key"])).alias("instance_path"),
-                            F.lit(f"{kpath}/{kw_name}").alias("keyword_path"),
-                            F.substring(e["key"], 1, 256).alias("value"),
-                            F.lit(msg).alias("error"),
-                        ),
-                    ).cast(VIOLATION_DDL)
-                    add(
-                        F.coalesce(pred, F.lit(False)),
-                        F.when(pred, _EMPTY_ARR()).otherwise(per_key),
-                    )
-                    return
-                # schema-valued (round 4): evaluate the subschema over
-                # uncovered entries with HOFs — absorb-without-message
-                # shape (child violations only), matching the evaluator
-
-                def _ent_res(e: Column) -> Column:
-                    cv, cw = self._lower_value(
-                        ap, e["value"], None,
-                        F.concat(ipath, F.lit("/"), _esc_key(e["key"])),
-                        f"{kpath}/{kw_name}", base_uri,
-                    )
-                    return F.struct(
-                        F.coalesce(cv, F.lit(False)).alias("ok"),
-                        cw.cast(VIOLATION_DDL).alias("w"),
-                    )
-
-                res = F.transform(extra, _ent_res)
-                pred = F.when(
-                    is_obj,
-                    F.coalesce(F.forall(res, lambda r: r["ok"]), F.lit(True)),
-                ).otherwise(F.lit(True))
-                bad_w = F.flatten(
-                    F.transform(F.filter(res, lambda r: ~r["ok"]), lambda r: r["w"])
-                ).cast(VIOLATION_DDL)
-                add(
-                    F.coalesce(pred, F.lit(False)),
-                    F.when(pred, _EMPTY_ARR()).otherwise(bad_w),
-                )
-
-            if "additionalProperties" in schema:
-                _rest_properties(
-                    "additionalProperties", schema["additionalProperties"],
-                    valid_aware=False,
-                )
-            if "unevaluatedProperties" in schema:
-                # conservative gate: lowerable only when NOTHING else
-                # can contribute property annotations at this level —
-                # in-place applicators and $ref merge child coverage
-                # the Column algebra can't see. additionalProperties
-                # True evaluates every uncovered key, making
-                # unevaluatedProperties vacuous; any other form -> batch
-                blockers = {
-                    "$ref", "$dynamicRef", "$recursiveRef", "allOf",
-                    "anyOf", "oneOf", "if", "then", "else",
-                    "dependentSchemas",
-                } & set(schema)
-                if blockers:
-                    raise CannotLower(
-                        f"unevaluatedProperties with {sorted(blockers)} -> batch")
-                ap_kw = schema.get("additionalProperties")
-                if "additionalProperties" in schema and ap_kw is not True:
-                    raise CannotLower(
-                        "unevaluatedProperties alongside non-trivial "
-                        "additionalProperties -> batch")
-                _rest_properties(
-                    "unevaluatedProperties",
-                    schema["unevaluatedProperties"], valid_aware=True,
-                    ap_true_present=ap_kw is True,
-                )
-            if "propertyNames" in schema:
-                sub = schema["propertyNames"]
-                # lower the name schema against a string value: reuse the
-                # typed lowering over a StringType lambda variable
-                from jschon_spark.lowering.columns import ColumnLowerer
-                from pyspark.sql import types as T
-
-                lowerer = ColumnLowerer(self.catalog, self.assert_formats)
-
-                def name_result(k: Column):
-                    return lowerer.lower(
-                        sub, T.StringType(), k, base_uri,
-                        ipath=ipath, kpath=f"{kpath}/propertyNames",
-                    )
-
-                pred = F.when(
-                    is_obj, F.forall(keys, lambda k: name_result(k)[0])
-                ).otherwise(F.lit(True))
-                # per bad name: a propertyNames violation + the name
-                # subschema's own violations (matches the evaluator)
-                def per_name(k: Column) -> Column:
-                    ok, w2 = name_result(k)
-                    pn = F.struct(
-                        F.lit("propertyNames").alias("keyword"),
-                        ipath.alias("instance_path"),
-                        F.lit(f"{kpath}/propertyNames").alias("keyword_path"),
-                        F.substring(k, 1, 256).alias("value"),
-                        F.lit("property name is invalid").alias("error"),
-                    )
-                    return F.when(ok, _EMPTY_ARR()).otherwise(
-                        F.concat(F.array(pn).cast(VIOLATION_DDL), w2.cast(VIOLATION_DDL))
-                    )
-
-                viol = F.when(is_obj & ~F.coalesce(pred, F.lit(True)),
-                              F.flatten(F.transform(keys, per_name))
-                              ).otherwise(_EMPTY_ARR()).cast(VIOLATION_DDL)
-                add(F.coalesce(pred, F.lit(False)), viol)
-            if "dependentSchemas" in schema:
-                # trigger keys are literals, so presence gates lower
-                # directly; the dependent subschema applies to the SAME
-                # instance (pass raw_doc through for nested key sets)
-                for dk, dsub in schema["dependentSchemas"].items():
-                    if not _KEY_RE.match(dk):
-                        raise CannotLower(
-                            f"dependentSchemas key {dk!r} -> batch")
-                    cv, cw = self._lower_value(
-                        dsub, val, raw_doc, ipath,
-                        f"{kpath}/dependentSchemas/{pointer_escape(dk)}",
-                        base_uri,
-                    )
-                    applies = is_obj & prop_tag(dk).isNotNull()
-                    add(F.when(applies, cv).otherwise(F.lit(True)),
-                        F.when(applies, cw.cast(VIOLATION_DDL))
-                        .otherwise(_EMPTY_ARR()))
-
-        # ---- array keywords (variant -> array<variant>, round 3) --------
-        # try_variant_get(v, "$", "array<variant>") yields a real Spark
-        # array of per-element variants (NULL when not an array), so
-        # size / element / quantifier keywords lower onto higher-order
-        # functions — dynamic arrays no longer fall back to the Arrow
-        # batch path. JSON-null elements are VOID-tagged variants, NOT
-        # SQL NULLs, so F.get() returning NULL means out-of-bounds only.
-        arr_kws = {"maxItems", "minItems", "prefixItems", "items",
-                   "contains", "maxContains", "minContains",
-                   "additionalItems"}
-        if arr_kws & set(schema):
-            tuple_items: list | None = None
-            if isinstance(schema.get("items"), list):
-                # 2019-09 tuple form (round 4): same per-index
-                # semantics as prefixItems, with additionalItems as
-                # the rest-schema — dialect-gated like the evaluator
-                # (evaluator.py "2019-09 tuple-form items" branch)
-                if self.dialect != "2019-09":
-                    raise CannotLower("tuple items outside 2019-09 -> batch")
-                tuple_items = schema["items"]
-            arr = F.try_variant_get(val, "$", "array<variant>")
-            n = F.size(arr)
-
-            if "maxItems" in schema:
-                pred = F.when(is_arr, n <= schema["maxItems"]).otherwise(F.lit(True))
-                add(*_check(pred, "maxItems", ipath, kpath, n.cast("string"),
-                            f"more than {schema['maxItems']} items"))
-            if "minItems" in schema:
-                pred = F.when(is_arr, n >= schema["minItems"]).otherwise(F.lit(True))
-                add(*_check(pred, "minItems", ipath, kpath, n.cast("string"),
-                            f"fewer than {schema['minItems']} items"))
-
-            n_prefix = 0
-            if "prefixItems" in schema:
-                n_prefix = len(schema["prefixItems"])
-                for j, psub in enumerate(schema["prefixItems"]):
-                    cv, cw = self._lower_value(
-                        psub, F.get(arr, j), None,
-                        F.concat(ipath, F.lit(f"/{j}")),
-                        f"{kpath}/prefixItems/{j}", base_uri,
-                    )
-                    applies = is_arr & (n > j)
-                    add(F.when(applies, cv).otherwise(F.lit(True)),
-                        F.when(applies, cw).otherwise(_EMPTY_ARR()))
-            if tuple_items is not None:
-                n_prefix = len(tuple_items)
-                for j, psub in enumerate(tuple_items):
-                    cv, cw = self._lower_value(
-                        psub, F.get(arr, j), None,
-                        F.concat(ipath, F.lit(f"/{j}")),
-                        f"{kpath}/items/{j}", base_uri,
-                    )
-                    applies = is_arr & (n > j)
-                    add(F.when(applies, cv).otherwise(F.lit(True)),
-                        F.when(applies, cw).otherwise(_EMPTY_ARR()))
-
-            rest_schema = None
-            rest_kw = None
-            if tuple_items is not None:
-                if "additionalItems" in schema:
-                    rest_schema, rest_kw = schema["additionalItems"], "additionalItems"
-            elif "items" in schema:
-                rest_schema, rest_kw = schema["items"], "items"
-            if rest_schema is not None:
-                isub = rest_schema
-                off = n_prefix
-
-                def _item_struct(e: Column, i: Column) -> Column:
-                    cv, cw = self._lower_value(
-                        isub, e, None,
-                        F.concat(ipath, F.lit("/"), (i + off).cast("string")),
-                        f"{kpath}/{rest_kw}", base_uri,
-                    )
-                    return F.struct(
-                        F.coalesce(cv, F.lit(False)).alias("v"),
-                        cw.cast(VIOLATION_DDL).alias("w"),
-                    )
-
-                rest = F.slice(arr, off + 1, F.greatest(n - off, F.lit(0)))
-                per = F.transform(rest, _item_struct)
-                allok = F.forall(per, lambda s: s["v"])
-                pred = F.when(is_arr, F.coalesce(allok, F.lit(True))).otherwise(F.lit(True))
-                wcol = F.when(
-                    is_arr & ~F.coalesce(allok, F.lit(True)),
-                    F.flatten(
-                        F.transform(F.filter(per, lambda s: ~s["v"]), lambda s: s["w"])
-                    ),
-                ).otherwise(_EMPTY_ARR()).cast(VIOLATION_DDL)
-                add(F.coalesce(pred, F.lit(False)), wcol)
-
-            if "contains" in schema:
-                csub = schema["contains"]
-
-                def _match(e: Column) -> Column:
-                    cv, _ = self._lower_value(
-                        csub, e, None, ipath, f"{kpath}/contains", base_uri
-                    )
-                    return F.coalesce(cv, F.lit(False))
-
-                n_match = F.size(F.filter(arr, _match))
-                min_c = schema.get("minContains", 1)
-                # evaluator parity (evaluator.py contains block): a bare
-                # contains miss reports "contains"; explicit bounds
-                # report min/maxContains
-                pred0 = F.when(
-                    is_arr, (n_match > 0) | (F.lit(min_c) == 0)
-                ).otherwise(F.lit(True))
-                add(*_check(pred0, "contains", ipath, kpath, n_match.cast("string"),
-                            "no array items match the contains schema"))
-                if "maxContains" in schema:
-                    mx = schema["maxContains"]
-                    pred = F.when(is_arr, n_match <= mx).otherwise(F.lit(True))
-                    add(*_check(pred, "maxContains", ipath, kpath,
-                                n_match.cast("string"),
-                                f"more than {mx} matching items"))
-                if "minContains" in schema:
-                    pred = F.when(is_arr, n_match >= min_c).otherwise(F.lit(True))
-                    add(*_check(pred, "minContains", ipath, kpath,
-                                n_match.cast("string"),
-                                f"fewer than {min_c} matching items"))
-
-        if "unevaluatedItems" in schema:
-            # conservatively gated (round 5, mirroring the round-4
-            # unevaluatedProperties gate): lowerable only when no
-            # in-place applicator can merge child item annotations at
-            # this level, and (2020-12) no contains sibling — contains
-            # matches count as evaluated there, a per-element dynamic
-            # fact; 2019-09 collects only items/additionalItems/
-            # unevaluatedItems annotations so contains is inert
-            # (reference legacy.py:115-147)
-            blockers = {
-                "$ref", "$dynamicRef", "$recursiveRef", "allOf",
-                "anyOf", "oneOf", "if", "then", "else",
-                "dependentSchemas",
-            } & set(schema)
-            if blockers:
-                raise CannotLower(
-                    f"unevaluatedItems with {sorted(blockers)} -> batch")
-            if self.dialect != "2019-09" and "contains" in schema:
-                raise CannotLower("unevaluatedItems with contains -> batch")
-            uei = schema["unevaluatedItems"]
-            if uei is not True:
-                uarr = F.try_variant_get(val, "$", "array<variant>")
-                if self.dialect == "2019-09" and isinstance(
-                    schema.get("items"), list
-                ):
-                    u_prefix: list = schema["items"]
-                    u_rest = schema.get("additionalItems")
-                    u_has_rest = "additionalItems" in schema
-                else:
-                    u_prefix = schema.get("prefixItems") or []
-                    u_rest = schema.get("items")
-                    u_has_rest = "items" in schema
-                u_npre = len(u_prefix)
-
-                def _u_res(e: Column, i: Column) -> Column:
-                    # valid-aware coverage, mirroring the evaluator:
-                    # evaluated_items.add(i) happens only when the
-                    # sibling application SUCCEEDED on this element
-                    covered = F.lit(False)
-                    for j, psub in enumerate(u_prefix):
-                        pv, _ = self._lower_value(
-                            psub, e, None, F.lit(""), "", base_uri)
-                        covered = F.when(
-                            i == j, F.coalesce(pv, F.lit(False))
-                        ).otherwise(covered)
-                    if u_has_rest:
-                        rv, _ = self._lower_value(
-                            u_rest, e, None, F.lit(""), "", base_uri)
-                        covered = F.when(
-                            i >= u_npre, F.coalesce(rv, F.lit(False))
-                        ).otherwise(covered)
-                    cv, cw = self._lower_value(
-                        uei, e, None,
-                        F.concat(ipath, F.lit("/"), i.cast("string")),
-                        f"{kpath}/unevaluatedItems", base_uri,
-                    )
-                    ok = covered | F.coalesce(cv, F.lit(False))
-                    return F.struct(
-                        ok.alias("ok"),
-                        F.when(ok, _EMPTY_ARR()).otherwise(cw)
-                        .cast(VIOLATION_DDL).alias("w"),
-                    )
-
-                u_res = F.transform(uarr, _u_res)
-                u_pred = F.when(
-                    is_arr,
-                    F.coalesce(F.forall(u_res, lambda r: r["ok"]), F.lit(True)),
-                ).otherwise(F.lit(True))
-                u_bad = F.flatten(
-                    F.transform(F.filter(u_res, lambda r: ~r["ok"]),
-                                lambda r: r["w"])
-                ).cast(VIOLATION_DDL)
-                add(
-                    F.coalesce(u_pred, F.lit(False)),
-                    F.when(u_pred, _EMPTY_ARR()).otherwise(u_bad),
-                )
-
-        # ---- combinators -------------------------------------------------
-        for kw in ("allOf",):
-            if kw in schema:
-                for i, sub in enumerate(schema[kw]):
-                    add(*self._lower_value(sub, val, raw_doc, ipath, f"{kpath}/allOf/{i}", base_uri))
-        if "anyOf" in schema:
-            parts = [
-                self._lower_value(sub, val, raw_doc, ipath, f"{kpath}/anyOf/{i}", base_uri)
-                for i, sub in enumerate(schema["anyOf"])
-            ]
-            ok = parts[0][0]
-            for c, _ in parts[1:]:
-                ok = ok | c
-            add(F.coalesce(ok, F.lit(False)),
-                F.when(ok, _EMPTY_ARR()).otherwise(_concat(
-                    F.array(_violation("anyOf", ipath, f"{kpath}/anyOf", strval, "no subschema matched")),
-                    *[w for _, w in parts])))
-        if "oneOf" in schema:
-            parts = [
-                self._lower_value(sub, val, raw_doc, ipath, f"{kpath}/oneOf/{i}", base_uri)
-                for i, sub in enumerate(schema["oneOf"])
-            ]
-            n = parts[0][0].cast("int")
-            for c, _ in parts[1:]:
-                n = n + c.cast("int")
-            ok = n == 1
-            add(F.coalesce(ok, F.lit(False)),
-                F.when(ok, _EMPTY_ARR()).otherwise(
-                    F.array(_violation("oneOf", ipath, f"{kpath}/oneOf", n,
-                                       "exactly one subschema must match"))))
-        if "not" in schema:
-            c, _ = self._lower_value(schema["not"], val, raw_doc, ipath, f"{kpath}/not", base_uri)
-            add(*_check(~c, "not", ipath, kpath, strval, "instance must not match the subschema"))
-        if "if" in schema:
-            cond, _ = self._lower_value(schema["if"], val, raw_doc, ipath, f"{kpath}/if", base_uri)
-            cond = F.coalesce(cond, F.lit(False))
-            if "then" in schema:
-                cv, cw = self._lower_value(schema["then"], val, raw_doc, ipath, f"{kpath}/then", base_uri)
-                add(F.when(cond, cv).otherwise(F.lit(True)),
-                    F.when(cond, cw).otherwise(_EMPTY_ARR()))
-            if "else" in schema:
-                cv, cw = self._lower_value(schema["else"], val, raw_doc, ipath, f"{kpath}/else", base_uri)
-                add(F.when(~cond, cv).otherwise(F.lit(True)),
-                    F.when(~cond, cw).otherwise(_EMPTY_ARR()))
-
-        if not valids:
-            return F.lit(True), _EMPTY_ARR()
-        out = valids[0]
-        for c in valids[1:]:
-            out = out & c
-        return out, _concat(*viols)
-
 
 def validate_json_column_variant(
     df: DataFrame,
@@ -1111,20 +464,26 @@ def validate_json_column_variant(
     base_uri: str = "",
 ) -> DataFrame:
     """Pure-JVM validation of a JSON string column via VariantType.
-    Raises CannotLower when the schema is outside the flat subset."""
+    Raises CannotLower when the schema is outside the variant subset."""
     lowerer = VariantLowerer(catalog, assert_formats)
-    doc = F.col(json_col)
+    lowered = lowerer.lower(schema, F.col(json_col), F.col("__variant_doc"), base_uri)
+    return with_variant_verdicts(df, json_col, lowered)
+
+
+def with_variant_verdicts(
+    df: DataFrame, json_col: str, lowered: tuple[Column, Column]
+) -> DataFrame:
+    """Add ``passed``/``violations`` from ``VariantLowerer.lower``
+    Columns built over ``F.col("__variant_doc")``."""
+    passed, violations = lowered
     # materialize the parse as its own projection: every keyword
     # references the variant COLUMN, so the row is parsed once —
     # inlining the parse expression would re-parse the JSON string in
     # every subexpression (CollapseProject keeps multi-referenced
     # non-cheap aliases in their own project)
-    tmp = df.withColumn("__variant_doc", F.try_parse_json(doc))
-    passed, violations = lowerer.lower(
-        schema, doc, F.col("__variant_doc"), base_uri
-    )
     return (
-        tmp.withColumn("passed", passed)
+        df.withColumn("__variant_doc", F.try_parse_json(F.col(json_col)))
+        .withColumn("passed", passed)
         .withColumn("violations", violations)
         .drop("__variant_doc")
     )
