@@ -46,6 +46,7 @@ from jschon_spark.lowering.keywords import (  # noqa: F401 - re-exported
     _EMPTY_ARR,
     _check,
     dec18_exact,
+    rlike,
 )
 
 
@@ -401,7 +402,7 @@ def format_pred(fmt: str, scol: Column, trusted_calendar: bool = False) -> Colum
     rx = _FORMAT_REGEX.get(fmt)
     if rx is None:
         return None
-    pred = scol.rlike(rx)
+    pred = rlike(scol, rx)
     if not trusted_calendar and fmt in ("date", "date-time"):
         datepart = scol if fmt == "date" else F.substring(scol, 1, 10)
         pred = pred & F.try_to_timestamp(datepart, F.lit("yyyy-MM-dd")).isNotNull()

@@ -84,6 +84,16 @@ def check_regex_dialect(pattern: str) -> None:
     re.compile(pattern)  # must at least be a valid Python regex
 
 
+def rlike(s: Column, pattern: str) -> Column:
+    """``re.search(pattern, s)`` as a Column: every emitted rlike goes
+    through here. Java regex also ends lines at \\r, \\u0085, \\u2028
+    and \\u2029 for `.`, `^` and `$` (so `^[a-z]{2}$` accepted "ab\\r");
+    the UNIX_LINES flag (?d) leaves \\n, Python's only line
+    terminator."""
+    check_regex_dialect(pattern)
+    return s.rlike("(?d)" + pattern)
+
+
 def dec18_exact(bound: float | int) -> bool:
     """True iff ``bound`` is exactly representable in decimal(38,18).
 
@@ -322,8 +332,7 @@ class KeywordWalker:
                             f"shorter than {schema['minLength']}"))
             if "pattern" in schema:
                 pat = schema["pattern"]
-                check_regex_dialect(pat)
-                add(*_check(node.guard("string", s.rlike(pat)), "pattern", ipath,
+                add(*_check(node.guard("string", rlike(s, pat)), "pattern", ipath,
                             kpath, s, f"does not match pattern {pat}"))
             if "format" in schema and self.assert_formats:
                 add(*node.format_check(schema["format"], ipath, kpath))
@@ -506,7 +515,7 @@ class KeywordWalker:
                     m = m & self.passes(props[name], node.entry_node(e["value"]), base_uri)
                 cond = cond & ~m
             for p in patterns:
-                m = e["key"].rlike(p) if p else F.lit(True)
+                m = rlike(e["key"], p) if p else F.lit(True)
                 if ap_true:
                     name_match = name_match | m
                 if valid_aware:
@@ -751,4 +760,4 @@ def _key_matches(pattern: str) -> Callable[[Column], Column]:
     # higher-order-function lambdas must be unary — pyspark reads the
     # Python arity, so a defaulted second param would bind the array
     # *index*. Close over values with factories instead.
-    return lambda e: e["key"].rlike(pattern)
+    return lambda e: rlike(e["key"], pattern)

@@ -489,3 +489,56 @@ def test_format_fuzz_cross_path(spark):
                 divergent += 1
                 print(f"DIVERGENCE {fmt}: {v!r} python={w} typed={t} variant={g}")
     assert divergent == 0, f"{divergent}/{total} divergent"
+
+
+def test_regex_line_terminators_follow_python_re(spark):
+    """Java regex ends lines at \\r, \\x85, \\u2028 and \\u2029 too, for
+    `.` and `$`; Python `re` (the reference dialect) only at \\n. The
+    typed, variant and batch paths must all give the Evaluator's
+    verdict on strings carrying those characters — for ``pattern``
+    and for the patternProperties / additionalProperties key
+    matchers."""
+    import json
+
+    from jschon_spark.lowering.variant import validate_json_column_variant
+
+    cases = [
+        ({"properties": {"s": {"pattern": "^[a-z]{2}$"}}},
+         ["ab\r", "ab\r\n", "ab\u2028", "ab\u2029", "ab\x85", "ab", "ab\n"]),
+        ({"properties": {"s": {"pattern": "^a.b$"}}},
+         ["a\rb", "a\u2028b", "a\x85b", "a\nb", "axb"]),
+    ]
+    eng = ConstraintEngine()
+    ev = Evaluator()
+    for schema, strings in cases:
+        want = [ev.validate(schema, {"s": s}).valid for s in strings]
+        compiled = eng.compile(schema)
+        df = spark.createDataFrame([(s,) for s in strings], "s string")
+        compiled.lower_columns(df.schema, F.struct(*df.columns))  # no fallback
+        typed = [r.passed for r in compiled.apply_typed(df).collect()]
+        jdf = spark.createDataFrame(
+            [(json.dumps({"s": s}),) for s in strings], "doc string")
+        variant = [r.passed for r in validate_json_column_variant(
+            jdf, "doc", compiled.schema, compiled.catalog).collect()]
+        batch = [r.passed for r in compiled.apply_json(
+            jdf, "doc", prefer_variant=False).collect()]
+        assert typed == want, (schema, list(zip(strings, typed, want)))
+        assert variant == want, (schema, list(zip(strings, variant, want)))
+        assert batch == want, (schema, list(zip(strings, batch, want)))
+
+    keys = ["ab\r", "ab\u2028", "ab"]
+    for schema in (
+        {"patternProperties": {"^[a-z]{2}$": False}},
+        {"patternProperties": {"^[a-z]{2}$": True}, "additionalProperties": False},
+    ):
+        docs = [json.dumps({k: 1}) for k in keys]
+        want = [ev.validate(schema, {k: 1}).valid for k in keys]
+        compiled = eng.compile(schema)
+        jdf = spark.createDataFrame([(d,) for d in docs], "doc string")
+        variant = [r.passed for r in validate_json_column_variant(
+            jdf, "doc", compiled.schema, compiled.catalog).collect()]
+        assert variant == want, (schema, list(zip(keys, variant, want)))
+        mdf = spark.createDataFrame([({k: 1},) for k in keys], "m map<string,bigint>")
+        mcompiled = eng.compile({"properties": {"m": schema}})
+        typed = [r.passed for r in mcompiled.apply_typed(mdf).collect()]
+        assert typed == want, (schema, list(zip(keys, typed, want)))

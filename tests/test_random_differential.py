@@ -36,9 +36,14 @@ from jschon_spark.schema.catalog import SchemaCatalog
 # evaluator — these fuzz populations now exercise that routing against
 # unicode instances (NBSP, arabic-indic digits, accented words).
 _PATTERNS = ["^a", "b$", "^[a-z]+$", "[0-9]", "x", "^$", "a.c", "^é",
-             r"^\w+$", r"\d", r"\s", r"^\S+$", r"é\b"]
+             r"^\w+$", r"\d", r"\s", r"^\S+$", r"é\b",
+             "^a.b$", "^[a-z]{2}$"]
+# Java regex also ends lines at \r, \x85, \u2028 and \u2029 (for `.`
+# and `$`); Python `re` only at \n: these pin the rlike dialect fix
 _STRINGS = ["", "a", "ab", "abc", "xyz", "aXc", "é", "b", "axc", "123",
-            "héllo", "٣٤", "x y", "a b", "١٢٣"]
+            "héllo", "٣٤", "x y", "a b", "١٢٣",
+            "ab\r", "ab\r\n", "ab\n", "a\rb", "ab\x85", "ab\u2028",
+            "a\u2029b"]
 _NUMBERS = [
     0, 1, -1, 5, 10, 2 ** 53 + 1, 10 ** 18 - 1, -(10 ** 18) - 1,
     0.5, 19.99, -0.25, 1e-20, 2e-20, 1e18, 1.0, 2.5, 100.0,
