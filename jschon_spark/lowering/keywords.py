@@ -585,15 +585,7 @@ class KeywordWalker:
             add(*_check(node.guard("array", node.unique_items()), "uniqueItems",
                         ipath, kpath, node.col, "array items are not unique"))
 
-        items = schema.get("items")
-        if isinstance(items, list):
-            # 2019-09 tuple form: per-index like prefixItems, with
-            # additionalItems as the rest-schema
-            if self.dialect != "2019-09":
-                raise CannotLower("tuple items outside 2019-09 -> batch")
-            prefix, prefix_kw, rest_kw = items, "items", "additionalItems"
-        else:
-            prefix, prefix_kw, rest_kw = schema.get("prefixItems", []), "prefixItems", "items"
+        prefix, prefix_kw, rest_kw = self.item_keywords(schema)
         for j, sub in enumerate(prefix):
             child, applies = node.item(j)
             v, w = self.visit(sub, child, base_uri, F.concat(ipath, F.lit(f"/{j}")),
@@ -628,6 +620,17 @@ class KeywordWalker:
                             kpath, n_match, f"fewer than {min_c} matching items"))
         for pair in unevaluated:
             add(*pair)
+
+    def item_keywords(self, schema):
+        """(positional subschemas, their keyword, the rest-schema
+        keyword): the 2019-09 tuple form of items with additionalItems,
+        else prefixItems with items."""
+        items = schema.get("items")
+        if isinstance(items, list):
+            if self.dialect != "2019-09":
+                raise CannotLower("tuple items outside 2019-09 -> batch")
+            return items, "items", "additionalItems"
+        return schema.get("prefixItems", []), "prefixItems", "items"
 
     def each_item(self, node, sub, start: int, base_uri, ipath, kp):
         """``sub`` applied to every element at index >= start, with

@@ -355,10 +355,7 @@ class VariantNode:
         uei = schema["unevaluatedItems"]
         if uei is True:
             return []
-        if isinstance(schema.get("items"), list):
-            prefix, rest_kw = schema["items"], "additionalItems"
-        else:
-            prefix, rest_kw = schema.get("prefixItems") or [], "items"
+        prefix, _, rest_kw = walker.item_keywords(schema)
 
         def result(e: Column, i: Column) -> Column:
             node = VariantNode(e)
