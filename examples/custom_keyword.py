@@ -12,7 +12,7 @@ The registration supplies BOTH execution paths:
 from pyspark.sql import functions as F  # noqa: F401 (example parity)
 
 from jschon_spark import ConstraintEngine, get_spark
-from jschon_spark.functions.registry import KEYWORD_REGISTRY, custom_keyword
+from jschon_spark.functions.registry import custom_keyword, unregister_keyword
 
 # cache of enumeration values obtained from remote terminology services
 remote_enum_cache = {
@@ -64,4 +64,4 @@ try:
 except KeyError as e:
     print("lowering error:", e)
 
-KEYWORD_REGISTRY.pop("enumRef", None)  # leave the registry clean
+unregister_keyword("enumRef")  # leave the registry clean

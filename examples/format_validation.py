@@ -10,7 +10,7 @@ like ``catalog.enable_formats`` in the reference.
 import re
 
 from jschon_spark import ConstraintEngine, get_spark
-from jschon_spark.functions.registry import FORMAT_REGISTRY, format_validator
+from jschon_spark.functions.registry import format_validator, unregister_format
 
 _MAC = r"^([0-9A-Fa-f]{2}:){5}[0-9A-Fa-f]{2}$"
 
@@ -48,4 +48,4 @@ for r in sorted(out.collect(), key=lambda r: r.mac):
     viols = sorted((v.keyword, v.instance_path) for v in (r.violations or []))
     print(r.mac, r.passed, viols)
 
-FORMAT_REGISTRY.pop("mac-address", None)  # leave the registry clean
+unregister_format("mac-address")  # leave the registry clean

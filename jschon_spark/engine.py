@@ -12,19 +12,31 @@ Lowering choice:
      every keyword lowers;
   2. otherwise → vectorized Arrow batch evaluator over the row
      re-serialized as JSON (or a native JSON string column).
+
+Caching: ``compiled(schema, assert_formats)`` memoizes a fresh engine's
+compile in the session memo (``session.memo``) under the schema's
+content fingerprint, ``assert_formats`` and the registry version. That
+memo is dropped when the JVM gateway changes, because the lowered
+Columns it reaches die with that JVM. Each ``CompiledSchema`` memoizes
+its own lowerings (hundreds of py4j calls each) per input layout.
+``release_caches()`` clears neither.
 """
 
 from __future__ import annotations
 
+import copy
 from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from jschon_spark.functions import registry
 from jschon_spark.lowering.batch import validate_json_column
 from jschon_spark.lowering.columns import CannotLower, ColumnLowerer, VIOLATION_DDL
+from jschon_spark.plans.manifests import schema_fingerprint
 from jschon_spark.schema.catalog import SchemaCatalog
+from jschon_spark.session import memo
 
 
 class CompiledSchema:
@@ -42,15 +54,19 @@ class CompiledSchema:
         self.base_uri = base_uri
         self.assert_formats = assert_formats
         self._store = [schema]
-        # lowered-Column memo (round 7): Column trees are immutable
-        # expression handles independent of any particular DataFrame,
-        # and building them costs hundreds of py4j round-trips
-        # (~0.5s per apply on the flagship schemas). Within one
-        # CompiledSchema the catalog is fixed, so lowering is a pure
-        # function of (dtype, doc column layout) — compile once, apply
-        # many, the reference's own architecture.
-        self._typed_cache: dict = {}
-        self._json_cache: dict = {}
+        # Column trees are immutable expression handles, independent of
+        # any DataFrame; with the catalog fixed, lowering is a pure
+        # function of the input layout
+        self._lowered: dict = {}
+
+    def _lower_once(self, key: tuple, lower) -> Any:
+        """``lower()`` memoized under ``key``; a refusal as CannotLower."""
+        if key not in self._lowered:
+            try:
+                self._lowered[key] = lower()
+            except CannotLower:
+                self._lowered[key] = CannotLower
+        return self._lowered[key]
 
     # -- typed path ---------------------------------------------------------
     def lower_columns(
@@ -78,14 +94,10 @@ class CompiledSchema:
             [df.schema[c] for c in doc_cols]
         )
         row = F.struct(*[F.col(c) for c in doc_cols])
-        key = (struct_type.simpleString(), tuple(doc_cols))
-        hit = self._typed_cache.get(key)
-        if hit is None:
-            try:
-                hit = self.lower_columns(struct_type, row)
-            except CannotLower:
-                hit = CannotLower
-            self._typed_cache[key] = hit
+        hit = self._lower_once(
+            ("typed", struct_type.simpleString(), tuple(doc_cols)),
+            lambda: self.lower_columns(struct_type, row),
+        )
         if hit is not CannotLower:
             valid, viols = hit
             return df.withColumn("passed", valid).withColumn(
@@ -114,18 +126,13 @@ class CompiledSchema:
                 with_variant_verdicts,
             )
 
-            key = (json_col, self.base_uri)
-            hit = self._json_cache.get(key)
-            if hit is None:
-                lowerer = VariantLowerer(self.catalog, self.assert_formats)
-                try:
-                    hit = lowerer.lower(
-                        self.schema, F.col(json_col),
-                        F.col("__variant_doc"), self.base_uri,
-                    )
-                except CannotLower:
-                    hit = CannotLower
-                self._json_cache[key] = hit
+            hit = self._lower_once(
+                ("json", json_col),
+                lambda: VariantLowerer(self.catalog, self.assert_formats).lower(
+                    self.schema, F.col(json_col),
+                    F.col("__variant_doc"), self.base_uri,
+                ),
+            )
             if hit is not CannotLower:
                 return with_variant_verdicts(df, json_col, hit)
         return validate_json_column(
@@ -204,3 +211,14 @@ class ConstraintEngine:
             {id(s): s for s in self.catalog._resources.values()}.values()
         )
         return compiled
+
+
+def compiled(schema: Any, assert_formats: bool = False) -> CompiledSchema:
+    """``ConstraintEngine(assert_formats).compile(schema)``, memoized by
+    content: a fresh engine has no catalog sources, so content and the
+    registry version determine the compile. A private copy is compiled,
+    so later edits to the caller's dict cannot reach the cached one."""
+    return memo(
+        ("compile", schema_fingerprint(schema), assert_formats, registry.VERSION),
+        lambda: ConstraintEngine(assert_formats).compile(copy.deepcopy(schema)),
+    )

@@ -35,6 +35,12 @@ class KeywordEntry:
 
 FORMAT_REGISTRY: dict[str, FormatEntry] = {}
 KEYWORD_REGISTRY: dict[str, KeywordEntry] = {}
+VERSION = 0  # bumped by every mutator below; part of engine.compiled's key
+
+
+def _bump() -> None:
+    global VERSION
+    VERSION += 1
 
 
 def format_validator(
@@ -47,6 +53,7 @@ def format_validator(
 
     def deco(fn):
         FORMAT_REGISTRY[name] = FormatEntry(fn, instance_types, column_fn)
+        _bump()
         return fn
 
     return deco
@@ -65,6 +72,7 @@ def custom_keyword(
 
     def deco(fn):
         KEYWORD_REGISTRY[name] = KeywordEntry(fn, instance_types, column_fn, error)
+        _bump()
         return fn
 
     return deco
@@ -75,8 +83,10 @@ def unregister_format(name: str) -> None:
     schemas using it are compiled: Column forms are baked into the
     plan at compile time."""
     FORMAT_REGISTRY.pop(name, None)
+    _bump()
 
 
 def unregister_keyword(name: str) -> None:
     """Remove a registered custom keyword (no-op if absent)."""
     KEYWORD_REGISTRY.pop(name, None)
+    _bump()

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from jschon_spark.lowering.columns import VIOLATION_TYPE
+from jschon_spark.session import memo
 
 RESULT_TYPE = T.StructType(
     [
@@ -94,26 +95,21 @@ def make_batch_validator(
     return validate_batch.asNondeterministic()
 
 
-_COMPILE_CACHE: dict[str, tuple] = {}
-
-
 def _compiled(schema: Any, store: list, assert_formats: bool) -> tuple:
     """Per-worker memo of (evaluator, base_uri, fastpath, strict_parser)
-    keyed by schema identity — repeated tasks over the same schema reuse
+    keyed by schema content — repeated tasks over the same schema reuse
     the closure-compiled predicate instead of recompiling."""
-    from jschon_spark.schema.catalog import parse_json_strict
-
     key = json.dumps(
         {"s": schema, "x": store, "f": assert_formats},
         sort_keys=True, default=str,
     )
-    hit = _COMPILE_CACHE.get(key)
-    if hit is not None:
-        return hit
+    return memo(("batch", key), lambda: _compile(schema, store, assert_formats))
 
+
+def _compile(schema: Any, store: list, assert_formats: bool) -> tuple:
     from jschon_spark.evaluator import Evaluator
     from jschon_spark.fastpath import compile_valid
-    from jschon_spark.schema.catalog import SchemaCatalog
+    from jschon_spark.schema.catalog import SchemaCatalog, parse_json_strict
 
     catalog = SchemaCatalog()
     for extra in store:
@@ -123,11 +119,7 @@ def _compiled(schema: Any, store: list, assert_formats: bool) -> tuple:
     # closure-compiled valid-only predicate: the full Outcome walk
     # (violation extraction) then runs only on failing documents
     fast = compile_valid(schema, catalog, base, assert_formats, ev.formats)
-    entry = (ev, base, fast, parse_json_strict)
-    if len(_COMPILE_CACHE) > 64:
-        _COMPILE_CACHE.clear()
-    _COMPILE_CACHE[key] = entry
-    return entry
+    return ev, base, fast, parse_json_strict
 
 
 def validate_json_column(

@@ -10,6 +10,9 @@ Convention: each operator registers its handles under its own name;
 registering generation N releases generation N-1 (by then the previous
 result has been consumed — and if not, Spark just recomputes), and
 ``release_caches()`` drops everything.
+In memory-tight sessions, call ``release_caches()`` once a result is
+materialized (e.g. ``curation_pipeline_docs``'s survivor persist).
+Compiled schemas and lowered Columns are not released here.
 """
 
 from __future__ import annotations

@@ -29,15 +29,6 @@ from jschon_spark.operators._hof import fence
 from jschon_spark.operators.textqa import tokens
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Signature computation is CPU-bound; if the scan yielded fewer
-    splits than cores (tiny files), fan out first. At scale the input
-    already has >= cores splits and this is a no-op — split count is
-    estimated from input BYTES, not file count, so one large splittable
-    file doesn't trigger a pointless full repartition."""
-    return _partitions.fan_out(df)
-
-
 def normalized(col: Column) -> Column:
     return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
 
@@ -169,7 +160,7 @@ def minhash_near_duplicates(
     true n-gram Jaccard ≥ threshold that collided in ≥1 LSH band.
     """
     rows_per_band = num_hashes // bands
-    base = _spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t")))
+    base = _partitions.fan_out(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t")))
     # materialize tokens, then shingles, in separate pinned projections
     # — the slice lambda then indexes a bound array instead of
     # re-splitting the text per shingle (O(k^2) -> O(k), _hof.py)
@@ -256,7 +247,7 @@ def minhash_near_duplicates_portable(
     Output: id_a, id_b (id_a < id_b), jaccard:double ≥ threshold.
     """
     rows_per_band = num_hashes // bands
-    base = _spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t")))
+    base = _partitions.fan_out(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t")))
     # materialize tokens, then shingles, in separate pinned projections
     # — the slice lambda then indexes a bound array instead of
     # re-splitting the text per shingle (O(k^2) -> O(k), _hof.py)
@@ -320,7 +311,7 @@ def ngram_jaccard_pairs(
     # equals the streamed side's partition count, so a tiny single-file
     # input otherwise scores every pair in ONE task (round 7; the
     # broadcast side stays un-repartitioned to keep its size estimate)
-    l, r = _spread(base).alias("l"), base.alias("r")
+    l, r = _partitions.fan_out(base).alias("l"), base.alias("r")
     jac = jaccard(F.col("l.sh"), F.col("r.sh"))
     # cheap id predicate FIRST inside the join condition — a post-join
     # filter is pushed ahead of it and pays the set intersection on all
@@ -475,7 +466,7 @@ def simhash_near_duplicates(
     MinHash/embedding LSH paths; ``None`` disables (test scale only).
     """
     base = with_simhash(
-        _spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t"))),
+        _partitions.fan_out(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t"))),
         "__t",
         "sig",
         bits,
@@ -799,11 +790,11 @@ def ngram_span_duplicates(
     Output: ``id_col, n_grams, n_dup_grams, dup_fraction`` — one row
     per input document (short docs get ``n_grams = 0, fraction 0.0``).
     """
-    # _spread: tiny single-file inputs otherwise run the tokenize +
+    # fan_out: tiny single-file inputs otherwise run the tokenize +
     # gram-hash pass in ONE scan task (round 7; no-op at scale, and a
     # round-robin exchange — the audited hashpartitioning count is
     # unchanged)
-    base = _spread(
+    base = _partitions.fan_out(
         df.select(
             F.col(id_col).alias("id"),
             F.coalesce(F.col(text_col), F.lit("")).alias("__t"),

@@ -579,7 +579,9 @@ def embedding_near_duplicates(
     # the per-task deserialization every downstream stage of the
     # persisted relation pays. Fold orders match lsh_bucket exactly
     # (left-to-right | over planes, dot()'s zip_with/aggregate) — the
-    # buckets are bit-identical.
+    # buckets are bit-identical. bucket_sql folds len(tables[0]) planes
+    # for every table.
+    assert all(len(p) == len(tables[0]) for p in tables), "ragged plane tables"
     planes_lit = "array(" + ", ".join(
         "array(" + ", ".join(
             "array(" + ", ".join(f"{float(x)!r}D" for x in p) + ")"

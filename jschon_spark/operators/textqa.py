@@ -81,7 +81,9 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Stopword-vote language ID. Adds ``lang_pred:string`` (2-letter
     code with the highest stopword hit count; 'und' if no hits).
 
-    Pure Column algebra: one pass, no shuffle, no UDF.
+    Pure Column algebra, no UDF. No shuffle at scale, but a small
+    file-backed scan is round-robin repartitioned to
+    ``defaultParallelism`` first (``_partitions.fan_out``).
     """
     # tiny single-file inputs otherwise run the per-token stopword
     # votes (interpreted HOFs) in ONE scan task; no-op at scale
@@ -224,7 +226,9 @@ def entropy_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     used alongside the Gopher repetition filters, Rae et al. 2021
     §A1.1 — public method).
 
-    Row-local Column algebra: zero shuffles, no Python. The per-token
+    Row-local Column algebra, no Python. No shuffle at scale, but a
+    small file-backed scan is round-robin repartitioned to
+    ``defaultParallelism`` first (``_partitions.fan_out``). The per-token
     count vector is built with one HOF over the distinct tokens
     (O(distinct x tokens) per row — bounded by the document, not the
     corpus), with both arrays bound once per row via the evaluate-once

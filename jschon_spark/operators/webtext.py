@@ -33,6 +33,8 @@ import re
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from jschon_spark.session import memo
+
 
 def line_dedup(
     docs: DataFrame,
@@ -377,22 +379,14 @@ def url_features(df: DataFrame, url_col: str = "url") -> DataFrame:
     The suffix sets lower to codegen'd ``InSet`` literals — still zero
     shuffle, no broadcast dim needed.
 
-    The five feature Columns are memoized per ``url_col`` (round 7):
-    they are pure functions of the column name and the vendored PSL
-    constants, and building the two ``isin`` literal sets (467 + 14
-    entries) plus the regex tree costs ~0.5s of driver time per call.
-    Columns are immutable expression handles, so reuse across
-    DataFrames is safe — the same compile-once contract as the
-    engine's lowered-Column cache.
+    The five feature Columns are memoized per ``url_col`` in
+    ``session.memo``: they are pure functions of the column name and
+    the vendored PSL constants, and building the two ``isin`` literal
+    sets (467 + 14 entries) plus the regex tree costs ~0.5s of py4j
+    calls.
     """
-    cols = _URL_FEATURE_COLS.get(url_col)
-    if cols is None:
-        cols = _url_feature_cols(url_col)
-        _URL_FEATURE_COLS[url_col] = cols
+    cols = memo(("url_features", url_col), lambda: _url_feature_cols(url_col))
     return df.select("*", *cols)
-
-
-_URL_FEATURE_COLS: dict[str, tuple] = {}
 
 
 def _url_feature_cols(url_col: str) -> tuple:

@@ -23,7 +23,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from jschon_spark.engine import ConstraintEngine
+from jschon_spark import engine
 from jschon_spark.operators import drift, referential, stats, uniqueness
 from jschon_spark.plans.manifests import (
     ManifestStore,
@@ -49,25 +49,6 @@ PAGE_SCHEMA = {
 }
 
 PAGE_DOC_COLS = ["url", "warc_ts", "text", "lang"]
-
-# compile-once memo for the FLAGSHIP schema only (keyed by object
-# identity, so a caller-supplied schema dict — even an equal one —
-# always compiles fresh against current registry/catalog state).
-# Schema compilation + metaschema self-validation + Column lowering
-# are driver-side work repeated identically by every validate_corpus
-# call (round 7: ~0.4s/call of py4j round-trips on the 4-keyword page
-# schema); compile-once/apply-many is the engine's own architecture.
-_FLAGSHIP_CACHE: dict[int, "object"] = {}
-
-
-def _compile_flagship(schema: dict):
-    if schema is not PAGE_SCHEMA:
-        return ConstraintEngine(assert_formats=True).compile(schema)
-    hit = _FLAGSHIP_CACHE.get(id(schema))
-    if hit is None:
-        hit = ConstraintEngine(assert_formats=True).compile(schema)
-        _FLAGSHIP_CACHE[id(schema)] = hit
-    return hit
 
 
 @dataclass
@@ -117,7 +98,7 @@ def validate_corpus(
 ) -> CorpusReport:
     """Run the full keyword+stats+uniqueness+referential+drift pass."""
     schema = schema or PAGE_SCHEMA
-    compiled = _compile_flagship(schema)
+    compiled = engine.compiled(schema, assert_formats=True)
 
     day = F.date_format("warc_ts", "yyyy-MM-dd")
     validated = compiled.apply_typed(docs, PAGE_DOC_COLS).withColumn("day", day)
@@ -206,7 +187,7 @@ def validate_corpus_checkpointed(
     schema = schema or PAGE_SCHEMA
     version = schema_fingerprint(schema)
     store = ManifestStore(manifest_root)
-    compiled = _compile_flagship(schema)
+    compiled = engine.compiled(schema, assert_formats=True)
     day = F.date_format("warc_ts", "yyyy-MM-dd")
 
     def job(partition: str) -> dict:

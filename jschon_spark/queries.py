@@ -12,6 +12,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from jschon_spark import engine
 from jschon_spark.engine import ConstraintEngine
 from jschon_spark.operators import _partitions, decontam, dedup, drift, referential, sessions, similarity, stats, textqa, uniqueness, webtext
 
@@ -40,40 +41,15 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-_COMPILED_CONST: dict[tuple[int, bool], "object"] = {}
-
-
-def _compile_cached(schema_obj: dict, assert_formats: bool = False):
-    """Compile-once memo for module-CONSTANT schemas (keyed by object
-    identity — round 7). Schema compilation + Column lowering cost
-    hundreds of driver-side py4j round-trips per call, repeated
-    identically by every bench rep; compile-once/apply-many is the
-    architecture the engine is built around. Only schemas that are
-    literal constants of this module go through here — queries that
-    mutate catalogs (Local/RemoteSource) or the custom keyword/format
-    registries compile fresh, so registry state can never be baked
-    into a stale cache entry."""
-    key = (id(schema_obj), assert_formats)
-    hit = _COMPILED_CONST.get(key)
-    if hit is None:
-        hit = ConstraintEngine(assert_formats=assert_formats).compile(schema_obj)
-        _COMPILED_CONST[key] = hit
-    return hit
-
-
-def _compiled():
-    return _compile_cached(DOC_SCHEMA)
-
-
 def page_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    out = _compiled().apply_typed(docs, DOC_COLS)
+    out = engine.compiled(DOC_SCHEMA).apply_typed(docs, DOC_COLS)
     return out.select("doc_id", "passed")
 
 
 def page_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    out = _compiled().apply_typed(docs, DOC_COLS)
+    out = engine.compiled(DOC_SCHEMA).apply_typed(docs, DOC_COLS)
     v = out.filter(~F.col("passed")).select(
         "doc_id", F.explode("violations").alias("v")
     )
@@ -86,7 +62,7 @@ def page_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def partition_verdicts_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    out = _compiled().apply_typed(docs, DOC_COLS)
+    out = engine.compiled(DOC_SCHEMA).apply_typed(docs, DOC_COLS)
     return (
         out.groupBy(F.col("source").alias("src"))
         .agg(
@@ -271,20 +247,9 @@ PROPS_SCHEMA = {
 }
 
 
-def _fan_out(df: DataFrame) -> DataFrame:
-    """Tiny single-file inputs arrive as one partition; CPU-bound
-    validation should use every core. No-op at scale — split count is
-    estimated from input BYTES (see operators/_partitions.py), so one
-    large splittable file or a non-file plan no longer triggers a full
-    repartition shuffle."""
-    from jschon_spark.operators import _partitions
-
-    return _partitions.fan_out(df)
-
-
 def props_json_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _fan_out(load(spark, sf_dir, "events"))
-    out = _compile_cached(PROPS_SCHEMA).apply_json(ev, "props")
+    ev = _partitions.fan_out(load(spark, sf_dir, "events"))
+    out = engine.compiled(PROPS_SCHEMA).apply_json(ev, "props")
     return out.select("event_id", "passed")
 
 
@@ -295,8 +260,8 @@ def props_json_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     here, whose violation arrays re-evaluate interpreted variant
     subexpressions per reference (verdicts stay on the variant path,
     where one JVM pass wins by ~5x)."""
-    ev = _fan_out(load(spark, sf_dir, "events"))
-    out = _compile_cached(PROPS_SCHEMA).apply_json(ev, "props", prefer_variant=False)
+    ev = _partitions.fan_out(load(spark, sf_dir, "events"))
+    out = engine.compiled(PROPS_SCHEMA).apply_json(ev, "props", prefer_variant=False)
     v = out.filter(~F.col("passed")).select("event_id", F.explode("violations").alias("v"))
     return v.select(
         "event_id",
@@ -487,7 +452,7 @@ def annotations_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jschon_spark.output import basic, collect_annotations
 
     docs = load(spark, sf_dir, "documents")
-    out = _compile_cached(ANNOTATED_DOC_SCHEMA).apply_typed(docs, DOC_COLS)
+    out = engine.compiled(ANNOTATED_DOC_SCHEMA).apply_typed(docs, DOC_COLS)
     rows = basic(out, "doc_id", schema=ANNOTATED_DOC_SCHEMA)
     ann_paths = [a["keyword_path"]
                  for a in collect_annotations(ANNOTATED_DOC_SCHEMA)]
@@ -641,7 +606,7 @@ def props_array_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     with array keywords (items/minItems/contains/maxContains) — pure
     Column algebra, zero Python in the plan (see
     tests/test_plans.py::test_array_schema_plan_is_jvm_only)."""
-    docs = _fan_out(load(spark, sf_dir, "documents"))
+    docs = _partitions.fan_out(load(spark, sf_dir, "documents"))
     j = docs.select(
         "doc_id",
         F.to_json(
@@ -650,7 +615,7 @@ def props_array_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("j"),
     )
-    out = _compile_cached(ARRAY_PROPS_SCHEMA).apply_json(j, "j")
+    out = engine.compiled(ARRAY_PROPS_SCHEMA).apply_json(j, "j")
     return out.select("doc_id", "passed")
 
 
@@ -690,7 +655,7 @@ def props_dynref_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (fails type), every 3rd an uppercase ``tag`` (fails pattern). Zero
     Python in the plan (tests/test_plans.py::
     test_dynref_plan_is_jvm_only)."""
-    ev = _fan_out(load(spark, sf_dir, "events"))
+    ev = _partitions.fan_out(load(spark, sf_dir, "events"))
     k = F.floor(F.col("value")).cast("long").cast("string")
     k = F.when(F.col("event_id") % 4 == 0, F.concat(k, F.lit(".5"))).otherwise(k)
     tag = F.when(
@@ -702,7 +667,7 @@ def props_dynref_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit('{"k": '), k, F.lit(', "tag": "'), tag, F.lit('"}'),
         ).alias("j"),
     )
-    out = _compile_cached(DYNREF_SCHEMA).apply_json(j, "j")
+    out = engine.compiled(DYNREF_SCHEMA).apply_json(j, "j")
     return out.select("event_id", "passed")
 
 
@@ -727,7 +692,7 @@ def props_pattern_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     a compound const. The whole evaluation is map<string,variant> +
     HOF Column algebra — zero Python in the plan
     (tests/test_plans.py::test_pattern_props_plan_is_jvm_only)."""
-    ev = _fan_out(load(spark, sf_dir, "events"))
+    ev = _partitions.fan_out(load(spark, sf_dir, "events"))
     key = F.concat(
         F.when(F.col("event_id") % 7 == 0, F.lit("x_")).otherwise(F.lit("k_")),
         F.col("event_type"),
@@ -741,7 +706,7 @@ def props_pattern_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit('", "meta": {"v": '), mv.cast("string"), F.lit("}}"),
         ).alias("j"),
     )
-    out = _compile_cached(PATTERN_PROPS_SCHEMA).apply_json(j, "j")
+    out = engine.compiled(PATTERN_PROPS_SCHEMA).apply_json(j, "j")
     return out.select("event_id", "passed")
 
 
@@ -773,7 +738,7 @@ def local_source_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
         eng.catalog.add_local_source("https://cat.test/", tmp)
         schema, _base = eng.catalog.resolve("https://cat.test/base", "")
         compiled = eng.compile(schema, uri="https://cat.test/base")
-        ev = _fan_out(load(spark, sf_dir, "events"))
+        ev = _partitions.fan_out(load(spark, sf_dir, "events"))
         out = compiled.apply_json(ev, "props")
         return out.select("event_id", "passed")
     finally:
@@ -818,7 +783,7 @@ def remote_source_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "properties": {"k": {"$ref": "rlimits"}},
             }
             compiled = eng.compile(schema)
-            ev = _fan_out(load(spark, sf_dir, "events"))
+            ev = _partitions.fan_out(load(spark, sf_dir, "events"))
             out = compiled.apply_json(ev, "props")
             return out.select("event_id", "passed")
         finally:
@@ -835,14 +800,14 @@ def nan_strict_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (jschon/utils.py json_loads with parse_constant). The variant path
     must yield passed=false (parse failure), never a NaN that leaks
     into comparisons."""
-    ev = _fan_out(load(spark, sf_dir, "events"))
+    ev = _partitions.fan_out(load(spark, sf_dir, "events"))
     doc = (
         F.when(F.col("event_id") % 11 == 0, F.lit('{"k": NaN}'))
         .when(F.col("event_id") % 13 == 0, F.lit('{"k": -Infinity}'))
         .otherwise(F.col("props"))
     )
     j = ev.select("event_id", doc.alias("j"))
-    out = _compile_cached(PROPS_SCHEMA).apply_json(j, "j")
+    out = engine.compiled(PROPS_SCHEMA).apply_json(j, "j")
     return out.select("event_id", "passed")
 
 
@@ -879,7 +844,7 @@ def custom_registry_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
             return lambda v: (v % d) == 0
 
     try:
-        ev = _fan_out(load(spark, sf_dir, "events")).select(
+        ev = _partitions.fan_out(load(spark, sf_dir, "events")).select(
             "event_id", "event_type"
         )
         eng = ConstraintEngine(assert_formats=True)
@@ -1125,8 +1090,8 @@ def windowed_verdicts_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact aggregation the streaming wrapper ships."""
     from jschon_spark.streaming.validate import windowed_verdicts
 
-    ev = _fan_out(load(spark, sf_dir, "events"))
-    validated = _compile_cached(PROPS_SCHEMA).apply_json(ev, "props")
+    ev = _partitions.fan_out(load(spark, sf_dir, "events"))
+    validated = engine.compiled(PROPS_SCHEMA).apply_json(ev, "props")
     return windowed_verdicts(validated, ts_col="ts", window="1 hour")
 
 
@@ -1242,9 +1207,10 @@ def media_decode_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def repetition_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition quality signals over documents —
-    row-local Column algebra (textqa.repetition_features): no shuffle,
-    no UDF, scan→project only, so the plan is shape-identical at
-    100 TB. The DuckDB oracle recomputes every fraction with list
+    row-local Column algebra (textqa.repetition_features), no UDF. No
+    shuffle at scale, so the plan is scan→project at 100 TB; the small
+    file-backed scan here is round-robin repartitioned to
+    defaultParallelism first. The DuckDB oracle recomputes every fraction with list
     functions + an unnest/group-by for the top-token count."""
     # CPU-bound row-local HOF algebra over a tiny single-split scan —
     # fan out first (no-op at scale, operators/_partitions.py)
@@ -1661,8 +1627,9 @@ def entropy_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-distribution quality signals (round 6): per-doc Shannon
     entropy, distinct-token fraction, top-token mass — the degenerate-
     document detectors that ride alongside the Gopher repetition
-    filters. Row-local HOF algebra with evaluate-once fences; zero
-    shuffles. DuckDB replays the count-vector build and the ln-based
+    filters. Row-local HOF algebra with evaluate-once fences; no
+    shuffle at scale, but the small file-backed scan here is
+    round-robin repartitioned to defaultParallelism. DuckDB replays the count-vector build and the ln-based
     entropy aggregate verbatim."""
     docs = load(spark, sf_dir, "documents")
     return textqa.entropy_features(docs.select("doc_id", "text")).select(
@@ -1675,9 +1642,10 @@ def blocklist_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Domain/host blocklist verdicts (round 6) over the same planted
     URL population as url_features_docs: registrable-domain match
     (PSL-aware), exact-host match, and dotted-suffix subdomain match,
-    all as InSet/HOF Column algebra — zero shuffles. keep_blocked=True
-    so the row count is planting-stable and the oracle hashes the
-    verdict column itself."""
+    all as InSet/HOF Column algebra. No shuffle at scale, but the small
+    file-backed scan here is round-robin repartitioned to
+    defaultParallelism. keep_blocked=True so the row count is
+    planting-stable and the oracle hashes the verdict column itself."""
     # query-level fan_out — same rationale as url_features_docs
     docs = _partitions.fan_out(load(spark, sf_dir, "documents"))
     did = F.col("doc_id").cast("string")

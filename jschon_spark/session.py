@@ -5,13 +5,40 @@ AQE on (skew-join splitting + partition coalescing), Arrow on for the
 batch evaluator, UTC session timezone so timestamps compare cleanly
 against external oracles, and shuffle partitions sized to cores rather
 than the 200 default.
+Also home of the session memo (:func:`memo`): a leaf module, so the
+batch evaluator's Python workers import it without a cycle.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Any, Callable, Hashable
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+_memo: dict = {}
+_memo_gateway: Any = None
+
+
+def memo(key: Hashable, build: Callable[[], Any]) -> Any:
+    """The value cached under ``key`` (a content tuple led by a caller
+    tag, never an ``id()``), calling ``build`` on a miss. Values may
+    hold py4j Columns, which die with their JVM, so the memo is dropped
+    whenever ``SparkContext._gateway`` changes; Python workers have no
+    gateway. At 64 entries the memo starts over."""
+    global _memo_gateway
+    gateway = SparkContext._gateway
+    if gateway is not _memo_gateway:
+        _memo.clear()
+        _memo_gateway = gateway
+    if key in _memo:
+        return _memo[key]
+    value = build()
+    if len(_memo) >= 64:
+        _memo.clear()
+    _memo[key] = value
+    return value
 
 
 def get_spark(
