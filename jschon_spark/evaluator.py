@@ -3,11 +3,18 @@
 This is the semantic core the Spark lowerings must agree with. It
 reproduces *what* jschon computes — keyword semantics, per-document
 verdicts, JSON-pointer-addressed violations (the ``basic`` output
-format, /root/reference/jschon/output.py:46-70) — with a completely
-different shape: a closed-form recursive function over plain dicts, no
-per-keyword object graph, designed to be called once per document
-inside a vectorized Arrow batch (lowering/batch.py) or as the pytest
-oracle.
+format, jschon's output.py:46-70) — with a different shape: one
+keyword table (``_KEYWORDS``) whose entries compile a schema node's
+keywords to closures once, as jschon compiles its keyword objects once
+(jschon's jsonschema.py:27-125). A node compiles on its first visit
+and a ``$ref`` resolves on its first visit. The closures run in two
+modes: the valid-only predicate
+(``Program.valid``, the batch path's filter and ``fastpath``), which
+short-circuits and builds no paths, violations or annotation sets, and
+the full walk (``Program.outcome``) that yields the Outcome. A node
+holding unevaluated* walks in full for the predicate too, as it reads
+its siblings' annotations. It runs once per document inside a
+vectorized Arrow batch (lowering/batch.py) and as the pytest oracle.
 
 Semantics cross-checked against the reference:
   * type tags: bool before int, number covers int|float
@@ -29,11 +36,13 @@ Semantics cross-checked against the reference:
 from __future__ import annotations
 
 import ipaddress
+import operator
 import re
 from dataclasses import dataclass, field
 from decimal import Decimal, InvalidOperation
 from typing import Any, Callable
 
+from jschon_spark.functions.registry import FORMAT_REGISTRY, KEYWORD_REGISTRY
 from jschon_spark.schema.catalog import (
     SchemaCatalog,
     pointer_escape,
@@ -46,6 +55,8 @@ from jschon_spark.schema.catalog import (
 from functools import lru_cache
 
 
+# memoized: (base, $id) pairs are a tiny fixed set per schema, and
+# urljoin cost ~25% of a violation walk when it ran per visit (profiled)
 @lru_cache(maxsize=4096)
 def _urljoin_base(base_uri: str, sid: str) -> str:
     from urllib.parse import urljoin
@@ -53,7 +64,16 @@ def _urljoin_base(base_uri: str, sid: str) -> str:
     return urljoin(base_uri, sid).split("#", 1)[0]
 
 
+_TYPE_NAMES = {
+    type(None): "null", bool: "boolean", int: "number", float: "number",
+    str: "string", list: "array", dict: "object",
+}
+
+
 def json_type(value: Any) -> str:
+    name = _TYPE_NAMES.get(value.__class__)
+    if name is not None:
+        return name
     if value is None:
         return "null"
     if isinstance(value, bool):  # bool BEFORE int: true is not a number
@@ -459,8 +479,679 @@ class Outcome:
     contains_items: set = field(default_factory=set)
 
 
-_IN_PLACE = ("$ref", "$dynamicRef", "allOf", "anyOf", "oneOf",
-             "if", "then", "else", "dependentSchemas", "not")
+class _Frame:
+    """The full walk at one (schema node, instance location): the
+    Outcome being built and the paths its violations carry."""
+
+    __slots__ = ("ipath", "kpath", "valid", "errors", "props", "items", "contains")
+
+    def __init__(self, ipath: str, kpath: str) -> None:
+        self.ipath = ipath
+        self.kpath = kpath
+        self.valid = True
+        self.errors: list[Violation] = []
+        self.props: set = set()
+        self.items: set = set()
+        self.contains: set = set()
+
+    def fail(self, keyword: str, msg: str) -> None:
+        self.valid = False
+        self.errors.append(Violation(keyword, self.ipath, f"{self.kpath}/{keyword}", msg))
+
+    def sub(self, cell: list, instance: Any, scope: list, kw: str, ip: str = "") -> _Frame:
+        """Walk ``cell`` over ``instance`` at keyword path suffix ``kw``
+        and instance path suffix ``ip``."""
+        child = _Frame(self.ipath + ip, f"{self.kpath}/{kw}")
+        cell[0](instance, scope, child)
+        return child
+
+    def absorb(self, o: _Frame, keyword: str, msg: str | None = None) -> None:
+        """Record a failed child: a keyword row when ``msg``, then its errors."""
+        if msg:
+            self.fail(keyword, msg)
+        self.valid = False
+        self.errors.extend(o.errors)
+
+    def merge(self, o: _Frame) -> None:
+        if o.valid:
+            self.props |= o.props
+            self.items |= o.items
+            self.contains |= o.contains
+
+    def in_place(self, cell: list, instance: Any, scope: list, kw: str, keyword: str) -> bool:
+        """A child at this instance location: its annotations pass
+        through and its failure is absorbed."""
+        o = self.sub(cell, instance, scope, kw)
+        self.merge(o)
+        if not o.valid:
+            self.absorb(o, keyword)
+        return o.valid
+
+    def located(self, cell: list, instance: Any, scope: list, kw: str, keyword: str, key: Any) -> bool:
+        """A child at member ``key`` (an item index or a property name):
+        a pass marks the member evaluated, a failure is absorbed."""
+        if isinstance(key, str):
+            o, seen = self.sub(cell, instance, scope, kw, "/" + pointer_escape(key)), self.props
+        else:
+            o, seen = self.sub(cell, instance, scope, kw, f"/{key}"), self.items
+        if o.valid:
+            seen.add(key)
+        else:
+            self.absorb(o, keyword)
+        return o.valid
+
+
+# --------------------------------------------------------------------------
+# compiled keywords
+#
+# A schema node compiles to ``run(instance, scope, frame) -> bool``:
+# ``scope`` is the dynamic scope (base URIs of the resources entered,
+# outermost first) and ``frame`` is None in the predicate mode, which
+# short-circuits, or a _Frame in the full walk. Each keyword below
+# compiles to a closure of the same signature, once per node; a
+# subschema is a one-slot cell whose closure compiles the node on its
+# first call and puts the result in its place.
+# --------------------------------------------------------------------------
+
+_NUMBER, _STRING, _ARRAY, _OBJECT = ("number",), ("string",), ("array",), ("object",)
+
+
+def _check(keyword: str, test: Callable[[Any, Any], Any], value: Any, message: Any) -> Callable:
+    """A keyword that tests the instance alone, as ``test(instance,
+    value)``; ``message`` is the error, or a function of (instance,
+    value) giving it."""
+    def check(v, scope, f):
+        if test(v, value):
+            return True
+        if f is not None:
+            f.fail(keyword, message(v, value) if callable(message) else message)
+        return False
+
+    return check
+
+
+def _members(keyword: str, members: Callable) -> Callable:
+    """A keyword applying subschemas to members of the instance:
+    ``members(v, f)`` lists their (key, cell, keyword path suffix)."""
+    def check(v, scope, f):
+        if f is None:
+            for key, cell, _ in members(v, f):
+                if not cell[0](v[key], scope, None):
+                    return False
+            return True
+        ok = True
+        for key, cell, kw in members(v, f):
+            ok &= f.located(cell, v[key], scope, kw, keyword, key)
+        return ok
+
+    return check
+
+
+def _in_place(keyword: str, cells: Callable) -> Callable:
+    """A keyword applying subschemas to the instance itself:
+    ``cells(v, scope)`` lists their (cell, keyword path suffix)."""
+    def check(v, scope, f):
+        if f is None:
+            for cell, _ in cells(v, scope):
+                if not cell[0](v, scope, None):
+                    return False
+            return True
+        ok = True
+        for cell, kw in cells(v, scope):
+            ok &= f.in_place(cell, v, scope, kw, keyword)
+        return ok
+
+    return check
+
+
+def _alone(keyword: str, cell: list) -> Callable:
+    """An in-place keyword with one subschema."""
+    subs = ((cell, keyword),)
+    return _in_place(keyword, lambda v, scope: subs)
+
+
+def _leaf(keyword: str, types: tuple | None, test: Callable, message: Any) -> tuple:
+    """Table row of a keyword checked by ``test(instance, value)``; a
+    string ``message`` formats the keyword's value into the error."""
+    def build(schema, cx):
+        value = schema[keyword]
+        return _check(keyword, test, value,
+                      message.format(value) if isinstance(message, str) else message)
+
+    return keyword, types, build
+
+
+def _is_type(v: Any, wanted: Any) -> bool:
+    jt = json_type(v)
+    if isinstance(wanted, str):
+        if jt == wanted:
+            return True
+        integer = wanted == "integer"
+    else:
+        if jt in wanted:
+            return True
+        integer = "integer" in wanted
+    # isinstance, not float(v) == int(v): ints above ~1e308 overflow float()
+    return integer and jt == "number" and (isinstance(v, int) or v.is_integer())
+
+
+def _applies(v: Any, spec: tuple) -> bool:
+    """``spec`` = (predicate, JSON types it applies to)."""
+    return json_type(v) not in spec[1] or spec[0](v)
+
+
+def _unique(v: list, _: Any) -> bool:
+    for i in range(len(v)):
+        for j in range(i + 1, len(v)):
+            if json_equal(v[i], v[j]):
+                return False
+    return True
+
+
+def _accept(v, scope, f):
+    return True
+
+
+def _reject(v, scope, f):
+    if f is not None:
+        # attribute the failure to the keyword holding the false schema
+        f.valid = False
+        f.errors.append(Violation(f.kpath.rsplit("/", 1)[-1], f.ipath, f.kpath,
+                                  "boolean schema false permits nothing"))
+    return False
+
+
+def _ref(schema, cx):
+    ref = schema["$ref"]
+    # resolved on the first visit, not at compile
+    return _in_place("$ref", lambda v, scope: ((cx.ref(ref)[1], "$ref"),))
+
+
+def _dynamic_ref(schema, cx):
+    ref = schema["$dynamicRef"]
+    frag = ref.split("#", 1)[1] if "#" in ref else ""
+    catalog = cx.program.catalog
+
+    def cells(v, scope):
+        target, cell = cx.ref(ref)
+        # rebind only if the initial target is itself a $dynamicAnchor
+        if (
+            frag
+            and not frag.startswith("/")
+            and isinstance(target, dict)
+            and target.get("$dynamicAnchor") == frag
+        ):
+            for scope_base in scope:  # outermost first
+                cand = catalog.dynamic_anchor(scope_base, frag)
+                if cand is not None:
+                    cell = cx.target(("$dynamicAnchor", scope_base, frag),
+                                     lambda: (cand, scope_base))[1]
+                    break
+        return ((cell, "$dynamicRef"),)
+
+    return _in_place("$dynamicRef", cells)
+
+
+def _recursive_ref(schema, cx):
+    # 2019-09 legacy dynamic scoping: value is always "#"
+    # (jschon's vocabulary/legacy.py:16-53)
+    ref = schema["$recursiveRef"]
+    catalog = cx.program.catalog
+
+    def cells(v, scope):
+        target, cell = cx.ref(ref)
+        if isinstance(target, dict) and target.get("$recursiveAnchor") is True:
+            for scope_base in scope:  # outermost first
+                if catalog.has_recursive_anchor(scope_base):
+                    cell = cx.ref("#", scope_base)[1]
+                    break
+        return ((cell, "$recursiveRef"),)
+
+    return _in_place("$recursiveRef", cells)
+
+
+def _dependent_required(schema, cx):
+    deps = tuple(schema["dependentRequired"].items())
+
+    def check(v, scope, f):
+        ok = True
+        for k, needed in deps:
+            missing = [d for d in needed if d not in v] if k in v else None
+            if missing:
+                if f is None:
+                    return False
+                ok = False
+                f.fail("dependentRequired", f"property {k!r} requires {missing}")
+        return ok
+
+    return check
+
+
+def _format(schema, cx):
+    ev = cx.program.evaluator
+    if not (ev.assert_formats or cx.fmt_assert):
+        return None
+    entry = ev.formats.get(schema["format"])
+    return None if entry is None else _check(
+        "format", _applies, entry, f"not a valid {schema['format']}")
+
+
+def _tuple_form(schema, cx) -> bool:
+    """2019-09 tuple-form items + additionalItems
+    (jschon's vocabulary/legacy.py:56-211)."""
+    return cx.dialect == "2019-09" and isinstance(schema.get("items"), list)
+
+
+def _positional(keyword: str, subschemas: list, cx) -> Callable:
+    subs = [(i, cx.child(s), f"{keyword}/{i}") for i, s in enumerate(subschemas)]
+    return _members(keyword, lambda v, f: subs[:len(v)])
+
+
+def _rest(keyword: str, subschema: Any, start: int, cx) -> Callable:
+    """``subschema`` over every item from index ``start`` on."""
+    cell = cx.child(subschema)
+    return _members(keyword, lambda v, f: [(i, cell, keyword) for i in range(start, len(v))])
+
+
+def _prefix_items(schema, cx):
+    return None if _tuple_form(schema, cx) else _positional("prefixItems", schema["prefixItems"], cx)
+
+
+def _items(schema, cx):
+    if _tuple_form(schema, cx):
+        return _positional("items", schema["items"], cx)
+    return _rest("items", schema["items"], len(schema.get("prefixItems", [])), cx)
+
+
+def _additional_items(schema, cx):
+    if not _tuple_form(schema, cx):
+        return None
+    return _rest("additionalItems", schema["additionalItems"], len(schema["items"]), cx)
+
+
+def _contains(schema, cx):
+    cell = cx.child(schema["contains"])
+    min_c = schema.get("minContains", 1)
+    max_c = schema.get("maxContains")
+    has_min, has_max = "minContains" in schema, "maxContains" in schema
+
+    def check(v, scope, f):
+        if f is None:
+            n = sum(1 for x in v if cell[0](x, scope, None))
+        else:
+            n = 0
+            for i, x in enumerate(v):
+                if f.sub(cell, x, scope, "contains", f"/{i}").valid:
+                    n += 1
+                    f.contains.add(i)
+        fails = []
+        if n == 0 and min_c > 0:
+            fails.append(("contains", "no array items match the contains schema"))
+        if has_max and n > max_c:
+            fails.append(("maxContains", f"more than {max_c} matching items"))
+        if has_min and n < min_c:
+            fails.append(("minContains", f"fewer than {min_c} matching items"))
+        if f is not None:
+            for keyword, msg in fails:
+                f.fail(keyword, msg)
+        return not fails
+
+    return check
+
+
+def _properties(schema, cx):
+    subs = [(name, cx.child(s), "properties/" + pointer_escape(name))
+            for name, s in schema["properties"].items()]
+    return _members("properties", lambda v, f: [m for m in subs if m[0] in v])
+
+
+def _pattern_properties(schema, cx):
+    subs = [(re.compile(p), cx.child(s), "patternProperties/" + pointer_escape(p))
+            for p, s in schema["patternProperties"].items()]
+    return _members("patternProperties", lambda v, f: [
+        (name, cell, kw) for rx, cell, kw in subs for name in v if rx.search(name)])
+
+
+def _additional_properties(schema, cx):
+    cell = cx.child(schema["additionalProperties"])
+    named = schema.get("properties", {})
+    patterns = [re.compile(p) for p in schema.get("patternProperties", {})]
+    return _members("additionalProperties", lambda v, f: [
+        (name, cell, "additionalProperties") for name in v
+        if name not in named and not any(rx.search(name) for rx in patterns)])
+
+
+def _property_names(schema, cx):
+    cell = cx.child(schema["propertyNames"])
+
+    def check(v, scope, f):
+        ok = True
+        for name in v:
+            if f is None:
+                if not cell[0](name, scope, None):
+                    return False
+                continue
+            o = f.sub(cell, name, scope, "propertyNames")
+            if not o.valid:
+                ok = False
+                f.absorb(o, "propertyNames", f"property name {name!r} is invalid")
+        return ok
+
+    return check
+
+
+def _dependent_schemas(schema, cx):
+    subs = [(k, cx.child(s), "dependentSchemas/" + pointer_escape(k))
+            for k, s in schema["dependentSchemas"].items()]
+    return _in_place("dependentSchemas", lambda v, scope: [(c, kw) for k, c, kw in subs if k in v])
+
+
+def _subschemas(keyword: str, schema, cx) -> list:
+    return [(cx.child(s), f"{keyword}/{i}") for i, s in enumerate(schema[keyword])]
+
+
+def _all_of(schema, cx):
+    subs = _subschemas("allOf", schema, cx)
+    return _in_place("allOf", lambda v, scope: subs)
+
+
+def _any_of(schema, cx):
+    subs = _subschemas("anyOf", schema, cx)
+
+    def check(v, scope, f):
+        if f is None:
+            return any(cell[0](v, scope, None) for cell, _ in subs)
+        results = [f.sub(cell, v, scope, kw) for cell, kw in subs]
+        for o in results:
+            f.merge(o)
+        if any(o.valid for o in results):
+            return True
+        f.fail("anyOf", "no subschema matched")
+        for o in results:
+            f.errors.extend(o.errors)
+        return False
+
+    return check
+
+
+def _one_of(schema, cx):
+    subs = _subschemas("oneOf", schema, cx)
+
+    def check(v, scope, f):
+        if f is None:
+            n = 0
+            for cell, _ in subs:
+                n += cell[0](v, scope, None)
+                if n > 1:
+                    return False
+            return n == 1
+        results = [f.sub(cell, v, scope, kw) for cell, kw in subs]
+        for o in results:
+            f.merge(o)
+        n = sum(o.valid for o in results)
+        if n != 1:
+            f.fail("oneOf", f"{n} subschemas matched, need exactly 1")
+        return n == 1
+
+    return check
+
+
+def _not(schema, cx):
+    cell = cx.child(schema["not"])
+
+    def check(v, scope, f):
+        if f is None:
+            return not cell[0](v, scope, None)
+        if f.sub(cell, v, scope, "not").valid:
+            f.fail("not", "instance must not match the subschema")
+            return False
+        return True
+
+    return check
+
+
+def _if(schema, cx):
+    cond = cx.child(schema["if"])
+    then = _alone("then", cx.child(schema["then"])) if "then" in schema else None
+    other = _alone("else", cx.child(schema["else"])) if "else" in schema else None
+
+    def check(v, scope, f):
+        if f is None:
+            branch = then if cond[0](v, scope, None) else other
+        else:
+            o = f.sub(cond, v, scope, "if")  # never fails the parent
+            f.merge(o)
+            branch = then if o.valid else other
+        return branch is None or branch(v, scope, f)
+
+    return check
+
+
+# unevaluated* reads the annotations of every sibling, so a node
+# holding it walks in full even for the predicate: f is never None here
+
+def _unevaluated_items(schema, cx):
+    cell = cx.child(schema["unevaluatedItems"])
+    legacy = cx.dialect == "2019-09"
+
+    def members(v, f):
+        # 2020-12/next: contains-matched items count as evaluated;
+        # 2019-09 collects only items/additionalItems/unevaluatedItems
+        # annotations (legacy.py:115-147)
+        covered = f.items if legacy else f.items | f.contains
+        return [(i, cell, "unevaluatedItems") for i in range(len(v)) if i not in covered]
+
+    return _members("unevaluatedItems", members)
+
+
+def _unevaluated_properties(schema, cx):
+    cell = cx.child(schema["unevaluatedProperties"])
+    return _members("unevaluatedProperties", lambda v, f: [
+        (name, cell, "unevaluatedProperties") for name in v if name not in f.props])
+
+
+# The keyword table, in evaluation order (the order of a document's
+# violations). Row: (keyword, instance types it applies to or None for
+# all, build(schema, cx) -> compiled check or None). Registered custom
+# keywords run after "if", and unevaluated* last.
+_KEYWORDS = (
+    # $ref / $dynamicRef / $recursiveRef: in-place, annotations pass through
+    ("$ref", None, _ref),
+    ("$dynamicRef", None, _dynamic_ref),
+    ("$recursiveRef", None, _recursive_ref),
+    _leaf("type", None, _is_type, lambda v, t: f"instance type {json_type(v)} does not match {t}"),
+    _leaf("enum", None, lambda v, e: any(json_equal(v, x) for x in e), "value not found in enumeration"),
+    _leaf("const", None, json_equal, "value does not equal the constant"),
+    _leaf("multipleOf", _NUMBER, is_multiple_of, "not a multiple of {}"),
+    _leaf("maximum", _NUMBER, operator.le, "exceeds maximum {}"),
+    _leaf("exclusiveMaximum", _NUMBER, operator.lt, "not below {}"),
+    _leaf("minimum", _NUMBER, operator.ge, "below minimum {}"),
+    _leaf("exclusiveMinimum", _NUMBER, operator.gt, "not above {}"),
+    _leaf("maxLength", _STRING, lambda v, n: len(v) <= n, "longer than {}"),
+    _leaf("minLength", _STRING, lambda v, n: len(v) >= n, "shorter than {}"),
+    ("pattern", _STRING, lambda s, cx: _check(
+        "pattern", lambda v, rx: rx.search(v), re.compile(s["pattern"]),
+        f"does not match pattern {s['pattern']!r}")),
+    _leaf("maxItems", _ARRAY, lambda v, n: len(v) <= n, "more than {} items"),
+    _leaf("minItems", _ARRAY, lambda v, n: len(v) >= n, "fewer than {} items"),
+    ("uniqueItems", _ARRAY, lambda s, cx: _check(
+        "uniqueItems", _unique, None, "array items are not unique") if s["uniqueItems"] else None),
+    _leaf("maxProperties", _OBJECT, lambda v, n: len(v) <= n, "more than {} properties"),
+    _leaf("minProperties", _OBJECT, lambda v, n: len(v) >= n, "fewer than {} properties"),
+    _leaf("required", _OBJECT, lambda v, names: all(map(v.__contains__, names)),
+          lambda v, names: f"missing required properties {[k for k in names if k not in v]}"),
+    ("dependentRequired", _OBJECT, _dependent_required),
+    ("format", None, _format),
+    ("prefixItems", _ARRAY, _prefix_items),
+    ("items", _ARRAY, _items),
+    ("additionalItems", _ARRAY, _additional_items),
+    # runs in both dialects: 2019-09 keeps contains alongside tuple-form items
+    ("contains", _ARRAY, _contains),
+    ("properties", _OBJECT, _properties),
+    ("patternProperties", _OBJECT, _pattern_properties),
+    ("additionalProperties", _OBJECT, _additional_properties),
+    ("propertyNames", _OBJECT, _property_names),
+    ("dependentSchemas", _OBJECT, _dependent_schemas),
+    ("allOf", None, _all_of),
+    ("anyOf", None, _any_of),
+    ("oneOf", None, _one_of),
+    ("not", None, _not),
+    ("if", None, _if),
+    ("unevaluatedItems", _ARRAY, _unevaluated_items),
+    ("unevaluatedProperties", _OBJECT, _unevaluated_properties),
+)
+# keyword -> (position in _KEYWORDS, types, build)
+_TABLE = {kw: (i, types, build) for i, (kw, types, build) in enumerate(_KEYWORDS)}
+_CUSTOM_AT = _TABLE["unevaluatedItems"][0]
+
+
+def _rows(schema: dict) -> list:
+    """The table rows ``schema`` uses, in order, with the registered
+    custom keywords (functions/registry.py) in their place."""
+    rows = [_TABLE[k] for k in schema if k in _TABLE]
+    rows.sort()
+    if KEYWORD_REGISTRY:
+        custom = [
+            (None, None, lambda s, cx, name=name, entry=entry: _check(
+                name, _applies, (entry.python_fn(s[name]), entry.instance_types), entry.error))
+            for name, entry in KEYWORD_REGISTRY.items()
+            if name in schema
+        ]
+        at = sum(1 for r in rows if r[0] < _CUSTOM_AT)
+        rows[at:at] = custom
+    return rows
+
+
+class _Node:
+    """What a keyword's build sees besides the schema: the program and
+    where the node sits (base URI, dialect, format assertion)."""
+
+    __slots__ = ("program", "base", "dialect", "fmt_assert")
+
+    def __init__(self, program: Program, base: str, dialect: str, fmt_assert: bool) -> None:
+        self.program = program
+        self.base = base
+        self.dialect = dialect
+        self.fmt_assert = fmt_assert
+
+    def child(self, schema: Any) -> list:
+        return self.program.cell(schema, self.base, self.dialect, self.fmt_assert)
+
+    def target(self, key: tuple, resolve: Callable[[], tuple]) -> tuple:
+        """(schema, cell) a reference lands on, memoized per program
+        under ``key``; ``resolve()`` gives its (schema, base URI)."""
+        key += (self.dialect, self.fmt_assert)
+        hit = self.program.targets.get(key)
+        if hit is None:
+            schema, base = resolve()
+            cell = self.program.cell(schema, base, self.dialect, self.fmt_assert)
+            hit = self.program.targets[key] = (schema, cell)
+        return hit
+
+    def ref(self, ref: str, base: str | None = None) -> tuple:
+        base = self.base if base is None else base
+        return self.target(("$ref", ref, base), lambda: self.program.catalog.resolve(ref, base))
+
+
+class Program:
+    """A schema compiled for one Evaluator. ``valid(instance)`` is the
+    predicate: it short-circuits and builds no paths, violations or
+    annotation sets. ``outcome(instance)`` is the full walk. Both run
+    the same closures; a schema node compiles on its first visit, and a
+    ``$ref`` resolves on its first visit."""
+
+    def __init__(self, evaluator: Evaluator, schema: Any, base_uri: str) -> None:
+        self.evaluator = evaluator
+        self.catalog = evaluator.catalog
+        # content key of a reference -> (target schema, its cell): a
+        # recursive schema reaches the same compiled node again
+        self.targets: dict[tuple, tuple] = {}
+        self._cells: list[list] = []
+        self._root = self.cell(schema, base_uri, "2020-12", False)
+        self._scope = [base_uri]
+
+    def valid(self, instance: Any) -> bool:
+        return self._root[0](instance, self._scope, None)
+
+    def outcome(self, instance: Any) -> Outcome:
+        f = _Frame("", "")
+        if not self._root[0](instance, self._scope, f):
+            # a failed schema contributes no annotations
+            return Outcome(False, f.errors)
+        return Outcome(True, f.errors, f.props, f.items, f.contains)
+
+    def cell(self, schema: Any, base: str, dialect: str, fmt_assert: bool) -> list:
+        """A one-slot cell whose closure compiles ``schema`` on its first
+        call and replaces itself with the result."""
+        cell: list = [None]
+
+        def first(instance, scope, f):
+            cell[0] = run = self._compile(schema, base, dialect, fmt_assert)
+            return run(instance, scope, f)
+
+        cell[0] = first
+        self._cells.append(cell)
+        return cell
+
+    def release(self) -> None:
+        """Empty every cell. The closures reference one another through
+        the cells, so a Program used once is then freed at once rather
+        than by the cycle collector; it validates nothing after."""
+        for cell in self._cells:
+            cell[0] = None
+        self._cells.clear()
+        self.targets.clear()
+
+    def _compile(self, schema: Any, base: str, dialect: str, fmt_assert: bool) -> Callable:
+        if isinstance(schema, bool):
+            return _accept if schema else _reject
+        if not isinstance(schema, dict):
+            raise TypeError(f"schema must be bool or object, not {type(schema).__name__}")
+
+        # entering a schema object with $id = entering a resource: the
+        # walk pushes it onto the dynamic scope
+        if "$id" in schema and isinstance(schema["$id"], str):
+            base = _urljoin_base(base, schema["$id"])
+        if "$schema" in schema and isinstance(schema["$schema"], str):
+            dialect = Evaluator._dialect_of(schema["$schema"]) or dialect
+            # a resource's own metaschema decides whether `format`
+            # asserts there (REPLACES the inherited setting — each
+            # resource is governed by its own dialect)
+            fmt_assert = self.evaluator._metaschema_asserts_format(schema["$schema"])
+        cx = _Node(self, base, dialect, fmt_assert)
+
+        found = []
+        for _, types, build in _rows(schema):
+            check = build(schema, cx)
+            if check is not None:
+                found.append((types, check))
+        # instance class -> the checks that apply to its JSON type,
+        # filled on the first instance of each class
+        by_class: dict[type, tuple] = {}
+        # unevaluated* reads the annotations of every sibling, so the
+        # node walks in full even for the predicate
+        annotated = "unevaluatedItems" in schema or "unevaluatedProperties" in schema
+
+        def run(v, scope, f):
+            if scope[-1] != base:
+                scope = scope + [base]
+            todo = by_class.get(v.__class__)
+            if todo is None:
+                jt = json_type(v)
+                todo = by_class[v.__class__] = tuple(
+                    [c for types, c in found if types is None or jt in types])
+            if f is None:
+                if not annotated:
+                    for c in todo:
+                        if not c(v, scope, None):
+                            return False
+                    return True
+                f = _Frame("", "")
+            for c in todo:
+                c(v, scope, f)
+            return f.valid
+
+        return run
 
 
 class Evaluator:
@@ -477,21 +1168,27 @@ class Evaluator:
         self.formats = dict(FORMAT_VALIDATORS)
         # user-registered formats (functions/registry.py) join the
         # built-ins, mirroring jschon's format_validator plugin surface
-        from jschon_spark.functions.registry import FORMAT_REGISTRY
-
         for name, entry in FORMAT_REGISTRY.items():
             self.formats[name] = (entry.python_fn, entry.instance_types)
         if format_validators:
             self.formats.update(format_validators)
-        self._pattern_cache: dict[str, re.Pattern] = {}
         # $schema URI -> does its (catalog-resolvable) metaschema
         # declare the format-assertion vocabulary? (round 6)
         self._fmt_assert_cache: dict[str, bool] = {}
 
     # -- public API ------------------------------------------------------
     def validate(self, schema: Any, instance: Any, uri: str | None = None) -> Outcome:
-        base = self.catalog.register(schema, uri)
-        return self._eval(schema, instance, base, [base], "", "")
+        """Register ``schema`` and walk ``instance`` in full. It compiles
+        anew on every call, so edits to the schema dict are seen."""
+        program = self.compile(schema, self.catalog.register(schema, uri))
+        try:
+            return program.outcome(instance)
+        finally:
+            program.release()
+
+    def compile(self, schema: Any, base_uri: str) -> Program:
+        """``schema``, registered at ``base_uri``, as a Program."""
+        return Program(self, schema, base_uri)
 
     @staticmethod
     def _dialect_of(uri: str) -> str | None:
@@ -522,448 +1219,3 @@ class Evaluator:
             val = False
         self._fmt_assert_cache[meta_uri] = val
         return val
-
-    # -- helpers ----------------------------------------------------------
-    def _pat(self, pattern: str) -> re.Pattern:
-        p = self._pattern_cache.get(pattern)
-        if p is None:
-            p = self._pattern_cache[pattern] = re.compile(pattern)
-        return p
-
-    # -- core recursive evaluation ----------------------------------------
-    def _eval(
-        self,
-        schema: Any,
-        instance: Any,
-        base_uri: str,
-        dynamic_scope: list[str],
-        ipath: str,
-        kpath: str,
-        dialect: str = "2020-12",
-        fmt_assert: bool = False,
-    ) -> Outcome:
-        if isinstance(schema, bool):
-            if schema:
-                return Outcome(True)
-            # attribute the failure to the keyword holding the false schema
-            kw = kpath.rsplit("/", 1)[-1] if kpath else ""
-            return Outcome(
-                False,
-                [Violation(kw, ipath, kpath, "boolean schema false permits nothing")],
-            )
-        if not isinstance(schema, dict):
-            raise TypeError(f"schema must be bool or object at {kpath!r}")
-
-        # entering a schema object with $id = entering a resource:
-        # push onto the dynamic scope. urljoin is memoized — it costs
-        # ~25% of a violation walk when called per visit (profiled),
-        # and (base, $id) pairs are a tiny fixed set per schema.
-        if isinstance(schema.get("$id"), str):
-            base_uri = _urljoin_base(base_uri, schema["$id"])
-        if not dynamic_scope or dynamic_scope[-1] != base_uri:
-            dynamic_scope = dynamic_scope + [base_uri]
-        if isinstance(schema.get("$schema"), str):
-            d = self._dialect_of(schema["$schema"])
-            if d:
-                dialect = d
-            # a resource's own metaschema decides whether `format`
-            # asserts there (REPLACES the inherited setting — each
-            # resource is governed by its own dialect)
-            fmt_assert = self._metaschema_asserts_format(schema["$schema"])
-
-        out = Outcome(True)
-        jt = json_type(instance)
-
-        def err(keyword: str, msg: str) -> None:
-            out.valid = False
-            out.errors.append(
-                Violation(keyword, ipath, f"{kpath}/{keyword}", msg)
-            )
-
-        def sub(
-            subschema: Any, subinstance: Any, kw_suffix: str, i_suffix: str = ""
-        ) -> Outcome:
-            return self._eval(
-                subschema,
-                subinstance,
-                base_uri,
-                dynamic_scope,
-                ipath + i_suffix,
-                f"{kpath}/{kw_suffix}",
-                dialect,
-                fmt_assert,
-            )
-
-        def absorb(o: Outcome, keyword: str, msg: str | None = None) -> None:
-            """Merge a failed in-place child: record its errors."""
-            out.valid = False
-            if msg:
-                out.errors.append(
-                    Violation(keyword, ipath, f"{kpath}/{keyword}", msg)
-                )
-            out.errors.extend(o.errors)
-
-        def merge_annotations(o: Outcome) -> None:
-            if o.valid:
-                out.evaluated_props |= o.evaluated_props
-                out.evaluated_items |= o.evaluated_items
-                out.contains_items |= o.contains_items
-
-        # ---- $ref / $dynamicRef (in-place, annotations pass through) ---
-        if "$ref" in schema:
-            target, tbase = self.catalog.resolve(schema["$ref"], base_uri)
-            o = self._eval(target, instance, tbase, dynamic_scope, ipath, f"{kpath}/$ref", dialect, fmt_assert)
-            merge_annotations(o)
-            if not o.valid:
-                absorb(o, "$ref")
-
-        if "$dynamicRef" in schema:
-            ref = schema["$dynamicRef"]
-            target, tbase = self.catalog.resolve(ref, base_uri)
-            frag = ref.split("#", 1)[1] if "#" in ref else ""
-            # rebind only if the initial target is itself a $dynamicAnchor
-            if (
-                frag
-                and not frag.startswith("/")
-                and isinstance(target, dict)
-                and target.get("$dynamicAnchor") == frag
-            ):
-                for scope_base in dynamic_scope:  # outermost first
-                    cand = self.catalog.dynamic_anchor(scope_base, frag)
-                    if cand is not None:
-                        target, tbase = cand, scope_base
-                        break
-            o = self._eval(target, instance, tbase, dynamic_scope, ipath, f"{kpath}/$dynamicRef", dialect, fmt_assert)
-            merge_annotations(o)
-            if not o.valid:
-                absorb(o, "$dynamicRef")
-
-        if "$recursiveRef" in schema:
-            # 2019-09 legacy dynamic scoping: value is always "#"
-            # (/root/reference/jschon/vocabulary/legacy.py:16-53)
-            target, tbase = self.catalog.resolve(schema["$recursiveRef"], base_uri)
-            if isinstance(target, dict) and target.get("$recursiveAnchor") is True:
-                for scope_base in dynamic_scope:  # outermost first
-                    if self.catalog.has_recursive_anchor(scope_base):
-                        target, tbase = self.catalog.resolve("#", scope_base)
-                        break
-            o = self._eval(target, instance, tbase, dynamic_scope, ipath,
-                           f"{kpath}/$recursiveRef", dialect, fmt_assert)
-            merge_annotations(o)
-            if not o.valid:
-                absorb(o, "$recursiveRef")
-
-        # ---- validation keywords (leaf predicates) ---------------------
-        if "type" in schema:
-            types = schema["type"]
-            # fast path reusing the jt computed above — json_type per
-            # candidate type was a measurable slice of the walk
-            if isinstance(types, str):
-                ok = jt == types or (
-                    types == "integer"
-                    and jt == "number"
-                    and (isinstance(instance, int) or instance.is_integer())
-                )
-            else:
-                ok = any(
-                    jt == t
-                    or (
-                        t == "integer"
-                        and jt == "number"
-                        and (isinstance(instance, int) or instance.is_integer())
-                    )
-                    for t in types
-                )
-            if not ok:
-                err("type", f"instance type {jt} does not match {types}")
-
-        if "enum" in schema:
-            if not any(json_equal(instance, v) for v in schema["enum"]):
-                err("enum", "value not found in enumeration")
-
-        if "const" in schema:
-            if not json_equal(instance, schema["const"]):
-                err("const", "value does not equal the constant")
-
-        if jt == "number":
-            if "multipleOf" in schema:
-                if not is_multiple_of(instance, schema["multipleOf"]):
-                    err("multipleOf", f"not a multiple of {schema['multipleOf']}")
-            if "maximum" in schema and not instance <= schema["maximum"]:
-                err("maximum", f"exceeds maximum {schema['maximum']}")
-            if "exclusiveMaximum" in schema and not instance < schema["exclusiveMaximum"]:
-                err("exclusiveMaximum", f"not below {schema['exclusiveMaximum']}")
-            if "minimum" in schema and not instance >= schema["minimum"]:
-                err("minimum", f"below minimum {schema['minimum']}")
-            if "exclusiveMinimum" in schema and not instance > schema["exclusiveMinimum"]:
-                err("exclusiveMinimum", f"not above {schema['exclusiveMinimum']}")
-
-        if jt == "string":
-            if "maxLength" in schema and len(instance) > schema["maxLength"]:
-                err("maxLength", f"longer than {schema['maxLength']}")
-            if "minLength" in schema and len(instance) < schema["minLength"]:
-                err("minLength", f"shorter than {schema['minLength']}")
-            if "pattern" in schema and not self._pat(schema["pattern"]).search(instance):
-                err("pattern", f"does not match pattern {schema['pattern']!r}")
-
-        if jt == "array":
-            if "maxItems" in schema and len(instance) > schema["maxItems"]:
-                err("maxItems", f"more than {schema['maxItems']} items")
-            if "minItems" in schema and len(instance) < schema["minItems"]:
-                err("minItems", f"fewer than {schema['minItems']} items")
-            if schema.get("uniqueItems"):
-                dup = False
-                for i in range(len(instance)):
-                    for j in range(i + 1, len(instance)):
-                        if json_equal(instance[i], instance[j]):
-                            dup = True
-                            break
-                    if dup:
-                        break
-                if dup:
-                    err("uniqueItems", "array items are not unique")
-
-        if jt == "object":
-            keys = list(instance.keys())
-            if "maxProperties" in schema and len(keys) > schema["maxProperties"]:
-                err("maxProperties", f"more than {schema['maxProperties']} properties")
-            if "minProperties" in schema and len(keys) < schema["minProperties"]:
-                err("minProperties", f"fewer than {schema['minProperties']} properties")
-            if "required" in schema:
-                missing = [k for k in schema["required"] if k not in instance]
-                if missing:
-                    err("required", f"missing required properties {missing}")
-            if "dependentRequired" in schema:
-                for k, deps in schema["dependentRequired"].items():
-                    if k in instance:
-                        missing = [d for d in deps if d not in instance]
-                        if missing:
-                            err(
-                                "dependentRequired",
-                                f"property {k!r} requires {missing}",
-                            )
-
-        if "format" in schema and (self.assert_formats or fmt_assert):
-            entry = self.formats.get(schema["format"])
-            if entry is not None:
-                fn, types_ = entry
-                if jt in types_ and not fn(instance):
-                    err("format", f"not a valid {schema['format']}")
-
-        # ---- array applicators ------------------------------------------
-        contains_count = None
-        if jt == "array" and dialect == "2019-09" and isinstance(schema.get("items"), list):
-            # 2019-09 tuple-form items + additionalItems
-            # (/root/reference/jschon/vocabulary/legacy.py:56-211)
-            tuple_items = schema["items"]
-            n_prefix = min(len(tuple_items), len(instance))
-            for i in range(n_prefix):
-                o = sub(tuple_items[i], instance[i], f"items/{i}", f"/{i}")
-                if o.valid:
-                    out.evaluated_items.add(i)
-                else:
-                    absorb(o, "items")
-            if "additionalItems" in schema:
-                for i in range(len(tuple_items), len(instance)):
-                    o = sub(schema["additionalItems"], instance[i], "additionalItems", f"/{i}")
-                    if o.valid:
-                        out.evaluated_items.add(i)
-                    else:
-                        absorb(o, "additionalItems")
-        elif jt == "array":
-            n_prefix = 0
-            if "prefixItems" in schema:
-                n_prefix = min(len(schema["prefixItems"]), len(instance))
-                for i in range(n_prefix):
-                    o = sub(schema["prefixItems"][i], instance[i], f"prefixItems/{i}", f"/{i}")
-                    if o.valid:
-                        out.evaluated_items.add(i)
-                    else:
-                        absorb(o, "prefixItems")
-            if "items" in schema:
-                for i in range(len(schema.get("prefixItems", [])), len(instance)):
-                    o = sub(schema["items"], instance[i], "items", f"/{i}")
-                    if o.valid:
-                        out.evaluated_items.add(i)
-                    else:
-                        absorb(o, "items")
-        if jt == "array" and "contains" in schema:
-            # runs in BOTH dialect branches: 2019-09 keeps contains alongside
-            # tuple-form items (/root/reference/jschon/vocabulary/applicator.py)
-            matched = []
-            for i, item in enumerate(instance):
-                o = sub(schema["contains"], item, "contains", f"/{i}")
-                if o.valid:
-                    matched.append(i)
-                    out.contains_items.add(i)
-            contains_count = len(matched)
-            min_c = schema.get("minContains", 1)
-            if contains_count == 0 and min_c > 0:
-                err("contains", "no array items match the contains schema")
-            if "maxContains" in schema and contains_count > schema["maxContains"]:
-                err("maxContains", f"more than {schema['maxContains']} matching items")
-            if "minContains" in schema and contains_count < schema["minContains"]:
-                err("minContains", f"fewer than {schema['minContains']} matching items")
-
-        # ---- object applicators ------------------------------------------
-        if jt == "object":
-            matched_by_props: set[str] = set()
-            if "properties" in schema:
-                for name, subschema in schema["properties"].items():
-                    if name in instance:
-                        matched_by_props.add(name)
-                        o = sub(
-                            subschema,
-                            instance[name],
-                            f"properties/{pointer_escape(name)}",
-                            f"/{pointer_escape(name)}",
-                        )
-                        if o.valid:
-                            out.evaluated_props.add(name)
-                        else:
-                            absorb(o, "properties")
-            if "patternProperties" in schema:
-                for pattern, subschema in schema["patternProperties"].items():
-                    pat = self._pat(pattern)
-                    for name in instance:
-                        if pat.search(name):
-                            matched_by_props.add(name)
-                            o = sub(
-                                subschema,
-                                instance[name],
-                                f"patternProperties/{pointer_escape(pattern)}",
-                                f"/{pointer_escape(name)}",
-                            )
-                            if o.valid:
-                                out.evaluated_props.add(name)
-                            else:
-                                absorb(o, "patternProperties")
-            if "additionalProperties" in schema:
-                for name in instance:
-                    if name not in matched_by_props:
-                        o = sub(
-                            schema["additionalProperties"],
-                            instance[name],
-                            "additionalProperties",
-                            f"/{pointer_escape(name)}",
-                        )
-                        if o.valid:
-                            out.evaluated_props.add(name)
-                        else:
-                            absorb(o, "additionalProperties")
-            if "propertyNames" in schema:
-                for name in instance:
-                    o = sub(schema["propertyNames"], name, "propertyNames")
-                    if not o.valid:
-                        absorb(
-                            o,
-                            "propertyNames",
-                            f"property name {name!r} is invalid",
-                        )
-            if "dependentSchemas" in schema:
-                for k, subschema in schema["dependentSchemas"].items():
-                    if k in instance:
-                        o = sub(subschema, instance, f"dependentSchemas/{pointer_escape(k)}")
-                        merge_annotations(o)
-                        if not o.valid:
-                            absorb(o, "dependentSchemas")
-
-        # ---- logical combinators -----------------------------------------
-        if "allOf" in schema:
-            for i, s in enumerate(schema["allOf"]):
-                o = sub(s, instance, f"allOf/{i}")
-                merge_annotations(o)
-                if not o.valid:
-                    absorb(o, "allOf")
-        if "anyOf" in schema:
-            results = [sub(s, instance, f"anyOf/{i}") for i, s in enumerate(schema["anyOf"])]
-            for o in results:
-                merge_annotations(o)
-            if not any(o.valid for o in results):
-                out.valid = False
-                out.errors.append(
-                    Violation("anyOf", ipath, f"{kpath}/anyOf", "no subschema matched")
-                )
-                for o in results:
-                    out.errors.extend(o.errors)
-        if "oneOf" in schema:
-            results = [sub(s, instance, f"oneOf/{i}") for i, s in enumerate(schema["oneOf"])]
-            n_valid = sum(1 for o in results if o.valid)
-            for o in results:
-                merge_annotations(o)
-            if n_valid != 1:
-                out.valid = False
-                out.errors.append(
-                    Violation(
-                        "oneOf", ipath, f"{kpath}/oneOf", f"{n_valid} subschemas matched, need exactly 1"
-                    )
-                )
-        if "not" in schema:
-            o = sub(schema["not"], instance, "not")
-            if o.valid:
-                err("not", "instance must not match the subschema")
-        if "if" in schema:
-            cond = sub(schema["if"], instance, "if")  # noassert: never fails parent
-            if cond.valid:
-                merge_annotations(cond)
-                if "then" in schema:
-                    o = sub(schema["then"], instance, "then")
-                    merge_annotations(o)
-                    if not o.valid:
-                        absorb(o, "then")
-            else:
-                if "else" in schema:
-                    o = sub(schema["else"], instance, "else")
-                    merge_annotations(o)
-                    if not o.valid:
-                        absorb(o, "else")
-
-        # ---- custom keywords (functions/registry.py) ---------------------
-        from jschon_spark.functions.registry import KEYWORD_REGISTRY
-
-        for kw_name, entry in KEYWORD_REGISTRY.items():
-            if kw_name in schema and jt in entry.instance_types:
-                pred = entry.python_fn(schema[kw_name])
-                if not pred(instance):
-                    err(kw_name, entry.error)
-
-        # ---- unevaluated* (depend on every sibling's annotations) --------
-        if "unevaluatedItems" in schema and jt == "array":
-            # 2020-12/next: contains-matched items count as evaluated;
-            # 2019-09 collects only items/additionalItems/
-            # unevaluatedItems annotations (legacy.py:115-147), so
-            # contains matches stay unevaluated there
-            covered = (
-                out.evaluated_items
-                if dialect == "2019-09"
-                else out.evaluated_items | out.contains_items
-            )
-            for i in range(len(instance)):
-                if i in covered:
-                    continue
-                o = sub(schema["unevaluatedItems"], instance[i], "unevaluatedItems", f"/{i}")
-                if o.valid:
-                    out.evaluated_items.add(i)
-                else:
-                    absorb(o, "unevaluatedItems")
-        if "unevaluatedProperties" in schema and jt == "object":
-            for name in instance:
-                if name in out.evaluated_props:
-                    continue
-                o = sub(
-                    schema["unevaluatedProperties"],
-                    instance[name],
-                    "unevaluatedProperties",
-                    f"/{pointer_escape(name)}",
-                )
-                if o.valid:
-                    out.evaluated_props.add(name)
-                else:
-                    absorb(o, "unevaluatedProperties")
-
-        # a failed schema contributes no annotations upward
-        if not out.valid:
-            out.evaluated_props = set()
-            out.evaluated_items = set()
-            out.contains_items = set()
-        return out

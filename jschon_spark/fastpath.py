@@ -1,45 +1,19 @@
-"""Closure-compiled valid-only predicate for the Arrow batch path.
+"""The valid-only predicate of the Arrow batch path.
 
-The interpretive evaluator (evaluator.py) builds an Outcome per schema
-node per document — faithful, but allocation-heavy. For the common
-case (schemas without ``unevaluated*`` / dynamic refs, corpora that are
-mostly valid) the batch path wants a bare ``instance -> bool``:
-
-  * ``compile_valid`` walks the schema ONCE on the driver and emits
-    nested closures with everything precomputed — regexes compiled,
-    enum lists frozen, Decimal divisors fixed, property maps built —
-    mirroring the reference's compile-once keyword objects
-    (/root/reference/jschon/jsonschema.py:27-125) minus the per-visit
-    Result allocation (jsonschema.py:419-424).
-  * documents that fail the fast predicate are re-run through the full
-    evaluator to extract violations — errors cost proportional to the
-    *failure* rate, not the corpus size.
-
-Returns None (caller keeps the interpretive path) when the reachable
-schema graph uses annotation-dependent or dynamically-scoped keywords:
-unevaluatedItems/unevaluatedProperties, $dynamicRef, $recursiveRef.
+``compile_valid`` is the predicate mode of the evaluator's compiled
+keyword table (evaluator.py): the closures the full walk runs, called
+so that they short-circuit and build no paths, violations or
+annotation sets. The batch path runs it on every document and the full
+walk only on the documents it rejects, so violation extraction costs in
+proportion to the failure rate, not the corpus size.
 """
 
 from __future__ import annotations
 
-import re
-from decimal import Decimal
 from typing import Any, Callable
 
-from jschon_spark.evaluator import json_equal, matches_type
+from jschon_spark.evaluator import Evaluator
 from jschon_spark.schema.catalog import SchemaCatalog
-
-Check = Callable[[Any], bool]
-
-_UNSUPPORTED = {"unevaluatedItems", "unevaluatedProperties", "$dynamicRef", "$recursiveRef"}
-
-
-def _dec(x: Any) -> Decimal:
-    return Decimal(repr(x) if isinstance(x, float) else str(x))
-
-
-class _Unsupported(Exception):
-    pass
 
 
 def compile_valid(
@@ -48,303 +22,7 @@ def compile_valid(
     base_uri: str,
     assert_formats: bool = False,
     formats: dict | None = None,
-) -> Check | None:
-    """Compile ``schema`` to a fast predicate, or None if out of scope."""
-    compiler = _Compiler(catalog, assert_formats, formats or {})
-    try:
-        return compiler.compile(schema, base_uri)
-    except _Unsupported:
-        return None
-
-
-class _Compiler:
-    def __init__(self, catalog: SchemaCatalog, assert_formats: bool, formats: dict):
-        self.catalog = catalog
-        self.assert_formats = assert_formats
-        self.formats = formats
-        # (id(schema), base_uri) -> closure; filled lazily so cyclic
-        # $refs late-bind through the memo
-        self._memo: dict[tuple[int, str], Check] = {}
-
-    def compile(self, schema: Any, base_uri: str) -> Check:
-        key = (id(schema), base_uri)
-        got = self._memo.get(key)
-        if got is not None:
-            return got
-
-        if isinstance(schema, bool):
-            fn = (lambda _: True) if schema else (lambda _: False)
-            self._memo[key] = fn
-            return fn
-        if not isinstance(schema, dict):
-            raise _Unsupported
-
-        if _UNSUPPORTED & schema.keys():
-            raise _Unsupported
-
-        # custom metaschemas can re-wire keyword semantics (a
-        # $vocabulary declaring format-assertion makes `format`
-        # assert, honored by the evaluator since round 6) — decline,
-        # the evaluator is the semantics source of truth
-        s_meta = schema.get("$schema")
-        if isinstance(s_meta, str) and not s_meta.startswith(
-            "https://json-schema.org/draft"
-        ):
-            raise _Unsupported
-
-        # placeholder for recursion: late-bound through a cell
-        cell: list[Check | None] = [None]
-
-        def thunk(inst: Any) -> bool:
-            return cell[0](inst)  # type: ignore[misc]
-
-        self._memo[key] = thunk
-
-        if isinstance(schema.get("$id"), str):
-            from urllib.parse import urljoin
-
-            base_uri = urljoin(base_uri, schema["$id"]).split("#", 1)[0]
-
-        checks: list[Check] = []
-        add = checks.append
-
-        # ---- $ref -------------------------------------------------------
-        if "$ref" in schema:
-            target, tbase = self.catalog.resolve(schema["$ref"], base_uri)
-            add(self.compile(target, tbase))
-
-        # ---- type / enum / const ------------------------------------------
-        if "type" in schema:
-            wanted = schema["type"]
-            wanted = (wanted,) if isinstance(wanted, str) else tuple(wanted)
-            add(lambda v, w=wanted: any(matches_type(v, t) for t in w))
-        if "enum" in schema:
-            values = tuple(schema["enum"])
-            add(lambda v, vals=values: any(json_equal(v, x) for x in vals))
-        if "const" in schema:
-            c = schema["const"]
-            add(lambda v, c=c: json_equal(v, c))
-
-        # ---- numbers -------------------------------------------------------
-        def num(v: Any) -> bool:
-            return isinstance(v, (int, float)) and not isinstance(v, bool)
-
-        if "multipleOf" in schema:
-            from jschon_spark.evaluator import is_multiple_of
-
-            m0 = schema["multipleOf"]
-            add(lambda v, m=m0: not num(v) or is_multiple_of(v, m))
-        if "maximum" in schema:
-            m = schema["maximum"]
-            add(lambda v, m=m: not num(v) or v <= m)
-        if "exclusiveMaximum" in schema:
-            m = schema["exclusiveMaximum"]
-            add(lambda v, m=m: not num(v) or v < m)
-        if "minimum" in schema:
-            m = schema["minimum"]
-            add(lambda v, m=m: not num(v) or v >= m)
-        if "exclusiveMinimum" in schema:
-            m = schema["exclusiveMinimum"]
-            add(lambda v, m=m: not num(v) or v > m)
-
-        # ---- strings --------------------------------------------------------
-        if "maxLength" in schema:
-            n = schema["maxLength"]
-            add(lambda v, n=n: not isinstance(v, str) or len(v) <= n)
-        if "minLength" in schema:
-            n = schema["minLength"]
-            add(lambda v, n=n: not isinstance(v, str) or len(v) >= n)
-        if "pattern" in schema:
-            rx = re.compile(schema["pattern"])
-            add(lambda v, rx=rx: not isinstance(v, str) or rx.search(v) is not None)
-        if "format" in schema and self.assert_formats:
-            entry = self.formats.get(schema["format"])
-            if entry is not None:
-                fmt_fn, types_ = entry
-
-                def fmt_check(v, fn=fmt_fn, types_=types_):
-                    from jschon_spark.evaluator import json_type
-
-                    return json_type(v) not in types_ or fn(v)
-
-                add(fmt_check)
-
-        # ---- arrays ----------------------------------------------------------
-        if "maxItems" in schema:
-            n = schema["maxItems"]
-            add(lambda v, n=n: not isinstance(v, list) or len(v) <= n)
-        if "minItems" in schema:
-            n = schema["minItems"]
-            add(lambda v, n=n: not isinstance(v, list) or len(v) >= n)
-        if schema.get("uniqueItems"):
-            def unique(v: Any) -> bool:
-                if not isinstance(v, list):
-                    return True
-                for i in range(len(v)):
-                    for j in range(i + 1, len(v)):
-                        if json_equal(v[i], v[j]):
-                            return False
-                return True
-
-            add(unique)
-        prefix = [self.compile(s, base_uri) for s in schema.get("prefixItems", [])]
-        items = self.compile(schema["items"], base_uri) if isinstance(schema.get("items"), (dict, bool)) else None
-        if isinstance(schema.get("items"), list):
-            raise _Unsupported  # 2019-09 tuple form -> interpretive path
-        if prefix or items is not None:
-            n_pre = len(prefix)
-
-            def arr_check(v, prefix=tuple(prefix), items=items, n_pre=n_pre):
-                if not isinstance(v, list):
-                    return True
-                for i in range(min(n_pre, len(v))):
-                    if not prefix[i](v[i]):
-                        return False
-                if items is not None:
-                    for x in v[n_pre:]:
-                        if not items(x):
-                            return False
-                return True
-
-            add(arr_check)
-        if "contains" in schema:  # min/maxContains are no-ops without it
-            csub = self.compile(schema["contains"], base_uri)
-            min_c = schema.get("minContains", 1)
-            max_c = schema.get("maxContains")
-
-            def contains_check(v, csub=csub, min_c=min_c, max_c=max_c):
-                if not isinstance(v, list):
-                    return True
-                n = sum(1 for x in v if csub(x))
-                if n < min_c:
-                    return False
-                if max_c is not None and n > max_c:
-                    return False
-                return True
-
-            add(contains_check)
-
-        # ---- objects -----------------------------------------------------------
-        if "maxProperties" in schema:
-            n = schema["maxProperties"]
-            add(lambda v, n=n: not isinstance(v, dict) or len(v) <= n)
-        if "minProperties" in schema:
-            n = schema["minProperties"]
-            add(lambda v, n=n: not isinstance(v, dict) or len(v) >= n)
-        if "required" in schema:
-            req = tuple(schema["required"])
-            add(lambda v, req=req: not isinstance(v, dict) or all(k in v for k in req))
-        if "dependentRequired" in schema:
-            dr = {k: tuple(d) for k, d in schema["dependentRequired"].items()}
-
-            def dep_req(v, dr=dr):
-                if not isinstance(v, dict):
-                    return True
-                for k, deps in dr.items():
-                    if k in v and any(d not in v for d in deps):
-                        return False
-                return True
-
-            add(dep_req)
-        props = {k: self.compile(s, base_uri) for k, s in schema.get("properties", {}).items()}
-        pprops = [
-            (re.compile(p), self.compile(s, base_uri))
-            for p, s in schema.get("patternProperties", {}).items()
-        ]
-        aprops = (
-            self.compile(schema["additionalProperties"], base_uri)
-            if "additionalProperties" in schema
-            else None
-        )
-        if props or pprops or aprops is not None:
-            def obj_check(v, props=props, pprops=tuple(pprops), aprops=aprops):
-                if not isinstance(v, dict):
-                    return True
-                for k, x in v.items():
-                    matched = False
-                    sub = props.get(k)
-                    if sub is not None:
-                        matched = True
-                        if not sub(x):
-                            return False
-                    for rx, psub in pprops:
-                        if rx.search(k):
-                            matched = True
-                            if not psub(x):
-                                return False
-                    if not matched and aprops is not None and not aprops(x):
-                        return False
-                return True
-
-            add(obj_check)
-        if "propertyNames" in schema:
-            nsub = self.compile(schema["propertyNames"], base_uri)
-            add(lambda v, nsub=nsub: not isinstance(v, dict) or all(nsub(k) for k in v))
-        if "dependentSchemas" in schema:
-            ds = {k: self.compile(s, base_uri) for k, s in schema["dependentSchemas"].items()}
-
-            def dep_s(v, ds=ds):
-                if not isinstance(v, dict):
-                    return True
-                return all(sub(v) for k, sub in ds.items() if k in v)
-
-            add(dep_s)
-
-        # ---- combinators -----------------------------------------------------
-        if "allOf" in schema:
-            subs = tuple(self.compile(s, base_uri) for s in schema["allOf"])
-            add(lambda v, subs=subs: all(s(v) for s in subs))
-        if "anyOf" in schema:
-            subs = tuple(self.compile(s, base_uri) for s in schema["anyOf"])
-            add(lambda v, subs=subs: any(s(v) for s in subs))
-        if "oneOf" in schema:
-            subs = tuple(self.compile(s, base_uri) for s in schema["oneOf"])
-            add(lambda v, subs=subs: sum(1 for s in subs if s(v)) == 1)
-        if "not" in schema:
-            sub = self.compile(schema["not"], base_uri)
-            add(lambda v, sub=sub: not sub(v))
-        if "if" in schema:
-            cond = self.compile(schema["if"], base_uri)
-            then = self.compile(schema["then"], base_uri) if "then" in schema else None
-            els = self.compile(schema["else"], base_uri) if "else" in schema else None
-
-            def ite(v, cond=cond, then=then, els=els):
-                if cond(v):
-                    return then is None or then(v)
-                return els is None or els(v)
-
-            add(ite)
-
-        # ---- custom keywords ----------------------------------------------------
-        from jschon_spark.functions.registry import KEYWORD_REGISTRY
-
-        for kw_name, entry in KEYWORD_REGISTRY.items():
-            if kw_name in schema:
-                pred = entry.python_fn(schema[kw_name])
-                types_ = entry.instance_types
-
-                def custom(v, pred=pred, types_=types_):
-                    from jschon_spark.evaluator import json_type
-
-                    return json_type(v) not in types_ or pred(v)
-
-                add(custom)
-
-        if not checks:
-            fn: Check = lambda _: True
-        elif len(checks) == 1:
-            fn = checks[0]
-        else:
-            cs = tuple(checks)
-
-            def fn(v, cs=cs):  # type: ignore[misc]
-                for c in cs:
-                    if not c(v):
-                        return False
-                return True
-
-        cell[0] = fn
-        # replace the thunk in the memo with the direct closure for
-        # everyone compiled after this point
-        self._memo[key] = fn
-        return fn
+) -> Callable[[Any], bool]:
+    """``instance -> bool`` for ``schema`` registered in ``catalog`` at
+    ``base_uri``; ``formats`` adds to the evaluator's format validators."""
+    return Evaluator(catalog, assert_formats, formats).compile(schema, base_uri).valid

@@ -4,10 +4,11 @@ The sanctioned slow path (BASELINE.json: "vectorized pandas/Arrow UDF
 batch evaluator, never a per-row Python call" — meaning never a
 row-at-a-time Spark ``udf()``): one Python invocation per Arrow batch;
 inside the batch, the from-scratch evaluator (jschon_spark.evaluator)
-runs over a pandas Series. The compiled schema dict is shipped once in
-the closure (Spark broadcasts task binaries), and the Evaluator's regex
-cache warms per executor, mirroring the reference's compile-once
-property (/root/reference/jschon/vocabulary/validation.py:136-138).
+runs over a pandas Series. The schema dict is shipped once in the
+closure (Spark broadcasts task binaries) and compiled once per Python
+worker into the evaluator's Program, whose nodes compile on first
+visit, mirroring the reference's compile-once keywords
+(jschon's vocabulary/validation.py:136-138).
 """
 
 from __future__ import annotations
@@ -21,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from jschon_spark.functions import registry
 from jschon_spark.lowering.columns import VIOLATION_TYPE
 from jschon_spark.session import memo
 
@@ -48,9 +50,9 @@ def make_batch_validator(
 
     @F.pandas_udf(RESULT_TYPE)
     def validate_batch(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        # iterator form: catalog/evaluator/fastpath are built ONCE per task
-        # (and memoized per Python worker via _compiled), not per Arrow batch
-        ev, base, fast, parse = _compiled(schema, store, assert_formats)
+        # iterator form: the program is built ONCE per task (and
+        # memoized per Python worker via _compiled), not per Arrow batch
+        program, parse = _compiled(schema, store, assert_formats)
 
         for docs in it:
             passed = []
@@ -68,13 +70,12 @@ def make_batch_validator(
                         [("", "", "", str(doc)[:256], f"invalid JSON: {e}")]
                     )
                     continue
-                if fast is not None:
-                    if fast(instance):
-                        passed.append(True)
-                        violations.append([])
-                        continue
-                    # failing doc: full walk for the violation records
-                out = ev._eval(schema, instance, base, [base], "", "")
+                if program.valid(instance):
+                    passed.append(True)
+                    violations.append([])
+                    continue
+                # failing doc: full walk for the violation records
+                out = program.outcome(instance)
                 passed.append(out.valid)
                 violations.append(
                     [
@@ -96,30 +97,30 @@ def make_batch_validator(
 
 
 def _compiled(schema: Any, store: list, assert_formats: bool) -> tuple:
-    """Per-worker memo of (evaluator, base_uri, fastpath, strict_parser)
-    keyed by schema content — repeated tasks over the same schema reuse
-    the closure-compiled predicate instead of recompiling."""
+    """Per-worker memo of (program, strict_parser) keyed by schema
+    content and the registry version — repeated tasks over the same
+    schema reuse the compiled program, and a format or keyword
+    registered since compiles anew."""
     key = json.dumps(
         {"s": schema, "x": store, "f": assert_formats},
         sort_keys=True, default=str,
     )
-    return memo(("batch", key), lambda: _compile(schema, store, assert_formats))
+    return memo(("batch", key, registry.VERSION),
+                lambda: _compile(schema, store, assert_formats))
 
 
 def _compile(schema: Any, store: list, assert_formats: bool) -> tuple:
     from jschon_spark.evaluator import Evaluator
-    from jschon_spark.fastpath import compile_valid
     from jschon_spark.schema.catalog import SchemaCatalog, parse_json_strict
 
     catalog = SchemaCatalog()
     for extra in store:
         catalog.register(extra)
-    ev = Evaluator(catalog, assert_formats=assert_formats)
     base = catalog.register(schema)
-    # closure-compiled valid-only predicate: the full Outcome walk
-    # (violation extraction) then runs only on failing documents
-    fast = compile_valid(schema, catalog, base, assert_formats, ev.formats)
-    return ev, base, fast, parse_json_strict
+    # program.valid, the predicate, runs on every document; the full
+    # walk (violation extraction) only on the ones it rejects
+    program = Evaluator(catalog, assert_formats=assert_formats).compile(schema, base)
+    return program, parse_json_strict
 
 
 def validate_json_column(

@@ -530,12 +530,13 @@ class KeywordWalker:
         row AND the name subschema's own violation rows."""
         if node.fields is not None:
             # field names are static: evaluate each name at compile time
-            # with the driver-side evaluator, rows rebased under kp
+            # with the driver-side evaluator, at this node's base URI so
+            # a $ref resolves in its own document; rows rebased under kp
             from jschon_spark.evaluator import Evaluator
 
-            ev = Evaluator(self.catalog)
+            program = Evaluator(self.catalog).compile(sub, base_uri)
             for name in node.fields:
-                o = ev.validate(sub, name)
+                o = program.outcome(name)
                 if o.valid:
                     continue
                 ok = F.coalesce(node.col[name].isNull(), F.lit(True))

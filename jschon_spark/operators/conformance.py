@@ -83,15 +83,13 @@ def conformance_verdicts(
                 pdf["case_id"], pdf["schema_json"], pdf["doc_json"]
             ):
                 schema = json.loads(sj)
-                ev, base, fast, parse = _compiled(schema, [], assert_formats)
+                program, parse = _compiled(schema, [], assert_formats)
                 instance = parse(dj)
-                ev_valid = bool(
-                    ev._eval(schema, instance, base, [base], "", "").valid
-                )
-                # gate BOTH execution paths at once: a fastpath/evaluator
+                full = program.outcome(instance).valid
+                # gate BOTH modes at once: a predicate/full-walk
                 # disagreement yields NULL, which poisons the value hash
-                valid: bool | None = ev_valid
-                if fast is not None and bool(fast(instance)) != ev_valid:
+                valid: bool | None = full
+                if program.valid(instance) != full:
                     valid = None
                 out.append((str(cid), valid))
             yield pd.DataFrame(out, columns=["case_id", "valid"])

@@ -255,8 +255,8 @@ def props_json_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def props_json_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Violation EXTRACTION goes through the Arrow batch path: the
-    closure-compiled fastpath skips passing docs and the full walk runs
-    only on failures — measured ~30% faster than the variant lowering
+    evaluator's compiled predicate skips passing docs and the full walk
+    runs only on failures — measured ~30% faster than the variant lowering
     here, whose violation arrays re-evaluate interpreted variant
     subexpressions per reference (verdicts stay on the variant path,
     where one JVM pass wins by ~5x)."""

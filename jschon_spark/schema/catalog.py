@@ -34,6 +34,9 @@ class CatalogError(KeyError):
 
 
 CORE_2020_12 = "https://json-schema.org/draft/2020-12/schema"
+# base of anonymous registrations: a hierarchical scheme, so
+# urljoin-based relative resolution works
+_ANON = "https://jschon-spark.invalid/anon/"
 
 
 _IDX_RE = re.compile(r"^(0|[1-9][0-9]*)$")
@@ -240,8 +243,12 @@ class SchemaCatalog:
             sid, frag = _strip_fragment(schema["$id"])
             uri = urljoin(uri or "", sid) if uri else sid
         if uri is None:
-            # hierarchical scheme so urljoin-based relative resolution works
-            uri = f"https://jschon-spark.invalid/anon/{len(self._resources)}"
+            # an anonymous root registered before keeps its URI, so
+            # validating one schema object again adds no resource
+            for known, root in self._resources.items():
+                if root is schema and known.startswith(_ANON):
+                    return known
+            uri = f"{_ANON}{len(self._resources)}"
         base, _ = _strip_fragment(uri)
         self._walk_register(schema, base)
         return base

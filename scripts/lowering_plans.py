@@ -15,6 +15,15 @@ lowering left its plans byte-identical.
     python scripts/lowering_plans.py dump OUT.jsonl
     python scripts/lowering_plans.py diff A.jsonl B.jsonl
 
+``batch OUT.jsonl`` dumps the Arrow batch route instead, driver-only
+with no Spark: for each (schema, instance) over the conformance corpus,
+the format cases (formats asserted), the seeded random-differential
+populations and the benchmark's batch-route documents, one line whose
+``route`` holds the ``compile_valid`` predicate's verdict and the full
+walk's ``valid`` (or the exception either raised) and whose ``plan``
+holds the full walk's ordered (keyword, instance_path, keyword_path,
+error) rows. ``diff`` compares two such dumps unchanged.
+
 Run it from the root of the checkout whose lowering is to be dumped.
 """
 
@@ -178,6 +187,69 @@ def dump(out_path: str) -> None:
     spark.stop()
 
 
+def _batch_inputs():
+    """(name, schema, instances, assert_formats) of the batch dump."""
+    from jschon_spark.conformance_corpus import FORMAT_CASES, all_cases
+    from tests.test_random_differential import _rand_doc
+
+    docs = [_rand_doc(random.Random(5000 + i), depth=2) for i in range(24)]
+    for i, case in enumerate(all_cases()):
+        data = [d for d, _ in case["tests"]]
+        yield f"case/{i}/{case['description']}", case["schema"], data + docs[:8], False
+    for i, case in enumerate(FORMAT_CASES):
+        yield f"format/{i}/{case['description']}", case["schema"], [d for d, _ in case["tests"]], True
+    for name, schema, _ in _random_schemas():
+        yield name, schema, docs + [{"m": d} for d in docs[:12]], False
+    try:
+        sys.path.insert(0, os.path.join(os.getcwd(), "perfbench"))
+        import gen
+
+        pages = [json.loads(d) for d in gen.docs(7, 300)[0]["doc"].to_pylist()]
+        for route in gen.DOC_ROUTES:
+            yield f"doc_schema/{route}", gen.doc_schema(7, route), pages, False
+    except ImportError:
+        pass
+
+
+def batch(out_path: str) -> None:
+    from jschon_spark.evaluator import Evaluator
+    from jschon_spark.fastpath import compile_valid
+    from jschon_spark.schema.catalog import SchemaCatalog
+
+    def attempt(fn):
+        try:
+            return fn(), None
+        except Exception as e:  # noqa: BLE001 - recorded, not hidden
+            return None, f"{type(e).__name__}: {e}"[:200]
+
+    with open(out_path, "w") as out:
+        for name, schema, instances, af in _batch_inputs():
+            catalog = SchemaCatalog()
+            base = catalog.register(schema)
+            ev = Evaluator(catalog, assert_formats=af)
+            fast, fast_err = attempt(
+                lambda: compile_valid(schema, catalog, base, af, ev.formats))
+            for i, inst in enumerate(instances):
+                full, full_err = attempt(lambda: ev.validate(schema, inst))
+                if fast is not None:
+                    pred, pred_err = attempt(lambda: fast(inst))
+                elif fast_err is None:
+                    # a compile_valid that declines the schema (None)
+                    # leaves the batch route to the full walk
+                    pred, pred_err = (full.valid if full else None), full_err
+                else:
+                    pred, pred_err = None, fast_err
+                if pred_err or full_err:
+                    route = f"error: pred={pred_err or pred} valid={full_err or full.valid}"
+                    rows = None
+                else:
+                    route = f"pred={bool(pred)} valid={full.valid}"
+                    rows = [[e.keyword, e.instance_path, e.keyword_path, e.error]
+                            for e in full.errors]
+                out.write(json.dumps({"id": f"{name}|{i}", "route": route,
+                                      "plan": json.dumps(rows)}, sort_keys=True) + "\n")
+
+
 def diff(a_path: str, b_path: str) -> int:
     def load(p):
         with open(p) as f:
@@ -213,6 +285,8 @@ def diff(a_path: str, b_path: str) -> int:
 if __name__ == "__main__":
     if len(sys.argv) == 3 and sys.argv[1] == "dump":
         dump(sys.argv[2])
+    elif len(sys.argv) == 3 and sys.argv[1] == "batch":
+        batch(sys.argv[2])
     elif len(sys.argv) == 4 and sys.argv[1] == "diff":
         sys.exit(diff(sys.argv[2], sys.argv[3]))
     else:

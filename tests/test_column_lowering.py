@@ -217,22 +217,28 @@ def test_fallback_used_for_genuine_dynamic_ref(spark, typed_df):
     assert got == want
 
 
+# static field names evaluated through a $ref into the root document
+PROPERTY_NAMES_REF = {
+    "$defs": {"n": {"pattern": "^[a-s]+$"}},
+    "type": "object",
+    "propertyNames": {"$ref": "#/$defs/n"},
+}
+
+
 def test_violation_rows_match_oracle(spark, typed_df):
-    schema = SCHEMAS[-1]
-    eng = ConstraintEngine()
-    compiled = eng.compile(schema)
-    out = compiled.apply_typed(typed_df)
     rows = typed_df.collect()
-    spark_viols = out.select("violations").collect()
     ev = Evaluator()
     cols = ["url", "lang", "n", "score", "flag", "tags", "nums"]
-    for r, sv in zip(rows, spark_viols):
-        inst = {c: v for c, v in zip(cols, r) if v is not None}
-        want = sorted(
-            (e.keyword, e.instance_path) for e in ev.validate(schema, inst).errors
-        )
-        got = sorted((v.keyword, v.instance_path) for v in sv.violations)
-        assert got == want, f"row={inst}"
+    for schema in (SCHEMAS[-1], PROPERTY_NAMES_REF):
+        compiled = ConstraintEngine().compile(schema)
+        spark_viols = compiled.apply_typed(typed_df).select("violations").collect()
+        for r, sv in zip(rows, spark_viols):
+            inst = {c: v for c, v in zip(cols, r) if v is not None}
+            want = sorted(
+                (e.keyword, e.instance_path) for e in ev.validate(schema, inst).errors
+            )
+            got = sorted((v.keyword, v.instance_path) for v in sv.violations)
+            assert got == want, f"schema={schema} row={inst}"
 
 
 MAP_SCHEMAS = [

@@ -51,6 +51,23 @@ def test_compiled_keys_on_content_and_registry_version():
     assert engine.compiled(schema) is not fresh
 
 
+def test_batch_programs_key_on_registry_version():
+    """The batch path's per-worker memo sees a keyword registered on the
+    driver after the schema was first compiled."""
+    from jschon_spark.functions import registry
+    from jschon_spark.lowering.batch import _compiled
+
+    schema = {"type": "string", "memoProbe": True}
+    assert _compiled(schema, [], False)[0].valid("x")
+    try:
+        registry.custom_keyword("memoProbe")(lambda value: lambda v: v == "ok")
+        program = _compiled(schema, [], False)[0]
+        assert not program.valid("x") and program.valid("ok")
+    finally:
+        registry.unregister_keyword("memoProbe")
+    assert _compiled(schema, [], False)[0].valid("x")
+
+
 def test_validate_corpus_recompiles_an_edited_page_schema(spark, monkeypatch):
     """An in-place edit of PAGE_SCHEMA changes its content key, so the
     next validate_corpus compiles the edited schema."""

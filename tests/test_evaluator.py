@@ -46,6 +46,14 @@ def test_format_assertion(schema, data, valid):
     assert Evaluator(assert_formats=True).validate(schema, data).valid is valid
 
 
+def test_repeated_validate_registers_the_schema_once():
+    ev = Evaluator()
+    schema = {"properties": {"a": {"$ref": "#/$defs/n"}}, "$defs": {"n": {"minimum": 0}}}
+    for i in range(1000):
+        assert ev.validate(schema, {"a": i - 1}).valid is (i > 0)
+    assert len(ev.catalog._resources) == 1
+
+
 def test_violation_paths():
     out = Evaluator().validate(
         {"properties": {"a": {"items": {"minimum": 3}}}}, {"a": [5, 1]}

@@ -1,6 +1,8 @@
-"""Fastpath differential: the closure-compiled predicate must agree
-with the interpretive evaluator on every fixture case it claims to
-support, and decline (None) on annotation/dynamic keywords."""
+"""Predicate differential: ``compile_valid``, the evaluator's
+predicate mode, must agree with the fixture verdicts and with the full
+walk on every schema, including those reading annotations or the
+dynamic scope (unevaluated*, $dynamicRef, $recursiveRef), custom
+metaschemas and 2019-09 tuple ``items``."""
 
 from __future__ import annotations
 
@@ -11,21 +13,7 @@ import pytest
 from jschon_spark.evaluator import Evaluator
 from jschon_spark.fastpath import compile_valid
 from jschon_spark.schema.catalog import SchemaCatalog
-from tests.keyword_cases import CASES, FORMAT_CASES
-
-
-def _has_custom_meta(schema) -> bool:
-    """Custom (non-json-schema.org) metaschemas can re-wire keyword
-    semantics (format-assertion $vocabulary) — fastpath declines them
-    by design (round 6)."""
-    if isinstance(schema, dict):
-        s = schema.get("$schema")
-        if isinstance(s, str) and not s.startswith("https://json-schema.org/draft"):
-            return True
-        return any(_has_custom_meta(v) for v in schema.values())
-    if isinstance(schema, list):
-        return any(_has_custom_meta(v) for v in schema)
-    return False
+from tests.keyword_cases import CASES, FORMAT_CASES, LEGACY_2019_CASES
 
 
 def _compile(schema, assert_formats=False):
@@ -36,18 +24,12 @@ def _compile(schema, assert_formats=False):
 
 
 @pytest.mark.parametrize(
-    "case", CASES, ids=lambda c: c["description"]
+    "case", CASES + LEGACY_2019_CASES, ids=lambda c: c["description"]
 )
 def test_fastpath_matches_evaluator(case):
     schema = case["schema"]
     fast, ev, base = _compile(schema)
-    if fast is None:
-        assert any(
-            k in str(schema) for k in ("unevaluated", "$dynamicRef", "$recursiveRef")
-        ) or _has_custom_meta(schema), (
-            f"fastpath declined a supported schema: {schema}"
-        )
-        return
+    assert fast is not None
     for data, want in case["tests"]:
         assert fast(data) is want, f"{schema} {data!r}"
 
@@ -60,13 +42,46 @@ def test_fastpath_formats(case):
         assert fast(data) is want
 
 
-def test_fastpath_declines_unevaluated():
-    fast, _, _ = _compile({"unevaluatedProperties": False})
-    assert fast is None
-    fast, _, _ = _compile(
-        {"allOf": [{"properties": {"a": {"unevaluatedItems": False}}}]}
-    )
-    assert fast is None
+FORMERLY_DECLINED = [
+    {"unevaluatedProperties": False},
+    {"allOf": [{"properties": {"a": {"unevaluatedItems": False}}}]},
+    {"properties": {"k0": True}, "anyOf": [{"required": ["k1"]}, {"properties": {"k2": {"type": "string"}}}],
+     "unevaluatedProperties": {"type": "integer"}},
+    {"prefixItems": [{"type": "integer"}], "contains": {"type": "string"}, "unevaluatedItems": False},
+    {"$id": "https://example.test/tree", "$dynamicAnchor": "node",
+     "properties": {"k0": {"$dynamicRef": "#node"}}, "required": ["k0"]},
+    {"$schema": "https://json-schema.org/draft/2019-09/schema", "$recursiveAnchor": True,
+     "properties": {"k0": {"$recursiveRef": "#"}}, "maxProperties": 2},
+    {"$schema": "https://json-schema.org/draft/2019-09/schema",
+     "items": [{"type": "integer"}, {"type": "string"}], "additionalItems": False,
+     "unevaluatedItems": False},
+    {"$schema": "https://example.test/custom-meta", "type": "string", "format": "date"},
+    # $ref resolves on first visit: a dangling one in a branch no
+    # instance enters fails neither the compile nor the predicate
+    {"if": False, "then": {"$ref": "https://nowhere.invalid/x"}},
+]
+
+
+def test_fastpath_compiles_formerly_declined_schemas():
+    """Schemas reading annotations or the dynamic scope, custom
+    metaschemas and 2019-09 tuple items get a predicate too, and it
+    agrees with the full walk on random instances."""
+    rng = random.Random(11)
+    for schema in FORMERLY_DECLINED:
+        fast, ev, base = _compile(schema)
+        assert fast is not None
+        for _ in range(200):
+            v = _rand_val(rng)
+            assert fast(v) is ev.validate(schema, v).valid, f"{schema} {v!r}"
+
+
+def test_batch_route_with_a_dangling_ref_in_an_unentered_branch(spark):
+    from jschon_spark.engine import ConstraintEngine
+
+    schema = {"if": False, "then": {"$ref": "https://nowhere.invalid/x"}}
+    df = spark.createDataFrame([('{"a": 1}',), ("[]",)], "doc string")
+    out = ConstraintEngine().compile(schema).apply_json(df, "doc", prefer_variant=False)
+    assert [r.passed for r in out.orderBy("doc").collect()] == [True, True]
 
 
 def test_fastpath_recursive_ref():
@@ -90,26 +105,24 @@ def test_fastpath_recursive_ref():
     assert fast(bad) is False
 
 
+def _rand_val(rng, depth=0):
+    choices = [None, True, False, rng.randint(-5, 5), rng.random() * 10,
+               "", "abc", "zz9"]
+    if depth < 2:
+        choices += [
+            [_rand_val(rng, depth + 1) for _ in range(rng.randint(0, 3))],
+            {f"k{rng.randint(0,3)}": _rand_val(rng, depth + 1) for _ in range(rng.randint(0, 3))},
+        ]
+    return rng.choice(choices)
+
+
 def test_fastpath_fuzz_against_evaluator():
     rng = random.Random(7)
-
-    def rand_val(depth=0):
-        choices = [None, True, False, rng.randint(-5, 5), rng.random() * 10,
-                   "", "abc", "zz9"]
-        if depth < 2:
-            choices += [
-                [rand_val(depth + 1) for _ in range(rng.randint(0, 3))],
-                {f"k{rng.randint(0,3)}": rand_val(depth + 1) for _ in range(rng.randint(0, 3))},
-            ]
-        return rng.choice(choices)
-
     schemas = [c["schema"] for c in CASES]
     for schema in schemas:
         fast, ev, base = _compile(schema)
-        if fast is None:
-            continue
         for _ in range(30):
-            v = rand_val()
+            v = _rand_val(rng)
             want = ev.validate(schema, v).valid
             assert fast(v) is want, f"{schema} {v!r}"
 
@@ -178,6 +191,4 @@ def test_fastpath_random_schema_differential(schema, instance):
     """Two independent implementations — the closure compiler and the
     interpretive evaluator — must agree on every (schema, instance)."""
     fast, ev, base = _compile(schema if isinstance(schema, dict) else schema)
-    if fast is None:
-        return
     assert fast(instance) is ev.validate(schema, instance).valid
