@@ -1,8 +1,10 @@
 """Benchmark harness — headline queries + the corpus validation pass.
 
-Prints ONE JSON line:
-  {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {...}, "sf": ..., "docs_per_sec": ...}
+Its final line is one compact JSON object:
+  {"metric": "...", "value": <total sec>, "unit": "sec", "sf": ...,
+   "docs_per_sec": ..., "queries_v": 2, "queries": [<sec>, ...], ...}
+where ``queries`` lists the per-query seconds in the order the full
+artifact (BENCH_local_latest.json) records as ``compact_queries_order``.
 
 Env:
   SPARK_GRAFT_SF_DIR  input dir (default /root/testdata/sf0.1)
@@ -180,7 +182,10 @@ def main() -> None:
     # file, print it first (complete in full logs, harmlessly truncated
     # in the tail), and make the FINAL line a compact <2000-byte object
     # carrying the headline plus the per-query steady numbers (the
-    # round-over-round comparable placement).
+    # round-over-round comparable placement) as one array, in the order
+    # the full artifact records: the names alone took ~1400 bytes.
+    order = [*steady, "corpus_full_pass"]
+    full["compact_queries_order"] = order
     full_path = os.environ.get(
         "BENCH_FULL_PATH",
         os.path.join(os.path.dirname(os.path.abspath(__file__)),
@@ -204,16 +209,15 @@ def main() -> None:
         "docs_per_sec": full["docs_per_sec"],
         "corpus_rows": n_pages,
         "cpus": cpus,
-        "queries": {
-            **{k: round(v, 2) for k, v in steady.items()},
-            "corpus_full_pass": timings["corpus_full_pass"],
-        },
+        "queries_v": 2,
+        "queries": [round(steady[k], 2) for k in order[:-1]]
+        + [timings["corpus_full_pass"]],
         "full_artifact": os.path.basename(full_path),
     }
     line = json.dumps(compact, separators=(",", ":"))
-    if len(line) > 1900:  # hard tail-capture guard: drop per-query dict
-        compact["queries"] = {"corpus_full_pass": steady.get(
-            "corpus_full_pass", timings["corpus_full_pass"])}
+    if len(line) > 1900:  # hard tail-capture guard: corpus pass only
+        del compact["queries"]
+        compact["corpus_full_pass"] = timings["corpus_full_pass"]
         line = json.dumps(compact, separators=(",", ":"))
     sys.stdout.flush()
     print(line)

@@ -15,6 +15,9 @@ the full walk (``Program.outcome``) that yields the Outcome. A node
 holding unevaluated* walks in full for the predicate too, as it reads
 its siblings' annotations. It runs once per document inside a
 vectorized Arrow batch (lowering/batch.py) and as the pytest oracle.
+``format`` asserts through ``Extensions.format_entry``, the lookup the
+Column lowerings make too: built-in formats are rows of one table
+(jschon_spark/formats.py) that registered formats override.
 
 Semantics cross-checked against the reference:
   * type tags: bool before int, number covers int|float
@@ -35,14 +38,13 @@ Semantics cross-checked against the reference:
 
 from __future__ import annotations
 
-import ipaddress
 import operator
 import re
 from dataclasses import dataclass, field
 from decimal import Decimal, InvalidOperation
 from typing import Any, Callable
 
-from jschon_spark.functions.registry import FORMAT_REGISTRY, KEYWORD_REGISTRY
+from jschon_spark.functions import registry
 from jschon_spark.schema.catalog import (
     SchemaCatalog,
     pointer_escape,
@@ -133,321 +135,6 @@ def is_multiple_of(value: Any, divisor: Any) -> bool:
         from fractions import Fraction
 
         return Fraction(_dec(value)) % Fraction(_dec(divisor)) == 0
-
-
-# --------------------------------------------------------------------------
-# format registry (assertion optional, annotation-only by default —
-# /root/reference/jschon/vocabulary/format.py:14-32)
-# --------------------------------------------------------------------------
-
-def _fmt_json_pointer(v: str) -> bool:
-    # RFC 6901: empty, or '/'-led tokens with '~' only as ~0/~1
-    return re.fullmatch(r"(/([^~/]|~[01])*)*", v) is not None
-
-
-def _fmt_ipv4(v: str) -> bool:
-    try:
-        ipaddress.IPv4Address(v)
-        return True
-    except ValueError:
-        return False
-
-
-def _fmt_ipv6(v: str) -> bool:
-    # RFC 4291 textual form has no zone-ID suffix; Python's
-    # IPv6Address accepts "%zone" since 3.9, so gate it out explicitly
-    if "%" in v:
-        return False
-    try:
-        ipaddress.IPv6Address(v)
-        return True
-    except ValueError:
-        return False
-
-
-# ASCII-pinned ([0-9], not \d): Python \d is unicode-wide (and int()
-# parses Arabic-Indic digits), but RFC 3339's DIGIT is ASCII and the
-# typed path's Java \d is ASCII — [0-9] makes all three read the same.
-_DATE_RE = re.compile(r"^[0-9]{4}-[0-9]{2}-[0-9]{2}$")
-# RFC 3339 ranges (round 5): hour 00-23, minute 00-59, second 00-60
-# (60 = leap second, accepted at any offset — the pragmatic RFC
-# grammar; strictly it only occurs at 23:59:60 UTC), offset hour/min
-# range-checked too. Keep in sync with _FORMAT_REGEX in lowering/columns.py.
-_TIME_RE = re.compile(
-    r"^([01][0-9]|2[0-3]):[0-5][0-9]:([0-5][0-9]|60)(\.[0-9]+)?"
-    r"([Zz]|[+-]([01][0-9]|2[0-3]):[0-5][0-9])$"
-)
-_DATETIME_RE = re.compile(
-    r"^[0-9]{4}-[0-9]{2}-[0-9]{2}[Tt]([01][0-9]|2[0-3]):[0-5][0-9]:"
-    r"([0-5][0-9]|60)(\.[0-9]+)?([Zz]|[+-]([01][0-9]|2[0-3]):[0-5][0-9])$"
-)
-_UUID_RE = re.compile(
-    r"^[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$"
-)
-
-_MDAYS = (31, 28, 31, 30, 31, 30, 31, 31, 30, 31, 30, 31)
-
-
-def _valid_ymd(v10: str) -> bool:
-    """Calendar validity of a 'YYYY-MM-DD' prefix. RFC 3339 allows
-    years 0000-9999 (proleptic Gregorian — year 0 IS a leap year), so
-    this is hand-rolled rather than date.fromisoformat (which rejects
-    year 0); matches Spark's try_to_timestamp on the Column side."""
-    y, m, d = int(v10[0:4]), int(v10[5:7]), int(v10[8:10])
-    if not 1 <= m <= 12:
-        return False
-    days = _MDAYS[m - 1]
-    if m == 2 and y % 4 == 0 and (y % 100 != 0 or y % 400 == 0):
-        days = 29
-    return 1 <= d <= days
-
-
-def _fmt_date(v: str) -> bool:
-    return bool(_DATE_RE.match(v)) and _valid_ymd(v)
-
-
-def _fmt_datetime(v: str) -> bool:
-    return bool(_DATETIME_RE.match(v)) and _valid_ymd(v[:10])
-
-
-FORMAT_VALIDATORS: dict[str, tuple[Callable[[Any], bool], tuple[str, ...]]] = {
-    # name -> (validator, instance types it applies to)
-    "json-pointer": (_fmt_json_pointer, ("string",)),
-    "ipv4": (_fmt_ipv4, ("string",)),
-    "ipv6": (_fmt_ipv6, ("string",)),
-    "date": (_fmt_date, ("string",)),
-    "time": (lambda v: bool(_TIME_RE.match(v)), ("string",)),
-    "date-time": (_fmt_datetime, ("string",)),
-    "uuid": (lambda v: bool(_UUID_RE.match(v)), ("string",)),
-    "regex": (lambda v: _is_regex(v), ("string",)),
-    # RFC 3986: a scheme, then only unreserved / reserved / %-encoded
-    # characters (a raw space or bracket-free '%' is invalid)
-    "uri": (
-        lambda v: bool(
-            re.match(r"^[A-Za-z][A-Za-z0-9+.-]*:", v)
-            and re.fullmatch(
-                r"(?:%[0-9A-Fa-f]{2}|[A-Za-z0-9\-._~:/?#\[\]@!$&'()*+,;=])*", v
-            )
-        ),
-        ("string",),
-    ),
-    # round 2: pragmatic forms of the remaining common 2020-12 formats
-    # (the reference ships only json-pointer, formats.py:5-9; the rest
-    # of this registry is engine surface beyond parity)
-    "hostname": (lambda v: bool(_HOSTNAME_RE.match(v)), ("string",)),
-    "email": (lambda v: bool(_EMAIL_RE.match(v)), ("string",)),
-    "duration": (lambda v: bool(_DURATION_RE.match(v)), ("string",)),
-    "relative-json-pointer": (lambda v: bool(_REL_PTR_RE.match(v)), ("string",)),
-    # round 5: the remaining 2020-12 format-vocabulary names, pragmatic
-    # RFC 3986/3987/6570/5890 forms — the regex SOURCE STRINGS are
-    # shared verbatim with lowering/columns.py's _FORMAT_REGEX (they
-    # avoid \s and \w, whose unicode semantics differ between Python
-    # re and Java), so both paths compile the identical pattern;
-    # idn-hostname is per-label Python logic with a \p{L}\p{N} Java
-    # twin (agreement pinned by the conformance corpus's literal
-    # expectations)
-    "uri-reference": (lambda v: bool(re.fullmatch(URI_REFERENCE_PATTERN, v)), ("string",)),
-    "iri": (lambda v: bool(re.fullmatch(IRI_PATTERN, v)), ("string",)),
-    "iri-reference": (lambda v: bool(re.fullmatch(IRI_REFERENCE_PATTERN, v)), ("string",)),
-    "uri-template": (lambda v: bool(re.fullmatch(URI_TEMPLATE_PATTERN, v)), ("string",)),
-    "idn-email": (lambda v: bool(re.fullmatch(IDN_EMAIL_PATTERN, v)), ("string",)),
-    "idn-hostname": (lambda v: _fmt_idn_hostname(v), ("string",)),
-}
-
-# RFC 3986 pchar-superset (any URI component character or %-escape)
-_URI_CHAR = r"(?:%[0-9A-Fa-f]{2}|[A-Za-z0-9\-._~:/?#\[\]@!$&'()*+,;=])"
-# RFC 3987 adds ucschar (>= U+00A0); pragmatically: any non-ASCII
-_IRI_CHAR = r"(?:%[0-9A-Fa-f]{2}|[A-Za-z0-9\-._~:/?#\[\]@!$&'()*+,;=]|[^\x00-\x7F])"
-URI_REFERENCE_PATTERN = rf"{_URI_CHAR}*"
-IRI_PATTERN = rf"(?=[A-Za-z][A-Za-z0-9+.-]*:){_IRI_CHAR}*"
-IRI_REFERENCE_PATTERN = rf"{_IRI_CHAR}*"
-# RFC 6570: literals (no braces/controls/space) and {op? varspec,+}
-_TPL_VAR = r"(?:[A-Za-z0-9_]|%[0-9A-Fa-f]{2})(?:\.?(?:[A-Za-z0-9_]|%[0-9A-Fa-f]{2}))*"
-_TPL_SPEC = rf"{_TPL_VAR}(?:\*|:[1-9][0-9]{{0,3}})?"
-URI_TEMPLATE_PATTERN = (
-    rf"(?:[^{{}}\x00-\x20\x7F]|\{{[+#./;?&=,!@|]?{_TPL_SPEC}(?:,{_TPL_SPEC})*\}})*"
-)
-# controls/space/DEL excluded explicitly (NOT \s: Java \s is
-# ASCII-only, Python's is unicode — U+00A0 must be LEGAL both sides)
-IDN_EMAIL_PATTERN = (
-    r"[^@\x00-\x20\x7F]+@[^@\x00-\x20\x7F]+\.[^@\x00-\x20\x7F]+"
-)
-
-
-_IDN_LETTER_CATS = ("Ll", "Lu", "Lo", "Lm", "Lt")
-_IDN_MARK_CATS = ("Mn", "Mc", "Me")
-
-
-def _idn_name_is(ch: str, *prefixes: str) -> bool:
-    import unicodedata as _ud
-
-    name = _ud.name(ch, "")
-    return name.startswith(prefixes)
-
-
-def _idn_valid_ulabel(lab: str, bidi_domain: bool) -> bool:
-    """One decoded U-label (or plain LDH label) against RFC 5891
-    §4.2.3 placement rules, the RFC 5892 CONTEXTJ/CONTEXTO rules, NFC
-    stability, and (when the whole name is a Bidi domain) the RFC
-    5893 Bidi rule."""
-    import unicodedata as _ud
-
-    if not lab or len(lab) > 63:
-        return False
-    if lab[0] == "-" or lab[-1] == "-":
-        return False
-    # RFC 5891 4.2.3.1: hyphens in positions 3+4 are reserved for the
-    # ACE prefix; any label still carrying them here is not a valid
-    # A-label (those were decoded before this check) -> reject
-    if len(lab) >= 4 and lab[2] == "-" and lab[3] == "-":
-        return False
-    if _ud.category(lab[0]) in _IDN_MARK_CATS:  # RFC 5891 4.2.3.2
-        return False
-    if _ud.normalize("NFC", lab) != lab:  # U-labels must be NFC
-        return False
-    for i, ch in enumerate(lab):
-        if ch == "-":
-            continue
-        o = ord(ch)
-        if o < 128:
-            if not (ch.isalpha() or ch.isdigit()):
-                return False
-            continue
-        if o == 0x200C:  # ZWNJ (CONTEXTJ): only after a virama
-            if i == 0 or _ud.combining(lab[i - 1]) != 9:
-                return False
-            continue
-        if o == 0x200D:  # ZWJ (CONTEXTJ): only after a virama
-            if i == 0 or _ud.combining(lab[i - 1]) != 9:
-                return False
-            continue
-        if o == 0x00B7:  # MIDDLE DOT (CONTEXTO): between two 'l'
-            if (i == 0 or i == len(lab) - 1
-                    or lab[i - 1] != "l" or lab[i + 1] != "l"):
-                return False
-            continue
-        if o == 0x0375:  # GREEK KERAIA (CONTEXTO): before Greek
-            if i == len(lab) - 1 or not _idn_name_is(lab[i + 1], "GREEK"):
-                return False
-            continue
-        if o in (0x05F3, 0x05F4):  # GERESH/GERSHAYIM: after Hebrew
-            if i == 0 or not _idn_name_is(lab[i - 1], "HEBREW"):
-                return False
-            continue
-        if o == 0x30FB:  # KATAKANA MIDDLE DOT: label needs Japanese
-            # the dot itself is named KATAKANA* but its script is
-            # Common — it must not satisfy its own requirement
-            if not any(
-                ord(c2) != 0x30FB
-                and _idn_name_is(c2, "HIRAGANA", "KATAKANA", "CJK")
-                for c2 in lab
-            ):
-                return False
-            continue
-        cat = _ud.category(ch)
-        if cat not in _IDN_LETTER_CATS + _IDN_MARK_CATS and cat != "Nd":
-            return False
-    # CONTEXTO: ARABIC-INDIC and EXTENDED ARABIC-INDIC digits must not
-    # mix within a label
-    if any(0x0660 <= ord(c) <= 0x0669 for c in lab) and any(
-        0x06F0 <= ord(c) <= 0x06F9 for c in lab
-    ):
-        return False
-    if bidi_domain:
-        d0 = _ud.bidirectional(lab[0])
-        if d0 in ("R", "AL"):
-            rtl = True
-        elif d0 == "L":
-            rtl = False
-        else:
-            return False  # Bidi rule 1
-        allowed = (
-            {"R", "AL", "AN", "EN", "ES", "CS", "ET", "ON", "BN", "NSM"}
-            if rtl
-            else {"L", "EN", "ES", "CS", "ET", "ON", "BN", "NSM"}
-        )
-        if any(_ud.bidirectional(c) not in allowed for c in lab):
-            return False  # Bidi rules 2 and 5
-        j = len(lab) - 1
-        while j >= 0 and _ud.bidirectional(lab[j]) == "NSM":
-            j -= 1
-        last = _ud.bidirectional(lab[j])
-        if rtl and last not in ("R", "AL", "EN", "AN"):
-            return False  # Bidi rule 3
-        if not rtl and last not in ("L", "EN"):
-            return False  # Bidi rule 6
-        if rtl and any(_ud.bidirectional(c) == "EN" for c in lab) and any(
-            _ud.bidirectional(c) == "AN" for c in lab
-        ):
-            return False  # Bidi rule 4
-    return True
-
-
-def _fmt_idn_hostname(v: str) -> bool:
-    """RFC 5890/5891 internationalized hostname (round 6 — upgraded
-    from the per-label letter/digit heuristic): per-label U-label
-    validation with the RFC 5892 CONTEXTJ/CONTEXTO rules (ZWNJ/ZWJ
-    only after a virama, l·l MIDDLE DOT, Greek keraia, Hebrew
-    geresh/gershayim, katakana middle dot, no Arabic digit-set
-    mixing), NFC stability, no leading combining mark, RFC 5891
-    hyphen placement, and the RFC 5893 Bidi rule applied across the
-    whole name when any label is right-to-left. ``xn--`` A-labels are
-    punycode-decoded (RFC 3492) and the DECODED U-label is validated.
-
-    Documented pragmatic residue: the RFC 5892 derived-property
-    tables are not vendored, so Appendix B exception code points and
-    case/NFKC-unstable characters (e.g. uppercase non-ASCII letters)
-    are accepted where strict IDNA2008 would reject.
-
-    This format has NO Column lowering (the contextual/bidi rules are
-    beyond Java regex) — typed/variant paths route schemas using it
-    to the batch evaluator."""
-    if not v or len(v) > 253:
-        return False
-    labels = []
-    for lab in v.split("."):
-        if not lab or len(lab) > 63:
-            return False
-        low = lab.lower() if lab.isascii() else lab
-        if low.startswith("xn--") and lab.isascii():
-            try:
-                decoded = low[4:].encode("ascii").decode("punycode")
-            except UnicodeError:
-                return False
-            if not decoded or decoded.isascii():
-                return False  # A-label must encode actual unicode
-            labels.append(decoded)
-        else:
-            labels.append(lab)
-    import unicodedata as _ud
-
-    bidi_domain = any(
-        _ud.bidirectional(c) in ("R", "AL", "AN")
-        for lab in labels
-        for c in lab
-    )
-    return all(_idn_valid_ulabel(lab, bidi_domain) for lab in labels)
-
-_HOSTNAME_RE = re.compile(
-    r"^(?=.{1,253}$)([A-Za-z0-9]([A-Za-z0-9-]{0,61}[A-Za-z0-9])?\.)*"
-    r"[A-Za-z0-9]([A-Za-z0-9-]{0,61}[A-Za-z0-9])?$"
-)
-# explicit ASCII whitespace (= Java \s), not Python's unicode-wide \s,
-# so typed and batch read the same character set
-_EMAIL_RE = re.compile(r"^[^@ \t\n\x0B\f\r]+@[^@ \t\n\x0B\f\r]+\.[^@ \t\n\x0B\f\r]+$")
-_DURATION_RE = re.compile(
-    r"^P(?!$)([0-9]+Y)?([0-9]+M)?([0-9]+W)?([0-9]+D)?"
-    r"(T(?=[0-9])([0-9]+H)?([0-9]+M)?([0-9]+(\.[0-9]+)?S)?)?$"
-)
-_REL_PTR_RE = re.compile(r"^(0|[1-9][0-9]*)(#|(/([^~/]|~[01])*)*)$")
-
-
-def _is_regex(v: str) -> bool:
-    try:
-        re.compile(v)
-        return True
-    except re.error:
-        return False
 
 
 # --------------------------------------------------------------------------
@@ -728,12 +415,14 @@ def _dependent_required(schema, cx):
 
 
 def _format(schema, cx):
+    # annotation only unless asserted (jschon's vocabulary/format.py:14-32)
     ev = cx.program.evaluator
     if not (ev.assert_formats or cx.fmt_assert):
         return None
-    entry = ev.formats.get(schema["format"])
+    entry = ev.extensions.format_entry(schema["format"])
     return None if entry is None else _check(
-        "format", _applies, entry, f"not a valid {schema['format']}")
+        "format", _applies, (entry.python_fn, entry.instance_types),
+        f"not a valid {schema['format']}")
 
 
 def _tuple_form(schema, cx) -> bool:
@@ -1005,16 +694,16 @@ _TABLE = {kw: (i, types, build) for i, (kw, types, build) in enumerate(_KEYWORDS
 _CUSTOM_AT = _TABLE["unevaluatedItems"][0]
 
 
-def _rows(schema: dict) -> list:
+def _rows(schema: dict, keywords: dict) -> list:
     """The table rows ``schema`` uses, in order, with the registered
-    custom keywords (functions/registry.py) in their place."""
+    custom ``keywords`` (functions/registry.py) in their place."""
     rows = [_TABLE[k] for k in schema if k in _TABLE]
     rows.sort()
-    if KEYWORD_REGISTRY:
+    if keywords:
         custom = [
             (None, None, lambda s, cx, name=name, entry=entry: _check(
                 name, _applies, (entry.python_fn(s[name]), entry.instance_types), entry.error))
-            for name, entry in KEYWORD_REGISTRY.items()
+            for name, entry in keywords.items()
             if name in schema
         ]
         at = sum(1 for r in rows if r[0] < _CUSTOM_AT)
@@ -1121,7 +810,7 @@ class Program:
         cx = _Node(self, base, dialect, fmt_assert)
 
         found = []
-        for _, types, build in _rows(schema):
+        for _, types, build in _rows(schema, self.evaluator.extensions.keywords):
             check = build(schema, cx)
             if check is not None:
                 found.append((types, check))
@@ -1155,23 +844,21 @@ class Program:
 
 
 class Evaluator:
-    """Evaluate instances against schemas registered in a SchemaCatalog."""
+    """Evaluate instances against schemas registered in a SchemaCatalog.
+
+    Registered formats and keywords (functions/registry.py, jschon's
+    format_validator plugin surface) come from ``extensions``: the live
+    registries by default, or the snapshot a batch worker was shipped."""
 
     def __init__(
         self,
         catalog: SchemaCatalog | None = None,
         assert_formats: bool = False,
-        format_validators: dict | None = None,
+        extensions: registry.Extensions | None = None,
     ) -> None:
         self.catalog = catalog or SchemaCatalog()
         self.assert_formats = assert_formats
-        self.formats = dict(FORMAT_VALIDATORS)
-        # user-registered formats (functions/registry.py) join the
-        # built-ins, mirroring jschon's format_validator plugin surface
-        for name, entry in FORMAT_REGISTRY.items():
-            self.formats[name] = (entry.python_fn, entry.instance_types)
-        if format_validators:
-            self.formats.update(format_validators)
+        self.extensions = registry.LIVE if extensions is None else extensions
         # $schema URI -> does its (catalog-resolvable) metaschema
         # declare the format-assertion vocabulary? (round 6)
         self._fmt_assert_cache: dict[str, bool] = {}

@@ -21,8 +21,7 @@ def compile_valid(
     catalog: SchemaCatalog,
     base_uri: str,
     assert_formats: bool = False,
-    formats: dict | None = None,
 ) -> Callable[[Any], bool]:
     """``instance -> bool`` for ``schema`` registered in ``catalog`` at
-    ``base_uri``; ``formats`` adds to the evaluator's format validators."""
-    return Evaluator(catalog, assert_formats, formats).compile(schema, base_uri).valid
+    ``base_uri``."""
+    return Evaluator(catalog, assert_formats).compile(schema, base_uri).valid

@@ -5,15 +5,26 @@ A registered format supplies:
   * ``column_fn(col) -> Column``   — optional; enables the fast path
     (absence forces CannotLower → batch fallback for schemas using it)
 
+The built-in formats are rows of the same type (jschon_spark/formats.py).
+``format_entry(name)`` is the one lookup every route makes: a
+registered format overrides the built-in of that name on the typed,
+variant and batch routes alike. A format whose ``instance_types`` are
+not ``("string",)`` runs on the batch evaluator.
+
 A registered keyword supplies the same pair, receiving the keyword's
 schema value: ``python_fn(kw_value) -> (instance) -> bool`` and
 ``column_fn(kw_value, col, dtype) -> Column``.
+
+Python workers never see this process's registries: the batch route
+ships ``snapshot(schema, ...)`` — the entries the schema can use, taken
+when its UDF is built — in the UDF closure, and the worker's Evaluator
+reads that instead.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Any, Callable
+from typing import Any, Callable, Mapping
 
 from pyspark.sql import Column
 
@@ -36,6 +47,54 @@ class KeywordEntry:
 FORMAT_REGISTRY: dict[str, FormatEntry] = {}
 KEYWORD_REGISTRY: dict[str, KeywordEntry] = {}
 VERSION = 0  # bumped by every mutator below; part of engine.compiled's key
+
+
+@dataclass(frozen=True)
+class Extensions:
+    """The registered formats and keywords an Evaluator reads: the live
+    registries (``LIVE``) or a ``snapshot``. ``key`` identifies a
+    snapshot's content in the batch worker's memo."""
+
+    formats: Mapping[str, FormatEntry]
+    keywords: Mapping[str, KeywordEntry]
+    key: tuple = ()
+
+    def format_entry(self, name: Any) -> FormatEntry | None:
+        """What ``format: name`` asserts: the registered entry, else the
+        built-in row, else None (an unknown format only annotates)."""
+        entry = self.formats.get(name)
+        if entry is None:
+            from jschon_spark.formats import BUILTIN_FORMATS
+
+            entry = BUILTIN_FORMATS.get(name)
+        return entry
+
+
+LIVE = Extensions(FORMAT_REGISTRY, KEYWORD_REGISTRY)
+
+
+def format_entry(name: Any) -> FormatEntry | None:
+    return LIVE.format_entry(name)
+
+
+def snapshot(*docs: Any) -> Extensions:
+    """The registered entries whose names occur in ``docs`` (as a key or
+    a string anywhere in them), copied now."""
+    names: set = set()
+    todo = list(docs)
+    while todo:
+        doc = todo.pop()
+        if isinstance(doc, dict):
+            names.update(doc)
+            todo.extend(doc.values())
+        elif isinstance(doc, list):
+            todo.extend(doc)
+        elif isinstance(doc, str):
+            names.add(doc)
+    formats = {n: e for n, e in FORMAT_REGISTRY.items() if n in names}
+    keywords = {n: e for n, e in KEYWORD_REGISTRY.items() if n in names}
+    key = (VERSION, tuple(formats), tuple(keywords)) if formats or keywords else ()
+    return Extensions(formats, keywords, key)
 
 
 def _bump() -> None:

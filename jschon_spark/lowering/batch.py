@@ -47,12 +47,15 @@ def make_batch_validator(
     executor, not per row.
     """
     store = schema_store or []
+    # the worker's registries are empty: the registered formats and
+    # keywords the schema can use travel in the closure
+    extensions = registry.snapshot(schema, store)
 
     @F.pandas_udf(RESULT_TYPE)
     def validate_batch(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         # iterator form: the program is built ONCE per task (and
         # memoized per Python worker via _compiled), not per Arrow batch
-        program, parse = _compiled(schema, store, assert_formats)
+        program, parse = _compiled(schema, store, assert_formats, extensions)
 
         for docs in it:
             passed = []
@@ -96,20 +99,24 @@ def make_batch_validator(
     return validate_batch.asNondeterministic()
 
 
-def _compiled(schema: Any, store: list, assert_formats: bool) -> tuple:
+def _compiled(schema: Any, store: list, assert_formats: bool,
+              extensions: registry.Extensions | None = None) -> tuple:
     """Per-worker memo of (program, strict_parser) keyed by schema
-    content and the registry version — repeated tasks over the same
-    schema reuse the compiled program, and a format or keyword
-    registered since compiles anew."""
+    content and the registry snapshot (shipped, or else taken here) —
+    repeated tasks over the same schema reuse the compiled program, and
+    a format or keyword registered since compiles anew."""
+    if extensions is None:
+        extensions = registry.snapshot(schema, store)
     key = json.dumps(
         {"s": schema, "x": store, "f": assert_formats},
         sort_keys=True, default=str,
     )
-    return memo(("batch", key, registry.VERSION),
-                lambda: _compile(schema, store, assert_formats))
+    return memo(("batch", key, extensions.key),
+                lambda: _compile(schema, store, assert_formats, extensions))
 
 
-def _compile(schema: Any, store: list, assert_formats: bool) -> tuple:
+def _compile(schema: Any, store: list, assert_formats: bool,
+             extensions: registry.Extensions) -> tuple:
     from jschon_spark.evaluator import Evaluator
     from jschon_spark.schema.catalog import SchemaCatalog, parse_json_strict
 
@@ -119,7 +126,7 @@ def _compile(schema: Any, store: list, assert_formats: bool) -> tuple:
     base = catalog.register(schema)
     # program.valid, the predicate, runs on every document; the full
     # walk (violation extraction) only on the ones it rejects
-    program = Evaluator(catalog, assert_formats=assert_formats).compile(schema, base)
+    program = Evaluator(catalog, assert_formats, extensions).compile(schema, base)
     return program, parse_json_strict
 
 

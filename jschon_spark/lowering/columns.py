@@ -31,13 +31,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from jschon_spark.evaluator import (
-    IDN_EMAIL_PATTERN,
-    IRI_PATTERN,
-    IRI_REFERENCE_PATTERN,
-    URI_REFERENCE_PATTERN,
-    URI_TEMPLATE_PATTERN,
-)
 from jschon_spark.lowering.keywords import (  # noqa: F401 - re-exported
     VIOLATION_DDL,
     VIOLATION_TYPE,
@@ -46,7 +39,6 @@ from jschon_spark.lowering.keywords import (  # noqa: F401 - re-exported
     _EMPTY_ARR,
     _check,
     dec18_exact,
-    rlike,
 )
 
 
@@ -218,32 +210,11 @@ class TypedNode:
         return op(self.col, F.lit(bound))
 
     # -- strings -------------------------------------------------------------------
-    def format_check(self, fmt: str, ipath: Column, kpath: str):
-        scol = self.string
-        pred = format_pred(
-            fmt, scol,
-            trusted_calendar=isinstance(self.dtype, (T.TimestampType, T.DateType)),
-        )
-        if pred is not None:
-            fv, fw = _check(pred, "format", ipath, kpath, scol, f"not a valid {fmt}")
-        else:
-            from jschon_spark.evaluator import FORMAT_VALIDATORS
-            from jschon_spark.functions.registry import FORMAT_REGISTRY
-
-            entry = FORMAT_REGISTRY.get(fmt)
-            if entry is not None:
-                if entry.column_fn is None:
-                    raise CannotLower(f"format {fmt!r} has no Column lowering -> batch")
-                fv, fw = _check(entry.column_fn(scol), "format", ipath, kpath, scol,
-                                f"not a valid {fmt}")
-            elif fmt in FORMAT_VALIDATORS:
-                # built-in python validator without a Column form -> batch
-                raise CannotLower(f"format {fmt!r} needs the batch evaluator")
-            else:
-                # unknown format: annotation only, never asserts
-                # (reference behavior, format.py:14-32)
-                fv, fw = F.lit(True), _EMPTY_ARR()
-        return self.guard("string", fv), F.when(self.col.isNull(), _EMPTY_ARR()).otherwise(fw)
+    def check_string(self, pred: Column, keyword: str, ipath: Column, kpath: str,
+                     error: str):
+        """(valid, violations) of a string assertion; JSON null passes."""
+        ok, viol = _check(pred, keyword, ipath, kpath, self.string, error)
+        return self.guard("string", ok), F.when(self.col.isNull(), _EMPTY_ARR()).otherwise(viol)
 
     # -- arrays --------------------------------------------------------------------
     @cached_property
@@ -340,73 +311,3 @@ class ColumnLowerer(KeywordWalker):
     ) -> tuple[Column, Column]:
         return self.walk(schema, TypedNode(col, dtype), base_uri,
                          F.lit("") if ipath is None else ipath, kpath)
-
-
-_FORMAT_REGEX = {
-    # RFC 3339 ranges (round 5) — sync with evaluator._TIME_RE /
-    # _DATETIME_RE; date/date-time additionally get a calendar
-    # conjunct in format_pred
-    # [0-9] not \d everywhere below: Java \d is ASCII but the batch
-    # evaluator's Python \d is unicode-wide — [0-9] is the one
-    # spelling both engines read identically (RFC grammars are
-    # ASCII DIGIT anyway); same for the email \s -> explicit set
-    "date-time": (
-        r"^[0-9]{4}-[0-9]{2}-[0-9]{2}[Tt]([01][0-9]|2[0-3]):[0-5][0-9]:"
-        r"([0-5][0-9]|60)(\.[0-9]+)?([Zz]|[+-]([01][0-9]|2[0-3]):[0-5][0-9])$"
-    ),
-    "date": r"^[0-9]{4}-[0-9]{2}-[0-9]{2}$",
-    "time": (
-        r"^([01][0-9]|2[0-3]):[0-5][0-9]:([0-5][0-9]|60)(\.[0-9]+)?"
-        r"([Zz]|[+-]([01][0-9]|2[0-3]):[0-5][0-9])$"
-    ),
-    "uuid": r"^[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$",
-    "ipv4": r"^((25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])\.){3}(25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])$",
-    # scheme lookahead + RFC 3986 character set (sync with the
-    # evaluator's "uri" entry — raw spaces / bare % are invalid)
-    "uri": (
-        r"^(?=[A-Za-z][A-Za-z0-9+.-]*:)"
-        r"(%[0-9A-Fa-f]{2}|[A-Za-z0-9\-._~:/?#\[\]@!$&'()*+,;=])*$"
-    ),
-    # lookaheads below are Java- and Python-compatible
-    "hostname": (
-        r"^(?=.{1,253}$)([A-Za-z0-9]([A-Za-z0-9-]{0,61}[A-Za-z0-9])?\.)*"
-        r"[A-Za-z0-9]([A-Za-z0-9-]{0,61}[A-Za-z0-9])?$"
-    ),
-    "email": r"^[^@ \t\n\x0B\f\r]+@[^@ \t\n\x0B\f\r]+\.[^@ \t\n\x0B\f\r]+$",
-    "duration": r"^P(?!$)([0-9]+Y)?([0-9]+M)?([0-9]+W)?([0-9]+D)?(T(?=[0-9])([0-9]+H)?([0-9]+M)?([0-9]+(\.[0-9]+)?S)?)?$",
-    "relative-json-pointer": r"^(0|[1-9][0-9]*)(#|(/([^~/]|~[01])*)*)$",
-    # round 5: remaining 2020-12 vocabulary names — the SAME source
-    # strings the evaluator compiles (evaluator.py defines them
-    # avoiding \s/\w so Java and Python read them identically).
-    # idn-hostname deliberately has NO Column form since round 6:
-    # the RFC 5892 contextual rules and RFC 5893 Bidi rule are
-    # beyond Java regex (no combining-class or bidi-category
-    # properties), so schemas asserting it route to the batch
-    # evaluator's full implementation (evaluator._fmt_idn_hostname)
-    "uri-reference": f"^{URI_REFERENCE_PATTERN}$",
-    "iri": f"^{IRI_PATTERN}$",
-    "iri-reference": f"^{IRI_REFERENCE_PATTERN}$",
-    "uri-template": f"^{URI_TEMPLATE_PATTERN}$",
-    "idn-email": f"^{IDN_EMAIL_PATTERN}$",
-}
-
-
-def format_pred(fmt: str, scol: Column, trusted_calendar: bool = False) -> Column | None:
-    """Full Column predicate for a built-in format, or None when the
-    format has no Column form. date/date-time carry a calendar-validity
-    conjunct (try_to_timestamp rejects 2023-02-29 exactly like the
-    evaluator's _valid_ymd); ``trusted_calendar=True`` skips it for
-    strings produced by date_format over timestamp/date columns, which
-    are calendar-valid by construction — keeps the flagship hot path
-    (warc_ts date-time assertion) a single rlike."""
-    rx = _FORMAT_REGEX.get(fmt)
-    if rx is None:
-        return None
-    pred = rlike(scol, rx)
-    if not trusted_calendar and fmt in ("date", "date-time"):
-        datepart = scol if fmt == "date" else F.substring(scol, 1, 10)
-        pred = pred & F.try_to_timestamp(datepart, F.lit("yyyy-MM-dd")).isNotNull()
-    return pred
-
-
-ColumnLowerer.format_pred = staticmethod(format_pred)

@@ -25,7 +25,9 @@ the decimal tiers of numeric bounds and ``multipleOf``, how array
 elements and object entries are enumerated, and ``unevaluated*``
 coverage (the static coverage algebra below for typed nodes, a
 conservative local gate for variant nodes). Nodes build Columns only
-when a keyword reads them.
+when a keyword reads them. ``format`` reads the evaluator's own format
+table (``registry.format_entry``), so both nodes assert exactly the
+formats the batch evaluator does.
 
 Keywords outside the expression algebra raise :class:`CannotLower`;
 the engine then runs the whole schema on the batch evaluator
@@ -42,6 +44,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from jschon_spark.functions import registry
 from jschon_spark.schema.catalog import SchemaCatalog, pointer_escape
 
 VIOLATION_TYPE = T.StructType(
@@ -84,13 +87,17 @@ def check_regex_dialect(pattern: str) -> None:
     re.compile(pattern)  # must at least be a valid Python regex
 
 
-def rlike(s: Column, pattern: str) -> Column:
-    """``re.search(pattern, s)`` as a Column: every emitted rlike goes
-    through here. Java regex also ends lines at \\r, \\u0085, \\u2028
-    and \\u2029 for `.`, `^` and `$` (so `^[a-z]{2}$` accepted "ab\\r");
-    the UNIX_LINES flag (?d) leaves \\n, Python's only line
-    terminator."""
+def rlike(s: Column, pattern: str, full: bool = False) -> Column:
+    """``re.search(pattern, s)`` as a Column, or ``re.fullmatch`` when
+    ``full``: every emitted rlike goes through here. Java regex also
+    ends lines at \\r, \\u0085, \\u2028 and \\u2029 for `.`, `^` and
+    `$` (so `^[a-z]{2}$` accepted "ab\\r"); the UNIX_LINES flag (?d)
+    leaves \\n, Python's only line terminator."""
     check_regex_dialect(pattern)
+    if full:
+        # Java's end-of-input anchor (`$` also matches before a final
+        # \n); Python 3.11 `re` rejects \z, so it joins after the check
+        pattern = rf"^(?:{pattern})\z"
     return s.rlike("(?d)" + pattern)
 
 
@@ -334,8 +341,8 @@ class KeywordWalker:
                 pat = schema["pattern"]
                 add(*_check(node.guard("string", rlike(s, pat)), "pattern", ipath,
                             kpath, s, f"does not match pattern {pat}"))
-            if "format" in schema and self.assert_formats:
-                add(*node.format_check(schema["format"], ipath, kpath))
+        if "format" in schema and self.assert_formats:
+            self.format(schema["format"], node, ipath, kpath, add)
 
         if node.may_be("object"):
             self._object(schema, node, base_uri, ipath, kpath, add)
@@ -344,9 +351,7 @@ class KeywordWalker:
         self._combinators(schema, node, base_uri, ipath, kpath, add)
 
         # custom keywords (functions/registry.py)
-        from jschon_spark.functions.registry import KEYWORD_REGISTRY
-
-        for kw_name, entry in KEYWORD_REGISTRY.items():
+        for kw_name, entry in registry.KEYWORD_REGISTRY.items():
             if kw_name in schema and node.json_t in entry.instance_types:
                 if entry.column_fn is None:
                     raise CannotLower(
@@ -361,6 +366,26 @@ class KeywordWalker:
         for v in valids[1:]:
             valid = valid & v
         return valid, _concat(*viols)
+
+    def format(self, fmt: Any, node, ipath: Column, kpath: str, add) -> None:
+        """An asserted ``format``, by the entry the evaluator reads
+        (registry.format_entry). An unknown name only annotates
+        (jschon's vocabulary/format.py:14-32); a format this route
+        cannot decide as the evaluator does raises CannotLower."""
+        entry = registry.format_entry(fmt)
+        if entry is None or not any(map(node.may_be, entry.instance_types)):
+            return
+        if tuple(entry.instance_types) != ("string",):
+            raise CannotLower(f"format {fmt!r} applies to {entry.instance_types} -> batch")
+        if entry.column_fn is None:
+            raise CannotLower(f"format {fmt!r} has no Column form -> batch")
+        column_fn = entry.column_fn
+        if isinstance(node.dtype, (T.TimestampType, T.DateType)):
+            # date_format output is a real day by construction: the
+            # flagship warc_ts date-time check stays one rlike
+            column_fn = getattr(column_fn, "regex_only", column_fn)
+        add(*node.check_string(column_fn(node.string), "format", ipath, kpath,
+                               f"not a valid {fmt}"))
 
     def passes(self, schema: Any, node, base_uri: str) -> Column:
         """Non-NULL verdict of ``schema`` on ``node``, violations unused."""

@@ -45,7 +45,6 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from jschon_spark.lowering.columns import format_pred
 from jschon_spark.lowering.keywords import (
     KEYWORDS,
     VIOLATION_DDL,
@@ -294,13 +293,10 @@ class VariantNode:
     def compare(self, op, bound) -> Column:
         return _num_pred(self.col, op, bound)
 
-    def format_check(self, fmt: str, ipath: Column, kpath: str):
-        # full predicate incl. the date/date-time calendar conjunct
-        fpred = format_pred(fmt, self.string)
-        if fpred is None:
-            raise CannotLower(f"format {fmt!r} -> batch")
-        return _check(self.guard("string", fpred), "format", ipath, kpath,
-                      self.string, f"not a valid {fmt}")
+    def check_string(self, pred: Column, keyword: str, ipath: Column, kpath: str,
+                     error: str):
+        """(valid, violations) of a string assertion; non-strings pass."""
+        return _check(self.guard("string", pred), keyword, ipath, kpath, self.string, error)
 
     # -- arrays: try_variant_get(v, "$", "array<variant>") is a real Spark
     # array of per-element variants (NULL when not an array). JSON-null

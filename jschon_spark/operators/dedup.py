@@ -290,11 +290,6 @@ def minhash_near_duplicates_portable(
     )
 
 
-def _md5_seed_factory(i: int):
-    """Unary lambda for transform() — see the arity note above."""
-    return lambda s: F.md5(F.concat(F.lit(f"{i}|"), s))
-
-
 def ngram_jaccard_pairs(
     df: DataFrame, id_col: str, text_col: str, shingle_n: int = 3,
     threshold: float = 0.7,

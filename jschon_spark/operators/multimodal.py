@@ -26,15 +26,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_META_TYPE = T.StructType(
-    [
-        T.StructField("media_type", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("sha256", T.StringType()),
-    ]
-)
 
 FEATURE_SCHEMA = (
     "media_sha256 string, n_bytes long, media_type string, "

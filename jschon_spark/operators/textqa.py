@@ -33,14 +33,6 @@ def token_count(col: Column) -> Column:
     return F.size(tokens(col))
 
 
-def word_tokens(col: Column) -> Column:
-    """BPE-ish word/punct tokens: runs of letters+digits or single punct."""
-    return F.filter(
-        F.split(col, r"((?<=[^A-Za-z0-9])|(?=[^A-Za-z0-9]))"),
-        lambda x: (x != F.lit("")) & (~x.rlike(r"^\s+$")),
-    )
-
-
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Per-row quality features: lengths, token stats, punct/alpha ratios.
 

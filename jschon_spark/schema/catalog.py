@@ -33,7 +33,6 @@ class CatalogError(KeyError):
     callers catching the old convention keep working."""
 
 
-CORE_2020_12 = "https://json-schema.org/draft/2020-12/schema"
 # base of anonymous registrations: a hierarchical scheme, so
 # urljoin-based relative resolution works
 _ANON = "https://jschon-spark.invalid/anon/"

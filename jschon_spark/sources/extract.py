@@ -78,11 +78,3 @@ def with_extracted_text(df, html_col: str = "html", out_col: str = "text_extract
     once per worker via module import, mirroring the reference's
     precompiled-pattern rule, validation.py:136-138)."""
     return df.withColumn(out_col, extract_text_udf(F.col(html_col)))
-
-
-def text_hashes(df, url_col: str = "url", text_col: str = "text") -> "F.DataFrame":
-    """(url, sha256(text)) golden table for the byte-identity invariant."""
-    return df.select(
-        F.col(url_col).alias("url"),
-        F.sha2(F.col(text_col).cast("binary"), 256).alias("text_sha256"),
-    )

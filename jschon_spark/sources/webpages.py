@@ -142,17 +142,3 @@ def generate_webpages(
         text.alias("text"),
         lang.alias("lang"),
     )
-
-
-def write_webpages(
-    spark: SparkSession, n_rows: int, path: str, partition_by_day: bool = True
-) -> None:
-    """Materialize the corpus as parquet, partitioned by days(warc_ts)
-    — the Iceberg-style partition layout the north rule names (daily
-    partitions are the unit of verdicts, drift and checkpointing)."""
-    df = generate_webpages(spark, n_rows)
-    if partition_by_day:
-        df = df.withColumn("day", F.date_format("warc_ts", "yyyy-MM-dd"))
-        df.write.mode("overwrite").partitionBy("day").parquet(path)
-    else:
-        df.write.mode("overwrite").parquet(path)

@@ -55,26 +55,3 @@ def windowed_verdicts(
             (F.col("n_failed") == 0).alias("passed"),
         )
     )
-
-
-def windowed_violation_counts(
-    validated: DataFrame,
-    ts_col: str = "warc_ts",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Violation keyword histogram per window (exploded, then counted)."""
-    return (
-        validated.withWatermark(ts_col, watermark)
-        .select(F.col(ts_col), F.explode("violations").alias("v"))
-        .groupBy(
-            F.window(ts_col, window).alias("win"),
-            F.col("v.keyword").alias("keyword"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            "keyword",
-            "n",
-        )
-    )

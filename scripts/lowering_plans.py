@@ -228,7 +228,7 @@ def batch(out_path: str) -> None:
             base = catalog.register(schema)
             ev = Evaluator(catalog, assert_formats=af)
             fast, fast_err = attempt(
-                lambda: compile_valid(schema, catalog, base, af, ev.formats))
+                lambda: compile_valid(schema, catalog, base, af))
             for i, inst in enumerate(instances):
                 full, full_err = attempt(lambda: ev.validate(schema, inst))
                 if fast is not None:

@@ -339,17 +339,54 @@ def test_static_coverage_schemas_lower_without_fallback(spark, typed_df):
             compiled.lower_columns(typed_df.schema, F.struct(*typed_df.columns))
 
 
-def test_format_column_forms_match_python_validators(spark):
-    """Round 5: the typed and variant Column format predicates must
-    agree with the Python FORMAT_VALIDATORS on the RFC 3339
-    range/calendar edges the round-5 fix introduced (24:00:00, minute
-    60, 2023-02-29, year 0000) — the pre-fix typed `date` form was
-    regex-only and silently diverged from the calendar-checking batch
-    path."""
+# one valid value per built-in format, mutated by the fuzz below
+FORMAT_EXEMPLARS = {
+    "json-pointer": "/a/b~0c", "relative-json-pointer": "1/a",
+    "ipv4": "192.168.3.17", "ipv6": "::ffff:1.2.3.4",
+    "date": "2024-02-29", "time": "23:59:59+05:30",
+    "date-time": "2024-02-29T23:59:59Z",
+    "uuid": "123e4567-e89b-12d3-a456-426614174000",
+    "regex": "^a[bc]+$", "uri": "https://e.org/p?q=1#f",
+    "hostname": "a-b.example.com", "email": "a+tag@e.co",
+    "duration": "P1Y2M3DT4H5M6S", "uri-reference": "//h/p?q#f",
+    "iri": "http://exämple.org/päth",
+    "iri-reference": "/päth/ü",
+    "uri-template": "http://e.org/{id}{/path*}{?q:3}",
+    "idn-email": "üser@exämple.org",
+    "idn-hostname": "exämple.實例.org",
+}
+
+
+def _batch_format_verdicts(spark, pairs):
+    """Batch-route verdicts of (format, value) pairs, one Arrow job: each
+    document holds its value under its format's name."""
     import json
 
     from jschon_spark.engine import ConstraintEngine
-    from jschon_spark.evaluator import FORMAT_VALIDATORS
+
+    fmts = sorted({f for f, _ in pairs})
+    compiled = ConstraintEngine(assert_formats=True).compile(
+        {"properties": {f: {"format": f} for f in fmts}})
+    jdf = spark.createDataFrame(
+        [(i, json.dumps({f: v})) for i, (f, v) in enumerate(pairs)], "i int, doc string")
+    out = compiled.apply_json(jdf, "doc", prefer_variant=False)
+    return [r.passed for r in out.orderBy("i").select("passed").collect()]
+
+
+def test_format_column_forms_match_python_validators(spark):
+    """Round 5: the typed and variant Column format predicates must
+    agree with the Python validators on the RFC 3339
+    range/calendar edges the round-5 fix introduced (24:00:00, minute
+    60, 2023-02-29, year 0000) — the pre-fix typed `date` form was
+    regex-only and silently diverged from the calendar-checking batch
+    path. Every built-in also runs its exemplar with a trailing
+    newline, which Java's `$` accepted where Python's full match
+    rejected it: the typed, variant and batch routes must all give the
+    Python verdict."""
+    import json
+
+    from jschon_spark.engine import ConstraintEngine
+    from jschon_spark.formats import BUILTIN_FORMATS
     from jschon_spark.lowering.variant import validate_json_column_variant
 
     samples = {
@@ -371,26 +408,31 @@ def test_format_column_forms_match_python_validators(spark):
         "uri-reference": ["/a/b", "", "a:b", "a b", "%zz", "p%20q"],
         "iri": ["http://exämple.org/päth", "exämple.org/path",
                 "http://e.org/a b", "mailto:üser@e.org",
-                "http://e.org/ nbsp"],
+                "http://e.org/ nbsp"],
         "iri-reference": ["/päth/ü", "", "#fräg", "a b"],
         "uri-template": ["http://e.org/{id}", "{/id*}", "{id:3}",
                          "{+path}/here", "{a,b}", "{id", "{bad name}",
                          "{id:0}", "{}", "x{y}z{w}"],
         "idn-email": ["üser@exämple.org", "a@b.c", "a b@c.d", "nope",
-                      "a b@c.d"],
+                      "a b@c.d"],
         "idn-hostname": ["exämple.org", "實例.xn--p1ai", "-bad.com",
                          "a..b", "a" * 63 + ".com", "a" * 64 + ".com",
                          "träiling-.com", "under_score.com"],
     }
+    assert set(FORMAT_EXEMPLARS) == set(BUILTIN_FORMATS)
     eng = ConstraintEngine(assert_formats=True)
-    for fmt, vals in samples.items():
-        want = [FORMAT_VALIDATORS[fmt][0](v) for v in vals]
+    pairs, wants = [], []
+    for fmt, entry in BUILTIN_FORMATS.items():
+        vals = samples.get(fmt, []) + [FORMAT_EXEMPLARS[fmt], FORMAT_EXEMPLARS[fmt] + "\n"]
+        want = [entry.python_fn(v) for v in vals]
+        pairs += [(fmt, v) for v in vals]
+        wants += want
         df = spark.createDataFrame([(v,) for v in vals], "s string")
         compiled = eng.compile(
             {"properties": {"s": {"format": fmt}}}
         )
         # apply_typed falls back to batch when a format has no Column
-        # form (idn-hostname since round 6) — verdicts must match the
+        # form (ipv6, regex, idn-hostname) — verdicts must match the
         # Python validator either way
         got_typed = [r.passed for r in compiled.apply_typed(df)
                      .select("passed").collect()]
@@ -399,10 +441,10 @@ def test_format_column_forms_match_python_validators(spark):
         jdf = spark.createDataFrame(
             [(json.dumps({"s": v}),) for v in vals], "doc string"
         )
-        if fmt == "idn-hostname":
-            # round 6: full RFC 5892/5893 rules are beyond Java regex —
-            # the variant lowerer must DECLINE (batch fallback), never
-            # silently assert a looser predicate
+        if entry.column_fn is None:
+            # Python-only formats (idn-hostname's RFC 5892/5893 rules
+            # are beyond Java regex): the variant lowerer must DECLINE
+            # (batch fallback), never silently assert a looser predicate
             with pytest.raises(CannotLower):
                 validate_json_column_variant(
                     jdf, "doc", compiled.schema, compiled.catalog,
@@ -415,39 +457,28 @@ def test_format_column_forms_match_python_validators(spark):
         )
         got_var = [r.passed for r in var.select("passed").collect()]
         assert got_var == want, (fmt, list(zip(vals, got_var, want)))
+    got_batch = _batch_format_verdicts(spark, pairs)
+    assert got_batch == wants, [
+        (p, g, w) for p, g, w in zip(pairs, got_batch, wants) if g != w]
 
 
 def test_format_fuzz_cross_path(spark):
     """Randomized differential sweep over ALL 19 built-in formats:
     seeded mutations of valid exemplars (char flips/inserts/deletes
-    drawn from an ascii+unicode alphabet) must get the SAME verdict
-    from the Python validators, the typed Column lowering, and the
-    variant lowering — the format surface's analogue of
-    test_random_differential."""
+    drawn from an ascii+unicode alphabet, newline included) must get
+    the SAME verdict from the Python validators, the typed Column
+    lowering, the variant lowering and the batch route — the format
+    surface's analogue of test_random_differential."""
     import json
     import random
 
     from jschon_spark.engine import ConstraintEngine
-    from jschon_spark.evaluator import FORMAT_VALIDATORS
+    from jschon_spark.formats import BUILTIN_FORMATS
     from jschon_spark.lowering.variant import validate_json_column_variant
 
-    exemplars = {
-        "json-pointer": "/a/b~0c", "relative-json-pointer": "1/a",
-        "ipv4": "192.168.3.17", "ipv6": "::ffff:1.2.3.4",
-        "date": "2024-02-29", "time": "23:59:59+05:30",
-        "date-time": "2024-02-29T23:59:59Z",
-        "uuid": "123e4567-e89b-12d3-a456-426614174000",
-        "regex": "^a[bc]+$", "uri": "https://e.org/p?q=1#f",
-        "hostname": "a-b.example.com", "email": "a+tag@e.co",
-        "duration": "P1Y2M3DT4H5M6S", "uri-reference": "//h/p?q#f",
-        "iri": "http://exämple.org/päth",
-        "iri-reference": "/päth/ü",
-        "uri-template": "http://e.org/{id}{/path*}{?q:3}",
-        "idn-email": "üser@exämple.org",
-        "idn-hostname": "exämple.實例.org",
-    }
-    assert set(exemplars) == set(FORMAT_VALIDATORS)
-    alphabet = "ab01-._~:/?#@!$&'()*+,;= %{}\\^<>äü 實\t"
+    exemplars = FORMAT_EXEMPLARS
+    assert set(exemplars) == set(BUILTIN_FORMATS)
+    alphabet = "ab01-._~:/?#@!$&'()*+,;= %{}\\^<>äü 實\t\n"
     rng = random.Random(20260817)
 
     def mutate(s: str) -> str:
@@ -464,6 +495,7 @@ def test_format_fuzz_cross_path(spark):
 
     eng = ConstraintEngine(assert_formats=True)
     total = divergent = 0
+    pairs, wants = [], []
     for fmt, seed in exemplars.items():
         vals, seen = [seed], {seed}
         while len(vals) < 14:
@@ -471,8 +503,10 @@ def test_format_fuzz_cross_path(spark):
             if v not in seen:
                 seen.add(v)
                 vals.append(v)
-        want = [FORMAT_VALIDATORS[fmt][0](v) for v in vals]
+        want = [BUILTIN_FORMATS[fmt].python_fn(v) for v in vals]
         assert any(want), fmt  # the exemplar itself must be valid
+        pairs += [(fmt, v) for v in vals]
+        wants += want
         compiled = eng.compile({"properties": {"s": {"format": fmt}}})
         df = spark.createDataFrame([(v,) for v in vals], "s string")
         got_typed = [r.passed for r in compiled.apply_typed(df)
@@ -484,16 +518,20 @@ def test_format_fuzz_cross_path(spark):
                 jdf, "doc", compiled.schema, compiled.catalog,
                 assert_formats=True).select("passed").collect()]
         except CannotLower:
-            # json-pointer / ipv6 / regex have no Column regex form —
-            # the ENGINE routes them to the batch evaluator (whose
-            # verdicts ARE `want`); only the direct lowerer call here
-            # sees the CannotLower
+            # ipv6 / regex / idn-hostname have no Column form — the
+            # ENGINE routes them to the batch evaluator, checked below
+            # with every other format; only the direct lowerer call
+            # here sees the CannotLower
             got_var = want
         total += len(vals)
         for v, w, t, g in zip(vals, want, got_typed, got_var):
             if not (w == t == g):
                 divergent += 1
                 print(f"DIVERGENCE {fmt}: {v!r} python={w} typed={t} variant={g}")
+    for (fmt, v), w, b in zip(pairs, wants, _batch_format_verdicts(spark, pairs)):
+        if w != b:
+            divergent += 1
+            print(f"DIVERGENCE {fmt}: {v!r} python={w} batch={b}")
     assert divergent == 0, f"{divergent}/{total} divergent"
 
 

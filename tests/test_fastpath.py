@@ -20,7 +20,7 @@ def _compile(schema, assert_formats=False):
     catalog = SchemaCatalog()
     base = catalog.register(schema)
     ev = Evaluator(catalog, assert_formats=assert_formats)
-    return compile_valid(schema, catalog, base, assert_formats, ev.formats), ev, base
+    return compile_valid(schema, catalog, base, assert_formats), ev, base
 
 
 @pytest.mark.parametrize(
