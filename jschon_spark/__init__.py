@@ -14,9 +14,11 @@ Design (see SURVEY.md):
   * typed rows lower to pure ``pyspark.sql.Column`` expressions
     (``lowering.columns``) so the whole keyword pass fuses into one
     whole-stage-codegen'd scan
-  * dynamic JSON falls back to a vectorized Arrow batch evaluator
-    (``lowering.batch`` driving ``evaluator.Evaluator``) — never a
-    per-row Python UDF
+  * dynamic JSON lowers onto Spark 4 VariantType (``lowering.variant``);
+    what no Column route expresses runs on a vectorized Arrow batch
+    evaluator (``lowering.batch`` driving ``evaluator.Evaluator``) —
+    never a per-row Python UDF. ``CompiledSchema`` picks the route
+    (typed → variant → batch) and ``explain()`` says why
   * results mirror jschon's output model: a verdict column (``flag``
     format) and exploded violation rows (``basic`` format)
     (/root/reference/jschon/output.py:39-70)

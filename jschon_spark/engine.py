@@ -7,18 +7,24 @@ Reference analogue: ``create_catalog()`` + ``JSONSchema(...)`` +
 Spark: compile once on the driver, choose a lowering, evaluate a whole
 DataFrame per call.
 
-Lowering choice:
-  1. typed rows → pure Column expressions (whole-stage codegen) when
-     every keyword lowers;
-  2. otherwise → vectorized Arrow batch evaluator over the row
-     re-serialized as JSON (or a native JSON string column).
+Lowering choice: one ladder, in one place (``CompiledSchema._route``).
+Per apply key the first rung that lowers wins:
+  1. typed Columns (``apply_typed`` only): the keyword walker over the
+     row's Spark types, in one whole-stage-codegen'd scan;
+  2. VariantType: the same walker over the JSON document —
+     ``apply_json``'s column, or ``apply_typed``'s row through
+     ``columns.to_json`` — still JVM-only;
+  3. the Arrow batch UDF over that document (every keyword).
+A rung that cannot express a keyword raises ``CannotLower`` and the
+next one is tried. The route and each refusal (the exception, with its
+reason) are memoized per apply key; ``explain()`` reports them.
 
 Caching: ``compiled(schema, assert_formats)`` memoizes a fresh engine's
 compile in the session memo (``session.memo``) under the schema's
 content fingerprint, ``assert_formats`` and the registry version. That
 memo is dropped when the JVM gateway changes, because the lowered
 Columns it reaches die with that JVM. Each ``CompiledSchema`` memoizes
-its own lowerings (hundreds of py4j calls each) per input layout.
+its own routes (a lowering costs hundreds of py4j calls) per apply key.
 ``release_caches()`` clears neither.
 """
 
@@ -32,8 +38,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from jschon_spark.functions import registry
-from jschon_spark.lowering.batch import validate_json_column
-from jschon_spark.lowering.columns import CannotLower, ColumnLowerer, VIOLATION_DDL
+from jschon_spark.lowering.batch import make_batch_validator
+from jschon_spark.lowering.columns import TypedNode, to_json
+from jschon_spark.lowering.keywords import VIOLATION_DDL, CannotLower, KeywordWalker
+from jschon_spark.lowering.variant import variant_node, with_variant_verdicts
 from jschon_spark.plans.manifests import schema_fingerprint
 from jschon_spark.schema.catalog import SchemaCatalog
 from jschon_spark.session import memo
@@ -53,20 +61,44 @@ class CompiledSchema:
         self.catalog = catalog
         self.base_uri = base_uri
         self.assert_formats = assert_formats
-        self._store = [schema]
+        # every registered resource ships to batch workers ($ref targets)
+        self._store = list({id(s): s for s in catalog._resources.values()}.values())
         # Column trees are immutable expression handles, independent of
         # any DataFrame; with the catalog fixed, lowering is a pure
-        # function of the input layout
-        self._lowered: dict = {}
+        # function of the apply key
+        self._routes: dict[tuple, tuple] = {}
 
-    def _lower_once(self, key: tuple, lower) -> Any:
-        """``lower()`` memoized under ``key``; a refusal as CannotLower."""
-        if key not in self._lowered:
-            try:
-                self._lowered[key] = lower()
-            except CannotLower:
-                self._lowered[key] = CannotLower
-        return self._lowered[key]
+    def _route(self, key: tuple, rungs: list) -> tuple:
+        """``(name, columns, refused)`` of the first of ``rungs``
+        (``(name, lower)`` pairs) whose ``lower()`` gives the (valid,
+        violations) Columns, else ``("batch", None, refused)``; memoized
+        under ``key`` with each refusal's CannotLower in ``refused``."""
+        if key not in self._routes:
+            refused: dict[str, CannotLower] = {}
+            for name, lower in rungs:
+                try:
+                    self._routes[key] = (name, lower(), refused)
+                    break
+                except CannotLower as e:
+                    refused[name] = e
+            else:
+                self._routes[key] = ("batch", None, refused)
+        return self._routes[key]
+
+    def explain(self) -> dict[tuple, dict]:
+        """Per apply key so far — ``("apply_typed", <row struct type>)``
+        or ``("apply_json", <column>)`` — the route taken and why each
+        rung before it refused, e.g. ``{"route": "batch", "refused":
+        {"variant": "cyclic $ref at /properties/a -> batch"}}``.
+        ``prefer_variant=False`` calls make no choice and are not listed."""
+        return {
+            key: {"route": name, "refused": {rung: str(e) for rung, e in refused.items()}}
+            for key, (name, _, refused) in self._routes.items()
+        }
+
+    def _walk(self, node) -> tuple[Column, Column]:
+        return KeywordWalker(self.catalog, self.assert_formats).walk(
+            self.schema, node, self.base_uri, F.lit(""))
 
     # -- typed path ---------------------------------------------------------
     def lower_columns(
@@ -74,40 +106,29 @@ class CompiledSchema:
     ) -> tuple[Column, Column]:
         """(valid, violations) Columns for a typed value; raises
         CannotLower if any keyword is outside the expression subset."""
-        lowerer = ColumnLowerer(self.catalog, self.assert_formats)
-        return lowerer.lower(self.schema, dtype, col, self.base_uri)
+        return self._walk(TypedNode(col, dtype))
 
-    def apply_typed(
-        self,
-        df: DataFrame,
-        doc_cols: list[str] | None = None,
-        keep_cols: list[str] | None = None,
-    ) -> DataFrame:
+    def apply_typed(self, df: DataFrame, doc_cols: list[str] | None = None) -> DataFrame:
         """Validate each row (as a JSON object of ``doc_cols``) and add
         ``passed:boolean`` + ``violations:array<struct>``.
 
-        Falls back to the batch evaluator (row re-serialized with
-        ``to_json``) when column lowering is impossible.
+        When the typed lowering refuses, the row is serialized with
+        ``columns.to_json`` and takes the variant, else the batch, rung.
         """
         doc_cols = doc_cols or df.columns
-        struct_type = T.StructType(
-            [df.schema[c] for c in doc_cols]
-        )
+        struct_type = T.StructType([df.schema[c] for c in doc_cols])
         row = F.struct(*[F.col(c) for c in doc_cols])
-        hit = self._lower_once(
-            ("typed", struct_type.simpleString(), tuple(doc_cols)),
-            lambda: self.lower_columns(struct_type, row),
-        )
-        if hit is not CannotLower:
-            valid, viols = hit
+        route, columns, _ = self._route(("apply_typed", struct_type.simpleString()), [
+            ("typed", lambda: self.lower_columns(struct_type, row)),
+            ("variant", lambda: self._walk(variant_node("__doc"))),
+        ])
+        if route == "typed":
+            valid, viols = columns
             return df.withColumn("passed", valid).withColumn(
                 "violations", viols.cast(VIOLATION_DDL)
             )
-        with_json = df.withColumn("__doc", F.to_json(row))
-        out = validate_json_column(
-            with_json, "__doc", self.schema, self._store, self.assert_formats
-        )
-        return out.drop("__doc")
+        with_doc = df.withColumn("__doc", to_json(row))
+        return self._apply(with_doc, "__doc", route, columns).drop("__doc")
 
     # -- dynamic JSON path ----------------------------------------------------
     def apply_json(
@@ -115,36 +136,33 @@ class CompiledSchema:
     ) -> DataFrame:
         """Validate a column of JSON documents.
 
-        Flat schemas lower onto Spark 4 VariantType — the whole
-        validation stays JVM-side even for dynamic JSON. Anything the
-        variant subset can't express falls back to the Arrow batch
-        evaluator (full keyword coverage).
+        Schemas in the variant subset lower onto Spark 4 VariantType —
+        the whole validation stays JVM-side even for dynamic JSON.
+        Anything else, or every schema when ``prefer_variant`` is
+        False, runs on the Arrow batch evaluator (full keyword
+        coverage).
         """
-        if prefer_variant:
-            from jschon_spark.lowering.variant import (
-                VariantLowerer,
-                with_variant_verdicts,
-            )
+        if not prefer_variant:
+            return self._apply(df, json_col, "batch", None)
+        route, columns, _ = self._route(("apply_json", json_col), [
+            ("variant", lambda: self._walk(variant_node(json_col))),
+        ])
+        return self._apply(df, json_col, route, columns)
 
-            hit = self._lower_once(
-                ("json", json_col),
-                lambda: VariantLowerer(self.catalog, self.assert_formats).lower(
-                    self.schema, F.col(json_col),
-                    F.col("__variant_doc"), self.base_uri,
-                ),
-            )
-            if hit is not CannotLower:
-                return with_variant_verdicts(df, json_col, hit)
-        return validate_json_column(
-            df, json_col, self.schema, self._store, self.assert_formats
+    def _apply(self, df: DataFrame, json_col: str, route: str, columns) -> DataFrame:
+        """Add ``passed``/``violations`` for the documents in
+        ``json_col`` on the variant or batch ``route``."""
+        if route == "variant":
+            return with_variant_verdicts(df, json_col, columns)
+        udf = make_batch_validator(self.schema, self._store, self.assert_formats)
+        return (
+            df.withColumn("__result", udf(F.col(json_col)))
+            .withColumn("passed", F.col("__result.passed"))
+            .withColumn("violations", F.col("__result.violations"))
+            .drop("__result")
         )
 
     # -- output shapes (≅ jschon output formats, output.py:39-165) ------------
-    @staticmethod
-    def verdicts(validated: DataFrame, id_col: str) -> DataFrame:
-        """``flag`` format: one row per document."""
-        return validated.select(id_col, "passed")
-
     @staticmethod
     def violations_table(validated: DataFrame, id_col: str) -> DataFrame:
         """``basic`` format: one row per violation."""
@@ -203,14 +221,7 @@ class ConstraintEngine:
 
             validate_schema_document(schema)
         base = self.catalog.register(schema, uri)
-        compiled = CompiledSchema(
-            schema, self.catalog, base, self.assert_formats
-        )
-        # ship every registered resource to executors for $ref targets
-        compiled._store = list(
-            {id(s): s for s in self.catalog._resources.values()}.values()
-        )
-        return compiled
+        return CompiledSchema(schema, self.catalog, base, self.assert_formats)
 
 
 def compiled(schema: Any, assert_formats: bool = False) -> CompiledSchema:

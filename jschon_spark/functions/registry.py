@@ -44,6 +44,17 @@ class KeywordEntry:
     error: str = "custom keyword failed"
 
 
+# jschon's JSON types: an instance is never "integer" (that is a
+# `type` keyword test), so an entry naming it would never apply
+JSON_TYPES = ("null", "boolean", "number", "string", "array", "object")
+
+
+def _check_types(instance_types: tuple[str, ...]) -> None:
+    bad = [t for t in instance_types if t not in JSON_TYPES]
+    if bad:
+        raise ValueError(f"instance_types {bad} are not among the JSON types {JSON_TYPES}")
+
+
 FORMAT_REGISTRY: dict[str, FormatEntry] = {}
 KEYWORD_REGISTRY: dict[str, KeywordEntry] = {}
 VERSION = 0  # bumped by every mutator below; part of engine.compiled's key
@@ -108,7 +119,9 @@ def format_validator(
     column_fn: Callable[[Column], Column] | None = None,
 ):
     """Decorator: register a format (analogue of jschon's
-    @format_validator, format.py:47-66)."""
+    @format_validator, format.py:47-66). ``instance_types`` outside
+    ``JSON_TYPES`` raise ValueError."""
+    _check_types(instance_types)
 
     def deco(fn):
         FORMAT_REGISTRY[name] = FormatEntry(fn, instance_types, column_fn)
@@ -127,7 +140,9 @@ def custom_keyword(
     """Decorator: register a custom keyword. The decorated function
     takes the keyword's schema value and returns a per-instance
     predicate (compile-once, evaluate-many — same shape as a Keyword
-    class holding parsed state in the reference)."""
+    class holding parsed state in the reference). ``instance_types``
+    outside ``JSON_TYPES`` raise ValueError."""
+    _check_types(instance_types)
 
     def deco(fn):
         KEYWORD_REGISTRY[name] = KeywordEntry(fn, instance_types, column_fn, error)

@@ -1,7 +1,12 @@
-"""Lowerings of the compiled constraint DAG onto Spark execution.
+"""Lowerings of a compiled schema onto Spark execution.
 
-``columns``  — pure ``pyspark.sql.Column`` expressions against typed
-               rows (the 10^12-row scale path; whole-stage codegen).
-``batch``    — vectorized Arrow batch evaluator over dynamic JSON
-               strings (full 2020-12 coverage; the sanctioned fallback).
+``keywords`` — the one keyword walker: schema → (valid, violations)
+               ``Column`` pair, reading values through a node.
+``columns``  — the typed node (typed rows; whole-stage codegen).
+``variant``  — the variant node (dynamic JSON as Spark 4 VariantType).
+``batch``    — the vectorized Arrow batch evaluator (every keyword).
+
+``CompiledSchema`` (engine.py) alone picks among them, per apply key:
+typed (``apply_typed`` only), then variant, then batch, one rung down
+per ``CannotLower``.
 """

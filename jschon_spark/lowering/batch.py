@@ -18,12 +18,12 @@ from typing import Any, Iterator
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from jschon_spark.functions import registry
-from jschon_spark.lowering.columns import VIOLATION_TYPE
+from jschon_spark.lowering.keywords import VIOLATION_TYPE
 from jschon_spark.session import memo
 
 RESULT_TYPE = T.StructType(
@@ -129,20 +129,3 @@ def _compile(schema: Any, store: list, assert_formats: bool,
     program = Evaluator(catalog, assert_formats, extensions).compile(schema, base)
     return program, parse_json_strict
 
-
-def validate_json_column(
-    df: DataFrame,
-    json_col: str,
-    schema: Any,
-    schema_store: list | None = None,
-    assert_formats: bool = False,
-    result_col: str = "__result",
-) -> DataFrame:
-    """Add ``passed`` and ``violations`` columns from a JSON-string column."""
-    udf_col = make_batch_validator(schema, schema_store, assert_formats)
-    return (
-        df.withColumn(result_col, udf_col(F.col(json_col)))
-        .withColumn("passed", F.col(f"{result_col}.passed"))
-        .withColumn("violations", F.col(f"{result_col}.violations"))
-        .drop(result_col)
-    )

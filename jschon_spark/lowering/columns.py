@@ -1,8 +1,8 @@
 """Lower a JSON Schema onto typed Spark columns as pure Column algebra.
 
-This is the scale path: :class:`ColumnLowerer` runs the shared keyword
-walker (lowering/keywords.py) over a :class:`TypedNode`, so one
-``df.select`` evaluates the whole schema in a single
+This is the scale path: ``CompiledSchema.lower_columns`` runs the
+shared keyword walker (lowering/keywords.py) over a :class:`TypedNode`,
+so one ``df.select`` evaluates the whole schema in a single
 whole-stage-codegen'd scan — no shuffle, no Python.
 
 What the typed node adds to the walker's keyword semantics:
@@ -17,9 +17,12 @@ What the typed node adds to the walker's keyword semantics:
 * struct fields are enumerated at compile time (patternProperties,
   additionalProperties and propertyNames resolve per field name), and
   ``unevaluated*`` use the walker's static coverage algebra.
+* timestamps and dates read as the strings ``to_json`` writes for them
+  in the row document, so a string keyword gives one verdict whichever
+  route the schema takes.
 * Keywords the expression algebra can't faithfully express raise
-  :class:`CannotLower`; the engine then falls back to the vectorized
-  batch evaluator (lowering/batch.py) for the whole schema.
+  :class:`CannotLower`; the engine then serializes the row with
+  :func:`to_json` and tries the variant, then the batch, route.
 """
 
 from __future__ import annotations
@@ -31,15 +34,23 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from jschon_spark.lowering.keywords import (  # noqa: F401 - re-exported
+from jschon_spark.lowering.keywords import (
     VIOLATION_DDL,
-    VIOLATION_TYPE,
     CannotLower,
-    KeywordWalker,
     _EMPTY_ARR,
     _check,
     dec18_exact,
 )
+
+# a typed timestamp or date as a JSON string: TypedNode.string on the
+# typed route, to_json's options in the row document the others read
+TIMESTAMP_FORMAT = "yyyy-MM-dd'T'HH:mm:ss'Z'"
+DATE_FORMAT = "yyyy-MM-dd"
+
+
+def to_json(row: Column) -> Column:
+    """``row`` as the JSON document the variant and batch routes read."""
+    return F.to_json(row, {"timestampFormat": TIMESTAMP_FORMAT, "dateFormat": DATE_FORMAT})
 
 
 def spark_json_type(dtype: T.DataType) -> str:
@@ -122,9 +133,9 @@ class TypedNode:
     @cached_property
     def string(self) -> Column:
         if isinstance(self.dtype, T.TimestampType):
-            return F.date_format(self.col, "yyyy-MM-dd'T'HH:mm:ss'Z'")
+            return F.date_format(self.col, TIMESTAMP_FORMAT)
         if isinstance(self.dtype, T.DateType):
-            return F.date_format(self.col, "yyyy-MM-dd")
+            return F.date_format(self.col, DATE_FORMAT)
         return self.col
 
     # -- type / enum / const --------------------------------------------------
@@ -295,19 +306,3 @@ class TypedNode:
         names, patterns = walker.static_coverage(schema, base_uri, item=False)
         return sorted(names), sorted(patterns), False
 
-
-class ColumnLowerer(KeywordWalker):
-    """Compile one schema document into (valid, violations) Columns
-    over a typed value."""
-
-    def lower(
-        self,
-        schema: Any,
-        dtype: T.DataType,
-        col: Column,
-        base_uri: str,
-        ipath: Column | None = None,
-        kpath: str = "",
-    ) -> tuple[Column, Column]:
-        return self.walk(schema, TypedNode(col, dtype), base_uri,
-                         F.lit("") if ipath is None else ipath, kpath)

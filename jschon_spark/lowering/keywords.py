@@ -30,8 +30,8 @@ table (``registry.format_entry``), so both nodes assert exactly the
 formats the batch evaluator does.
 
 Keywords outside the expression algebra raise :class:`CannotLower`;
-the engine then runs the whole schema on the batch evaluator
-(lowering/batch.py).
+the engine then runs the whole schema on the next route of its ladder
+(typed, variant, batch; see engine.py).
 """
 
 from __future__ import annotations
@@ -350,15 +350,21 @@ class KeywordWalker:
             self._array(schema, node, base_uri, ipath, kpath, add)
         self._combinators(schema, node, base_uri, ipath, kpath, add)
 
-        # custom keywords (functions/registry.py)
+        # custom keywords (functions/registry.py), gated as the
+        # evaluator gates them: they apply to values of their JSON types
+        # only, so JSON null passes (the variant node admits none)
         for kw_name, entry in registry.KEYWORD_REGISTRY.items():
-            if kw_name in schema and node.json_t in entry.instance_types:
+            types = [t for t in entry.instance_types if node.may_be(t)]
+            if kw_name in schema and types:
                 if entry.column_fn is None:
                     raise CannotLower(
                         f"custom keyword {kw_name!r} has no Column lowering -> batch"
                     )
+                if "null" in entry.instance_types:
+                    raise CannotLower(f"custom keyword {kw_name!r} applies to null -> batch")
                 pred = entry.column_fn(schema[kw_name], node.col, node.dtype)
-                add(*_check(pred, kw_name, ipath, kpath, node.col, entry.error))
+                add(*_check(node.guard(types[0], pred), kw_name, ipath, kpath,
+                            node.col, entry.error))
 
         if not valids:
             return F.lit(True), _EMPTY_ARR()

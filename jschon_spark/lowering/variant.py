@@ -1,9 +1,9 @@
 """Variant lowering: dynamic JSON validated entirely JVM-side.
 
 Spark 4's VariantType lets a *dynamic* JSON column be validated with
-pure Column algebra — no Python even for schemaless documents.
-:class:`VariantLowerer` runs the shared keyword walker
-(lowering/keywords.py) over a :class:`VariantNode`, which reads values
+pure Column algebra — no Python even for schemaless documents. The
+engine runs the shared keyword walker (lowering/keywords.py) over
+``variant_node(json_col)``, a :class:`VariantNode`, which reads values
 through:
 
   * ``try_parse_json``          — invalid JSON → NULL (matches the
@@ -23,7 +23,7 @@ Compound enum/const lower to recursive structural equality.
 GATED (lowerable when no in-place applicator can merge child
 annotations at the same level); genuinely dynamic ``$dynamicRef``/
 ``$recursiveRef`` and keywords outside the variant vocabulary raise
-CannotLower → the Arrow batch evaluator takes over. Violations match
+CannotLower → the engine runs the Arrow batch evaluator. Violations match
 the batch evaluator's (keyword, instance_path, keyword_path)
 conventions.
 
@@ -49,13 +49,11 @@ from jschon_spark.lowering.keywords import (
     KEYWORDS,
     VIOLATION_DDL,
     CannotLower,
-    KeywordWalker,
     _EMPTY_ARR,
     _check,
     _violation,
     dec18_exact,
 )
-from jschon_spark.schema.catalog import SchemaCatalog
 
 _KEY_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
@@ -152,7 +150,7 @@ class VariantNode:
     """A VariantType value; ``raw`` is the document's JSON string at the
     root (its key set needs no re-serialization), None below it."""
 
-    json_t = dtype = None  # no static type: custom keywords never lower
+    dtype = None  # no static Spark type
     fields = None  # the key set is dynamic
 
     def __init__(self, val: Column, raw: Column | None = None) -> None:
@@ -424,58 +422,40 @@ class VariantNode:
                 list(schema.get("patternProperties") or {}), True)
 
 
-class VariantLowerer(KeywordWalker):
-    """Lower a schema onto (raw json string col, variant col)."""
-
-    def lower(
-        self, schema: Any, doc: Column, v: Column, base_uri: str = ""
-    ) -> tuple[Column, Column]:
-        """(passed, violations) for one document; doc is the raw JSON
-        string, v = try_parse_json(doc)."""
-        valid, viols = self.walk(schema, VariantNode(v, doc), base_uri, F.lit(""))
-        parse_fail = doc.isNotNull() & v.isNull()
-        passed = F.when(doc.isNull(), F.lit(None).cast("boolean")).otherwise(
-            F.when(parse_fail, F.lit(False)).otherwise(valid)
-        )
-        violations = F.when(doc.isNull(), F.lit(None).cast(VIOLATION_DDL)).otherwise(
-            F.when(
-                parse_fail,
-                F.array(
-                    _violation("", F.lit(""), "", doc, "invalid JSON")
-                ).cast(VIOLATION_DDL),
-            ).otherwise(viols)
-        )
-        return passed, violations
-
-
-def validate_json_column_variant(
-    df: DataFrame,
-    json_col: str,
-    schema: Any,
-    catalog: SchemaCatalog,
-    assert_formats: bool = False,
-    base_uri: str = "",
-) -> DataFrame:
-    """Pure-JVM validation of a JSON string column via VariantType.
-    Raises CannotLower when the schema is outside the variant subset."""
-    lowerer = VariantLowerer(catalog, assert_formats)
-    lowered = lowerer.lower(schema, F.col(json_col), F.col("__variant_doc"), base_uri)
-    return with_variant_verdicts(df, json_col, lowered)
+def variant_node(json_col: str) -> VariantNode:
+    """The root node of the documents in ``json_col``, read from the
+    parse that ``with_variant_verdicts`` projects."""
+    return VariantNode(F.col("__variant_doc"), F.col(json_col))
 
 
 def with_variant_verdicts(
     df: DataFrame, json_col: str, lowered: tuple[Column, Column]
 ) -> DataFrame:
-    """Add ``passed``/``violations`` from ``VariantLowerer.lower``
-    Columns built over ``F.col("__variant_doc")``."""
-    passed, violations = lowered
+    """Add ``passed``/``violations`` from the walker's (valid,
+    violations) over ``variant_node(json_col)``. A NULL document gets
+    NULLs; one that does not parse fails with an ``invalid JSON``
+    violation."""
+    valid, viols = lowered
+    doc, v = F.col(json_col), F.col("__variant_doc")
+    parse_fail = doc.isNotNull() & v.isNull()
+    passed = F.when(doc.isNull(), F.lit(None).cast("boolean")).otherwise(
+        F.when(parse_fail, F.lit(False)).otherwise(valid)
+    )
+    violations = F.when(doc.isNull(), F.lit(None).cast(VIOLATION_DDL)).otherwise(
+        F.when(
+            parse_fail,
+            F.array(
+                _violation("", F.lit(""), "", doc, "invalid JSON")
+            ).cast(VIOLATION_DDL),
+        ).otherwise(viols)
+    )
     # materialize the parse as its own projection: every keyword
     # references the variant COLUMN, so the row is parsed once —
     # inlining the parse expression would re-parse the JSON string in
     # every subexpression (CollapseProject keeps multi-referenced
     # non-cheap aliases in their own project)
     return (
-        df.withColumn("__variant_doc", F.try_parse_json(F.col(json_col)))
+        df.withColumn("__variant_doc", F.try_parse_json(doc))
         .withColumn("passed", passed)
         .withColumn("violations", violations)
         .drop("__variant_doc")

@@ -836,7 +836,7 @@ def custom_registry_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     reg_kw = "x-divisibleBy" not in KEYWORD_REGISTRY
     if reg_kw:
         @custom_keyword(
-            "x-divisibleBy", instance_types=("integer", "number"),
+            "x-divisibleBy", instance_types=("number",),
             column_fn=lambda d, col, dtype: col % F.lit(d) == 0,
             error="value is not divisible by the divisor",
         )
@@ -1011,7 +1011,7 @@ def streaming_late_data_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from jschon_spark.streaming.validate import validate_stream, windowed_verdicts
+    from jschon_spark.streaming.validate import windowed_verdicts
 
     ev = load(spark, sf_dir, "events").select("event_id", "value")
     b = F.pmod(F.col("event_id"), F.lit(3))
@@ -1043,7 +1043,7 @@ def streaming_late_data_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
         compiled = eng.compile(
             {"properties": {"value": {"maximum": 200}}}
         )
-        validated = validate_stream(compiled, stream)
+        validated = compiled.apply_typed(stream)
         with _stream_shuffle(spark):
             q = (
                 windowed_verdicts(validated, ts_col="ts2", window="1 hour",

@@ -7,24 +7,15 @@ native extension the north rule's architecture implies: because the
 compiled schema is pure Column algebra (or a stateless Arrow batch
 UDF), the identical plan runs under Structured Streaming unchanged —
 validation is row-local, so no state store is needed; only the rollup
-aggregation is stateful (watermark + window).
+aggregation is stateful (watermark + window). A streaming DataFrame is
+validated with ``CompiledSchema.apply_typed`` (or ``apply_json``)
+exactly as a batch one, then rolled up here.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from jschon_spark.engine import CompiledSchema
-
-
-def validate_stream(
-    compiled: CompiledSchema,
-    stream: DataFrame,
-    doc_cols: list[str] | None = None,
-) -> DataFrame:
-    """Row-local keyword pass on a streaming DataFrame (append-safe)."""
-    return compiled.apply_typed(stream, doc_cols)
 
 
 def windowed_verdicts(

@@ -4,11 +4,15 @@ For a fixed set of schemas — the flagship page schema, the three
 variant-path query schemas, the benchmark's doc-route schemas, every
 keyword conformance case and the seeded random-differential
 populations — this lowers each schema onto the typed path (over a
-fixed list of Spark types) and onto the variant path, and writes one
-JSON line per (schema, path, type): the route taken (``lowered`` or
-the ``CannotLower`` reason), the py4j calls spent building the
-Columns, and the optimized plan text with expression ids (``#123``)
-and lambda variable names (``x_45``) normalized. Two dumps of two
+fixed list of Spark types, with ``CompiledSchema.lower_columns``) and
+applies it to a JSON column with ``CompiledSchema.apply_json``, and
+writes one JSON line per (schema, path, type): the route taken
+(``lowered``, or the ``CannotLower`` reason, which for the variant
+path is the one ``explain()`` reports), the py4j calls spent building
+the Columns, and the optimized plan text with expression ids
+(``#123``) and lambda variable names (``x_45``) normalized. A variant
+refusal's py4j count leaves out the batch UDF the engine then builds
+(the calls of a second, memoized ``apply_json``). Two dumps of two
 checkouts then diff line by line, which shows whether a change to the
 lowering left its plans byte-identical.
 
@@ -124,8 +128,7 @@ def dump(out_path: str) -> None:
     from pyspark.sql import types as T
 
     from jschon_spark.engine import ConstraintEngine
-    from jschon_spark.lowering.columns import CannotLower
-    from jschon_spark.lowering.variant import validate_json_column_variant
+    from jschon_spark.lowering.keywords import CannotLower
     from jschon_spark.session import get_spark
 
     spark = get_spark(cores=2)
@@ -152,7 +155,8 @@ def dump(out_path: str) -> None:
             df = build()
             rec = {"route": "lowered", "py4j": counter.n - n0, "plan": plan(df)}
         except CannotLower as e:
-            rec = {"route": f"CannotLower: {e}", "py4j": counter.n - n0}
+            rec = {"route": f"CannotLower: {e}",
+                   "py4j": getattr(e, "py4j", counter.n - n0)}
         except Exception as e:  # noqa: BLE001 - recorded, not hidden
             rec = {"route": f"error: {type(e).__name__}: {e}"[:300]}
         out.write(json.dumps({"id": key, **rec}, sort_keys=True) + "\n")
@@ -163,10 +167,17 @@ def dump(out_path: str) -> None:
         return df.select(valid.alias("passed"), viols.alias("violations"))
 
     def variant(compiled):
-        return validate_json_column_variant(
-            docs, "doc", compiled.schema, compiled.catalog,
-            compiled.assert_formats, compiled.base_uri,
-        )
+        n0 = counter.n
+        out = compiled.apply_json(docs, "doc")
+        route = compiled.explain()[("apply_json", "doc")]
+        if route["route"] == "variant":
+            return out
+        refusal = CannotLower(route["refused"]["variant"])
+        # the memoized second apply builds only the batch UDF
+        spent, n1 = counter.n - n0, counter.n
+        compiled.apply_json(docs, "doc")
+        refusal.py4j = spent - (counter.n - n1)
+        raise refusal
 
     with open(out_path, "w") as out:
         items = [(n, s, None) for n, s in _schemas()] + list(_random_schemas())
@@ -231,12 +242,8 @@ def batch(out_path: str) -> None:
                 lambda: compile_valid(schema, catalog, base, af))
             for i, inst in enumerate(instances):
                 full, full_err = attempt(lambda: ev.validate(schema, inst))
-                if fast is not None:
+                if fast_err is None:
                     pred, pred_err = attempt(lambda: fast(inst))
-                elif fast_err is None:
-                    # a compile_valid that declines the schema (None)
-                    # leaves the batch route to the full walk
-                    pred, pred_err = (full.valid if full else None), full_err
                 else:
                     pred, pred_err = None, fast_err
                 if pred_err or full_err:

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from jschon_spark.engine import ConstraintEngine
 from jschon_spark.evaluator import Evaluator
-from jschon_spark.lowering.columns import CannotLower
+from jschon_spark.lowering.keywords import CannotLower
 
 
 ROW_SCHEMA = (
@@ -387,7 +387,6 @@ def test_format_column_forms_match_python_validators(spark):
 
     from jschon_spark.engine import ConstraintEngine
     from jschon_spark.formats import BUILTIN_FORMATS
-    from jschon_spark.lowering.variant import validate_json_column_variant
 
     samples = {
         "date-time": ["2024-02-29T00:00:00Z", "2023-02-29T00:00:00Z",
@@ -441,20 +440,16 @@ def test_format_column_forms_match_python_validators(spark):
         jdf = spark.createDataFrame(
             [(json.dumps({"s": v}),) for v in vals], "doc string"
         )
+        var = compiled.apply_json(jdf, "doc")
+        route = compiled.explain()[("apply_json", "doc")]
         if entry.column_fn is None:
             # Python-only formats (idn-hostname's RFC 5892/5893 rules
             # are beyond Java regex): the variant lowerer must DECLINE
             # (batch fallback), never silently assert a looser predicate
-            with pytest.raises(CannotLower):
-                validate_json_column_variant(
-                    jdf, "doc", compiled.schema, compiled.catalog,
-                    assert_formats=True,
-                )
+            assert route["route"] == "batch", (fmt, route)
+            assert "has no Column form" in route["refused"]["variant"], (fmt, route)
             continue
-        var = validate_json_column_variant(
-            jdf, "doc", compiled.schema, compiled.catalog,
-            assert_formats=True,
-        )
+        assert route["route"] == "variant", (fmt, route)
         got_var = [r.passed for r in var.select("passed").collect()]
         assert got_var == want, (fmt, list(zip(vals, got_var, want)))
     got_batch = _batch_format_verdicts(spark, pairs)
@@ -474,7 +469,6 @@ def test_format_fuzz_cross_path(spark):
 
     from jschon_spark.engine import ConstraintEngine
     from jschon_spark.formats import BUILTIN_FORMATS
-    from jschon_spark.lowering.variant import validate_json_column_variant
 
     exemplars = FORMAT_EXEMPLARS
     assert set(exemplars) == set(BUILTIN_FORMATS)
@@ -513,16 +507,14 @@ def test_format_fuzz_cross_path(spark):
                      .select("passed").collect()]
         jdf = spark.createDataFrame(
             [(json.dumps({"s": v}),) for v in vals], "doc string")
-        try:
-            got_var = [r.passed for r in validate_json_column_variant(
-                jdf, "doc", compiled.schema, compiled.catalog,
-                assert_formats=True).select("passed").collect()]
-        except CannotLower:
-            # ipv6 / regex / idn-hostname have no Column form — the
-            # ENGINE routes them to the batch evaluator, checked below
-            # with every other format; only the direct lowerer call
-            # here sees the CannotLower
-            got_var = want
+        got_var = [r.passed for r in compiled.apply_json(jdf, "doc")
+                   .select("passed").collect()]
+        # ipv6 / regex / idn-hostname have no Column form: the engine
+        # routes them to the batch evaluator, checked below with every
+        # other format
+        route = compiled.explain()[("apply_json", "doc")]["route"]
+        assert route == ("batch" if BUILTIN_FORMATS[fmt].column_fn is None
+                         else "variant"), (fmt, route)
         total += len(vals)
         for v, w, t, g in zip(vals, want, got_typed, got_var):
             if not (w == t == g):
@@ -544,8 +536,6 @@ def test_regex_line_terminators_follow_python_re(spark):
     matchers."""
     import json
 
-    from jschon_spark.lowering.variant import validate_json_column_variant
-
     cases = [
         ({"properties": {"s": {"pattern": "^[a-z]{2}$"}}},
          ["ab\r", "ab\r\n", "ab\u2028", "ab\u2029", "ab\x85", "ab", "ab\n"]),
@@ -562,8 +552,8 @@ def test_regex_line_terminators_follow_python_re(spark):
         typed = [r.passed for r in compiled.apply_typed(df).collect()]
         jdf = spark.createDataFrame(
             [(json.dumps({"s": s}),) for s in strings], "doc string")
-        variant = [r.passed for r in validate_json_column_variant(
-            jdf, "doc", compiled.schema, compiled.catalog).collect()]
+        variant = [r.passed for r in compiled.apply_json(jdf, "doc").collect()]
+        assert compiled.explain()[("apply_json", "doc")]["route"] == "variant"
         batch = [r.passed for r in compiled.apply_json(
             jdf, "doc", prefer_variant=False).collect()]
         assert typed == want, (schema, list(zip(strings, typed, want)))
@@ -579,8 +569,8 @@ def test_regex_line_terminators_follow_python_re(spark):
         want = [ev.validate(schema, {k: 1}).valid for k in keys]
         compiled = eng.compile(schema)
         jdf = spark.createDataFrame([(d,) for d in docs], "doc string")
-        variant = [r.passed for r in validate_json_column_variant(
-            jdf, "doc", compiled.schema, compiled.catalog).collect()]
+        variant = [r.passed for r in compiled.apply_json(jdf, "doc").collect()]
+        assert compiled.explain()[("apply_json", "doc")]["route"] == "variant"
         assert variant == want, (schema, list(zip(keys, variant, want)))
         mdf = spark.createDataFrame([({k: 1},) for k in keys], "m map<string,bigint>")
         mcompiled = eng.compile({"properties": {"m": schema}})

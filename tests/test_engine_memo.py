@@ -80,13 +80,13 @@ def test_validate_corpus_recompiles_an_edited_page_schema(spark, monkeypatch):
         "url string, warc_ts timestamp, text string, lang string",
     )
 
-    def verdicts():
+    def passed_by_url():
         rep = validate_corpus(spark, docs, collect_metrics=False)
         return {r.url: r.passed for r in rep.verdicts.collect()}
 
-    assert verdicts() == {"https://a.example/1": True, "https://a.example/2": False}
+    assert passed_by_url() == {"https://a.example/1": True, "https://a.example/2": False}
     monkeypatch.setitem(PAGE_SCHEMA["properties"]["lang"], "pattern", "^[a-z]{3}$")
-    assert verdicts() == {"https://a.example/1": False, "https://a.example/2": True}
+    assert passed_by_url() == {"https://a.example/1": False, "https://a.example/2": True}
 
 
 RELAUNCH = textwrap.dedent("""

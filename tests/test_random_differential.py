@@ -26,8 +26,7 @@ import pytest
 from jschon_spark.engine import ConstraintEngine
 from jschon_spark.evaluator import Evaluator
 from jschon_spark.fastpath import compile_valid
-from jschon_spark.lowering.columns import CannotLower
-from jschon_spark.lowering.variant import validate_json_column_variant
+from jschon_spark.lowering.keywords import CannotLower
 from jschon_spark.schema.catalog import SchemaCatalog
 
 # Round 6 widened the pools past the Java/Python-agreeing subset:
@@ -270,12 +269,8 @@ def test_variant_matches_batch_seeded_population(spark):
     for s_i in range(N_SCHEMAS):
         schema = _rand_schema(random.Random(2000 + s_i), depth=2)
         compiled = eng.compile(dict(schema), validate_schema=False)
-        try:
-            var = validate_json_column_variant(
-                df, "doc", compiled.schema, compiled.catalog,
-                base_uri=compiled.base_uri,
-            )
-        except CannotLower:
+        var = compiled.apply_json(df, "doc")
+        if compiled.explain()[("apply_json", "doc")]["route"] != "variant":
             continue
         n_lowered += 1
         batch = compiled.apply_json(df, "doc", prefer_variant=False)
@@ -455,12 +450,8 @@ def test_dialect_matrix_seeded_population(spark, tag):
                 f"[{tag}] schema={json.dumps(schema)} "
                 f"doc={json.dumps(p)} fast={got} ev={w}"
             )
-        try:
-            var = validate_json_column_variant(
-                df, "doc", compiled.schema, compiled.catalog,
-                base_uri=compiled.base_uri,
-            )
-        except CannotLower:
+        var = compiled.apply_json(df, "doc")
+        if compiled.explain()[("apply_json", "doc")]["route"] != "variant":
             continue
         n_lowered += 1
         batch = compiled.apply_json(df, "doc", prefer_variant=False)

@@ -26,7 +26,8 @@ def _passed(df):
 
 def _routes(spark, subschema, values, ddl="string"):
     """Evaluator verdicts and the typed, variant and batch routes' for
-    documents ``{"s": v}`` against ``{"properties": {"s": subschema}}``."""
+    documents ``{"s": v}`` against ``{"properties": {"s": subschema}}``,
+    and the route ``apply_typed`` took."""
     schema = {"properties": {"s": subschema}}
     ev = Evaluator(assert_formats=True)
     want = [ev.validate(schema, {"s": v}).valid for v in values]
@@ -39,13 +40,14 @@ def _routes(spark, subschema, values, ddl="string"):
         "variant": _passed(compiled.apply_json(docs, "doc")),
         "batch": _passed(compiled.apply_json(docs, "doc", prefer_variant=False)),
     }
-    return want, got
+    typed_route = compiled.explain()[("apply_typed", f"struct<s:{ddl}>")]["route"]
+    return want, got, typed_route
 
 
 def test_registered_format_reaches_the_batch_workers(spark):
     registry.format_validator("x-even")(lambda v: len(v) % 2 == 0)
     try:
-        want, got = _routes(spark, {"format": "x-even"}, ["ab", "abc", "xy"])
+        want, got, _ = _routes(spark, {"format": "x-even"}, ["ab", "abc", "xy"])
     finally:
         registry.unregister_format("x-even")
     assert want == [True, False, True]
@@ -55,7 +57,7 @@ def test_registered_format_reaches_the_batch_workers(spark):
 def test_custom_keyword_without_column_form_reaches_the_batch_workers(spark):
     registry.custom_keyword("x-notEqual")(lambda x: lambda v: v != x)
     try:
-        want, got = _routes(spark, {"x-notEqual": "c"}, ["a", "b", "c"])
+        want, got, _ = _routes(spark, {"x-notEqual": "c"}, ["a", "b", "c"])
     finally:
         registry.unregister_keyword("x-notEqual")
     assert want == [True, True, False]
@@ -67,7 +69,7 @@ def test_registered_date_overrides_the_builtin_on_every_route(spark, with_column
     column_fn = (lambda c: c == F.lit("today")) if with_column else None
     registry.format_validator("date", column_fn=column_fn)(lambda v: v == "today")
     try:
-        want, got = _routes(spark, {"format": "date"}, ["today", "2024-01-01", "x"])
+        want, got, _ = _routes(spark, {"format": "date"}, ["today", "2024-01-01", "x"])
     finally:
         registry.unregister_format("date")
     assert want == [True, False, False]
@@ -79,8 +81,65 @@ def test_number_typed_format_is_never_skipped(spark):
         "x-nonneg", instance_types=("number",), column_fn=lambda c: c >= 0,
     )(lambda v: v >= 0)
     try:
-        want, got = _routes(spark, {"format": "x-nonneg"}, [1, -1, 0], ddl="bigint")
+        want, got, _ = _routes(spark, {"format": "x-nonneg"}, [1, -1, 0], ddl="bigint")
     finally:
         registry.unregister_format("x-nonneg")
     assert want == [True, False, True]
     assert got == {route: want for route in got}
+
+
+def test_number_keyword_applies_to_integer_columns(spark):
+    """A keyword registered for ("number",) runs on a typed bigint
+    column, as the evaluator runs it on every JSON number."""
+    registry.custom_keyword(
+        "x-pos", instance_types=("number",), column_fn=lambda x, c, dtype: c > 0,
+    )(lambda x: lambda v: v > 0)
+    try:
+        want, got, typed_route = _routes(spark, {"x-pos": True}, [1, -1], ddl="bigint")
+    finally:
+        registry.unregister_keyword("x-pos")
+    assert want == [True, False]
+    assert got == {route: want for route in got}
+    assert typed_route == "typed"
+
+
+def test_custom_keyword_skips_null_items_on_typed_arrays(spark):
+    """A JSON null array item is not a number: the evaluator skips the
+    keyword there, and so must the typed route."""
+    registry.custom_keyword(
+        "x-pos", instance_types=("number",), column_fn=lambda x, c, dtype: c > 0,
+    )(lambda x: lambda v: v > 0)
+    try:
+        want, got, typed_route = _routes(
+            spark, {"items": {"x-pos": True}}, [[1.0, None], [-1.0, None]],
+            ddl="array<double>")
+    finally:
+        registry.unregister_keyword("x-pos")
+    assert want == [True, False]
+    assert got == {route: want for route in got}
+    assert typed_route == "typed"
+
+
+def test_custom_keyword_on_null_runs_on_batch(spark):
+    """A keyword that applies to JSON null sees a value no typed or
+    variant Column holds apart from an absent one: it runs on batch."""
+    registry.custom_keyword(
+        "x-nn", instance_types=("null", "number"), column_fn=lambda x, c, dtype: c > 0,
+    )(lambda x: lambda v: v is None or v > 0)
+    try:
+        want, got, typed_route = _routes(spark, {"x-nn": True}, [1, -1, None], ddl="bigint")
+    finally:
+        registry.unregister_keyword("x-nn")
+    assert want == [True, False, True]
+    assert got == {route: want for route in got}
+    assert typed_route == "batch"
+
+
+@pytest.mark.parametrize("register", [registry.custom_keyword, registry.format_validator])
+def test_instance_types_must_be_json_types(register):
+    """The name "integer" is a `type` test, never an instance's JSON
+    type: an entry naming it would never apply in the evaluator."""
+    with pytest.raises(ValueError, match="integer"):
+        register("x-int", instance_types=("integer",))
+    assert "x-int" not in registry.KEYWORD_REGISTRY
+    assert "x-int" not in registry.FORMAT_REGISTRY

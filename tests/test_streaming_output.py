@@ -9,10 +9,7 @@ from jschon_spark.engine import ConstraintEngine
 from jschon_spark.output import basic, create_output, flag
 from jschon_spark.pipeline import PAGE_DOC_COLS, PAGE_SCHEMA
 from jschon_spark.sources.webpages import generate_webpages
-from jschon_spark.streaming.validate import (
-    validate_stream,
-    windowed_verdicts,
-)
+from jschon_spark.streaming.validate import windowed_verdicts
 
 
 @pytest.fixture(scope="module")
@@ -117,7 +114,7 @@ def test_streaming_validation_memory_sink(spark, tmp_path):
     stream = spark.readStream.schema(schema).parquet(src)
     eng = ConstraintEngine(assert_formats=True)
     compiled = eng.compile(PAGE_SCHEMA)
-    validated = validate_stream(compiled, stream, PAGE_DOC_COLS)
+    validated = compiled.apply_typed(stream, PAGE_DOC_COLS)
     rollup = windowed_verdicts(validated, "warc_ts", "24 hours", "48 hours")
 
     q = (

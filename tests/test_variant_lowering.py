@@ -11,8 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from jschon_spark.engine import ConstraintEngine
-from jschon_spark.lowering.columns import CannotLower
-from jschon_spark.lowering.variant import validate_json_column_variant
 
 DOCS = [
     '{"k": 10}', '{"k": -1}', '{"k": 87}', '{"k": 1.5}', '{"k": 25.0}',
@@ -176,6 +174,13 @@ SCHEMAS = [
 ]
 
 
+def _route(compiled, json_col="doc"):
+    """The route ``apply_json`` over ``json_col`` took, and why the
+    variant rung refused (None when it lowered)."""
+    r = compiled.explain()[("apply_json", json_col)]
+    return r["route"], r["refused"].get("variant")
+
+
 @pytest.fixture(scope="module")
 def docs_df(spark):
     return spark.createDataFrame([(d,) for d in DOCS], "doc string").cache()
@@ -185,12 +190,8 @@ def docs_df(spark):
 def test_variant_matches_batch(spark, docs_df, schema):
     eng = ConstraintEngine()
     compiled = eng.compile(schema if isinstance(schema, bool) else dict(schema))
-    try:
-        var = validate_json_column_variant(
-            docs_df, "doc", compiled.schema, compiled.catalog,
-            base_uri=compiled.base_uri,
-        )
-    except CannotLower:
+    var = compiled.apply_json(docs_df, "doc")
+    if _route(compiled)[0] != "variant":
         pytest.skip("outside variant subset")
     batch = compiled.apply_json(docs_df, "doc", prefer_variant=False)
 
@@ -228,26 +229,25 @@ def test_nested_schema_and_arrays_stay_variant(spark, docs_df):
     eng = ConstraintEngine()
     nested = {"properties": {"a": {"properties": {"b": {"type": "integer"}}}}}
     compiled = eng.compile(nested)
-    out_v = validate_json_column_variant(
-        docs_df, "doc", compiled.schema, compiled.catalog
-    )
+    out_v = compiled.apply_json(docs_df, "doc")
+    assert _route(compiled) == ("variant", None)
     got = {r.doc: r.passed for r in out_v.collect()}
     assert got['{"a": {"nested": 1}}'] is True
     assert got['{"a": 5}'] is True  # properties vacuous on non-object
 
     arrays = {"items": {"type": "integer"}}
     compiled2 = eng.compile(arrays)
-    out_a = validate_json_column_variant(
-        docs_df, "doc", compiled2.schema, compiled2.catalog
-    )
+    out_a = compiled2.apply_json(docs_df, "doc")
+    assert _route(compiled2) == ("variant", None)
     got2 = {r.doc: r.passed for r in out_a.collect()}
     assert got2["[1, 2]"] is True and got2['"plain"'] is True
     assert got2['[1, "x"]'] is False
 
     tuple_items = {"items": [{"type": "integer"}]}  # 2019-09 form
     compiled3 = eng.compile(tuple_items, validate_schema=False)
-    with pytest.raises(CannotLower):
-        validate_json_column_variant(docs_df, "doc", compiled3.schema, compiled3.catalog)
+    compiled3.apply_json(docs_df, "doc")
+    route, reason = _route(compiled3)
+    assert route == "batch" and "tuple items" in reason, reason
 
 
 def test_variant_random_schema_sweep(spark, docs_df):
@@ -287,12 +287,8 @@ def test_variant_random_schema_sweep(spark, docs_df):
     for _ in range(60):
         schema = rand_schema()
         compiled = eng.compile(schema if isinstance(schema, bool) else dict(schema))
-        try:
-            v_df = validate_json_column_variant(
-                docs_df, "doc", compiled.schema, compiled.catalog,
-                base_uri=compiled.base_uri,
-            )
-        except CannotLower:
+        v_df = compiled.apply_json(docs_df, "doc")
+        if _route(compiled)[0] != "variant":
             continue
         lowered += 1
         got = [r.passed for r in v_df.select("passed").collect()]
@@ -322,11 +318,9 @@ def test_big_float_bound_falls_back_to_exact_batch(spark):
     schema = {"properties": {"k": {"exclusiveMinimum": 1e20}}}
     eng = ConstraintEngine()
     compiled = eng.compile(schema)
-    with pytest.raises(CannotLower):
-        validate_json_column_variant(
-            docs, "doc", compiled.schema, compiled.catalog
-        )
     got = {r.doc: r.passed for r in compiled.apply_json(docs, "doc").collect()}
+    route, reason = _route(compiled)
+    assert route == "batch" and "beyond decimal(38,18)" in reason, reason
     assert got['{"k": 100000000000000000001}'] is True
     assert got['{"k": 100000000000000000000}'] is False  # equals the bound
     assert got['{"k": 99999999999999999999}'] is False
@@ -340,10 +334,8 @@ def test_non_string_schema_keyword_tolerated(spark, docs_df):
     schema = {"$schema": 5, "type": "integer"}
     eng = ConstraintEngine()
     compiled = eng.compile(dict(schema), validate_schema=False)
-    var = validate_json_column_variant(
-        docs_df, "doc", compiled.schema, compiled.catalog,
-        base_uri=compiled.base_uri,
-    )
+    var = compiled.apply_json(docs_df, "doc")
+    assert _route(compiled) == ("variant", None)
     batch = compiled.apply_json(docs_df, "doc", prefer_variant=False)
     vmap = {r.doc: r.passed for r in var.collect()}
     bmap = {r.doc: r.passed for r in batch.collect()}
@@ -352,10 +344,8 @@ def test_non_string_schema_keyword_tolerated(spark, docs_df):
 
     nested = {"properties": {"k": {"$schema": 7, "type": "integer"}}}
     compiled2 = eng.compile(dict(nested), validate_schema=False)
-    var2 = validate_json_column_variant(
-        docs_df, "doc", compiled2.schema, compiled2.catalog,
-        base_uri=compiled2.base_uri,
-    )
+    var2 = compiled2.apply_json(docs_df, "doc")
+    assert _route(compiled2) == ("variant", None)
     batch2 = compiled2.apply_json(docs_df, "doc", prefer_variant=False)
     assert (
         {r.doc: r.passed for r in var2.collect()}
@@ -376,10 +366,8 @@ def test_static_dynamic_ref_lowers_on_variant(spark, docs_df):
     }
     eng = ConstraintEngine()
     compiled = eng.compile(schema)
-    var = validate_json_column_variant(
-        docs_df, "doc", compiled.schema, compiled.catalog,
-        base_uri=compiled.base_uri,
-    )  # must NOT raise CannotLower
+    var = compiled.apply_json(docs_df, "doc")
+    assert _route(compiled) == ("variant", None)  # must NOT refuse
     batch = compiled.apply_json(docs_df, "doc", prefer_variant=False)
     vmap = {r.doc: r for r in var.select("doc", "passed", "violations").collect()}
     bmap = {r.doc: r for r in batch.select("doc", "passed", "violations").collect()}
@@ -410,13 +398,10 @@ def test_genuine_dynamic_ref_falls_back_on_variant(spark, docs_df):
     }
     eng = ConstraintEngine()
     compiled = eng.compile(schema)
-    with pytest.raises(CannotLower):
-        validate_json_column_variant(
-            docs_df, "doc", compiled.schema, compiled.catalog,
-            base_uri=compiled.base_uri,
-        )
-    # engine-level call transparently falls back
+    # the engine refuses the variant rung and falls back to batch
     out = compiled.apply_json(docs_df, "doc")
+    route, reason = _route(compiled)
+    assert route == "batch" and "rebinds dynamically" in reason, reason
     assert out.count() == len(DOCS)
 
 
@@ -431,12 +416,9 @@ def test_cyclic_recursive_ref_falls_back_on_variant(spark, docs_df):
     }
     eng = ConstraintEngine()
     compiled = eng.compile(schema)
-    with pytest.raises(CannotLower):
-        validate_json_column_variant(
-            docs_df, "doc", compiled.schema, compiled.catalog,
-            base_uri=compiled.base_uri,
-        )
     out = compiled.apply_json(docs_df, "doc")
+    route, reason = _route(compiled)
+    assert route == "batch" and "cyclic $recursiveRef" in reason, reason
     assert out.count() == len(DOCS)
 
 
@@ -488,15 +470,10 @@ def test_unevaluated_items_gated_lowering(spark, lowers, schema):
     df = spark.createDataFrame([(d,) for d in UEI_DOCS], "doc string")
     eng = ConstraintEngine()
     compiled = eng.compile(dict(schema), validate_schema=False)
-    try:
-        var = validate_json_column_variant(
-            df, "doc", compiled.schema, compiled.catalog,
-            base_uri=compiled.base_uri,
-        )
-    except CannotLower:
+    var = compiled.apply_json(df, "doc")
+    if _route(compiled)[0] != "variant":
         assert not lowers, f"expected {schema} to lower"
-        out = compiled.apply_json(df, "doc")  # engine falls back
-        assert out.count() == len(UEI_DOCS)
+        assert var.count() == len(UEI_DOCS)  # the engine fell back
         return
     assert lowers, f"expected {schema} to fall back"
     batch = compiled.apply_json(df, "doc", prefer_variant=False)
