@@ -38,8 +38,9 @@ _STOP = {
 
 
 def _shingle_ctes(where: str = "") -> str:
-    """Shared DuckDB CTEs reproducing dedup.word_shingles exactly:
-    normalize → whitespace tokens → distinct 3-word shingles."""
+    """Shared DuckDB CTEs reproducing the dedup pipelines' shingles
+    (``dedup.shingles_from_tokens`` over ``tokens(normalized(text))``)
+    exactly: normalize → whitespace tokens → distinct 3-word shingles."""
     return rf"""
         base AS (
           SELECT doc_id,

@@ -40,35 +40,59 @@ def _parse_bytes(v: str) -> int:
     return int(float(s)) * mult
 
 
+def _input_files(df: DataFrame) -> list[str]:
+    try:
+        return df.inputFiles()
+    except Exception:
+        return []
+
+
+def _total_bytes(files: list[str]) -> int | None:
+    """Summed size of the files, or None when one cannot be stat'ed
+    from the driver (a remote store, or a vanished file)."""
+    total = 0
+    for uri in files:
+        parsed = urlparse(uri)
+        if parsed.scheme not in ("file", ""):
+            return None
+        try:
+            total += os.path.getsize(unquote(parsed.path))
+        except OSError:
+            return None
+    return total
+
+
+def fits_broadcast(df: DataFrame) -> bool:
+    """True when ``df`` is a file-backed plan whose scanned file bytes
+    are known and at most ``spark.sql.autoBroadcastJoinThreshold``
+    (never when that threshold is -1)."""
+    files = _input_files(df)
+    total = _total_bytes(files) if files else None
+    if total is None:
+        return False
+    limit = df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    return total <= _parse_bytes(limit)
+
+
 def estimated_scan_splits(df: DataFrame) -> int | None:
     """Estimated number of scan splits for a file-backed plan, or None
     when the plan is not file-backed (in-memory relation, post-shuffle
     stage) — in which case the caller should NOT repartition: such
     plans already carry their parent's parallelism."""
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
+    files = _input_files(df)
     if not files:
         return None
+    total = _total_bytes(files)
+    if total is None:
+        # remote store: can't stat from the driver cheaply; the file
+        # count is a lower bound on splits (splittable big files only
+        # add more)
+        return len(files)
     spark = df.sparkSession
     try:
         mpb = _parse_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes"))
     except Exception:
         mpb = _DEFAULT_MAX_PARTITION_BYTES
-    total = 0
-    for uri in files:
-        parsed = urlparse(uri)
-        if parsed.scheme in ("file", ""):
-            try:
-                total += os.path.getsize(unquote(parsed.path))
-            except OSError:
-                return len(files)
-        else:
-            # remote store: can't stat from the driver cheaply; the
-            # file count is a lower bound on splits (splittable big
-            # files only add more)
-            return len(files)
     return max(len(files), -(-total // mpb))
 
 

@@ -3,6 +3,11 @@
 Everything stays JVM-side: shingling, hashing, signatures and banding
 are built-in higher-order array functions (``transform`` /
 ``aggregate`` / ``zip_with``), so the per-row path never enters Python.
+Each wide hash expression (MinHash signature and bands, SimHash counts
+and signature) has one builder, which emits SQL text for a single
+``F.expr``: the same tree built from Column objects costs hundreds of
+py4j round-trips per call. The two MinHash entry points share one
+pipeline body and differ only in their hashes.
 
 Scale notes
 -----------
@@ -12,9 +17,9 @@ Scale notes
   the band-bucket self-join, whose size is controlled by (bands, rows)
   — candidates are verified with exact Jaccard before being reported,
   so false positives cost compute, never correctness.
-* SimHash: 64-bit signature by pure Column algebra; near-dup candidate
-  generation joins on 16-bit chunks (pigeonhole: hamming ≤ 3 implies
-  one of 4 chunks equal).
+* SimHash: 64-bit signature by array algebra over per-token hashes;
+  near-dup candidate generation joins on 16-bit chunks (pigeonhole:
+  hamming ≤ 3 implies one of 4 chunks equal).
 """
 
 from __future__ import annotations
@@ -69,31 +74,11 @@ def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     )
 
 
-def word_shingles(col: Column, n: int = 3) -> Column:
-    """Distinct n-word shingles of the normalized text (array<string>).
-
-    Convenience form over a raw text column — pipelines that build
-    shingles for EVERY row should materialize the token array first
-    and call ``shingles_from_tokens`` (see the minhash pipeline)."""
-    return shingles_from_tokens(tokens(normalized(col)), n)
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 64) -> Column:
-    """MinHash signature: per seed, the min xxhash64(shingle, seed)."""
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(shingles, lambda s: F.xxhash64(s, F.lit(i)))
-            )
-            for i in range(num_hashes)
-        ]
-    )
-
-
 def _minhash_sig_sql(sh_col: str, num_hashes: int, portable: bool) -> str:
-    """SQL text replaying minhash_signature (xxhash64) or the portable
-    md5 signature — same functions per element, bit-identical; one
-    py4j round-trip instead of ~6 per hash (round 7)."""
+    """SQL text for the MinHash signature of a shingle array: per seed
+    ``i``, the min of ``xxhash64(s, i)`` over the shingles, or (portable)
+    of ``md5('i|' || s)`` under string order. One py4j round-trip where
+    the same tree built from Columns costs ~6 per hash (round 7)."""
     if portable:
         mins = ", ".join(
             f"array_min(transform({sh_col}, s -> md5(concat('{i}|', s))))"
@@ -109,9 +94,9 @@ def _minhash_sig_sql(sh_col: str, num_hashes: int, portable: bool) -> str:
 
 def _band_structs_sql(sig_col: str, bands: int, rows_per_band: int,
                       portable: bool) -> str:
-    """SQL text for the exploded (band, bucket) array — replays the
-    Column banding expressions exactly (xxhash64 over the
-    comma-joined stringified slice, or md5 over the |-joined slice)."""
+    """SQL text for the (band, bucket) array to explode: per band, the
+    xxhash64 of the comma-joined stringified signature slice, or
+    (portable) the md5 of the |-joined slice."""
     structs = []
     for b in range(bands):
         off = b * rows_per_band + 1
@@ -134,6 +119,90 @@ def jaccard(a: Column, b: Column) -> Column:
     inter = F.size(F.array_intersect(a, b))
     union = F.size(F.array_union(a, b))
     return F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(1.0))
+
+
+def _drop_hot_buckets(
+    df: DataFrame, keys: tuple[str, ...], cap: int | None
+) -> DataFrame:
+    """Rows of LSH buckets (``keys``) holding at most ``cap`` rows; all
+    rows when ``cap`` is None. A window count over the SAME exchange
+    the bucket self-join needs, not a separate aggregate + join: that
+    shape cost an extra full pass over the banded rows (rounds 5-6: it
+    made the capped xxhash SimHash 3x slower than the uncapped md5 one
+    at sf0.1, and recomputed the embedding bucket projection), while
+    the window's sort also pre-sorts the join keys, so the self-join
+    runs exchange-free on the reused shuffle."""
+    if cap is None:
+        return df
+    return (
+        df.withColumn("__bn", F.count(F.lit(1)).over(Window.partitionBy(*keys)))
+        .filter(F.col("__bn") <= cap)
+        .drop("__bn")
+    )
+
+
+def _minhash_pairs(
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int,
+    num_hashes: int, bands: int, threshold: float,
+    max_bucket_size: int | None, portable: bool,
+) -> DataFrame:
+    """The MinHash + LSH pipeline behind both public variants; only the
+    hashes (``portable``) and the hot-bucket cap differ."""
+    rows_per_band = num_hashes // bands
+    base = _partitions.fan_out(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t")))
+    # materialize tokens, then shingles, in separate pinned projections
+    # — the slice lambda then indexes a bound array instead of
+    # re-splitting the text per shingle (O(k^2) -> O(k), _hof.py)
+    base = base.select(
+        "id", fence(tokens(normalized(F.col("__t")))).alias("__tk")
+    ).select(
+        "id", fence(shingles_from_tokens(F.col("__tk"), shingle_n)).alias("sh")
+    ).withColumn(
+        # SQL text in one py4j round-trip (round 7, see _minhash_sig_sql)
+        "sig", F.expr(_minhash_sig_sql("sh", num_hashes, portable))
+    )
+    # the signature relation feeds three branches (banding + both sides
+    # of the verify join); without persist each branch would recompute
+    # num_hashes passes over every shingle array
+    base = base.persist()
+    _cachereg.track(
+        "minhash_near_duplicates_portable" if portable
+        else "minhash_near_duplicates",
+        base,
+    )
+
+    # Shuffle economics: the band self-join and the dedup move ONLY
+    # (id, band, bucket) — never the shingle arrays. Shingles rejoin
+    # once per UNIQUE candidate pair for the exact-Jaccard verify.
+    banded = base.select(
+        "id",
+        F.explode(
+            F.expr(_band_structs_sql("sig", bands, rows_per_band, portable))
+        ).alias("bb"),
+    ).select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+
+    banded = _drop_hot_buckets(banded, ("band", "bucket"), max_bucket_size)
+    l, r = banded.alias("l"), banded.alias("r")
+    cand = (
+        l.join(
+            r,
+            (F.col("l.band") == F.col("r.band"))
+            & (F.col("l.bucket") == F.col("r.bucket"))
+            & (F.col("l.id") < F.col("r.id")),
+        )
+        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
+        .dropDuplicates(["id_a", "id_b"])
+    )
+    shingles = base.select("id", "sh")
+    a = shingles.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
+    b = shingles.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
+    return (
+        cand.join(a, "id_a")
+        .join(b, "id_b")
+        .withColumn("jaccard", jaccard(F.col("sh_a"), F.col("sh_b")))
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
 
 
 def minhash_near_duplicates(
@@ -159,70 +228,8 @@ def minhash_near_duplicates(
     Output: id_a, id_b (id_a < id_b), jaccard:double — pairs with
     true n-gram Jaccard ≥ threshold that collided in ≥1 LSH band.
     """
-    rows_per_band = num_hashes // bands
-    base = _partitions.fan_out(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t")))
-    # materialize tokens, then shingles, in separate pinned projections
-    # — the slice lambda then indexes a bound array instead of
-    # re-splitting the text per shingle (O(k^2) -> O(k), _hof.py)
-    base = base.select(
-        "id", fence(tokens(normalized(F.col("__t")))).alias("__tk")
-    ).select(
-        "id", fence(shingles_from_tokens(F.col("__tk"), shingle_n)).alias("sh")
-    ).withColumn(
-        # SQL text in one py4j round-trip (bit-identical — round 7,
-        # see _minhash_sig_sql)
-        "sig", F.expr(_minhash_sig_sql("sh", num_hashes, portable=False))
-    )
-    # the signature relation feeds three branches (banding + both sides
-    # of the verify join); without persist each branch would recompute
-    # num_hashes passes over every shingle array
-    base = base.persist()
-    _cachereg.track("minhash_near_duplicates", base)
-
-    # Shuffle economics: the band self-join and the dedup move ONLY
-    # (id, band, bucket) — never the shingle arrays. Shingles rejoin
-    # once per UNIQUE candidate pair for the exact-Jaccard verify.
-    banded = base.select(
-        "id",
-        F.explode(
-            F.expr(_band_structs_sql("sig", bands, rows_per_band, False))
-        ).alias("bb"),
-    ).select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-
-    if max_bucket_size is not None:
-        # window count over the SAME (band,bucket) exchange the
-        # self-join below needs — no separate aggregate + join (the
-        # round-5 shape cost an extra full pass over the banded rows;
-        # the window's sort also pre-sorts the join keys, so the
-        # self-join runs exchange-free on the reused shuffle)
-        wb = Window.partitionBy("band", "bucket")
-        banded = (
-            banded.withColumn("__bn", F.count(F.lit(1)).over(wb))
-            .filter(F.col("__bn") <= max_bucket_size)
-            .drop("__bn")
-        )
-    left = banded.alias("l")
-    right = banded.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    shingles = base.select("id", "sh")
-    a = shingles.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = shingles.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("jaccard", jaccard(F.col("sh_a"), F.col("sh_b")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _minhash_pairs(df, id_col, text_col, shingle_n, num_hashes,
+                          bands, threshold, max_bucket_size, portable=False)
 
 
 def minhash_near_duplicates_portable(
@@ -241,53 +248,14 @@ def minhash_near_duplicates_portable(
     order and the band bucket is ``md5(signature-slice joined by '|')``
     — every step is reproducible in any SQL engine with ``md5``, so an
     external oracle (DuckDB) can replay the *entire* LSH pipeline and
-    value-check the output. xxhash64 (the default variant) is faster;
+    value-check the output. It runs uncapped (no hot-bucket window), as
+    the oracle models it. xxhash64 (the default variant) is faster;
     this one is the verifiable twin.
 
     Output: id_a, id_b (id_a < id_b), jaccard:double ≥ threshold.
     """
-    rows_per_band = num_hashes // bands
-    base = _partitions.fan_out(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t")))
-    # materialize tokens, then shingles, in separate pinned projections
-    # — the slice lambda then indexes a bound array instead of
-    # re-splitting the text per shingle (O(k^2) -> O(k), _hof.py)
-    base = base.select(
-        "id", fence(tokens(normalized(F.col("__t")))).alias("__tk")
-    ).select(
-        "id", fence(shingles_from_tokens(F.col("__tk"), shingle_n)).alias("sh")
-    ).withColumn(
-        # SQL text in one py4j round-trip (bit-identical — round 7)
-        "sig", F.expr(_minhash_sig_sql("sh", num_hashes, portable=True))
-    )
-    base = base.persist()
-    _cachereg.track("minhash_near_duplicates_portable", base)
-    banded = base.select(
-        "id",
-        F.explode(
-            F.expr(_band_structs_sql("sig", bands, rows_per_band, True))
-        ).alias("bb"),
-    ).select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    l, r = banded.alias("l"), banded.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    shingles = base.select("id", "sh")
-    a = shingles.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = shingles.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("jaccard", jaccard(F.col("sh_a"), F.col("sh_b")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _minhash_pairs(df, id_col, text_col, shingle_n, num_hashes,
+                          bands, threshold, None, portable=True)
 
 
 def ngram_jaccard_pairs(
@@ -324,69 +292,28 @@ def md5_hash60(t: Column) -> Column:
     return F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("bigint")
 
 
-def simhash_counts(col: Column, bits: int = 64, hash_fn=None) -> Column:
-    """Per-bit ±1 sums over the whitespace tokens (array<bigint>[bits]).
-
-    Per token: xxhash64 → ±1 per bit; sum per bit over tokens. Pure
-    aggregate/zip_with Column algebra, fuses into the scan.
-    """
-    toks = tokens(normalized(col))
-    # hash each token ONCE, then fold; the per-bit ±1 vector shifts the
-    # precomputed hash (bit positions are compile-time ints — shift
-    # counts must be static; and no CSE happens inside lambdas, so
-    # hashing inside the bit loop would cost 64 hashes per token)
-    hashes = F.transform(toks, hash_fn or (lambda t: F.xxhash64(t)))
-    counts = F.aggregate(
-        hashes,
-        F.expr(f"array_repeat(0L, {bits})"),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    (F.shiftright(h, i).bitwiseAND(F.lit(1)) * 2 - 1).cast("bigint")
-                    for i in range(bits)
-                ]
-            ),
-            lambda a, b: a + b,
-        ),
-    )
-    return counts
-
-
-def simhash_from_counts(counts: Column, bits: int = 64) -> Column:
-    """Fold per-bit sums into the signature (sign of each sum → bit).
-
-    Pass a *materialized column* (not the raw counts expression) so the
-    64 element_at references share one evaluation.
-    """
-    sig = F.lit(0).cast("bigint")
-    for i in range(bits):
-        bit = F.when(
-            F.element_at(counts, i + 1) > 0,
-            F.shiftleft(F.lit(1).cast("bigint"), i),
-        ).otherwise(F.lit(0).cast("bigint"))
-        sig = sig.bitwiseOR(bit)
-    return sig
-
-
 def _token_hash_sql(hash_fn):
-    """SQL text factory for the per-token hash, or None when hash_fn
-    is a custom callable the SQL fast path cannot mirror."""
+    """SQL text factory for the per-token hash: xxhash64 for ``None``,
+    the portable 60-bit md5 hash for :func:`md5_hash60`."""
     if hash_fn is None:
         return lambda t: f"xxhash64({t})"
     if hash_fn is md5_hash60:
         return (
             lambda t: f"CAST(conv(substring(md5({t}), 1, 15), 16, 10) AS BIGINT)"
         )
-    return None
+    raise ValueError(
+        f"hash_fn must be None (xxhash64) or dedup.md5_hash60, got {hash_fn!r}"
+    )
 
 
 def _simhash_counts_sql(col_sql: str, bits: int, hash_sql) -> str:
-    """SQL text replaying simhash_counts(tokens(normalized(col)))
-    exactly — same functions, same fold order, bit-identical. Built as
-    ONE string because the Column form costs ~750 py4j round-trips
-    (~1.1s of driver time per call, round 7 — same rationale as
-    similarity.lsh_bucket's F.expr fast path)."""
+    """SQL text for the per-bit ±1 sums over the whitespace tokens of
+    the normalized text (array<bigint>[bits]): each token is hashed
+    ONCE, then folded — the per-bit ±1 vector shifts the precomputed
+    hash (no CSE happens inside lambdas, so hashing inside the bit loop
+    would cost ``bits`` hashes per token). Built as ONE string because
+    the same tree from Columns costs ~750 py4j round-trips (~1.1s of
+    driver time per call, round 7)."""
     toks = (
         f"filter(split(regexp_replace(lower(trim({col_sql})), '\\\\s+', ' '),"
         f" '\\\\s+'), x -> x != '')"
@@ -403,8 +330,8 @@ def _simhash_counts_sql(col_sql: str, bits: int, hash_sql) -> str:
 
 
 def _simhash_sig_sql(counts_col: str, bits: int) -> str:
-    """SQL text replaying simhash_from_counts (left-assoc OR fold from
-    0L, same CASE/shift per bit — bit-identical)."""
+    """SQL text folding the per-bit sums into the signature: the sign
+    of each sum sets its bit (left-assoc OR fold from 0L)."""
     sig = "CAST(0 AS BIGINT)"
     for i in range(bits):
         bit = (
@@ -423,23 +350,17 @@ def with_simhash(
     """Add a SimHash column in two projections (counts, then
     signature) so the aggregate is evaluated once per row.
 
-    For the two stock hashes (xxhash64, md5_hash60) the whole
-    expression is built as SQL text in one py4j round-trip (values
-    bit-identical — see _simhash_counts_sql); a custom ``hash_fn``
-    callable falls back to the Column builders."""
+    ``hash_fn`` is the per-token hash: ``None`` for xxhash64 or
+    :func:`md5_hash60` for the engine-portable variant; anything else
+    raises ``ValueError``. The expression is built as SQL text in one
+    py4j round-trip (see _simhash_counts_sql)."""
     hash_sql = _token_hash_sql(hash_fn)
-    if hash_sql is not None:
-        return (
-            df.withColumn(
-                "__sh_counts",
-                F.expr(_simhash_counts_sql(f"`{text_col}`", bits, hash_sql)),
-            )
-            .withColumn(out_col, F.expr(_simhash_sig_sql("__sh_counts", bits)))
-            .drop("__sh_counts")
-        )
     return (
-        df.withColumn("__sh_counts", simhash_counts(F.col(text_col), bits, hash_fn))
-        .withColumn(out_col, simhash_from_counts(F.col("__sh_counts"), bits))
+        df.withColumn(
+            "__sh_counts",
+            F.expr(_simhash_counts_sql(f"`{text_col}`", bits, hash_sql)),
+        )
+        .withColumn(out_col, F.expr(_simhash_sig_sql("__sh_counts", bits)))
         .drop("__sh_counts")
     )
 
@@ -490,17 +411,7 @@ def simhash_near_duplicates(
             )
         ).alias("c"),
     ).select("id", "sig", F.col("c.chunk").alias("chunk"), F.col("c.val").alias("val"))
-    if max_bucket_size is not None:
-        # window count on the self-join's own (chunk,val) exchange —
-        # see minhash_near_duplicates above (round-6 perf fix; the
-        # old aggregate+join shape made the capped xxhash path 3x
-        # slower than the UNCAPPED md5 twin at sf0.1)
-        wb = Window.partitionBy("chunk", "val")
-        chunked = (
-            chunked.withColumn("__bn", F.count(F.lit(1)).over(wb))
-            .filter(F.col("__bn") <= max_bucket_size)
-            .drop("__bn")
-        )
+    chunked = _drop_hot_buckets(chunked, ("chunk", "val"), max_bucket_size)
     l, r = chunked.alias("l"), chunked.alias("r")
     return (
         l.join(
@@ -918,24 +829,18 @@ def dedup_against_corpus(
             return fp
         return F.shiftrightunsigned(fp, start).bitwiseAND(F.lit((1 << w) - 1))
 
-    n_ex = nfp.select(
-        "__nid2", "__fp",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(b).alias("b"), banded(F.col("__fp"), b).alias("k"))
-                for b in range(bands)
-            ])
-        ).alias("bk"),
-    ).select("__nid2", "__fp", F.col("bk.b").alias("__b"), F.col("bk.k").alias("__k"))
-    c_ex = cfp.select(
-        "__cfp",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(b).alias("b"), banded(F.col("__cfp"), b).alias("k"))
-                for b in range(bands)
-            ])
-        ).alias("bk"),
-    ).select("__cfp", F.col("bk.b").alias("__b"), F.col("bk.k").alias("__k"))
+    def exploded(frame: DataFrame, *cols: str) -> DataFrame:
+        # one row per (band, key) of the fingerprint, the last of cols
+        keys = F.array(*[
+            F.struct(F.lit(b).alias("b"), banded(F.col(cols[-1]), b).alias("k"))
+            for b in range(bands)
+        ])
+        return frame.select(*cols, F.explode(keys).alias("bk")).select(
+            *cols, F.col("bk.b").alias("__b"), F.col("bk.k").alias("__k")
+        )
+
+    n_ex = exploded(nfp, "__nid2", "__fp")
+    c_ex = exploded(cfp, "__cfp")
     near = (
         n_ex.join(c_ex, ["__b", "__k"])
         .filter(

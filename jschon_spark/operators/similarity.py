@@ -3,7 +3,12 @@
 Brute-force cosine top-k as the exact baseline; LSH (random-hyperplane)
 bucketed variant as the scale path — both pure DataFrame ops. Dot
 products use ``zip_with`` + ``aggregate`` with float64 accumulation
-(JVM-side, codegen'd); no Python per row.
+(JVM-side); no Python per row. Each vector expression has one builder:
+:func:`dot` / :func:`l2_norm` / :func:`cosine` as Columns over two
+vector columns, and, where a vector meets many seeded hyperplanes or
+centroids, SQL text that folds them into one nested-array literal
+(:func:`_array_sql`) indexed by a loop — one LSH bucket builder
+(:func:`_bucket_sql`) for ``lsh_topk`` and ``embedding_near_duplicates``.
 
 Scale notes
 -----------
@@ -11,6 +16,8 @@ Brute force broadcasts the (small) query set: the corpus is scanned
 once, never shuffled. The LSH variant hashes both sides into sign-bit
 buckets from ``n_planes`` fixed random hyperplanes; only same-bucket
 pairs are scored, trading recall for a shuffle bounded by bucket sizes.
+``brute_force_pairs`` pins a broadcast only while its input's files fit
+under ``spark.sql.autoBroadcastJoinThreshold``.
 """
 
 from __future__ import annotations
@@ -22,25 +29,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from jschon_spark.operators import _cachereg, _partitions
+from jschon_spark.operators import _cachereg, _partitions, dedup
 
 
-def dot(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Float64 dot product. With ``dim`` known, the fold is UNROLLED
-    into a flat multiply-add chain over ``element_at`` references —
-    higher-order functions are evaluated interpreted (outside
-    whole-stage codegen), so the unrolled form is ~10x faster in
-    pair-verify loops. Identical left-to-right fold order starting at
-    0.0, so the result is bit-identical to the aggregate form on
-    fixed-``dim`` arrays (round 7, guide §4.1: prefer codegen'd
-    built-ins over interpreted per-element dispatch)."""
-    if dim is not None:
-        acc = F.lit(0.0)
-        for i in range(1, dim + 1):
-            acc = acc + F.element_at(a, i).cast("double") * F.element_at(
-                b, i
-            ).cast("double")
-        return acc
+def dot(a: Column, b: Column) -> Column:
+    """Float64 dot product: ``zip_with`` products folded left to right
+    from 0.0 by ``aggregate``."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -48,13 +42,7 @@ def dot(a: Column, b: Column, dim: int | None = None) -> Column:
     )
 
 
-def l2_norm(a: Column, dim: int | None = None) -> Column:
-    if dim is not None:
-        acc = F.lit(0.0)
-        for i in range(1, dim + 1):
-            x = F.element_at(a, i).cast("double")
-            acc = acc + x * x
-        return F.sqrt(acc)
+def l2_norm(a: Column) -> Column:
     return F.sqrt(
         F.aggregate(
             F.transform(a, lambda x: x.cast("double") * x.cast("double")),
@@ -64,11 +52,22 @@ def l2_norm(a: Column, dim: int | None = None) -> Column:
     )
 
 
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
+def cosine(a: Column, b: Column) -> Column:
     # zero vectors have undefined cosine -> NULL (never a divide-by-zero
     # error under ANSI mode; filters then exclude the pair)
-    denom = l2_norm(a, dim) * l2_norm(b, dim)
-    return F.when(denom > 0, dot(a, b, dim) / denom)
+    denom = l2_norm(a) * l2_norm(b)
+    return F.when(denom > 0, dot(a, b) / denom)
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The ``k`` highest-``cos`` rows per query (ties to the lower
+    vec_id): query_id, vec_id, cos:double, rank:int (1-based)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "vec_id", "cos", "rank")
+    )
 
 
 def brute_force_topk(
@@ -78,10 +77,8 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact cosine top-k per query. Queries broadcast; corpus scanned once.
-    Pass ``dim`` when known to unroll the cosine (see :func:`dot`).
 
     Output: query_id, vec_id, cos:double, rank:int (1-based).
     """
@@ -93,12 +90,7 @@ def brute_force_topk(
     scored = corpus.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__cv")
     ).crossJoin(q).withColumn("cos", cosine(F.col("__cv"), F.col("__qv")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos", "rank")
-    )
+    return _top_k(scored, k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -108,26 +100,19 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     ]
 
 
-def _dot_sql(vec_sql: str, values: list[float]) -> str:
-    """SQL text for dot(vec, literal array) — same zip_with/aggregate
-    fold (left-to-right, double) as :func:`dot`, bit-identical.
-
-    Deliberately NOT unrolled (round 7): this helper is instantiated
-    once per hyperplane/centroid (48 copies in an 8-table hash), so a
-    64-term flat tree here multiplies ANALYSIS/codegen cost into the
-    tens of seconds, while the per-row evaluation it feeds is linear
-    and cheap. Unrolling pays only in per-PAIR verify loops — see
-    :func:`dot`'s ``dim`` path."""
-    arr = ", ".join(f"{float(x)!r}D" for x in values)
-    return (
-        f"aggregate(zip_with({vec_sql}, array({arr}), "
-        f"(x, y) -> CAST(x AS DOUBLE) * y), 0.0D, (acc, v) -> acc + v)"
-    )
+def _array_sql(values: list) -> str:
+    """SQL text for a (nested) array literal of doubles, at full
+    precision. Foldable: ConstantFolding collapses it into ONE Literal,
+    so a loop indexing it with ``element_at`` keeps the plan small
+    where one inlined subtree per row of ``values`` would not."""
+    if values and isinstance(values[0], (list, tuple)):
+        return "array(" + ", ".join(_array_sql(v) for v in values) + ")"
+    return "array(" + ", ".join(f"{float(x)!r}D" for x in values) + ")"
 
 
 def _l2_norm_sql(vec_sql: str) -> str:
-    """SQL text for :func:`l2_norm`'s aggregate form — same
-    transform/aggregate fold, bit-identical."""
+    """SQL text for :func:`l2_norm` — same transform/aggregate fold,
+    bit-identical."""
     return (
         f"sqrt(aggregate(transform({vec_sql}, "
         f"x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
@@ -135,29 +120,27 @@ def _l2_norm_sql(vec_sql: str) -> str:
     )
 
 
-def lsh_bucket(vec: Column | str, planes: list[list[float]]) -> Column:
-    """Sign-bit bucket id from fixed random hyperplanes (deterministic).
+def _bucket_sql(vec: str, tables: list[list[list[float]]], t: str) -> str:
+    """SQL text for the sign-bit LSH bucket of the vector column
+    ``vec`` under hyperplane table ``t`` (a 1-based SQL int: a literal,
+    or the lambda variable ``t`` of a loop over the tables): bit i is
+    set when the vector's dot product with plane i is >= 0.
 
-    Pass the vector column NAME for the fast path: the whole bucket is
-    built as ONE ``F.expr`` SQL string (one py4j round-trip). Building
-    the same tree with Column operators costs one round-trip per plane
-    element (~3ms each — measured 4s of DRIVER time per 8-table hash,
-    dominating the whole query at test scale). Values are identical;
-    the Column form remains for composed expressions."""
-    if isinstance(vec, str):
-        bits = [
-            "shiftleft(CAST(CASE WHEN "
-            + _dot_sql(vec, p)
-            + f" >= 0 THEN 1 ELSE 0 END AS BIGINT), {i})"
-            for i, p in enumerate(planes)
-        ]
-        return F.expr(" | ".join(bits))
-    bucket = F.lit(0).cast("bigint")
-    for i, p in enumerate(planes):
-        plane = F.lit([float(x) for x in p])
-        bit = F.when(dot(vec, plane) >= 0, F.lit(1)).otherwise(F.lit(0)).cast("bigint")
-        bucket = bucket.bitwiseOR(F.shiftleft(bit, i))
-    return bucket
+    The tables fold to one nested-array literal indexed by a loop over
+    the planes instead of one inlined dot subtree per plane (round 7),
+    cutting plan construction, analysis and the per-task deserialize
+    of every stage that reads the bucket. The dot product folds like
+    :func:`dot`. ``vec`` must not be a name the lambdas bind (``t``,
+    ``acc``, ``p``, ``x``, ``y``, ``a2``, ``v2``): alias the column
+    first."""
+    assert all(len(p) == len(tables[0]) for p in tables), "ragged plane tables"
+    return (
+        f"aggregate(sequence(1, {len(tables[0])}), 0L, (acc, p) -> acc | "
+        f"shiftleft(CAST(CASE WHEN "
+        f"aggregate(zip_with({vec}, element_at(element_at({_array_sql(tables)}, {t}), p), "
+        f"(x, y) -> CAST(x AS DOUBLE) * y), 0.0D, (a2, v2) -> a2 + v2) "
+        f">= 0 THEN 1 ELSE 0 END AS BIGINT), p - 1))"
+    )
 
 
 def lsh_topk(
@@ -173,28 +156,26 @@ def lsh_topk(
 ) -> DataFrame:
     """Approximate top-k: only corpus vectors in the query's LSH bucket
     are scored. Output schema matches brute_force_topk."""
-    planes = _hyperplanes(dim, n_planes, seed)
+    tables = [_hyperplanes(dim, n_planes, seed)]
+
+    def bucket(vec: str) -> Column:
+        # never NULL (a NULL vector sets no bit), but an aggregate is
+        # typed nullable: the coalesce keeps the join from inferring an
+        # isnotnull filter that would evaluate the bucket twice per row
+        return F.expr(f"coalesce({_bucket_sql(vec, tables, '1')}, 0L)")
+
     c = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("__cv"),
-        lsh_bucket(vec_col, planes).alias("__bucket"),
-    )
+        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__cv")
+    ).withColumn("__bucket", bucket("__cv"))
     q = F.broadcast(
         queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(vec_col).alias("__qv"),
-            lsh_bucket(vec_col, planes).alias("__bucket"),
-        )
+            F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qv")
+        ).withColumn("__bucket", bucket("__qv"))
     )
     scored = c.join(q, "__bucket").withColumn(
         "cos", cosine(F.col("__cv"), F.col("__qv"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos", "rank")
-    )
+    return _top_k(scored, k)
 
 
 def ivf_index(
@@ -240,8 +221,6 @@ def ivf_topk(
     """Approximate top-k with an IVF index: score only the ``n_probe``
     inverted lists nearest each query. Output matches brute_force_topk.
     """
-    import math
-
     assigned, centroids = ivf_index(corpus, n_lists, id_col, vec_col, seed)
     assigned = assigned.persist()
     _cachereg.track("ivf_topk", assigned)
@@ -271,12 +250,7 @@ def ivf_topk(
     scored = assigned.join(F.broadcast(probe), "__list").withColumn(
         "cos", cosine(F.col("__cv"), F.col("__qv"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos", "rank")
-    )
+    return _top_k(scored, k)
 
 
 def seeded_centroids(dim: int, n_lists: int, seed: int = 7) -> list[list[float]]:
@@ -289,42 +263,6 @@ def seeded_centroids(dim: int, n_lists: int, seed: int = 7) -> list[list[float]]
     hyperplanes in ``lsh_topk``."""
     rng = random.Random(seed)
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_lists)]
-
-
-def _sq_dist_sql(vec_sql: str, centroid: list[float]) -> str:
-    # NOT unrolled — instantiated once per centroid (and twice in
-    # assign_list's argmin), so flat 64-term trees blow up planning;
-    # see _dot_sql's round-7 note
-    arr = ", ".join(f"{float(x)!r}D" for x in centroid)
-    return (
-        f"aggregate(zip_with({vec_sql}, array({arr}), "
-        f"(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
-        f"0.0D, (acc, v) -> acc + v)"
-    )
-
-
-def _sq_dist(vec: Column | str, centroid: list[float]) -> Column:
-    if isinstance(vec, str):
-        return F.expr(_sq_dist_sql(vec, centroid))
-    c = F.lit([float(x) for x in centroid])
-    return F.aggregate(
-        F.zip_with(vec, c, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def assign_list(vec: Column | str, centroids: list[list[float]]) -> Column:
-    """0-based nearest-centroid list id (first minimum wins on ties).
-    Pass the column NAME for the one-round-trip F.expr fast path
-    (see lsh_bucket)."""
-    if isinstance(vec, str):
-        ds = ", ".join(_sq_dist_sql(vec, c) for c in centroids)
-        return F.expr(
-            f"CAST(array_position(array({ds}), array_min(array({ds}))) - 1 AS INT)"
-        )
-    dists = F.array(*[_sq_dist(vec, c) for c in centroids])
-    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
 
 
 def ivf_topk_seeded(
@@ -342,35 +280,35 @@ def ivf_topk_seeded(
     """IVF top-k over seeded deterministic centroids (oracle-replayable).
 
     The corpus is scanned once: each vector is assigned to its nearest
-    inverted list JVM-side (16 unrolled squared-distance aggregates,
-    no Python). The tiny query side expands to its ``n_probe`` nearest
-    lists and BROADCASTS onto the corpus — the corpus never shuffles;
+    inverted list JVM-side (one loop of ``n_lists`` squared-distance
+    aggregates over a folded centroid literal, no Python). The tiny
+    query side expands to its ``n_probe`` nearest lists and BROADCASTS
+    onto the corpus — the corpus never shuffles;
     at 100 TB the scan cost dominates and only ``n_probe/n_lists`` of
     candidates are scored. Output matches brute_force_topk.
     """
     centroids = seeded_centroids(dim, n_lists, seed)
     # Two stacked Projects over a FOLDED centroid literal (round 7,
-    # same shape as semantic_dedup's assignment): assign_list's single
-    # expression instantiates the 16-distance array twice
-    # (array_position + array_min) and HOF aggregates evaluate outside
-    # codegen subexpression elimination, so materializing __d once
-    # halves the per-row assignment work; the centroids fold to one
-    # nested-array Literal indexed by a transform(sequence()) loop,
-    # shrinking the plan ~50x (construction + per-task deserialize).
-    # The zip_with fold order matches _sq_dist_sql exactly —
-    # bit-identical distances. fan_out: a tiny single-file corpus
-    # otherwise runs ALL interpreted distance aggregates in one scan
-    # task; no-op at scale.
-    cent_lit = "array(" + ", ".join(
-        "array(" + ", ".join(f"{float(x)!r}D" for x in cent) + ")"
-        for cent in centroids
-    ) + ")"
-    d_sql = (
-        f"transform(sequence(1, {len(centroids)}), i -> "
-        f"aggregate(zip_with(__cv, element_at({cent_lit}, i), "
-        f"(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
-        f"0.0D, (acc, v) -> acc + v))"
-    )
+    # same shape as semantic_dedup's assignment): one expression using
+    # the distance array in both array_position and array_min would
+    # build it twice, and HOF aggregates evaluate outside codegen
+    # subexpression elimination, so materializing __d once halves the
+    # per-row assignment work; the centroids fold to one nested-array
+    # Literal indexed by a transform(sequence()) loop, shrinking the
+    # plan ~50x (construction + per-task deserialize). fan_out: a tiny
+    # single-file corpus otherwise runs ALL interpreted distance
+    # aggregates in one scan task; no-op at scale.
+    cent_lit = _array_sql(centroids)
+
+    def sq_dist(vec: str) -> str:
+        # squared L2 distance from vec to centroid i (loop variable)
+        return (
+            f"aggregate(zip_with({vec}, element_at({cent_lit}, i), "
+            f"(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
+            f"0.0D, (acc, v) -> acc + v)"
+        )
+
+    d_sql = f"transform(sequence(1, {len(centroids)}), i -> {sq_dist('__cv')})"
     c = (
         _partitions.fan_out(corpus)
         .select(
@@ -402,11 +340,7 @@ def ivf_topk_seeded(
     # distances are bit-identical)
     dists = F.expr(
         f"transform(sequence(1, {len(centroids)}), i -> "
-        f"named_struct('d', "
-        f"aggregate(zip_with(__qv, element_at({cent_lit}, i), "
-        f"(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
-        f"0.0D, (acc, v) -> acc + v), "
-        f"'li', CAST(i - 1 AS INT)))"
+        f"named_struct('d', {sq_dist('__qv')}, 'li', CAST(i - 1 AS INT)))"
     )
     q = (
         queries.select(
@@ -421,12 +355,7 @@ def ivf_topk_seeded(
     scored = c.join(F.broadcast(q), "__list").withColumn(
         "cos", cosine(F.col("__cv"), F.col("__qv"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos", "rank")
-    )
+    return _top_k(scored, k)
 
 
 def brute_force_pairs(
@@ -476,10 +405,11 @@ def brute_force_pairs(
     # a tiny single-file corpus otherwise scores every pair in ONE
     # task. Without the hint AQE was observed to build the FANNED-OUT
     # side (BuildLeft) and stream the single-partition scan — back to
-    # one task. No-op at scale (fan_out only fires on sub-core-count
-    # scans, and this operator is documented sample/test scale).
+    # one task. The hint is kept only while the scan's files fit under
+    # spark.sql.autoBroadcastJoinThreshold; a larger (or unsized) input
+    # leaves the join strategy to Catalyst/AQE.
     l = _partitions.fan_out(base).alias("l")
-    r = F.broadcast(base).alias("r")
+    r = (F.broadcast(base) if _partitions.fits_broadcast(df) else base).alias("r")
     if dim:
         terms = " + ".join(f"(l.__e{i} * r.__e{i})" for i in range(1, dim + 1))
         pair_dot = F.expr(f"0.0D + {terms}")
@@ -508,8 +438,6 @@ def auto_n_planes(
     planes; 10^9 rows → 24 (the ceiling — beyond that recall, not
     bucket occupancy, is the binding constraint and n_tables is the
     knob)."""
-    import math
-
     if n_rows <= target_bucket_size:
         return floor
     return min(ceiling, max(floor, math.ceil(math.log2(n_rows / target_bucket_size))))
@@ -574,28 +502,8 @@ def embedding_near_duplicates(
 
     # One folded 3-level literal ([table][plane][dim]) driven by two
     # nested loops instead of n_tables x n_planes inlined dot subtrees
-    # (round 7): ConstantFolding collapses the foldable nested array
-    # into a single Literal, cutting plan construction, analysis, and
-    # the per-task deserialization every downstream stage of the
-    # persisted relation pays. Fold orders match lsh_bucket exactly
-    # (left-to-right | over planes, dot()'s zip_with/aggregate) — the
-    # buckets are bit-identical. bucket_sql folds len(tables[0]) planes
-    # for every table.
-    assert all(len(p) == len(tables[0]) for p in tables), "ragged plane tables"
-    planes_lit = "array(" + ", ".join(
-        "array(" + ", ".join(
-            "array(" + ", ".join(f"{float(x)!r}D" for x in p) + ")"
-            for p in planes
-        ) + ")"
-        for planes in tables
-    ) + ")"
-    bucket_sql = (
-        f"aggregate(sequence(1, {len(tables[0])}), 0L, (acc, p) -> acc | "
-        f"shiftleft(CAST(CASE WHEN "
-        f"aggregate(zip_with(v, element_at(element_at({planes_lit}, t), p), "
-        f"(x, y) -> CAST(x AS DOUBLE) * y), 0.0D, (a2, v2) -> a2 + v2) "
-        f">= 0 THEN 1 ELSE 0 END AS BIGINT), p - 1))"
-    )
+    # (round 7; see _bucket_sql).
+    bucket_sql = _bucket_sql("v", tables, "t")
     hashed = base.select(
         "id",
         F.expr(
@@ -607,19 +515,7 @@ def embedding_near_duplicates(
     # computation is n_tables×n_planes higher-order-function dot
     # products per row (interpreted, not codegen'd) — persist so it
     # runs once per row, not twice
-    if max_bucket_size is not None:
-        # window count over the (tbl,bucket) exchange instead of a
-        # separate aggregate + join: the old shape recomputed the
-        # interpreted HOF bucket projection for the sizes branch
-        # (it read `hashed` BEFORE the persist below) — round 6
-        from pyspark.sql import Window
-
-        wb = Window.partitionBy("tbl", "bucket")
-        hashed = (
-            hashed.withColumn("__bn", F.count(F.lit(1)).over(wb))
-            .filter(F.col("__bn") <= max_bucket_size)
-            .drop("__bn")
-        )
+    hashed = dedup._drop_hot_buckets(hashed, ("tbl", "bucket"), max_bucket_size)
     hashed = hashed.persist()
     _cachereg.track("embedding_near_duplicates_hashed", hashed)
     l, r = hashed.alias("l"), hashed.alias("r")
@@ -678,7 +574,7 @@ def semantic_dedup(
       (:func:`seeded_centroids`) — data-independent, replayable by the
       DuckDB oracle as literals, assignment fully JVM-side on the
       scan. Assignment is argmax COSINE (spherical k-means style, ties
-      -> lowest list id), not :func:`assign_list`'s argmin L2: random
+      -> lowest list id), not :func:`ivf_topk_seeded`'s argmin L2: random
       Gaussian centroids have norm ~sqrt(dim), so L2-nearest collapses
       ~95% of unit-scale embeddings onto the smallest-norm centroid
       (measured on the test corpus: 472/500 in one list) — fatal when
@@ -712,8 +608,6 @@ def semantic_dedup(
     ``id_col, list_id:int, group_id (smallest reachable id; NULL for
     non-duplicates), keep:boolean``.
     """
-    from jschon_spark.operators import dedup as _dedup
-
     # tiny single-file corpora otherwise run the whole assignment
     # projection (and the first pair-verify stage feeding it) in one
     # task; no-op at scale
@@ -814,11 +708,8 @@ def semantic_dedup(
         #   so every cosine is bit-identical to the old tree (verified
         #   0 differing rows on the full sf0.1 projection).
         vec_sql = f"`{vec_col}`"
-        cent_lit = "array(" + ", ".join(
-            "array(" + ", ".join(f"{float(x)!r}D" for x in c) + ")"
-            for c in centroids
-        ) + ")"
-        cnorm_lit = "array(" + ", ".join(f"{float(nc)!r}D" for nc in cnorms) + ")"
+        cent_lit = _array_sql(centroids)
+        cnorm_lit = _array_sql(cnorms)
         cs_sql = (
             f"transform(sequence(1, {len(centroids)}), i -> "
             f"CASE WHEN __nrm > 0.0D THEN "
@@ -893,7 +784,7 @@ def semantic_dedup(
         .filter(pair_cos >= threshold)
         .select("id_a", "id_b")
     )
-    groups = _dedup.duplicate_clusters(pairs)
+    groups = dedup.duplicate_clusters(pairs)
     # representative window over duplicate-group MEMBERS only (AQE
     # broadcasts the small side; no forced hint — member count is
     # data-dependent)

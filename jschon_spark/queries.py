@@ -191,7 +191,7 @@ def knn_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    out = similarity.brute_force_topk(emb, queries, k=5, dim=64)
+    out = similarity.brute_force_topk(emb, queries, k=5)
     return out.select("query_id", "vec_id", "rank")
 
 

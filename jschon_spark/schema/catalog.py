@@ -15,7 +15,7 @@ import json
 import os
 import posixpath
 import re
-from typing import Any
+from typing import Any, Iterator
 from functools import lru_cache
 from urllib.parse import urljoin, urlparse, unquote
 
@@ -31,6 +31,30 @@ class CatalogError(KeyError):
     """Schema/URI resolution failure (reference analogue:
     jschon.catalog.CatalogError). Subclasses KeyError so existing
     callers catching the old convention keep working."""
+
+
+def subschemas(node: dict) -> Iterator[tuple[str, dict]]:
+    """(pointer suffix, child) for every object a schema walk descends
+    into: dict values and dict list items of any keyword, except the
+    data keywords ``enum``/``const``/``default``/``examples``. Under the
+    name->schema maps (``properties``, ``$defs``, ...) member NAMES are
+    data, so a property named ``default`` is still a subschema."""
+    for key, val in node.items():
+        if key in ("enum", "const", "default", "examples"):
+            continue
+        if key in (
+            "properties", "patternProperties", "dependentSchemas",
+            "$defs", "definitions",
+        ) and isinstance(val, dict):
+            for name, sub in val.items():
+                if isinstance(sub, dict):
+                    yield f"/{key}/{name}", sub
+        elif isinstance(val, dict):
+            yield f"/{key}", val
+        elif isinstance(val, list):
+            for i, item in enumerate(val):
+                if isinstance(item, dict):
+                    yield f"/{key}/{i}", item
 
 
 # base of anonymous registrations: a hierarchical scheme, so
@@ -271,25 +295,8 @@ class SchemaCatalog:
             self._anchors.setdefault(f"{base}#{name}", node)
         if node.get("$recursiveAnchor") is True and self._resources.get(base) is node:
             self._recursive_anchors.add(base)
-        for key, val in node.items():
-            if key in ("enum", "const", "default", "examples"):
-                continue
-            if key in (
-                "properties", "patternProperties", "dependentSchemas",
-                "$defs", "definitions",
-            ) and isinstance(val, dict):
-                # name->schema maps: member NAMES are data, so the skip
-                # list above must not apply to them (a $defs entry named
-                # "default" is a schema and may carry anchors)
-                for sub in val.values():
-                    self._walk_register(sub, base)
-                continue
-            if isinstance(val, dict):
-                self._walk_register(val, base)
-            elif isinstance(val, list):
-                for item in val:
-                    if isinstance(item, (dict,)):
-                        self._walk_register(item, base)
+        for _, sub in subschemas(node):
+            self._walk_register(sub, base)
 
     # -- resolution -------------------------------------------------------
     def resolve(self, ref: str, base_uri: str) -> tuple[Schema, str]:
@@ -359,22 +366,8 @@ class SchemaCatalog:
                     except CatalogError:
                         continue
                     walk(t, tb)
-            for key, val in node.items():
-                if key in ("enum", "const", "default", "examples"):
-                    continue
-                if key in (
-                    "properties", "patternProperties", "dependentSchemas",
-                    "$defs", "definitions",
-                ) and isinstance(val, dict):
-                    for sub in val.values():
-                        walk(sub, base)
-                    continue
-                if isinstance(val, dict):
-                    walk(val, base)
-                elif isinstance(val, list):
-                    for item in val:
-                        if isinstance(item, dict):
-                            walk(item, base)
+            for _, sub in subschemas(node):
+                walk(sub, base)
 
         walk(schema, base_uri)
 

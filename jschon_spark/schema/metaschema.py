@@ -16,6 +16,8 @@ from __future__ import annotations
 
 from typing import Any
 
+from jschon_spark.schema.catalog import subschemas
+
 _TYPE_NAME = {
     "enum": ["null", "boolean", "number", "string", "array", "object", "integer"]
 }
@@ -208,11 +210,6 @@ def _ids_with_fragments(schema: Any, path: str = "") -> list[tuple[str, str]]:
         v = schema.get("$id")
         if isinstance(v, str) and "#" in v:
             out.append((path, v))
-        for k, sub in schema.items():
-            if isinstance(sub, (dict, list)) and k not in ("enum", "const", "default", "examples"):
-                out.extend(_ids_with_fragments(sub, f"{path}/{k}"))
-    elif isinstance(schema, list):
-        for i, sub in enumerate(schema):
-            if isinstance(sub, (dict, list)):
-                out.extend(_ids_with_fragments(sub, f"{path}/{i}"))
+        for suffix, sub in subschemas(schema):
+            out.extend(_ids_with_fragments(sub, path + suffix))
     return out

@@ -17,7 +17,16 @@ checkouts then diff line by line, which shows whether a change to the
 lowering left its plans byte-identical.
 
     python scripts/lowering_plans.py dump OUT.jsonl
+    python scripts/lowering_plans.py queries OUT.jsonl SF_DIR
     python scripts/lowering_plans.py diff A.jsonl B.jsonl
+
+``queries OUT.jsonl SF_DIR`` dumps the declared queries instead: one
+line per ``__spark_entry__.queries()`` entry, built over the scale
+directory ``SF_DIR`` (the one holding the tables' parquet files), with
+its normalized optimized plan; the paths of the temporary directories
+some queries create are normalized too, so two dumps of one checkout
+diff empty. Building a query runs the jobs its construction needs
+(counts, small collects), not the query itself.
 
 ``batch OUT.jsonl`` dumps the Arrow batch route instead, driver-only
 with no Spark: for each (schema, instance) over the conformance corpus,
@@ -38,6 +47,7 @@ import os
 import random
 import re
 import sys
+import tempfile
 
 sys.path.insert(0, os.getcwd())
 
@@ -198,6 +208,28 @@ def dump(out_path: str) -> None:
     spark.stop()
 
 
+_TMP_DIR = re.compile(re.escape(tempfile.gettempdir()) + r"/[^\s,\]\)/]+")
+_PLAN_ID = re.compile(r"plan_id=\d+")
+
+
+def queries(out_path: str, sf_dir: str) -> None:
+    import __spark_entry__ as entry
+    from jschon_spark.session import get_spark
+
+    spark = get_spark(cores=2)
+    with open(out_path, "w") as out:
+        for name, build in entry.queries().items():
+            try:
+                df = build(spark, sf_dir)
+                text = normalize(df._jdf.queryExecution().optimizedPlan().toString())
+                rec = {"route": "built",
+                       "plan": _PLAN_ID.sub("plan_id=#", _TMP_DIR.sub("<tmp>", text))}
+            except Exception as e:  # noqa: BLE001 - recorded, not hidden
+                rec = {"route": f"error: {type(e).__name__}: {e}"[:300]}
+            out.write(json.dumps({"id": name, **rec}, sort_keys=True) + "\n")
+    spark.stop()
+
+
 def _batch_inputs():
     """(name, schema, instances, assert_formats) of the batch dump."""
     from jschon_spark.conformance_corpus import FORMAT_CASES, all_cases
@@ -292,6 +324,8 @@ def diff(a_path: str, b_path: str) -> int:
 if __name__ == "__main__":
     if len(sys.argv) == 3 and sys.argv[1] == "dump":
         dump(sys.argv[2])
+    elif len(sys.argv) == 4 and sys.argv[1] == "queries":
+        queries(sys.argv[2], sys.argv[3])
     elif len(sys.argv) == 3 and sys.argv[1] == "batch":
         batch(sys.argv[2])
     elif len(sys.argv) == 4 and sys.argv[1] == "diff":

@@ -113,6 +113,14 @@ def test_draft_next_id_forbids_fragments():
     }
     with pytest.raises(SchemaError):
         validate_schema_document(next_schema)
+    # property NAMES are data: a property named like a data keyword is
+    # still a subschema whose $id is checked
+    for name in ("default", "enum", "other"):
+        with pytest.raises(SchemaError):
+            validate_schema_document({
+                "$schema": "https://json-schema.org/draft/next/schema",
+                "properties": {name: {"$id": "https://example.org/x#frag"}},
+            })
     # same document under 2020-12: empty fragment is legal
     ok = {
         "$schema": "https://json-schema.org/draft/2020-12/schema",

@@ -283,6 +283,37 @@ def test_brute_force_pairs(spark):
     assert all(p.cos >= 0.95 for p in pairs)
 
 
+def test_brute_force_pairs_broadcast_respects_threshold(spark, tmp_path):
+    """The broadcast hint is kept only while the input's files fit under
+    spark.sql.autoBroadcastJoinThreshold: with the threshold at -1 the
+    pair join has no BroadcastExchange, and the pairs are unchanged."""
+    import numpy as np
+
+    rng = np.random.RandomState(3)
+    centers = rng.randn(6, 8)
+    rows = [(i, [float(x) for x in centers[i % 6] + 0.01 * rng.randn(8)])
+            for i in range(36)]
+    path = str(tmp_path / "emb")
+    spark.createDataFrame(rows, "vec_id long, embedding array<float>").write.parquet(path)
+
+    def run():
+        df = similarity.brute_force_pairs(spark.read.parquet(path), min_cos=0.9, dim=8)
+        pairs = sorted((r.id_a, r.id_b) for r in df.collect())
+        return pairs, df._jdf.queryExecution().executedPlan().toString()
+
+    pairs, plan = run()
+    assert pairs and "BroadcastExchange" in plan
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    default = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        guarded, plan = run()
+    finally:
+        spark.conf.set(key, default)
+    assert "BroadcastExchange" not in plan
+    assert guarded == pairs
+
+
 def test_ivf_topk_seeded_finds_self(spark):
     import numpy as np
     from jschon_spark.operators.similarity import ivf_topk_seeded
@@ -1181,6 +1212,14 @@ def test_nfc_features_unicode(spark):
     assert got[3].nfc_changed is False
     assert (got[4].nfc_md5, got[4].n_chars_nfc, got[4].nfc_changed) == (None, None, None)
     assert got[5].nfc_changed is False and got[5].n_chars_nfc == 3
+
+
+def test_with_simhash_rejects_other_hash_fn(spark):
+    """Only the two stock token hashes have a SimHash builder; any other
+    callable is refused instead of silently building something else."""
+    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="md5_hash60"):
+        dedup.with_simhash(df, "text", hash_fn=lambda c: c)
 
 
 def test_dedup_against_corpus_pigeonhole_recall(spark):
