@@ -11,6 +11,8 @@ What the typed node adds to the walker's keyword semantics:
   is known at compile time, so wrong-typed keywords are never emitted
   and wrong-typed enum/const fold to constants before Catalyst ever
   sees them.
+* numbers take the walker's one numeric rule, folded where the static
+  kind (bigint or double) makes a plain compare or modulus exact.
 * NULL convention: a NULL **struct field** is an *absent* property
   (``properties`` then doesn't apply, ``required`` fails); a NULL
   **array element** or **map value** is JSON ``null``.
@@ -35,11 +37,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from jschon_spark.lowering.keywords import (
+    DEC18,
     VIOLATION_DDL,
     CannotLower,
     _EMPTY_ARR,
     _check,
-    dec18_exact,
+    is_integral,
+    is_number,
+    native_members,
+    number_equals,
 )
 
 # a typed timestamp or date as a JSON string: TypedNode.string on the
@@ -106,10 +112,6 @@ class TypedNode:
         ):
             raise CannotLower("object lowering needs string map keys")
         self.json_t = spark_json_type(self.dtype)
-        if self.json_t == "array" and isinstance(schema.get("items"), list):
-            # 2019-09 tuple items stay on the batch evaluator: no typed
-            # differential covers them yet (the variant path has one)
-            raise CannotLower("tuple items on a typed array -> batch")
 
     def may_be(self, json_t: str) -> bool:
         if json_t == "number":
@@ -142,11 +144,7 @@ class TypedNode:
     def type_pred(self, wanted: list) -> Column:
         json_t = self.json_t
         if json_t == "number" and "integer" in wanted and "number" not in wanted:
-            # fmod, not floor: floor(double) yields BIGINT, which under
-            # ANSI mode ERRORS past 2^63 (1e30 IS an integer); fmod is
-            # exact at any magnitude and sign-preserving (-1e-20 % 1 =
-            # -1e-20, not integer)
-            pred = (self.col % F.lit(1.0)) == 0
+            pred = is_integral(self)
         elif json_t in ("integer", "number"):
             # a float column *may* hold whole values: integer acceptance
             # is the runtime branch above
@@ -159,9 +157,13 @@ class TypedNode:
     def enum_pred(self, values: list) -> Column:
         if self.json_t not in ("string", "number", "integer", "boolean"):
             raise CannotLower(f"enum over {self.json_t} column requires batch evaluator")
-        # compatible members are scalars (None included) for these types
+        # compatible members are scalars (None included) for these
+        # types; the ones the column compares exactly share one IN list
         scalars = [v for v in values if _enum_compatible(v, self.json_t)]
-        pred = self.col.isin(*scalars) if scalars else F.lit(False)
+        listed, rest = native_members(self, scalars)
+        pred = self.col.isin(*listed) if listed else F.lit(False)
+        for v in rest:
+            pred = pred | number_equals(self, v)
         if any(v is None for v in values):
             pred = pred | self.col.isNull()
         return pred
@@ -177,48 +179,23 @@ class TypedNode:
             # false would not even analyze; found by the round-4 random
             # differential)
             return F.lit(False)
+        if is_number(c):
+            return number_equals(self, c)
         return self.col == F.lit(c)
 
-    # -- numbers -------------------------------------------------------------------
-    def multiple_of(self, m) -> Column:
-        col = self.col
-        if isinstance(m, int) and self.json_t == "integer":
-            return col % F.lit(m) == 0
-        # exact decimal modulus, mirroring Python Decimal math
-        # (reference jschon/vocabulary/validation.py:66-75).
-        # try_cast: ANSI mode errors a plain cast when a double value
-        # overflows decimal(38,12); beyond that magnitude fall back to a
-        # double modulus
-        dec_v = col.try_cast(T.DecimalType(38, 12))
-        dec_ok = (
-            dec_v % F.lit(m).cast(T.DecimalType(38, 12))
-        ) == F.lit(0).cast(T.DecimalType(38, 12))
-        # the decimal tier must ROUND-TRIP the value: a 1e-20 double
-        # casts to a non-NULL 0E-12, which is a multiple of everything.
-        # And %, not pmod, in the fallback — pmod's +m re-add rounds
-        # tiny negatives onto m exactly (fmod is exact, -0.0 == 0)
-        dec_exact = dec_v.isNotNull() & (dec_v.cast(T.DoubleType()) == col)
-        return F.when(dec_exact, dec_ok).otherwise((col % F.lit(float(m))) == 0)
+    # -- numbers: accessors of the rule in keywords.py ------------------------------
+    @property
+    def number_kind(self) -> str:
+        return "bigint" if self.json_t == "integer" else "double"
 
-    def compare(self, op, bound) -> Column:
-        if isinstance(bound, float) and self.json_t == "integer":
-            # long-vs-double comparison coerces the COLUMN to double,
-            # losing precision above 2^53 (10^18-1 < 1e18 must hold;
-            # after coercion they compare equal). Compare in decimal —
-            # 18-dp rounding of the bound is finer than the double gap
-            # everywhere a long is exact, and beyond-long-range bounds
-            # fold to a compile-time constant.
-            if abs(bound) >= 1e19:
-                return F.lit(op(0, bound))
-            if dec18_exact(bound):
-                dec = T.DecimalType(38, 18)
-                return op(self.col.cast(dec), F.lit(bound).cast(dec))
-            # else: bound needs >18dp (tiny magnitudes like 2e-20 would
-            # round to 0E-18) — keep the plain long-vs-double coercion.
-            # Such bounds always have |b| < 1, and rounding a >2^53 long
-            # by 1 ulp (>=2) can never cross a sub-unit bound, so the
-            # double compare stays verdict-exact.
-        return op(self.col, F.lit(bound))
+    @cached_property
+    def dval(self) -> Column:
+        return self.col if isinstance(self.dtype, T.DoubleType) else self.col.cast("double")
+
+    @cached_property
+    def dec18(self) -> Column:
+        # a long always fits decimal(38,18); a double may overflow it
+        return (self.col.cast if self.number_kind == "bigint" else self.col.try_cast)(DEC18)
 
     # -- strings -------------------------------------------------------------------
     def check_string(self, pred: Column, keyword: str, ipath: Column, kpath: str,

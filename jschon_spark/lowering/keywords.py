@@ -21,11 +21,13 @@ value is accessed and tested:
   type is tested at run time with ``schema_of_variant`` tags.
 
 Rules that differ by source are node methods: type tests and gating,
-the decimal tiers of numeric bounds and ``multipleOf``, how array
-elements and object entries are enumerated, and ``unevaluated*``
-coverage (the static coverage algebra below for typed nodes, a
-conservative local gate for variant nodes). Nodes build Columns only
-when a keyword reads them. ``format`` reads the evaluator's own format
+how array elements and object entries are enumerated, and
+``unevaluated*`` coverage (the static coverage algebra below for typed
+nodes, a conservative local gate for variant nodes). Numbers have one
+rule for both nodes, written below (``number_compare``,
+``multiple_of``); a node gives only its value as a double and as a
+decimal and its static number kind. Nodes build Columns only when a
+keyword reads them. ``format`` reads the evaluator's own format
 table (``registry.format_entry``), so both nodes assert exactly the
 formats the batch evaluator does.
 
@@ -36,6 +38,8 @@ the engine then runs the whole schema on the next route of its ladder
 
 from __future__ import annotations
 
+import decimal
+import operator
 import re
 from typing import Any, Callable
 from urllib.parse import urljoin
@@ -101,20 +105,11 @@ def rlike(s: Column, pattern: str, full: bool = False) -> Column:
     return s.rlike("(?d)" + pattern)
 
 
-def dec18_exact(bound: float | int) -> bool:
-    """True iff ``bound`` is exactly representable in decimal(38,18).
-
-    Spark's double->decimal cast takes the shortest repr (=
-    ``Decimal(repr(b))``), so the decimal compare is only faithful when
-    that repr survives quantization to 18 decimal places: a tiny bound
-    like 2e-20 rounds to 0E-18 and would collapse distinct values, and
-    magnitudes >= 1e20 overflow the 20 integer digits. Integer bounds
-    within long range are always exact (scale 0).
-    """
-    import decimal
-
-    if isinstance(bound, int):
-        return abs(bound) < 2 ** 63
+def dec18_exact(bound: float) -> bool:
+    """True iff the float ``bound`` is exact in decimal(38,18). Spark's
+    double->decimal cast takes the shortest repr (``Decimal(repr(b))``),
+    which must survive quantization to 18 places: 2e-20 rounds to 0E-18,
+    and magnitudes >= 1e20 overflow the 20 integer digits."""
     d = decimal.Decimal(repr(bound))
     if not d.is_finite() or abs(d) >= decimal.Decimal(10) ** 20:
         return False
@@ -126,6 +121,124 @@ def dec18_exact(bound: float | int) -> bool:
             return d == d.quantize(decimal.Decimal("1e-18"))
         except decimal.InvalidOperation:
             return False
+
+
+# -- numbers ------------------------------------------------------------------
+# jschon compares numbers exactly (Decimal for multipleOf, exact Python
+# values for bounds and equality); this is the one Column form of that.
+# A node gives ``number_kind`` ("bigint"/"double" for a typed column,
+# "variant" for a value typed at run time), ``dval`` (the value as a
+# double) and ``dec18`` (as decimal(38,18), NULL where it does not fit).
+# The general rule compares in decimal where the value round-trips
+# through it (doubles round integers past 2^53), else in double; folds
+# specialize it only where the kind and the literal make that exact.
+
+DEC18 = "decimal(38,18)"
+
+
+def is_number(x: Any) -> bool:
+    return isinstance(x, (int, float)) and not isinstance(x, bool)
+
+
+def _require_number(x: Any, keyword: str) -> None:
+    if not is_number(x):
+        raise CannotLower(f"non-numeric {keyword} -> batch")
+    if isinstance(x, int) and abs(x) > 2 ** 63 - 1:
+        raise CannotLower(f"integer {keyword} beyond long -> batch")
+
+
+def native_exact(node, x: Any) -> bool:
+    """True where the column's own compare against the literal ``x`` is
+    exact: bigint vs an int in long range, double vs a float or an int
+    up to 2^53, and bigint vs a float below 2^53 (the long widens to
+    double, which rounds it only past 2^53)."""
+    kind = node.number_kind
+    if isinstance(x, int):
+        return abs(x) < 2 ** 63 and (kind == "bigint" or kind == "double" and abs(x) <= 2 ** 53)
+    return kind == "double" or kind == "bigint" and abs(x) < 2 ** 53
+
+
+def native_members(node, members: list) -> tuple[list, list]:
+    """(the enum members one IN list over the column compares exactly:
+    non-numbers and ``native_exact`` numbers, the rest). A float member
+    widens a bigint list to double, so then only |x| < 2^53."""
+    wide = node.number_kind == "bigint" and any(isinstance(x, float) for x in members)
+    ok = [not is_number(x) or native_exact(node, x) and not (wide and abs(x) >= 2 ** 53)
+          for x in members]
+    return [x for x, n in zip(members, ok) if n], [x for x, n in zip(members, ok) if not n]
+
+
+def number_compare(node, op, bound: Any) -> Column:
+    """``op(value, bound)``: the bounds, and enum/const members with
+    ``operator.eq``."""
+    _require_number(bound, "bound")
+    if node.number_kind == "bigint" and isinstance(bound, float):
+        # bounds compare in decimal: 18-dp rounding of the bound is
+        # finer than the double gap everywhere a long is exact. One
+        # needing more than 18dp (2e-20 would round to 0E-18) has
+        # |b| < 1, where the plain compare is exact (native_exact)
+        if abs(bound) >= 1e19:
+            return F.lit(op(0, bound))
+        if op is operator.eq and native_exact(node, bound) or not dec18_exact(bound):
+            return op(node.col, F.lit(bound))
+        return op(node.dec18, F.lit(bound).cast(DEC18))
+    if native_exact(node, bound):
+        return op(node.col, F.lit(bound))
+    dbl = op(node.dval, F.lit(float(bound)))
+    if isinstance(bound, float) and not dec18_exact(bound):
+        if abs(bound) >= 1e20 or bound != bound:
+            # variant docs carry exact >2^53 integers as DECIMAL(38,0)
+            # (10^20+1 vs exclusiveMinimum 1e20), which a double
+            # compare rounds onto the bound: only batch is exact
+            raise CannotLower("float bound beyond decimal(38,18) -> batch")
+        # finer than 1e-18: every route reads such values as doubles
+        return dbl
+    dec = node.dec18
+    # the decimal must ROUND-TRIP the value: a 1e-20 casts to 0E-18
+    exact = dec.isNotNull() & (dec.cast("double") == node.dval)
+    return F.when(exact, op(dec, F.lit(bound).cast(DEC18))).otherwise(dbl)
+
+
+def number_equals(node, x: Any) -> Column:
+    """JSON equality with the number ``x``: 1 == 1.0, exact past 2^53,
+    never equal to a value of another type."""
+    pred = number_compare(node, operator.eq, x)
+    return node.is_type("number") & pred if node.number_kind == "variant" else pred
+
+
+def multiple_of(node, m: Any) -> Column:
+    """``multipleOf m`` in tiers, each decimal one only where the value
+    round-trips through it (1e-20 casts to 0E-12, a multiple of all);
+    try_cast, as ANSI mode errors a plain cast on overflow. (1) A
+    decimal(38,12) modulus, reading the value from ``dec18`` where it
+    fits (through double, ...999 % 2 was 0); 12 places make a parsed
+    19.99 act as Decimal("19.99"). (2) To ~1e36, doubles are integral
+    and cast by shortest repr, so a scale-0 modulus against m at its
+    own scale is exact. (3) Beyond, a double modulus. %, not pmod: pmod
+    adds m back, and -1e-20 + m rounds to m."""
+    _require_number(m, "multipleOf")
+    if isinstance(m, int) and node.number_kind == "bigint":
+        return node.col % F.lit(m) == 0
+    dval = node.dval
+    m_dec = decimal.Decimal(repr(m) if isinstance(m, float) else m)
+    m_scale = max(0, -m_dec.as_tuple().exponent)
+    mval = F.coalesce(node.dec18.try_cast("decimal(38,12)"), dval.try_cast("decimal(38,12)"))
+    branch = F.when(mval.isNotNull() & (mval.cast("double") == dval),
+                    (mval % F.lit(m).cast("decimal(38,12)")) == 0)
+    if m_scale <= 12 and len(m_dec.as_tuple().digits) <= 38 - m_scale:
+        v0 = dval.try_cast("decimal(38,0)")
+        big_guard = (v0.isNotNull() & (v0.cast("double") == dval)
+                     & (F.abs(dval) < F.lit(float(10 ** (36 - m_scale)))))
+        branch = branch.when(
+            big_guard, (v0 % F.lit(float(m)).cast(f"decimal(38,{m_scale})")) == 0)
+    return branch.otherwise((dval % F.lit(float(m))) == 0)
+
+
+def is_integral(node) -> Column:
+    """The ``integer`` test of a number: fmod, exact at any magnitude
+    (floor yields a BIGINT, which ANSI mode errors past 2^63) and
+    sign-preserving (pmod rounds -1e-20 + 1.0 to 1.0)."""
+    return (node.dval % F.lit(1.0)) == 0
 
 
 def _EMPTY_ARR() -> Column:
@@ -170,12 +283,8 @@ def _esc_key(k: Column) -> Column:
 
 _FALSE_MSG = "boolean schema false permits nothing"
 _REFS = ("$ref", "$dynamicRef", "$recursiveRef")
-_BOUNDS = (
-    ("maximum", lambda c, v: c <= v),
-    ("exclusiveMaximum", lambda c, v: c < v),
-    ("minimum", lambda c, v: c >= v),
-    ("exclusiveMinimum", lambda c, v: c > v),
-)
+_BOUNDS = (("maximum", operator.le), ("exclusiveMaximum", operator.lt),
+           ("minimum", operator.ge), ("exclusiveMinimum", operator.gt))
 _BRANCHES = ("anyOf", "oneOf", "if", "then", "else", "dependentSchemas")
 
 # every keyword the walker reads, plus the ones that are inert during
@@ -320,12 +429,12 @@ class KeywordWalker:
         if node.may_be("number"):
             if "multipleOf" in schema:
                 m = schema["multipleOf"]
-                add(*_check(node.guard("number", node.multiple_of(m)), "multipleOf",
+                add(*_check(node.guard("number", multiple_of(node, m)), "multipleOf",
                             ipath, kpath, node.value, f"not a multiple of {m}"))
             for kw, op in _BOUNDS:
                 if kw in schema:
-                    add(*_check(node.guard("number", node.compare(op, schema[kw])), kw,
-                                ipath, kpath, node.value, f"violates {kw} {schema[kw]}"))
+                    add(*_check(node.guard("number", number_compare(node, op, schema[kw])),
+                                kw, ipath, kpath, node.value, f"violates {kw} {schema[kw]}"))
 
         if node.may_be("string"):
             s = node.string
@@ -748,7 +857,8 @@ class KeywordWalker:
         if item:
             if "contains" in schema:
                 raise CannotLower("unevaluatedItems alongside contains -> batch")
-            cov = (len(schema.get("prefixItems", [])), "items" in schema)
+            prefix, _, rest_kw = self.item_keywords(schema)
+            cov = (len(prefix), rest_kw in schema)
         else:
             patterns = set(schema.get("patternProperties", {}))
             if "additionalProperties" in schema:

@@ -25,19 +25,13 @@ annotations at the same level); genuinely dynamic ``$dynamicRef``/
 ``$recursiveRef`` and keywords outside the variant vocabulary raise
 CannotLower → the engine runs the Arrow batch evaluator. Violations match
 the batch evaluator's (keyword, instance_path, keyword_path)
-conventions.
-
-Number comparisons are exact through the tiered decimal(38,18)
-strategy wherever both sides are representable (see ``_num_pred``);
-for tiny float bounds (finer than 1e-18) both this path and the batch
-evaluator round docs through double, so the double compare stays
-verdict-exact, while big-magnitude float bounds (|b| >= 1e20, where
-docs can carry exact >2^53 DECIMAL integers) raise CannotLower and
-take the exact batch path.
+conventions. Numbers follow the one numeric rule of keywords.py; a
+variant value always takes its general, runtime-tiered form.
 """
 
 from __future__ import annotations
 
+import operator
 import re
 from functools import cached_property
 from typing import Any
@@ -46,54 +40,19 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from jschon_spark.lowering.keywords import (
+    DEC18,
     KEYWORDS,
     VIOLATION_DDL,
     CannotLower,
     _EMPTY_ARR,
     _check,
     _violation,
-    dec18_exact,
+    is_integral,
+    number_compare,
+    number_equals,
 )
 
 _KEY_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
-
-
-def _num_pred(v: Column, op, bound) -> Column:
-    """Exact numeric comparison of a variant value against a Python
-    bound, usable on ANY variant Column (HOF lambda variables included).
-
-    The double extraction rounds BIGINT values above 2^53 (10^18-1 <
-    1e18 compared equal), so compare in decimal(38,18) when the bound
-    is exactly representable at 18dp (tiny magnitudes like 2e-20 round
-    to 0E-18; |b| >= 1e20 overflows) AND the value round-trips
-    decimal->double (a 1e-20 doc casts to a non-NULL 0E-18); otherwise
-    the double compare, which is verdict-exact wherever the decimal
-    tier isn't available."""
-    if isinstance(bound, bool) or not isinstance(bound, (int, float)):
-        raise CannotLower("non-numeric bound -> batch")
-    if isinstance(bound, int) and abs(bound) > 2 ** 63 - 1:
-        raise CannotLower("integer bound beyond long -> batch")
-    dval = F.try_variant_get(v, "$", "double")
-    dbl = op(dval, F.lit(float(bound)))
-    if isinstance(bound, float) and not dec18_exact(bound):
-        import decimal as _dec
-
-        d = _dec.Decimal(repr(bound))
-        if not d.is_finite() or abs(d) >= _dec.Decimal(10) ** 20:
-            # big-magnitude float bound: variant docs can carry exact
-            # >2^53 integers as DECIMAL(38,0) (e.g. doc 10^20+1 vs
-            # exclusiveMinimum 1e20) and a double-only compare rounds
-            # them onto the bound — the batch evaluator's exact
-            # int-vs-float compare is the only faithful path
-            raise CannotLower("float bound beyond decimal(38,18) -> batch")
-        # tiny bounds (< 1e-18 resolution): both the variant and the
-        # batch path round such docs through double, so the double
-        # compare is verdict-exact here
-        return dbl
-    decval = F.try_variant_get(v, "$", "decimal(38,18)")
-    b_dec = F.lit(bound).cast("decimal(38,18)")
-    exact_val = decval.isNotNull() & (decval.cast("double") == dval)
-    return F.when(exact_val, op(decval, b_dec)).otherwise(dbl)
 
 
 def _eq_value(v: Column, x: Any) -> Column:
@@ -101,7 +60,8 @@ def _eq_value(v: Column, x: Any) -> Column:
     literal — the compound enum/const lowering. Numeric equality is
     cross-type (1 == 1.0) and exact past 2^53; bools never equal
     numbers (type-tag gated, matching the evaluator's _json_equal)."""
-    sv = F.schema_of_variant(v)
+    node = VariantNode(v)
+    sv = node.tag
     if x is None:
         return sv == "VOID"
     if isinstance(x, bool):
@@ -109,9 +69,8 @@ def _eq_value(v: Column, x: Any) -> Column:
             F.try_variant_get(v, "$", "boolean") == F.lit(x), F.lit(False)
         )
     if isinstance(x, (int, float)):
-        is_num = sv.isin("BIGINT", "DOUBLE", "FLOAT") | sv.startswith("DECIMAL")
-        return is_num & F.coalesce(
-            _num_pred(v, lambda c, b: c == b, x), F.lit(False)
+        return node.is_type("number") & F.coalesce(
+            number_compare(node, operator.eq, x), F.lit(False)
         )
     if isinstance(x, str):
         return (sv == "STRING") & F.coalesce(
@@ -152,6 +111,7 @@ class VariantNode:
 
     dtype = None  # no static Spark type
     fields = None  # the key set is dynamic
+    number_kind = "variant"  # typed at run time
 
     def __init__(self, val: Column, raw: Column | None = None) -> None:
         self.col = val
@@ -185,12 +145,7 @@ class VariantNode:
         if json_t == "number":
             return sv.isin("BIGINT", "DOUBLE", "FLOAT") | sv.startswith("DECIMAL")
         if json_t == "integer":
-            # fmod (%), not floor: floor(double) yields BIGINT, which
-            # overflows past 2^63 (1e30 IS an integer). And %, not pmod:
-            # pmod adds the modulus back, and -1e-20 + 1.0 ROUNDS to 1.0,
-            # misclassifying tiny negatives as integers; fmod is exact
-            # and sign-preserving (-0.0 == 0)
-            return self.is_type("number") & ((self.dval % F.lit(1.0)) == 0)
+            return self.is_type("number") & is_integral(self)
         if json_t == "object":
             return sv.startswith("OBJECT") | (sv == "OBJECT<>")
         if json_t == "array":
@@ -206,6 +161,10 @@ class VariantNode:
     @cached_property
     def dval(self) -> Column:
         return F.try_variant_get(self.col, "$", "double")
+
+    @cached_property
+    def dec18(self) -> Column:
+        return F.try_variant_get(self.col, "$", DEC18)
 
     @cached_property
     def value(self) -> Column:
@@ -229,7 +188,7 @@ class VariantNode:
             return self.is_type("boolean") & (
                 F.try_variant_get(self.col, "$", "boolean") == x)
         if isinstance(x, (int, float)):
-            return self.is_type("number") & _num_pred(self.col, lambda c, b: c == b, x)
+            return number_equals(self, x)
         if isinstance(x, str):
             return self.is_type("string") & (self.value == x)
         # compound member: recursive structural equality
@@ -240,56 +199,6 @@ class VariantNode:
         for x in values:
             pred = pred | self.const_pred(x)
         return pred
-
-    # -- numbers -------------------------------------------------------------------
-    def multiple_of(self, m) -> Column:
-        # 12-dp modulus both sides, value sourced exactly when it fits:
-        # casting through double first would round big ints (…999 % 2
-        # reported 0). The 12-dp rounding itself is deliberate — it
-        # makes double-parsed literals like 19.99 behave as
-        # Decimal("19.99"), matching the evaluator. try_cast: ANSI mode
-        # makes a plain cast ERROR on overflow (a 1e30 doc would kill
-        # the job). Three exactness tiers:
-        # (1) |v| < 1e26: decimal(38,12) modulus;
-        # (2) larger but within decimal range: doubles > 2^53 are
-        #     integral and Spark's double->decimal cast uses
-        #     shortest-repr (same semantics as Python Decimal(repr(x))),
-        #     so a scale-0 modulus against m at its own minimal scale is
-        #     exact — magnitude-guarded so ANSI promotion can't overflow;
-        # (3) beyond that: double modulus, approximate like any engine
-        #     computing on parsed doubles.
-        from decimal import Decimal as _D
-
-        dval = self.dval
-        m_dec = _D(repr(m)) if isinstance(m, float) else _D(m)
-        m_scale = max(0, -m_dec.as_tuple().exponent)
-        mval = F.coalesce(
-            F.try_variant_get(self.col, "$", "decimal(38,18)").try_cast("decimal(38,12)"),
-            dval.try_cast("decimal(38,12)"),
-        )
-        dec_ok = (mval % F.lit(m).cast("decimal(38,12)")) == 0
-        # %, not pmod: pmod adds the modulus back and -1e-20 + m rounds
-        # to m exactly, declaring tiny negatives multiples of anything;
-        # fmod is exact and sign-preserving
-        dbl_ok = (dval % F.lit(float(m))) == 0
-        # each decimal tier must ROUND-TRIP the value (a 1e-20 doc casts
-        # to a non-NULL 0E-12, which is a multiple of everything) —
-        # otherwise fall through to the next tier
-        mval_exact = mval.isNotNull() & (mval.cast("double") == dval)
-        branch = F.when(mval_exact, dec_ok)
-        if m_scale <= 12 and len(m_dec.as_tuple().digits) <= 38 - m_scale:
-            v0 = dval.try_cast("decimal(38,0)")
-            big_guard = (
-                v0.isNotNull()
-                & (v0.cast("double") == dval)
-                & (F.abs(dval) < F.lit(float(10 ** (36 - m_scale))))
-            )
-            big_ok = (v0 % F.lit(float(m)).cast(f"decimal(38,{m_scale})")) == 0
-            branch = branch.when(big_guard, big_ok)
-        return branch.otherwise(dbl_ok)
-
-    def compare(self, op, bound) -> Column:
-        return _num_pred(self.col, op, bound)
 
     def check_string(self, pred: Column, keyword: str, ipath: Column, kpath: str,
                      error: str):

@@ -4,11 +4,12 @@ Brute-force cosine top-k as the exact baseline; LSH (random-hyperplane)
 bucketed variant as the scale path — both pure DataFrame ops. Dot
 products use ``zip_with`` + ``aggregate`` with float64 accumulation
 (JVM-side); no Python per row. Each vector expression has one builder:
-:func:`dot` / :func:`l2_norm` / :func:`cosine` as Columns over two
-vector columns, and, where a vector meets many seeded hyperplanes or
-centroids, SQL text that folds them into one nested-array literal
-(:func:`_array_sql`) indexed by a loop — one LSH bucket builder
-(:func:`_bucket_sql`) for ``lsh_topk`` and ``embedding_near_duplicates``.
+:func:`dot` / :func:`l2_norm` / :func:`cosine` (over a dot product and
+two norms computed once per row) as Columns, and, where a vector meets
+many seeded hyperplanes or centroids, SQL text that folds them into one
+nested-array literal (:func:`_array_sql`) indexed by a loop — one LSH
+bucket builder (:func:`_bucket_sql`) for ``lsh_topk`` and
+``embedding_near_duplicates``.
 
 Scale notes
 -----------
@@ -52,11 +53,20 @@ def l2_norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
+def cosine(ab: Column, na: Column, nb: Column) -> Column:
     # zero vectors have undefined cosine -> NULL (never a divide-by-zero
     # error under ANSI mode; filters then exclude the pair)
-    denom = l2_norm(a) * l2_norm(b)
-    return F.when(denom > 0, dot(a, b) / denom)
+    denom = na * nb
+    return F.when(denom > 0, ab / denom)
+
+
+def _vec(col: str, vec: str, norm: str) -> list[Column]:
+    # a vector and its norm, computed once per row before the pair join
+    return [F.col(col).alias(vec), l2_norm(F.col(col)).alias(norm)]
+
+
+def _candidate_cos() -> Column:
+    return cosine(dot(F.col("__cv"), F.col("__qv")), F.col("__cn"), F.col("__qn"))
 
 
 def _top_k(scored: DataFrame, k: int) -> DataFrame:
@@ -84,12 +94,12 @@ def brute_force_topk(
     """
     q = F.broadcast(
         queries.select(
-            F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qv")
+            F.col(query_id_col).alias("query_id"), *_vec(vec_col, "__qv", "__qn")
         )
     )
     scored = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__cv")
-    ).crossJoin(q).withColumn("cos", cosine(F.col("__cv"), F.col("__qv")))
+        F.col(id_col).alias("vec_id"), *_vec(vec_col, "__cv", "__cn")
+    ).crossJoin(q).withColumn("cos", _candidate_cos())
     return _top_k(scored, k)
 
 
@@ -165,16 +175,14 @@ def lsh_topk(
         return F.expr(f"coalesce({_bucket_sql(vec, tables, '1')}, 0L)")
 
     c = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__cv")
+        F.col(id_col).alias("vec_id"), *_vec(vec_col, "__cv", "__cn")
     ).withColumn("__bucket", bucket("__cv"))
     q = F.broadcast(
         queries.select(
-            F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qv")
+            F.col(query_id_col).alias("query_id"), *_vec(vec_col, "__qv", "__qn")
         ).withColumn("__bucket", bucket("__qv"))
     )
-    scored = c.join(q, "__bucket").withColumn(
-        "cos", cosine(F.col("__cv"), F.col("__qv"))
-    )
+    scored = c.join(q, "__bucket").withColumn("cos", _candidate_cos())
     return _top_k(scored, k)
 
 
@@ -222,7 +230,7 @@ def ivf_topk(
     inverted lists nearest each query. Output matches brute_force_topk.
     """
     assigned, centroids = ivf_index(corpus, n_lists, id_col, vec_col, seed)
-    assigned = assigned.persist()
+    assigned = assigned.withColumn("__cn", l2_norm(F.col("__cv"))).persist()
     _cachereg.track("ivf_topk", assigned)
 
     # probe lists per query: computed driver-side against the tiny
@@ -246,9 +254,9 @@ def ivf_topk(
             for li in nearest_lists(r["__qv"])
         ],
         f"query_id long, __qv array<float>, __list int",
-    )
+    ).withColumn("__qn", l2_norm(F.col("__qv")))
     scored = assigned.join(F.broadcast(probe), "__list").withColumn(
-        "cos", cosine(F.col("__cv"), F.col("__qv"))
+        "cos", _candidate_cos()
     )
     return _top_k(scored, k)
 
@@ -313,12 +321,13 @@ def ivf_topk_seeded(
         _partitions.fan_out(corpus)
         .select(
             F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("__cv"),
+            *_vec(vec_col, "__cv", "__cn"),
         )
-        .select("vec_id", "__cv", F.expr(d_sql).alias("__d"))
+        .select("vec_id", "__cv", "__cn", F.expr(d_sql).alias("__d"))
         .select(
             "vec_id",
             "__cv",
+            "__cn",
             # coalesce(-1) makes __list provably non-nullable, so the
             # inner join below cannot infer an isnotnull(__list)
             # pushdown filter — which duplicated the ENTIRE assignment
@@ -344,17 +353,15 @@ def ivf_topk_seeded(
     )
     q = (
         queries.select(
-            F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("__qv")
+            F.col(query_id_col).alias("query_id"), *_vec(vec_col, "__qv", "__qn")
         )
         .withColumn("__probe", F.slice(F.array_sort(dists), 1, n_probe))
         .select(
-            "query_id", "__qv",
+            "query_id", "__qv", "__qn",
             F.explode(F.transform(F.col("__probe"), lambda s: s["li"])).alias("__list"),
         )
     )
-    scored = c.join(F.broadcast(q), "__list").withColumn(
-        "cos", cosine(F.col("__cv"), F.col("__qv"))
-    )
+    scored = c.join(F.broadcast(q), "__list").withColumn("cos", _candidate_cos())
     return _top_k(scored, k)
 
 
@@ -415,8 +422,7 @@ def brute_force_pairs(
         pair_dot = F.expr(f"0.0D + {terms}")
     else:
         pair_dot = dot(F.col("l.v"), F.col("r.v"))
-    denom = F.col("l.nrm") * F.col("r.nrm")
-    cos = F.when(denom > 0, pair_dot / denom)  # NULL for zero vectors
+    cos = cosine(pair_dot, F.col("l.nrm"), F.col("r.nrm"))
     # both predicates INSIDE the join condition, cheap one first: a
     # post-join filter gets pushed in FRONT of the id comparison by
     # Catalyst, paying the dot product on all n² ordered pairs instead
@@ -535,8 +541,7 @@ def embedding_near_duplicates(
     b = base.select(
         F.col("id").alias("id_b"), F.col("v").alias("__vb"), F.col("nrm").alias("__nb")
     )
-    denom = F.col("__na") * F.col("__nb")
-    cos = F.when(denom > 0, dot(F.col("__va"), F.col("__vb")) / denom)
+    cos = cosine(dot(F.col("__va"), F.col("__vb")), F.col("__na"), F.col("__nb"))
     return (
         cand.join(a, "id_a")
         .join(b, "id_b")
@@ -774,10 +779,7 @@ def semantic_dedup(
     # Project it loses whole-stage codegen and evaluates the flat
     # tree interpreted, ~2x slower than the HOF fold. Measured
     # 4.7s -> 8.5s; reverted.
-    pair_denom = F.col("__na") * F.col("__nb")
-    pair_cos = F.when(
-        pair_denom > 0, dot(F.col("__va"), F.col("__vb")) / pair_denom
-    )
+    pair_cos = cosine(dot(F.col("__va"), F.col("__vb")), F.col("__na"), F.col("__nb"))
     pairs = (
         l.join(r, "__list")
         .filter(F.col("id_a") < F.col("id_b"))

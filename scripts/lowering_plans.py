@@ -2,15 +2,16 @@
 
 For a fixed set of schemas — the flagship page schema, the three
 variant-path query schemas, the benchmark's doc-route schemas, every
-keyword conformance case and the seeded random-differential
-populations — this lowers each schema onto the typed path (over a
-fixed list of Spark types, with ``CompiledSchema.lower_columns``) and
-applies it to a JSON column with ``CompiledSchema.apply_json``, and
-writes one JSON line per (schema, path, type): the route taken
-(``lowered``, or the ``CannotLower`` reason, which for the variant
-path is the one ``explain()`` reports), the py4j calls spent building
-the Columns, and the optimized plan text with expression ids
-(``#123``) and lambda variable names (``x_45``) normalized. A variant
+keyword conformance case, the numeric cases (``numeric/<n>``) and the
+seeded random-differential populations — this lowers each schema onto
+the typed path (over a fixed list of Spark types, with
+``CompiledSchema.lower_columns``) and applies it to a JSON column with
+``CompiledSchema.apply_json``, and writes one JSON line per (schema,
+path, type): the route taken (``lowered``, or the ``CannotLower``
+reason, which for the variant path is the one ``explain()`` reports),
+the py4j calls spent building the Columns, and the optimized plan text
+with expression ids (``#123``) and lambda variable names (``x_45``)
+normalized. A variant
 refusal's py4j count leaves out the batch UDF the engine then builds
 (the calls of a second, memoized ``apply_json``). Two dumps of two
 checkouts then diff line by line, which shows whether a change to the
@@ -80,6 +81,24 @@ def _schemas():
         pass
     for i, case in enumerate(CASES):
         yield f"case/{i}/{case['description']}", case["schema"]
+    for i, schema in enumerate(NUMERIC_SCHEMAS):
+        yield f"numeric/{i}", schema
+
+
+# numbers where a double compare or modulus rounds: multiples beyond
+# 1e26, integer literals past 2^53 and past the long range, and a float
+# enum member that widens a long IN list to double
+NUMERIC_SCHEMAS = [
+    {"multipleOf": 7},
+    {"multipleOf": 0.1},
+    {"const": 2 ** 53 + 1},
+    {"enum": [2 ** 53 + 1]},
+    {"exclusiveMaximum": 2 ** 53 + 1},
+    {"minimum": 2 ** 53 + 1},
+    {"maximum": 10 ** 18 - 1},
+    {"maximum": 2 ** 63 + 5},
+    {"enum": [19.99, 2 ** 53 + 1]},
+]
 
 
 def _random_schemas():

@@ -134,31 +134,59 @@ def test_lowering_matches_evaluator(spark, typed_df, schema):
     assert got == want
 
 
+# round-4 ADVICE regression: a sub-1e-18 float bound against a LONG
+# column must not round to 0E-18 through decimal(38,18) (n=0 wrongly
+# satisfied minimum 2e-20 before the fix); and the big-long cases that
+# motivated the decimal branch must keep comparing exactly
+_FLOAT_BOUNDS = [
+    {"minimum": 2e-20},
+    {"maximum": 0.0},
+    {"exclusiveMinimum": 1e-20},
+    {"exclusiveMaximum": 1e-15},
+    {"minimum": 1e18},
+    {"maximum": 0.5},
+]
+# numbers a double compare or modulus rounds: multiples past 1e26,
+# integer literals past 2^53, and one past the long range (no Spark
+# literal holds it: both Column routes refuse it)
+_EXACT_NUMBERS = [
+    {"multipleOf": 7},
+    {"multipleOf": 0.1},
+    {"const": 2 ** 53 + 1},
+    {"enum": [2 ** 53 + 1]},
+    {"enum": [19.99, 2 ** 53 + 1]},  # a float widens a long IN list
+    {"exclusiveMaximum": 2 ** 53 + 1},
+    {"minimum": 2 ** 53 + 1},
+    {"maximum": 10 ** 18 - 1},
+    {"maximum": 2 ** 63 + 5},
+]
+_COLUMN_VALUES = {
+    "long": [0, 1, -1, 5, 999999999999999999, 1000000000000000001,
+             -1000000000000000001, 2 ** 53, 2 ** 53 + 1, 2 ** 63 - 1, None],
+    "double": [0.0, 1.0, -1.0, 5.0, 7.0, 0.3, 19.99, 1e-20, -1e-20, 1e18,
+               9007199254740992.0, 7e26, 1.4e27, 1e27, 7e30, None],
+}
+
+
 @pytest.mark.parametrize(
-    "schema",
-    [
-        # round-4 ADVICE regression: a sub-1e-18 float bound against a
-        # LONG column must not round to 0E-18 through decimal(38,18)
-        # (n=0 wrongly satisfied minimum 2e-20 before the fix); and the
-        # big-long cases that motivated the decimal branch must keep
-        # comparing exactly
-        {"properties": {"n": {"minimum": 2e-20}}},
-        {"properties": {"n": {"maximum": 0.0}}},
-        {"properties": {"n": {"exclusiveMinimum": 1e-20}}},
-        {"properties": {"n": {"exclusiveMaximum": 1e-15}}},
-        {"properties": {"n": {"minimum": 1e18}}},
-        {"properties": {"n": {"maximum": 0.5}}},
-    ],
-    ids=lambda s: str(list(s["properties"]["n"].items())),
+    "dtype,bound",
+    [("long", b) for b in _FLOAT_BOUNDS + _EXACT_NUMBERS]
+    + [("double", b) for b in _FLOAT_BOUNDS + _EXACT_NUMBERS],
+    ids=[str(list(b.items())) for b in _FLOAT_BOUNDS + _EXACT_NUMBERS]
+    + [f"double-{list(b.items())}" for b in _FLOAT_BOUNDS + _EXACT_NUMBERS],
 )
-def test_tiny_and_huge_float_bounds_on_long_column(spark, schema):
-    rows = [(v,) for v in [0, 1, -1, 5, 999999999999999999,
-                           1000000000000000001, -1000000000000000001, None]]
-    df = spark.createDataFrame(rows, "n long")
+def test_tiny_and_huge_float_bounds_on_long_column(spark, dtype, bound):
+    schema = {"properties": {"n": bound}}
+    rows = [(v,) for v in _COLUMN_VALUES[dtype]]
+    df = spark.createDataFrame(rows, f"n {dtype}")
     eng = ConstraintEngine()
     compiled = eng.compile(dict(schema))
-    lowered = compiled.lower_columns(df.schema, F.struct(*df.columns))
-    assert lowered is not None  # must stay on the typed path, not batch
+    if bound == {"maximum": 2 ** 63 + 5}:
+        with pytest.raises(CannotLower, match="beyond long"):
+            compiled.lower_columns(df.schema, F.struct(*df.columns))
+    else:
+        # must stay on the typed path, not batch
+        compiled.lower_columns(df.schema, F.struct(*df.columns))
     got = [r.passed for r in compiled.apply_typed(df).select("passed").collect()]
     ev = Evaluator()
     want = [

@@ -298,6 +298,16 @@ def test_typed_matches_evaluator_seeded_population(spark):
     population's first run found three real divergences: per-name
     required rows, ''-keyword boolean-false attribution, and
     propertyNames reporting at the wrong level.)"""
+    _typed_population(spark, "2020-12")
+
+
+def test_typed_matches_evaluator_seeded_population_2019_09(spark):
+    """The typed population under 2019-09: tuple-form ``items`` with
+    ``additionalItems`` lower onto the typed arrays."""
+    _typed_population(spark, "2019-09")
+
+
+def _typed_population(spark, dialect: str) -> None:
     global _KEYS
     keys_save = list(_KEYS)
     _KEYS[:] = ["url", "lang", "n", "score", "flag", "tags", "nums"]
@@ -309,7 +319,10 @@ def test_typed_matches_evaluator_seeded_population(spark):
                 rng.choice(["https://a.x/1", "", "x", None]),
                 rng.choice(["en", "EN", "zz", "", None]),
                 rng.choice([0, 1, -1, 5, 999999999999999999, 2 ** 53 + 1, None]),
-                rng.choice([0.0, 1.5, 19.99, -0.5, 1e-20, None]),
+                # 1e18 and 2^53 next to integer bounds past 2^53, 7e26
+                # and 1e27 for multipleOf past the decimal(38,12) range
+                rng.choice([0.0, 1.5, 19.99, -0.5, 1e-20, 1e18,
+                            9007199254740992.0, 7e26, 1e27, None]),
                 rng.choice([True, False, None]),
                 rng.choice([["a", "b"], ["a", "a"], [], ["x"], [None], None]),
                 rng.choice([[1, 2, 3], [1, 1], [], [5], [None, 2], None]),
@@ -324,7 +337,10 @@ def test_typed_matches_evaluator_seeded_population(spark):
         ev = Evaluator()
         n_lowered = 0
         for s_i in range(30):
-            schema = _rand_schema(random.Random(333000 + s_i), depth=2)
+            schema = _rand_schema(random.Random(333000 + s_i), depth=2,
+                                  dialect=dialect)
+            if dialect != "2020-12":
+                schema["$schema"] = _DIALECT_URIS[dialect]
             compiled = eng.compile(dict(schema), validate_schema=False)
             try:
                 compiled.lower_columns(df.schema, F.struct(*df.columns))
@@ -342,13 +358,13 @@ def test_typed_matches_evaluator_seeded_population(spark):
                 inst = {c: v for c, v in zip(cols, r) if v is not None}
                 o = ev.validate(schema, inst)
                 assert gp == o.valid, (
-                    f"schema={json.dumps(schema)} inst={inst}: "
+                    f"[{dialect}] schema={json.dumps(schema)} inst={inst}: "
                     f"typed={gp} ev={o.valid}"
                 )
                 if gp is False:
                     want = sorted((e.keyword, e.instance_path) for e in o.errors)
                     assert gv == want, (
-                        f"schema={json.dumps(schema)} inst={inst}: "
+                        f"[{dialect}] schema={json.dumps(schema)} inst={inst}: "
                         f"{gv} != {want}"
                     )
         assert n_lowered >= 10, f"only {n_lowered} schemas lowered"
