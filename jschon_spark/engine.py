@@ -97,8 +97,10 @@ class CompiledSchema:
         }
 
     def _walk(self, node) -> tuple[Column, Column]:
-        return KeywordWalker(self.catalog, self.assert_formats).walk(
+        valid, viols = KeywordWalker(self.catalog, self.assert_formats).walk(
             self.schema, node, self.base_uri, F.lit(""))
+        # one order on every route: a document's records sorted once, here
+        return valid, F.sort_array(viols)
 
     # -- typed path ---------------------------------------------------------
     def lower_columns(
@@ -165,7 +167,13 @@ class CompiledSchema:
     # -- output shapes (≅ jschon output formats, output.py:39-165) ------------
     @staticmethod
     def violations_table(validated: DataFrame, id_col: str) -> DataFrame:
-        """``basic`` format: one row per violation."""
+        """``basic`` format: one row per violation record, ``id_col``
+        then ``keyword``, ``instance_path``, ``keyword_path``,
+        ``value`` and ``error`` (``evaluator.Violation``), in each
+        document's record order. Every route writes the same records:
+        the error from one message table, the value by one rule (the
+        instance, or a count or a name; COVERAGE.md "Violation
+        record")."""
         return (
             validated.filter(~F.col("passed"))
             .select(id_col, F.explode("violations").alias("v"))

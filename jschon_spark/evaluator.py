@@ -138,16 +138,134 @@ def is_multiple_of(value: Any, divisor: Any) -> bool:
 
 
 # --------------------------------------------------------------------------
-# outcome model (≅ jschon Result tree flattened to the basic format)
+# the violation record (≅ jschon's basic output unit, output.py:46-70):
+# one definition, one message table and one value rule for every route
 # --------------------------------------------------------------------------
 
 @dataclass
 class Violation:
+    """One violation record. The Spark routes' ``VIOLATION_TYPE`` is
+    derived from these fields, in this order; a document's records are
+    sorted by them (a NULL ``value`` first)."""
+
     keyword: str
     instance_path: str
     keyword_path: str
+    value: str | None
     error: str
 
+
+# The error text by keyword: a function of the keyword's schema value
+# only; what depends on the instance goes in the record's ``value``.
+# "false" is a false subschema's text, "" an unparsable document's.
+MESSAGES = {
+    "type": "type must be one of {}",
+    "enum": "value not in enumeration",
+    "const": "value does not equal const",
+    "multipleOf": "not a multiple of {}",
+    "maximum": "violates maximum {}",
+    "exclusiveMaximum": "violates exclusiveMaximum {}",
+    "minimum": "violates minimum {}",
+    "exclusiveMinimum": "violates exclusiveMinimum {}",
+    "maxLength": "longer than {}",
+    "minLength": "shorter than {}",
+    "pattern": "does not match pattern {}",
+    "format": "not a valid {}",
+    "maxItems": "more than {} items",
+    "minItems": "fewer than {} items",
+    "uniqueItems": "array items are not unique",
+    "maxProperties": "more than {} properties",
+    "minProperties": "fewer than {} properties",
+    "required": "missing required properties",
+    "dependentRequired": "property {!r} requires {}",
+    "contains": "no array items match the contains schema",
+    "maxContains": "more than {} matching items",
+    "minContains": "fewer than {} matching items",
+    "propertyNames": "property name is invalid",
+    "anyOf": "no subschema matched",
+    "oneOf": "exactly one subschema must match",
+    "not": "instance must not match the subschema",
+    "false": "boolean schema false permits nothing",
+    "": "invalid JSON",
+}
+VALUE_CHARS = 256  # every record's value is cut to this many characters
+
+
+def message(keyword: str, *value: Any) -> str:
+    """The error text of a ``keyword`` violation, the keyword's schema
+    ``value`` filled in (``dependentRequired``: the property and its
+    required names)."""
+    if keyword == "type" and isinstance(value[0], str):
+        value = ([value[0]],)
+    return MESSAGES[keyword].format(*value)
+
+
+def java_double(x: float) -> str:
+    """The nonzero ``x`` as Spark's ``CAST(x AS STRING)`` writes a
+    double (Java's ``Double.toString`` layout), from the digits of
+    Python's shortest ``repr``. Java 17 prints more digits than the
+    shortest for some doubles of magnitude 1e16 and above (and writes
+    the smallest subnormal 4.9E-324); there the two differ."""
+    if x != x:
+        return "NaN"
+    sign = "-" if x < 0 else ""
+    if x in (float("inf"), float("-inf")):
+        return sign + "Infinity"
+    _, digits, exp = Decimal(repr(x)).as_tuple()
+    point = len(digits) + exp - 1  # the decimal exponent of the first digit
+    ds = "".join(map(str, digits)).rstrip("0")
+    if 1e-3 <= abs(x) < 1e7:
+        if point < 0:
+            return f"{sign}0.{'0' * (-point - 1)}{ds}"
+        return f"{sign}{ds[:point + 1].ljust(point + 1, '0')}.{ds[point + 1:] or '0'}"
+    return f"{sign}{ds[0]}.{ds[1:] or '0'}E{point}"
+
+
+def shown(v: Any) -> str | None:
+    """An instance as a record's ``value``: a string as itself, true or
+    false, an integral number below 2^63 in magnitude as its digits,
+    any other number as ``java_double`` writes it, and None for null,
+    arrays and objects."""
+    if isinstance(v, str):
+        return v
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, int):
+        if abs(v) < 2 ** 63:
+            return str(v)
+        try:
+            v = float(v)
+        except OverflowError:
+            v = float("inf") if v > 0 else float("-inf")
+    if isinstance(v, float):
+        if v.is_integer() and abs(v) < 2 ** 63:
+            return str(int(v))
+        return java_double(v)
+    return None
+
+
+# the keywords whose record shows a count rather than the instance
+_COUNTED = frozenset({"maxItems", "minItems", "maxProperties", "minProperties"})
+
+
+def _record_value(keyword: str, v: Any, value: Any) -> str | None:
+    """The ``value`` of a ``keyword`` violation by the instance ``v``,
+    the keyword's schema ``value`` given: the missing names for
+    ``required``, the count for the size keywords, else the instance."""
+    if keyword == "required":
+        return ", ".join(k for k in value if k not in v)
+    if keyword in _COUNTED:
+        return str(len(v))
+    return shown(v)
+
+
+def _order(v: Violation) -> tuple:
+    return v.keyword, v.instance_path, v.keyword_path, v.value is not None, v.value or "", v.error
+
+
+# --------------------------------------------------------------------------
+# outcome model (≅ jschon Result tree flattened to the basic format)
+# --------------------------------------------------------------------------
 
 @dataclass
 class Outcome:
@@ -181,9 +299,13 @@ class _Frame:
         self.items: set = set()
         self.contains: set = set()
 
-    def fail(self, keyword: str, msg: str) -> None:
+    def fail(self, keyword: str, error: str, value: str | None) -> None:
+        self.record(keyword, f"{self.kpath}/{keyword}", error, value)
+
+    def record(self, keyword: str, kpath: str, error: str, value: str | None) -> None:
         self.valid = False
-        self.errors.append(Violation(keyword, self.ipath, f"{self.kpath}/{keyword}", msg))
+        self.errors.append(Violation(keyword, self.ipath, kpath,
+                                     value if value is None else value[:VALUE_CHARS], error))
 
     def sub(self, cell: list, instance: Any, scope: list, kw: str, ip: str = "") -> _Frame:
         """Walk ``cell`` over ``instance`` at keyword path suffix ``kw``
@@ -192,10 +314,8 @@ class _Frame:
         cell[0](instance, scope, child)
         return child
 
-    def absorb(self, o: _Frame, keyword: str, msg: str | None = None) -> None:
-        """Record a failed child: a keyword row when ``msg``, then its errors."""
-        if msg:
-            self.fail(keyword, msg)
+    def absorb(self, o: _Frame) -> None:
+        """Record a failed child's errors."""
         self.valid = False
         self.errors.extend(o.errors)
 
@@ -205,16 +325,16 @@ class _Frame:
             self.items |= o.items
             self.contains |= o.contains
 
-    def in_place(self, cell: list, instance: Any, scope: list, kw: str, keyword: str) -> bool:
+    def in_place(self, cell: list, instance: Any, scope: list, kw: str) -> bool:
         """A child at this instance location: its annotations pass
         through and its failure is absorbed."""
         o = self.sub(cell, instance, scope, kw)
         self.merge(o)
         if not o.valid:
-            self.absorb(o, keyword)
+            self.absorb(o)
         return o.valid
 
-    def located(self, cell: list, instance: Any, scope: list, kw: str, keyword: str, key: Any) -> bool:
+    def located(self, cell: list, instance: Any, scope: list, kw: str, key: Any) -> bool:
         """A child at member ``key`` (an item index or a property name):
         a pass marks the member evaluated, a failure is absorbed."""
         if isinstance(key, str):
@@ -224,7 +344,7 @@ class _Frame:
         if o.valid:
             seen.add(key)
         else:
-            self.absorb(o, keyword)
+            self.absorb(o)
         return o.valid
 
 
@@ -243,21 +363,20 @@ class _Frame:
 _NUMBER, _STRING, _ARRAY, _OBJECT = ("number",), ("string",), ("array",), ("object",)
 
 
-def _check(keyword: str, test: Callable[[Any, Any], Any], value: Any, message: Any) -> Callable:
+def _check(keyword: str, test: Callable[[Any, Any], Any], value: Any, error: str) -> Callable:
     """A keyword that tests the instance alone, as ``test(instance,
-    value)``; ``message`` is the error, or a function of (instance,
-    value) giving it."""
+    value)``, failing with ``error``."""
     def check(v, scope, f):
         if test(v, value):
             return True
         if f is not None:
-            f.fail(keyword, message(v, value) if callable(message) else message)
+            f.fail(keyword, error, _record_value(keyword, v, value))
         return False
 
     return check
 
 
-def _members(keyword: str, members: Callable) -> Callable:
+def _members(members: Callable) -> Callable:
     """A keyword applying subschemas to members of the instance:
     ``members(v, f)`` lists their (key, cell, keyword path suffix)."""
     def check(v, scope, f):
@@ -268,13 +387,13 @@ def _members(keyword: str, members: Callable) -> Callable:
             return True
         ok = True
         for key, cell, kw in members(v, f):
-            ok &= f.located(cell, v[key], scope, kw, keyword, key)
+            ok &= f.located(cell, v[key], scope, kw, key)
         return ok
 
     return check
 
 
-def _in_place(keyword: str, cells: Callable) -> Callable:
+def _in_place(cells: Callable) -> Callable:
     """A keyword applying subschemas to the instance itself:
     ``cells(v, scope)`` lists their (cell, keyword path suffix)."""
     def check(v, scope, f):
@@ -285,7 +404,7 @@ def _in_place(keyword: str, cells: Callable) -> Callable:
             return True
         ok = True
         for cell, kw in cells(v, scope):
-            ok &= f.in_place(cell, v, scope, kw, keyword)
+            ok &= f.in_place(cell, v, scope, kw)
         return ok
 
     return check
@@ -294,16 +413,14 @@ def _in_place(keyword: str, cells: Callable) -> Callable:
 def _alone(keyword: str, cell: list) -> Callable:
     """An in-place keyword with one subschema."""
     subs = ((cell, keyword),)
-    return _in_place(keyword, lambda v, scope: subs)
+    return _in_place(lambda v, scope: subs)
 
 
-def _leaf(keyword: str, types: tuple | None, test: Callable, message: Any) -> tuple:
-    """Table row of a keyword checked by ``test(instance, value)``; a
-    string ``message`` formats the keyword's value into the error."""
+def _leaf(keyword: str, types: tuple | None, test: Callable) -> tuple:
+    """Table row of a keyword checked by ``test(instance, value)``."""
     def build(schema, cx):
         value = schema[keyword]
-        return _check(keyword, test, value,
-                      message.format(value) if isinstance(message, str) else message)
+        return _check(keyword, test, value, message(keyword, value))
 
     return keyword, types, build
 
@@ -342,16 +459,14 @@ def _accept(v, scope, f):
 def _reject(v, scope, f):
     if f is not None:
         # attribute the failure to the keyword holding the false schema
-        f.valid = False
-        f.errors.append(Violation(f.kpath.rsplit("/", 1)[-1], f.ipath, f.kpath,
-                                  "boolean schema false permits nothing"))
+        f.record(f.kpath.rsplit("/", 1)[-1], f.kpath, MESSAGES["false"], shown(v))
     return False
 
 
 def _ref(schema, cx):
     ref = schema["$ref"]
     # resolved on the first visit, not at compile
-    return _in_place("$ref", lambda v, scope: ((cx.ref(ref)[1], "$ref"),))
+    return _in_place(lambda v, scope: ((cx.ref(ref)[1], "$ref"),))
 
 
 def _dynamic_ref(schema, cx):
@@ -376,7 +491,7 @@ def _dynamic_ref(schema, cx):
                     break
         return ((cell, "$dynamicRef"),)
 
-    return _in_place("$dynamicRef", cells)
+    return _in_place(cells)
 
 
 def _recursive_ref(schema, cx):
@@ -394,7 +509,7 @@ def _recursive_ref(schema, cx):
                     break
         return ((cell, "$recursiveRef"),)
 
-    return _in_place("$recursiveRef", cells)
+    return _in_place(cells)
 
 
 def _dependent_required(schema, cx):
@@ -408,7 +523,7 @@ def _dependent_required(schema, cx):
                 if f is None:
                     return False
                 ok = False
-                f.fail("dependentRequired", f"property {k!r} requires {missing}")
+                f.fail("dependentRequired", message("dependentRequired", k, needed), k)
         return ok
 
     return check
@@ -422,7 +537,7 @@ def _format(schema, cx):
     entry = ev.extensions.format_entry(schema["format"])
     return None if entry is None else _check(
         "format", _applies, (entry.python_fn, entry.instance_types),
-        f"not a valid {schema['format']}")
+        message("format", schema["format"]))
 
 
 def _tuple_form(schema, cx) -> bool:
@@ -433,13 +548,13 @@ def _tuple_form(schema, cx) -> bool:
 
 def _positional(keyword: str, subschemas: list, cx) -> Callable:
     subs = [(i, cx.child(s), f"{keyword}/{i}") for i, s in enumerate(subschemas)]
-    return _members(keyword, lambda v, f: subs[:len(v)])
+    return _members(lambda v, f: subs[:len(v)])
 
 
 def _rest(keyword: str, subschema: Any, start: int, cx) -> Callable:
     """``subschema`` over every item from index ``start`` on."""
     cell = cx.child(subschema)
-    return _members(keyword, lambda v, f: [(i, cell, keyword) for i in range(start, len(v))])
+    return _members(lambda v, f: [(i, cell, keyword) for i in range(start, len(v))])
 
 
 def _prefix_items(schema, cx):
@@ -475,14 +590,14 @@ def _contains(schema, cx):
                     f.contains.add(i)
         fails = []
         if n == 0 and min_c > 0:
-            fails.append(("contains", "no array items match the contains schema"))
+            fails.append(("contains",))
         if has_max and n > max_c:
-            fails.append(("maxContains", f"more than {max_c} matching items"))
+            fails.append(("maxContains", max_c))
         if has_min and n < min_c:
-            fails.append(("minContains", f"fewer than {min_c} matching items"))
+            fails.append(("minContains", min_c))
         if f is not None:
-            for keyword, msg in fails:
-                f.fail(keyword, msg)
+            for fail in fails:
+                f.fail(fail[0], message(*fail), str(n))
         return not fails
 
     return check
@@ -491,13 +606,13 @@ def _contains(schema, cx):
 def _properties(schema, cx):
     subs = [(name, cx.child(s), "properties/" + pointer_escape(name))
             for name, s in schema["properties"].items()]
-    return _members("properties", lambda v, f: [m for m in subs if m[0] in v])
+    return _members(lambda v, f: [m for m in subs if m[0] in v])
 
 
 def _pattern_properties(schema, cx):
     subs = [(re.compile(p), cx.child(s), "patternProperties/" + pointer_escape(p))
             for p, s in schema["patternProperties"].items()]
-    return _members("patternProperties", lambda v, f: [
+    return _members(lambda v, f: [
         (name, cell, kw) for rx, cell, kw in subs for name in v if rx.search(name)])
 
 
@@ -505,7 +620,7 @@ def _additional_properties(schema, cx):
     cell = cx.child(schema["additionalProperties"])
     named = schema.get("properties", {})
     patterns = [re.compile(p) for p in schema.get("patternProperties", {})]
-    return _members("additionalProperties", lambda v, f: [
+    return _members(lambda v, f: [
         (name, cell, "additionalProperties") for name in v
         if name not in named and not any(rx.search(name) for rx in patterns)])
 
@@ -523,7 +638,8 @@ def _property_names(schema, cx):
             o = f.sub(cell, name, scope, "propertyNames")
             if not o.valid:
                 ok = False
-                f.absorb(o, "propertyNames", f"property name {name!r} is invalid")
+                f.fail("propertyNames", message("propertyNames"), name)
+                f.absorb(o)
         return ok
 
     return check
@@ -532,7 +648,7 @@ def _property_names(schema, cx):
 def _dependent_schemas(schema, cx):
     subs = [(k, cx.child(s), "dependentSchemas/" + pointer_escape(k))
             for k, s in schema["dependentSchemas"].items()]
-    return _in_place("dependentSchemas", lambda v, scope: [(c, kw) for k, c, kw in subs if k in v])
+    return _in_place(lambda v, scope: [(c, kw) for k, c, kw in subs if k in v])
 
 
 def _subschemas(keyword: str, schema, cx) -> list:
@@ -541,7 +657,7 @@ def _subschemas(keyword: str, schema, cx) -> list:
 
 def _all_of(schema, cx):
     subs = _subschemas("allOf", schema, cx)
-    return _in_place("allOf", lambda v, scope: subs)
+    return _in_place(lambda v, scope: subs)
 
 
 def _any_of(schema, cx):
@@ -555,7 +671,7 @@ def _any_of(schema, cx):
             f.merge(o)
         if any(o.valid for o in results):
             return True
-        f.fail("anyOf", "no subschema matched")
+        f.fail("anyOf", message("anyOf"), shown(v))
         for o in results:
             f.errors.extend(o.errors)
         return False
@@ -579,7 +695,7 @@ def _one_of(schema, cx):
             f.merge(o)
         n = sum(o.valid for o in results)
         if n != 1:
-            f.fail("oneOf", f"{n} subschemas matched, need exactly 1")
+            f.fail("oneOf", message("oneOf"), str(n))
         return n == 1
 
     return check
@@ -592,7 +708,7 @@ def _not(schema, cx):
         if f is None:
             return not cell[0](v, scope, None)
         if f.sub(cell, v, scope, "not").valid:
-            f.fail("not", "instance must not match the subschema")
+            f.fail("not", message("not"), shown(v))
             return False
         return True
 
@@ -630,45 +746,45 @@ def _unevaluated_items(schema, cx):
         covered = f.items if legacy else f.items | f.contains
         return [(i, cell, "unevaluatedItems") for i in range(len(v)) if i not in covered]
 
-    return _members("unevaluatedItems", members)
+    return _members(members)
 
 
 def _unevaluated_properties(schema, cx):
     cell = cx.child(schema["unevaluatedProperties"])
-    return _members("unevaluatedProperties", lambda v, f: [
+    return _members(lambda v, f: [
         (name, cell, "unevaluatedProperties") for name in v if name not in f.props])
 
 
-# The keyword table, in evaluation order (the order of a document's
-# violations). Row: (keyword, instance types it applies to or None for
-# all, build(schema, cx) -> compiled check or None). Registered custom
-# keywords run after "if", and unevaluated* last.
+# The keyword table, in evaluation order (a document's violations are
+# sorted afterwards, in Program.outcome). Row: (keyword, instance types
+# it applies to or None for all, build(schema, cx) -> compiled check or
+# None). Registered custom keywords run after "if", and unevaluated*
+# last.
 _KEYWORDS = (
     # $ref / $dynamicRef / $recursiveRef: in-place, annotations pass through
     ("$ref", None, _ref),
     ("$dynamicRef", None, _dynamic_ref),
     ("$recursiveRef", None, _recursive_ref),
-    _leaf("type", None, _is_type, lambda v, t: f"instance type {json_type(v)} does not match {t}"),
-    _leaf("enum", None, lambda v, e: any(json_equal(v, x) for x in e), "value not found in enumeration"),
-    _leaf("const", None, json_equal, "value does not equal the constant"),
-    _leaf("multipleOf", _NUMBER, is_multiple_of, "not a multiple of {}"),
-    _leaf("maximum", _NUMBER, operator.le, "exceeds maximum {}"),
-    _leaf("exclusiveMaximum", _NUMBER, operator.lt, "not below {}"),
-    _leaf("minimum", _NUMBER, operator.ge, "below minimum {}"),
-    _leaf("exclusiveMinimum", _NUMBER, operator.gt, "not above {}"),
-    _leaf("maxLength", _STRING, lambda v, n: len(v) <= n, "longer than {}"),
-    _leaf("minLength", _STRING, lambda v, n: len(v) >= n, "shorter than {}"),
+    _leaf("type", None, _is_type),
+    _leaf("enum", None, lambda v, e: any(json_equal(v, x) for x in e)),
+    _leaf("const", None, json_equal),
+    _leaf("multipleOf", _NUMBER, is_multiple_of),
+    _leaf("maximum", _NUMBER, operator.le),
+    _leaf("exclusiveMaximum", _NUMBER, operator.lt),
+    _leaf("minimum", _NUMBER, operator.ge),
+    _leaf("exclusiveMinimum", _NUMBER, operator.gt),
+    _leaf("maxLength", _STRING, lambda v, n: len(v) <= n),
+    _leaf("minLength", _STRING, lambda v, n: len(v) >= n),
     ("pattern", _STRING, lambda s, cx: _check(
         "pattern", lambda v, rx: rx.search(v), re.compile(s["pattern"]),
-        f"does not match pattern {s['pattern']!r}")),
-    _leaf("maxItems", _ARRAY, lambda v, n: len(v) <= n, "more than {} items"),
-    _leaf("minItems", _ARRAY, lambda v, n: len(v) >= n, "fewer than {} items"),
+        message("pattern", s["pattern"]))),
+    _leaf("maxItems", _ARRAY, lambda v, n: len(v) <= n),
+    _leaf("minItems", _ARRAY, lambda v, n: len(v) >= n),
     ("uniqueItems", _ARRAY, lambda s, cx: _check(
-        "uniqueItems", _unique, None, "array items are not unique") if s["uniqueItems"] else None),
-    _leaf("maxProperties", _OBJECT, lambda v, n: len(v) <= n, "more than {} properties"),
-    _leaf("minProperties", _OBJECT, lambda v, n: len(v) >= n, "fewer than {} properties"),
-    _leaf("required", _OBJECT, lambda v, names: all(map(v.__contains__, names)),
-          lambda v, names: f"missing required properties {[k for k in names if k not in v]}"),
+        "uniqueItems", _unique, None, message("uniqueItems")) if s["uniqueItems"] else None),
+    _leaf("maxProperties", _OBJECT, lambda v, n: len(v) <= n),
+    _leaf("minProperties", _OBJECT, lambda v, n: len(v) >= n),
+    _leaf("required", _OBJECT, lambda v, names: all(map(v.__contains__, names))),
     ("dependentRequired", _OBJECT, _dependent_required),
     ("format", None, _format),
     ("prefixItems", _ARRAY, _prefix_items),
@@ -764,10 +880,13 @@ class Program:
 
     def outcome(self, instance: Any) -> Outcome:
         f = _Frame("", "")
-        if not self._root[0](instance, self._scope, f):
+        valid = self._root[0](instance, self._scope, f)
+        # one order on every route: a document's records sorted once, here
+        errors = sorted(f.errors, key=_order)
+        if not valid:
             # a failed schema contributes no annotations
-            return Outcome(False, f.errors)
-        return Outcome(True, f.errors, f.props, f.items, f.contains)
+            return Outcome(False, errors)
+        return Outcome(True, errors, f.props, f.items, f.contains)
 
     def cell(self, schema: Any, base: str, dialect: str, fmt_assert: bool) -> list:
         """A one-slot cell whose closure compiles ``schema`` on its first

@@ -22,6 +22,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from jschon_spark.evaluator import MESSAGES, VALUE_CHARS
 from jschon_spark.functions import registry
 from jschon_spark.lowering.keywords import VIOLATION_TYPE
 from jschon_spark.session import memo
@@ -67,10 +68,10 @@ def make_batch_validator(
                     continue
                 try:
                     instance = parse(doc)
-                except ValueError as e:
+                except ValueError:
                     passed.append(False)
                     violations.append(
-                        [("", "", "", str(doc)[:256], f"invalid JSON: {e}")]
+                        [("", "", "", doc[:VALUE_CHARS], MESSAGES[""])]
                     )
                     continue
                 if program.valid(instance):
@@ -82,7 +83,7 @@ def make_batch_validator(
                 passed.append(out.valid)
                 violations.append(
                     [
-                        (v.keyword, v.instance_path, v.keyword_path, "", v.error)
+                        (v.keyword, v.instance_path, v.keyword_path, v.value, v.error)
                         for v in out.errors
                     ]
                 )

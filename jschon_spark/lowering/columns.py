@@ -12,7 +12,9 @@ What the typed node adds to the walker's keyword semantics:
   and wrong-typed enum/const fold to constants before Catalyst ever
   sees them.
 * numbers take the walker's one numeric rule, folded where the static
-  kind (bigint or double) makes a plain compare or modulus exact.
+  kind (bigint or double) makes a plain compare or modulus exact. A
+  float column reads as the number ``to_json`` writes for it (0.1f is
+  0.1, not 0.10000000149011612).
 * NULL convention: a NULL **struct field** is an *absent* property
   (``properties`` then doesn't apply, ``required`` fails); a NULL
   **array element** or **map value** is JSON ``null``.
@@ -44,8 +46,10 @@ from jschon_spark.lowering.keywords import (
     _check,
     is_integral,
     is_number,
+    native,
     native_members,
     number_equals,
+    number_text,
 )
 
 # a typed timestamp or date as a JSON string: TypedNode.string on the
@@ -128,9 +132,21 @@ class TypedNode:
         # JSON null, so e.g. maxLength on null is satisfied.
         return F.when(self.col.isNull(), F.lit(True)).otherwise(pred)
 
-    @property
+    @cached_property
     def value(self) -> Column:
-        return self.col
+        """The instance as a violation's ``value`` (``evaluator.shown``)."""
+        t = self.dtype
+        if isinstance(t, (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.BooleanType)):
+            return self.col  # _violation's string cast writes it
+        if isinstance(t, T.DecimalType):
+            # scale 0 is JSON integer syntax: exact digits within the long range
+            text = number_text(self)
+            return F.coalesce(self.col.try_cast("bigint").cast("string"), text) if t.scale == 0 else text
+        if isinstance(t, (T.FloatType, T.DoubleType)):
+            return number_text(self)
+        if isinstance(t, (T.StringType, T.TimestampType, T.DateType)):
+            return self.string
+        return F.lit(None)  # null, arrays and objects
 
     @cached_property
     def string(self) -> Column:
@@ -161,7 +177,8 @@ class TypedNode:
         # types; the ones the column compares exactly share one IN list
         scalars = [v for v in values if _enum_compatible(v, self.json_t)]
         listed, rest = native_members(self, scalars)
-        pred = self.col.isin(*listed) if listed else F.lit(False)
+        col = native(self) if self.may_be("number") else self.col
+        pred = col.isin(*listed) if listed else F.lit(False)
         for v in rest:
             pred = pred | number_equals(self, v)
         if any(v is None for v in values):
@@ -189,13 +206,18 @@ class TypedNode:
         return "bigint" if self.json_t == "integer" else "double"
 
     @cached_property
+    def _number(self) -> Column:
+        # a float reads as the number to_json writes for it
+        return self.col.cast("string") if isinstance(self.dtype, T.FloatType) else self.col
+
+    @cached_property
     def dval(self) -> Column:
-        return self.col if isinstance(self.dtype, T.DoubleType) else self.col.cast("double")
+        return self.col if isinstance(self.dtype, T.DoubleType) else self._number.cast("double")
 
     @cached_property
     def dec18(self) -> Column:
         # a long always fits decimal(38,18); a double may overflow it
-        return (self.col.cast if self.number_kind == "bigint" else self.col.try_cast)(DEC18)
+        return self.col.cast(DEC18) if self.number_kind == "bigint" else self._number.try_cast(DEC18)
 
     # -- strings -------------------------------------------------------------------
     def check_string(self, pred: Column, keyword: str, ipath: Column, kpath: str,

@@ -23,9 +23,9 @@ Compound enum/const lower to recursive structural equality.
 GATED (lowerable when no in-place applicator can merge child
 annotations at the same level); genuinely dynamic ``$dynamicRef``/
 ``$recursiveRef`` and keywords outside the variant vocabulary raise
-CannotLower → the engine runs the Arrow batch evaluator. Violations match
-the batch evaluator's (keyword, instance_path, keyword_path)
-conventions. Numbers follow the one numeric rule of keywords.py; a
+CannotLower → the engine runs the Arrow batch evaluator. Violations are
+the batch evaluator's records: the same message table, value rule and
+sort. Numbers follow the one numeric rule of keywords.py; a
 variant value always takes its general, runtime-tiered form.
 """
 
@@ -39,6 +39,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from jschon_spark.evaluator import MESSAGES
 from jschon_spark.lowering.keywords import (
     DEC18,
     KEYWORDS,
@@ -50,6 +51,7 @@ from jschon_spark.lowering.keywords import (
     is_integral,
     number_compare,
     number_equals,
+    number_text,
 )
 
 _KEY_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
@@ -167,12 +169,16 @@ class VariantNode:
         return F.try_variant_get(self.col, "$", DEC18)
 
     @cached_property
-    def value(self) -> Column:
+    def string(self) -> Column:
         return F.try_variant_get(self.col, "$", "string")
 
-    @property
-    def string(self) -> Column:
-        return self.value
+    @cached_property
+    def value(self) -> Column:
+        """The instance as a violation's ``value`` (``evaluator.shown``):
+        a BIGINT as its exact digits, any other number by the rule (the
+        double read is NULL for null, arrays and objects)."""
+        return F.when(self.tag.isin("STRING", "BOOLEAN", "BIGINT"), self.string).otherwise(
+            number_text(self))
 
     # -- type / enum / const --------------------------------------------------
     def type_pred(self, wanted: list) -> Column:
@@ -190,7 +196,7 @@ class VariantNode:
         if isinstance(x, (int, float)):
             return number_equals(self, x)
         if isinstance(x, str):
-            return self.is_type("string") & (self.value == x)
+            return self.is_type("string") & (self.string == x)
         # compound member: recursive structural equality
         return F.coalesce(_eq_value(self.col, x), F.lit(False))
 
@@ -354,7 +360,7 @@ def with_variant_verdicts(
         F.when(
             parse_fail,
             F.array(
-                _violation("", F.lit(""), "", doc, "invalid JSON")
+                _violation("", F.lit(""), "", doc, MESSAGES[""])
             ).cast(VIOLATION_DDL),
         ).otherwise(viols)
     )

@@ -18,6 +18,8 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from jschon_spark.schema.catalog import pointer_escape
+
 _FORMATTERS: dict[str, Callable] = {}
 
 
@@ -235,21 +237,20 @@ def collect_annotations(schema, kpath: str = "") -> list[dict]:
     if not isinstance(schema, dict):
         return out
     for kw, val in schema.items():
+        at = f"{kpath}/{pointer_escape(kw)}"
         if kw in ANNOTATION_KEYWORDS:
-            out.append({"keyword_path": f"{kpath}/{kw}", "keyword": kw,
-                        "value": val})
+            out.append({"keyword_path": at, "keyword": kw, "value": val})
         elif kw in _NAME_MAP_KEYWORDS and isinstance(val, dict):
             for name, sub in val.items():
-                out.extend(collect_annotations(sub, f"{kpath}/{kw}/{name}"))
+                out.extend(collect_annotations(sub, f"{at}/{pointer_escape(name)}"))
         elif kw in _SCHEMA_VALUED_KEYWORDS and isinstance(val, dict):
-            out.extend(collect_annotations(val, f"{kpath}/{kw}"))
+            out.extend(collect_annotations(val, at))
         elif kw in _SCHEMA_LIST_KEYWORDS and isinstance(val, list):
             for i, item in enumerate(val):
-                out.extend(collect_annotations(item, f"{kpath}/{kw}/{i}"))
+                out.extend(collect_annotations(item, f"{at}/{i}"))
         elif kw not in KNOWN_SCHEMA_KEYWORDS:
             # unknown keyword: its VALUE is an opaque annotation payload
-            out.append({"keyword_path": f"{kpath}/{kw}", "keyword": kw,
-                        "value": val})
+            out.append({"keyword_path": at, "keyword": kw, "value": val})
     return out
 
 

@@ -38,23 +38,25 @@ def subschemas(node: dict) -> Iterator[tuple[str, dict]]:
     into: dict values and dict list items of any keyword, except the
     data keywords ``enum``/``const``/``default``/``examples``. Under the
     name->schema maps (``properties``, ``$defs``, ...) member NAMES are
-    data, so a property named ``default`` is still a subschema."""
+    data, so a property named ``default`` is still a subschema. Names
+    are escaped as JSON pointer tokens (``a/b`` is ``a~1b``)."""
     for key, val in node.items():
         if key in ("enum", "const", "default", "examples"):
             continue
+        at = "/" + pointer_escape(key)
         if key in (
             "properties", "patternProperties", "dependentSchemas",
             "$defs", "definitions",
         ) and isinstance(val, dict):
             for name, sub in val.items():
                 if isinstance(sub, dict):
-                    yield f"/{key}/{name}", sub
+                    yield f"{at}/{pointer_escape(name)}", sub
         elif isinstance(val, dict):
-            yield f"/{key}", val
+            yield at, val
         elif isinstance(val, list):
             for i, item in enumerate(val):
                 if isinstance(item, dict):
-                    yield f"/{key}/{i}", item
+                    yield f"{at}/{i}", item
 
 
 # base of anonymous registrations: a hierarchical scheme, so

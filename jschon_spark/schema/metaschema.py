@@ -176,7 +176,7 @@ def validate_schema_document(schema: Any) -> None:
             raise SchemaError(
                 [
                     Violation(
-                        "$vocabulary", "", "/$vocabulary",
+                        "$vocabulary", "", "/$vocabulary", None,
                         f"required vocabulary not supported: {u}",
                     )
                     for u in unknown
@@ -196,7 +196,7 @@ def validate_schema_document(schema: Any) -> None:
             raise SchemaError(
                 [
                     Violation(
-                        "$id", path, f"{path}/$id",
+                        "$id", path, f"{path}/$id", None,
                         f"draft-next $id must not contain a fragment: {v!r}",
                     )
                     for path, v in bad

@@ -35,8 +35,15 @@ the format cases (formats asserted), the seeded random-differential
 populations and the benchmark's batch-route documents, one line whose
 ``route`` holds the ``compile_valid`` predicate's verdict and the full
 walk's ``valid`` (or the exception either raised) and whose ``plan``
-holds the full walk's ordered (keyword, instance_path, keyword_path,
-error) rows. ``diff`` compares two such dumps unchanged.
+holds the full walk's ordered records (keyword, instance_path,
+keyword_path, value, error); a checkout whose records have no
+``value`` writes "" there, as its batch route did. ``diff`` compares
+two such dumps unchanged.
+
+``diff`` sums each dump's py4j calls only up to the first entry, in
+dump order, that is an ``error:`` on either side: after one lowering
+raises ``Py4JError`` the counter sees fewer calls for every later
+entry, so totals past that point are not comparable.
 
 Run it from the root of the checkout whose lowering is to be dumped.
 """
@@ -102,12 +109,12 @@ NUMERIC_SCHEMAS = [
 
 
 def _random_schemas():
-    from tests.test_random_differential import _rand_schema
+    from tests.test_random_differential import _rand_schema, typed_schema
 
     for i in range(40):
         yield f"rand/variant/{i}", _rand_schema(random.Random(2000 + i), depth=2), None
     for i in range(30):
-        yield f"rand/typed/{i}", _rand_schema(random.Random(333000 + i), depth=2), TYPED_DDLS[8]
+        yield f"rand/typed/{i}", typed_schema(i), TYPED_DDLS[8]
     for i in range(25):
         yield (f"rand/map/{i}",
                {"properties": {"m": _rand_schema(random.Random(777000 + i), depth=2)}},
@@ -302,8 +309,8 @@ def batch(out_path: str) -> None:
                     rows = None
                 else:
                     route = f"pred={bool(pred)} valid={full.valid}"
-                    rows = [[e.keyword, e.instance_path, e.keyword_path, e.error]
-                            for e in full.errors]
+                    rows = [[e.keyword, e.instance_path, e.keyword_path,
+                             getattr(e, "value", ""), e.error] for e in full.errors]
                 out.write(json.dumps({"id": f"{name}|{i}", "route": route,
                                       "plan": json.dumps(rows)}, sort_keys=True) + "\n")
 
@@ -317,6 +324,12 @@ def diff(a_path: str, b_path: str) -> int:
         return r.get("route", "missing").split(":", 1)[0]
 
     a, b = load(a_path), load(b_path)
+    # py4j totals over the entries before the first error on either side
+    counted = []
+    for key in a:
+        if outcome(a[key]) == "error" or outcome(b.get(key, {})) == "error":
+            break
+        counted.append(key)
     n_route = n_reason = n_plan = n_calls = 0
     for key in sorted(set(a) | set(b)):
         ra, rb = a.get(key, {}), b.get(key, {})
@@ -335,8 +348,9 @@ def diff(a_path: str, b_path: str) -> int:
     lowered = sum(r.get("route") == "lowered" for r in a.values())
     print(f"{len(a)} keys, {lowered} lowered; route diffs {n_route}, "
           f"reason diffs {n_reason}, plan diffs {n_plan}, more py4j calls "
-          f"{n_calls}; py4j total {sum(r.get('py4j') or 0 for r in a.values())}"
-          f" -> {sum(r.get('py4j') or 0 for r in b.values())}")
+          f"{n_calls}; py4j total over the {len(counted)} entries before the "
+          f"first error {sum(a[k].get('py4j') or 0 for k in counted)}"
+          f" -> {sum(b.get(k, {}).get('py4j') or 0 for k in counted)}")
     return 1 if (n_route or n_plan) else 0
 
 

@@ -145,6 +145,8 @@ _FLOAT_BOUNDS = [
     {"exclusiveMaximum": 1e-15},
     {"minimum": 1e18},
     {"maximum": 0.5},
+    {"maximum": 0.1},
+    {"const": 0.1},
 ]
 # numbers a double compare or modulus rounds: multiples past 1e26,
 # integer literals past 2^53, and one past the long range (no Spark
@@ -165,15 +167,22 @@ _COLUMN_VALUES = {
              -1000000000000000001, 2 ** 53, 2 ** 53 + 1, 2 ** 63 - 1, None],
     "double": [0.0, 1.0, -1.0, 5.0, 7.0, 0.3, 19.99, 1e-20, -1e-20, 1e18,
                9007199254740992.0, 7e26, 1.4e27, 1e27, 7e30, None],
+    # floats whose to_json text (Float.toString) is the literal here, so
+    # the evaluator reads the document the typed route must agree with
+    # (the float nearest 1e18 is written 9.9999998E17)
+    "float": [0.0, 1.0, -1.0, 5.0, 7.0, 0.1, 0.3, 19.99, 1e-20, -1e-20,
+              9.9999998e17, 1e19, 16777216.0, 16777218.0, 7e26, 1e27, None],
 }
 
 
 @pytest.mark.parametrize(
     "dtype,bound",
     [("long", b) for b in _FLOAT_BOUNDS + _EXACT_NUMBERS]
-    + [("double", b) for b in _FLOAT_BOUNDS + _EXACT_NUMBERS],
+    + [("double", b) for b in _FLOAT_BOUNDS + _EXACT_NUMBERS]
+    + [("float", b) for b in _FLOAT_BOUNDS + _EXACT_NUMBERS],
     ids=[str(list(b.items())) for b in _FLOAT_BOUNDS + _EXACT_NUMBERS]
-    + [f"double-{list(b.items())}" for b in _FLOAT_BOUNDS + _EXACT_NUMBERS],
+    + [f"double-{list(b.items())}" for b in _FLOAT_BOUNDS + _EXACT_NUMBERS]
+    + [f"float-{list(b.items())}" for b in _FLOAT_BOUNDS + _EXACT_NUMBERS],
 )
 def test_tiny_and_huge_float_bounds_on_long_column(spark, dtype, bound):
     schema = {"properties": {"n": bound}}
@@ -262,10 +271,9 @@ def test_violation_rows_match_oracle(spark, typed_df):
         spark_viols = compiled.apply_typed(typed_df).select("violations").collect()
         for r, sv in zip(rows, spark_viols):
             inst = {c: v for c, v in zip(cols, r) if v is not None}
-            want = sorted(
-                (e.keyword, e.instance_path) for e in ev.validate(schema, inst).errors
-            )
-            got = sorted((v.keyword, v.instance_path) for v in sv.violations)
+            want = [(e.keyword, e.instance_path, e.keyword_path, e.value, e.error)
+                    for e in ev.validate(schema, inst).errors]
+            got = [tuple(v) for v in sv.violations]
             assert got == want, f"schema={schema} row={inst}"
 
 
@@ -318,6 +326,20 @@ def test_map_violation_paths(spark):
     out = compiled.apply_typed(df).select(F.explode("violations").alias("v")).collect()
     paths = {(r.v.keyword, r.v.instance_path) for r in out}
     assert ("maximum", "/m/b~1c") in paths
+
+
+def test_float_map_values_read_as_written(spark):
+    # a float value is the number to_json writes: 0.1f is 0.1, not
+    # 0.10000000149011612, in the verdict and in the record's value
+    df = spark.createDataFrame([({"a": 0.1},), ({"a": 0.3},)], "m map<string,float>")
+    compiled = ConstraintEngine().compile(
+        {"properties": {"m": {"additionalProperties": {"maximum": 0.1}}}})
+    compiled.lower_columns(df.schema, F.struct(*df.columns))
+    rows = compiled.apply_typed(df).select("passed", "violations").collect()
+    assert [r.passed for r in rows] == [True, False]
+    assert [tuple(v) for v in rows[1].violations] == [
+        ("maximum", "/m/a", "/properties/m/additionalProperties/maximum", "0.3",
+         "violates maximum 0.1")]
 
 
 def test_static_coverage_schemas_lower_without_fallback(spark, typed_df):

@@ -91,9 +91,13 @@ def test_collect_annotations():
         },
         "allOf": [{"deprecated": True}],
         "enum": [{"title": "not-an-annotation"}],  # data, not schema
+        # member names are escaped as JSON pointer tokens
+        "$defs": {"a/b": {"title": "slash"}, "c~d": {"title": "tilde"}},
     }
     rows = collect_annotations(schema)
     got = {(r["keyword_path"], r["keyword"]) for r in rows}
+    assert ("/$defs/a~1b/title", "title") in got
+    assert ("/$defs/c~0d/title", "title") in got
     assert ("/title", "title") in got
     assert ("/properties/url/description", "description") in got
     assert ("/properties/url/format", "format") in got
@@ -113,6 +117,13 @@ def test_draft_next_id_forbids_fragments():
     }
     with pytest.raises(SchemaError):
         validate_schema_document(next_schema)
+    # the error path escapes member names as JSON pointer tokens
+    with pytest.raises(SchemaError) as err:
+        validate_schema_document({
+            "$schema": "https://json-schema.org/draft/next/schema",
+            "$defs": {"x/y": {"properties": {"c~d": {"$id": "https://x.example/t#f"}}}},
+        })
+    assert [v.instance_path for v in err.value.violations] == ["/$defs/x~1y/properties/c~0d"]
     # property NAMES are data: a property named like a data keyword is
     # still a subschema whose $id is checked
     for name in ("default", "enum", "other"):

@@ -7,8 +7,9 @@ Two layers:
   generated (schema, document) pairs drawn from a bounded grammar.
 * Spark-side (seeded, deterministic — no flaky examples): the variant
   lowering must agree with the Arrow batch evaluator on verdicts AND
-  (keyword, instance_path) violation sets for a seeded population of
-  schemas x documents, one createDataFrame per run.
+  the ordered violation records (keyword, instance_path, keyword_path,
+  value, error) for a seeded population of schemas x documents, one
+  createDataFrame per run.
 
 The grammar deliberately wanders into the territory past rounds found
 bugs in: integers beyond 2^53, sub-1e-18 magnitudes, decimal-looking
@@ -24,7 +25,7 @@ import random
 import pytest
 
 from jschon_spark.engine import ConstraintEngine
-from jschon_spark.evaluator import Evaluator
+from jschon_spark.evaluator import Evaluator, Violation
 from jschon_spark.fastpath import compile_valid
 from jschon_spark.lowering.keywords import CannotLower
 from jschon_spark.schema.catalog import SchemaCatalog
@@ -48,6 +49,13 @@ _NUMBERS = [
     0.5, 19.99, -0.25, 1e-20, 2e-20, 1e18, 1.0, 2.5, 100.0,
 ]
 _KEYS = ["a", "b", "c", "k"]
+
+
+def _records(violations) -> list:
+    """Violation records as ordered tuples: Spark rows or evaluator
+    ``Violation`` objects."""
+    return [(v.keyword, v.instance_path, v.keyword_path, v.value, v.error)
+            if isinstance(v, Violation) else tuple(v) for v in violations]
 
 
 def _rand_doc(rng: random.Random, depth: int = 2):
@@ -283,8 +291,7 @@ def test_variant_matches_batch_seeded_population(spark):
                 f"variant={v.passed} batch={b.passed}"
             )
             if v.passed is False:
-                vk = sorted((x.keyword, x.instance_path) for x in v.violations)
-                bk = sorted((x.keyword, x.instance_path) for x in b.violations)
+                vk, bk = _records(v.violations), _records(b.violations)
                 assert vk == bk, f"schema={json.dumps(schema)} doc={d}: {vk} != {bk}"
     # the population must actually exercise the variant path
     assert n_lowered >= N_SCHEMAS // 3, f"only {n_lowered} schemas lowered"
@@ -307,69 +314,103 @@ def test_typed_matches_evaluator_seeded_population_2019_09(spark):
     _typed_population(spark, "2019-09")
 
 
-def _typed_population(spark, dialect: str) -> None:
-    global _KEYS
+# numeric keywords under the typed row's number fields: ``score`` is a
+# double column, ``n`` a bigint one
+_NUMERIC_FIELDS = ("score", "n")
+
+
+def _numeric_schema(rng: random.Random) -> dict:
+    """One to three numeric keywords: bounds, multipleOf, an integer
+    type test and numeric enum/const members, valued from _NUMBERS."""
+    schema: dict = {}
+    for kw in rng.sample(["bounds", "multipleOf", "type", "enum", "const"],
+                         rng.randrange(1, 4)):
+        if kw == "bounds":
+            schema[rng.choice(["minimum", "maximum", "exclusiveMinimum",
+                               "exclusiveMaximum"])] = rng.choice(_NUMBERS)
+        elif kw == "multipleOf":
+            schema["multipleOf"] = rng.choice([1, 2, 3, 0.5, 0.01, 2.5])
+        elif kw == "type":
+            schema["type"] = rng.choice(["integer", "number", ["integer", "null"]])
+        elif kw == "enum":
+            schema["enum"] = rng.sample(_NUMBERS, rng.randrange(1, 4))
+        else:
+            schema["const"] = rng.choice(_NUMBERS)
+    return schema
+
+
+def typed_schema(s_i: int, dialect: str = "2020-12") -> dict:
+    """Schema ``s_i`` of the typed population: the random grammar over
+    the typed row's field names, with the numeric sub-grammar under
+    ``properties.score`` and ``properties.n``."""
     keys_save = list(_KEYS)
     _KEYS[:] = ["url", "lang", "n", "score", "flag", "tags", "nums"]
     try:
-        rng = random.Random(7)
-        rows = []
-        for _ in range(60):
-            rows.append((
-                rng.choice(["https://a.x/1", "", "x", None]),
-                rng.choice(["en", "EN", "zz", "", None]),
-                rng.choice([0, 1, -1, 5, 999999999999999999, 2 ** 53 + 1, None]),
-                # 1e18 and 2^53 next to integer bounds past 2^53, 7e26
-                # and 1e27 for multipleOf past the decimal(38,12) range
-                rng.choice([0.0, 1.5, 19.99, -0.5, 1e-20, 1e18,
-                            9007199254740992.0, 7e26, 1e27, None]),
-                rng.choice([True, False, None]),
-                rng.choice([["a", "b"], ["a", "a"], [], ["x"], [None], None]),
-                rng.choice([[1, 2, 3], [1, 1], [], [5], [None, 2], None]),
-            ))
-        ddl = ("url string, lang string, n long, score double, "
-               "flag boolean, tags array<string>, nums array<long>")
-        from pyspark.sql import functions as F
-
-        df = spark.createDataFrame(rows, ddl).cache()
-        cols = ["url", "lang", "n", "score", "flag", "tags", "nums"]
-        eng = ConstraintEngine()
-        ev = Evaluator()
-        n_lowered = 0
-        for s_i in range(30):
-            schema = _rand_schema(random.Random(333000 + s_i), depth=2,
-                                  dialect=dialect)
-            if dialect != "2020-12":
-                schema["$schema"] = _DIALECT_URIS[dialect]
-            compiled = eng.compile(dict(schema), validate_schema=False)
-            try:
-                compiled.lower_columns(df.schema, F.struct(*df.columns))
-            except CannotLower:
-                continue
-            n_lowered += 1
-            got = [
-                (r.passed,
-                 sorted((x.keyword, x.instance_path) for x in r.violations)
-                 if r.passed is False else [])
-                for r in compiled.apply_typed(df)
-                .select("passed", "violations").collect()
-            ]
-            for r, (gp, gv) in zip(rows, got):
-                inst = {c: v for c, v in zip(cols, r) if v is not None}
-                o = ev.validate(schema, inst)
-                assert gp == o.valid, (
-                    f"[{dialect}] schema={json.dumps(schema)} inst={inst}: "
-                    f"typed={gp} ev={o.valid}"
-                )
-                if gp is False:
-                    want = sorted((e.keyword, e.instance_path) for e in o.errors)
-                    assert gv == want, (
-                        f"[{dialect}] schema={json.dumps(schema)} inst={inst}: "
-                        f"{gv} != {want}"
-                    )
-        assert n_lowered >= 10, f"only {n_lowered} schemas lowered"
+        schema = _rand_schema(random.Random(333000 + s_i), depth=2, dialect=dialect)
     finally:
         _KEYS[:] = keys_save
+    rng = random.Random(444000 + s_i)
+    props = schema.setdefault("properties", {})
+    for name in _NUMERIC_FIELDS:
+        if rng.random() < 0.6:
+            props[name] = {**props.get(name, {}), **_numeric_schema(rng)}
+    if dialect != "2020-12":
+        schema["$schema"] = _DIALECT_URIS[dialect]
+    return schema
+
+
+def _typed_population(spark, dialect: str) -> None:
+    rng = random.Random(7)
+    rows = []
+    for _ in range(60):
+        rows.append((
+            rng.choice(["https://a.x/1", "", "x", None]),
+            rng.choice(["en", "EN", "zz", "", None]),
+            rng.choice([0, 1, -1, 5, 999999999999999999, 2 ** 53 + 1, None]),
+            # 1e18 and 2^53 next to integer bounds past 2^53, 7e26
+            # and 1e27 for multipleOf past the decimal(38,12) range
+            rng.choice([0.0, 1.5, 19.99, -0.5, 1e-20, 1e18,
+                        9007199254740992.0, 7e26, 1e27, None]),
+            rng.choice([True, False, None]),
+            rng.choice([["a", "b"], ["a", "a"], [], ["x"], [None], None]),
+            rng.choice([[1, 2, 3], [1, 1], [], [5], [None, 2], None]),
+        ))
+    ddl = ("url string, lang string, n long, score double, "
+           "flag boolean, tags array<string>, nums array<long>")
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(rows, ddl).cache()
+    cols = ["url", "lang", "n", "score", "flag", "tags", "nums"]
+    eng = ConstraintEngine()
+    ev = Evaluator()
+    n_lowered = 0
+    for s_i in range(30):
+        schema = typed_schema(s_i, dialect)
+        compiled = eng.compile(dict(schema), validate_schema=False)
+        try:
+            compiled.lower_columns(df.schema, F.struct(*df.columns))
+        except CannotLower:
+            continue
+        n_lowered += 1
+        got = [
+            (r.passed, _records(r.violations) if r.passed is False else [])
+            for r in compiled.apply_typed(df)
+            .select("passed", "violations").collect()
+        ]
+        for r, (gp, gv) in zip(rows, got):
+            inst = {c: v for c, v in zip(cols, r) if v is not None}
+            o = ev.validate(schema, inst)
+            assert gp == o.valid, (
+                f"[{dialect}] schema={json.dumps(schema)} inst={inst}: "
+                f"typed={gp} ev={o.valid}"
+            )
+            if gp is False:
+                want = _records(o.errors)
+                assert gv == want, (
+                    f"[{dialect}] schema={json.dumps(schema)} inst={inst}: "
+                    f"{gv} != {want}"
+                )
+    assert n_lowered >= 10, f"only {n_lowered} schemas lowered"
 
 
 # ---- Spark-side: map-typed object path vs evaluator (seeded) ----------
@@ -402,9 +443,7 @@ def test_map_typed_matches_evaluator_seeded_population(spark):
             continue
         n_lowered += 1
         got = [
-            (r.passed,
-             sorted((x.keyword, x.instance_path) for x in r.violations)
-             if r.passed is False else [])
+            (r.passed, _records(r.violations) if r.passed is False else [])
             for r in compiled.apply_typed(df).select("passed", "violations").collect()
         ]
         for (m,), (gp, gv) in zip(rows, got):
@@ -415,7 +454,7 @@ def test_map_typed_matches_evaluator_seeded_population(spark):
                 f"typed={gp} ev={o.valid}"
             )
             if gp is False:
-                want = sorted((e.keyword, e.instance_path) for e in o.errors)
+                want = _records(o.errors)
                 assert gv == want, (
                     f"schema={json.dumps(schema)} inst={inst}: {gv} != {want}"
                 )
@@ -480,8 +519,7 @@ def test_dialect_matrix_seeded_population(spark, tag):
                 f"variant={v.passed} batch={b.passed}"
             )
             if v.passed is False:
-                vk = sorted((x.keyword, x.instance_path) for x in v.violations)
-                bk = sorted((x.keyword, x.instance_path) for x in b.violations)
+                vk, bk = _records(v.violations), _records(b.violations)
                 assert vk == bk, (
                     f"[{tag}] schema={json.dumps(schema)} doc={d}: {vk} != {bk}"
                 )
