@@ -200,12 +200,18 @@ class CompiledSchema:
         pc = F.col(partition_col) if isinstance(partition_col, str) else partition_col
         return (
             validated.groupBy(pc.alias("partition"))
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum(F.when(~F.col("passed"), 1).otherwise(0)).alias("n_failed"),
-            )
+            .agg(*verdict_counts())
             .withColumn("passed", F.col("n_failed") == 0)
         )
+
+
+def verdict_counts() -> list[Column]:
+    """The verdict rollup's aggregates over validated rows: ``n_docs``
+    and ``n_failed`` (rows whose ``passed`` is False)."""
+    return [
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum(F.when(~F.col("passed"), 1).otherwise(0)).alias("n_failed"),
+    ]
 
 
 class ConstraintEngine:

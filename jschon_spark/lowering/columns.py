@@ -20,7 +20,8 @@ What the typed node adds to the walker's keyword semantics:
   **array element** or **map value** is JSON ``null``.
 * struct fields are enumerated at compile time (patternProperties,
   additionalProperties and propertyNames resolve per field name), and
-  ``unevaluated*`` use the walker's static coverage algebra.
+  ``unevaluated*``'s annotation rule folds per field name at compile
+  time; a map's keys and an array's indices are tested per row.
 * timestamps and dates read as the strings ``to_json`` writes for them
   in the row document, so a string keyword gives one verdict whichever
   route the schema takes.
@@ -40,7 +41,6 @@ from pyspark.sql import types as T
 
 from jschon_spark.lowering.keywords import (
     DEC18,
-    VIOLATION_DDL,
     CannotLower,
     _EMPTY_ARR,
     _check,
@@ -109,6 +109,7 @@ class TypedNode:
             {f_.name: f_ for f_ in dtype.fields}
             if isinstance(dtype, T.StructType) else None
         )
+        self._props: dict[str, Any] = {}
 
     def admit(self, schema: dict, dialect: str) -> None:
         if isinstance(self.dtype, T.MapType) and not isinstance(
@@ -237,32 +238,13 @@ class TypedNode:
         # 1.0) cannot arise within it
         return self.size == F.size(F.array_distinct(self.col))
 
+    @property
+    def arr(self) -> Column:
+        return self.col
+
     def item(self, j: int):
         return (TypedNode(F.element_at(self.col, j + 1), self.dtype.elementType),
                 self.size > j)
-
-    def _pairs(self) -> Column:
-        return F.transform(self.col, lambda x, i: F.struct(x.alias("x"), i.alias("i")))
-
-    def each_item(self, start: int, lower):
-        elem_t = self.dtype.elementType
-        tail = F.filter(self._pairs(), lambda p: p["i"] >= start)
-        valid = F.forall(tail, lambda p: lower(TypedNode(p["x"], elem_t), p["i"])[0])
-        viol = F.flatten(
-            F.transform(tail, lambda p: lower(TypedNode(p["x"], elem_t), p["i"])[1])
-        ).cast(VIOLATION_DDL)
-        return F.coalesce(valid, F.lit(True)), F.coalesce(viol, _EMPTY_ARR())
-
-    def count_matching(self, pred) -> Column:
-        elem_t = self.dtype.elementType
-        return F.size(F.filter(self._pairs(), lambda p: pred(TypedNode(p["x"], elem_t))))
-
-    def unevaluated_items(self, walker, schema, base_uri, ipath, kpath):
-        cov_prefix, covers_rest = walker.static_coverage(schema, base_uri, item=True)
-        if covers_rest:
-            return []
-        return [walker.each_item(self, schema["unevaluatedItems"], cov_prefix,
-                                 base_uri, ipath, f"{kpath}/unevaluatedItems")]
 
     # -- objects -------------------------------------------------------------------
     @cached_property
@@ -283,12 +265,18 @@ class TypedNode:
     present = has
 
     def prop(self, name: str):
-        if self.fields is None:
-            return TypedNode(self.col[name], self.dtype.valueType), self.has(name)
-        if name not in self.fields:
-            return None
-        child = self.col[name]
-        return TypedNode(child, self.fields[name].dataType), child.isNotNull()
+        """(child node, present), one per name; None for a field the
+        struct lacks."""
+        if name not in self._props:
+            if self.fields is None:
+                got = self.member(self.col[name]), self.has(name)
+            elif name in self.fields:
+                child = self.col[name]
+                got = TypedNode(child, self.fields[name].dataType), child.isNotNull()
+            else:
+                got = None
+            self._props[name] = got
+        return self._props[name]
 
     @cached_property
     def entries(self) -> Column:
@@ -298,10 +286,8 @@ class TypedNode:
     def keys(self) -> Column:
         return F.map_keys(self.col)
 
-    def entry_node(self, value: Column) -> "TypedNode":
-        return TypedNode(value, self.dtype.valueType)
-
-    def unevaluated_properties(self, walker, schema, base_uri):
-        names, patterns = walker.static_coverage(schema, base_uri, item=False)
-        return sorted(names), sorted(patterns), False
+    def member(self, value: Column) -> "TypedNode":
+        """An array element or a map value."""
+        t = self.dtype
+        return TypedNode(value, t.elementType if isinstance(t, T.ArrayType) else t.valueType)
 

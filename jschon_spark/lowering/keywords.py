@@ -21,9 +21,13 @@ value is accessed and tested:
   type is tested at run time with ``schema_of_variant`` tags.
 
 Rules that differ by source are node methods: type tests and gating,
-how array elements and object entries are enumerated, and
-``unevaluated*`` coverage (the static coverage algebra below for typed
-nodes, a conservative local gate for variant nodes). Numbers have one
+and how array elements, object entries and members are reached.
+Every member-applying keyword visits each member's subschema once
+(``each_member``). ``unevaluated*`` has one rule for both nodes, the
+evaluator's annotation rule (``KeywordWalker.evaluated``): a member is
+evaluated where a sibling passed on it, or where an in-place child
+that passes marked it; a struct field name folds at compile time, a
+map key or an element index is tested per row. Numbers have one
 rule for both nodes, written below (``number_compare``,
 ``multiple_of``); a node gives only its value as a double and as a
 decimal and its static number kind. Nodes build Columns only when a
@@ -40,6 +44,7 @@ from __future__ import annotations
 
 import dataclasses
 import decimal
+import inspect
 import operator
 import re
 from typing import Any, Callable
@@ -291,10 +296,79 @@ def _esc_key(k: Column) -> Column:
     )
 
 
+def each_member(members: Column, visit: Callable, ok: str = "ok") -> tuple[Column, Column]:
+    """Visit every member of the array ``members`` once: ``visit``
+    takes what ``F.transform``'s function takes (the member, or the
+    member and its index) and gives its (valid, violations), kept as
+    one ``struct(ok, w)`` per member. Returns (every member passed,
+    NULL for a NULL array; the failing members' violations, flattened)."""
+    def member(v: Column, w: Column) -> Column:
+        return F.struct(F.coalesce(v, F.lit(False)).alias(ok), w.cast(VIOLATION_DDL).alias("w"))
+
+    if len(inspect.signature(visit).parameters) == 2:
+        res = F.transform(members, lambda e, i: member(*visit(e, i)))
+    else:
+        res = F.transform(members, lambda e: member(*visit(e)))
+    return (F.forall(res, lambda r: r[ok]),
+            F.flatten(F.transform(F.filter(res, lambda r: ~r[ok]), lambda r: r["w"])))
+
+
+# Predicates known at compile time stay Python bools: a static key (a
+# struct field name) folds, and no Column is built for a member no
+# keyword can mark.
+def _all(*preds):
+    out = True
+    for p in preds:
+        if p is False:
+            return False
+        if p is not True:
+            out = p if out is True else out & p
+    return out
+
+
+def _any(*preds):
+    out = False
+    for p in preds:
+        if p is True:
+            return True
+        if p is not False:
+            out = p if out is False else out | p
+    return out
+
+
+def _not(p):
+    return not p if isinstance(p, bool) else ~p
+
+
+def _col(p) -> Column:
+    return p if isinstance(p, Column) else F.lit(p)
+
+
+def _search(pattern: str, key):
+    """``re.search(pattern, key)``: folded for a static key, ``rlike``
+    for a Column; the empty pattern matches every name."""
+    if not pattern:
+        return True
+    if isinstance(key, Column):
+        return rlike(key, pattern)
+    return re.search(pattern, key) is not None
+
+
+def _unnamed(key, names, patterns):
+    """``key`` is none of ``names`` and matches none of ``patterns``:
+    the names ``additionalProperties`` applies to."""
+    return _all(*[_not(key == n) for n in names], *[_not(_search(p, key)) for p in patterns])
+
+
+def _base(schema: dict, base_uri: str) -> str:
+    if isinstance(schema.get("$id"), str):
+        return urljoin(base_uri, schema["$id"]).split("#", 1)[0]
+    return base_uri
+
+
 _REFS = ("$ref", "$dynamicRef", "$recursiveRef")
 _BOUNDS = (("maximum", operator.le), ("exclusiveMaximum", operator.lt),
            ("minimum", operator.ge), ("exclusiveMinimum", operator.gt))
-_BRANCHES = ("anyOf", "oneOf", "if", "then", "else", "dependentSchemas")
 
 # every keyword the walker reads, plus the ones that are inert during
 # evaluation ($anchor and friends are registered by the catalog at
@@ -332,6 +406,9 @@ class KeywordWalker:
         # closure preload runs once, on first $dynamicRef/$recursiveRef
         self._root: tuple[Any, str] | None = None
         self._closure_done = False
+        # node -> [(schema, base, valid)] of every visit: ``passes``
+        # reuses the verdicts the walk built, found by identity
+        self._verdicts: dict[Any, list] = {}
 
     def walk(self, schema: Any, node, base_uri: str, ipath: Column, kpath: str = ""):
         if self._root is None:
@@ -373,6 +450,18 @@ class KeywordWalker:
                 else:
                     yield kw, *self._dynamic_target(kw, schema[kw], base_uri)
 
+    def _inline(self, kw: str, target: Any, kpath: str, build: Callable):
+        """``build()`` with ``target`` entered: acyclic references
+        inline, cycles route to batch."""
+        tid = id(target)
+        if tid in self._ref_stack:
+            raise CannotLower(f"cyclic {kw} at {kpath} -> batch")
+        self._ref_stack.append(tid)
+        try:
+            return build()
+        finally:
+            self._ref_stack.pop()
+
     # -- core -----------------------------------------------------------------
     def visit(self, schema: Any, node, base_uri: str, ipath: Column, kpath: str):
         if isinstance(schema, bool):
@@ -387,8 +476,8 @@ class KeywordWalker:
         if not isinstance(schema, dict):
             raise CannotLower(f"schema must be bool or object at {kpath}")
 
-        if isinstance(schema.get("$id"), str):
-            base_uri = urljoin(base_uri, schema["$id"]).split("#", 1)[0]
+        seen = (schema, base_uri)
+        base_uri = _base(schema, base_uri)
         # custom metaschemas can re-wire keyword semantics (notably a
         # $vocabulary declaring format-assertion makes `format` assert
         # — honored by the evaluator since round 6): anything but the
@@ -412,16 +501,9 @@ class KeywordWalker:
             valids.append(v)
             viols.append(w)
 
-        # acyclic references inline; cycles route to batch
         for kw, target, tbase in self._ref_targets(schema, base_uri):
-            tid = id(target)
-            if tid in self._ref_stack:
-                raise CannotLower(f"cyclic {kw} at {kpath} -> batch")
-            self._ref_stack.append(tid)
-            try:
-                add(*self.visit(target, node, tbase, ipath, f"{kpath}/{kw}"))
-            finally:
-                self._ref_stack.pop()
+            add(*self._inline(kw, target, kpath, lambda: self.visit(
+                target, node, tbase, ipath, f"{kpath}/{kw}")))
 
         if "type" in schema:
             wanted = schema["type"]
@@ -485,12 +567,19 @@ class KeywordWalker:
                 pred = entry.column_fn(schema[kw_name], node.col, node.dtype)
                 add(*_check(node.guard(types[0], pred), kw_name, ipath, kpath,
                             node.value, entry.error))
+        # unevaluated* last, as in the evaluator: the verdicts of the
+        # siblings it reads are built by now, and ``passes`` reuses them
+        if "unevaluatedProperties" in schema and node.may_be("object"):
+            self._unevaluated(schema, node, base_uri, ipath, kpath, False, add)
+        if "unevaluatedItems" in schema and node.may_be("array"):
+            self._unevaluated(schema, node, base_uri, ipath, kpath, True, add)
 
         if not valids:
             return F.lit(True), _EMPTY_ARR()
         valid = valids[0]
         for v in valids[1:]:
             valid = valid & v
+        self._verdicts.setdefault(node, []).append((*seen, valid))
         return valid, _concat(*viols)
 
     def format(self, fmt: Any, node, ipath: Column, kpath: str, add) -> None:
@@ -513,9 +602,15 @@ class KeywordWalker:
         add(*node.check_string(column_fn(node.string), "format", ipath, kpath,
                                message("format", fmt)))
 
-    def passes(self, schema: Any, node, base_uri: str) -> Column:
-        """Non-NULL verdict of ``schema`` on ``node``, violations unused."""
-        ok, _ = self.visit(schema, node, base_uri, F.lit(""), "")
+    def passes(self, schema: Any, node, base_uri: str):
+        """Non-NULL verdict of ``schema`` on ``node``, violations unused;
+        a Python bool for ``true``, ``{}`` and ``false``."""
+        if isinstance(schema, bool) or schema == {}:
+            return schema is not False
+        ok = next((v for s, b, v in self._verdicts.get(node, ())
+                   if s is schema and b == base_uri), None)
+        if ok is None:
+            ok, _ = self.visit(schema, node, base_uri, F.lit(""), "")
         return F.coalesce(ok, F.lit(False))
 
     # -- object keywords --------------------------------------------------------
@@ -569,13 +664,9 @@ class KeywordWalker:
             elif sub is not True:
                 add(*self._entries(node, _key_matches(pat), sub, base_uri, ipath, kp))
         if "additionalProperties" in schema:
-            self._uncovered(node, schema["additionalProperties"], schema, list(props),
-                            list(pats), base_uri, ipath, f"{kpath}/additionalProperties", add)
-        if "unevaluatedProperties" in schema:
-            names, patterns, valid_aware = node.unevaluated_properties(self, schema, base_uri)
-            self._uncovered(node, schema["unevaluatedProperties"], schema, names,
-                            patterns, base_uri, ipath, f"{kpath}/unevaluatedProperties",
-                            add, valid_aware)
+            self._uncovered(node, schema["additionalProperties"],
+                            lambda key, child: _unnamed(key, props, pats), base_uri, ipath,
+                            f"{kpath}/additionalProperties", add)
         if "propertyNames" in schema:
             self._property_names(node, schema["propertyNames"], base_uri, ipath,
                                  f"{kpath}/propertyNames", add)
@@ -589,12 +680,17 @@ class KeywordWalker:
             add(F.when(applies, v).otherwise(F.lit(True)),
                 F.when(applies, w.cast(VIOLATION_DDL)).otherwise(_EMPTY_ARR()))
 
-    def _property(self, node, name, sub, base_uri, ipath, kp, add):
-        """``sub`` applied to the property ``name`` when it is present."""
+    def _property(self, node, name, sub, base_uri, ipath, kp, add, applies_to=None):
+        """``sub`` applied to the property ``name`` when it is present
+        (and ``applies_to(name, child)``, where given)."""
         got = node.prop(name)
         if got is None:
             return  # absent in the physical schema = never present
         child, applies = got
+        if applies_to is not None:
+            applies = _all(applies, applies_to(name, child))
+            if applies is False:
+                return
         v, w = self.visit(sub, child, base_uri,
                           F.concat(ipath, F.lit("/" + pointer_escape(name))), kp)
         add(F.when(applies, v).otherwise(F.lit(True)),
@@ -613,66 +709,27 @@ class KeywordWalker:
         if sub is False:
             pred = node.guard("object", F.size(kept) == 0)
             bad = F.transform(kept, lambda e: _violation(
-                kw, child_path(e), kp, node.entry_node(e["value"]).value, MESSAGES["false"])
+                kw, child_path(e), kp, node.member(e["value"]).value, MESSAGES["false"])
             ).cast(VIOLATION_DDL)
         else:
-            def result(e: Column) -> Column:
-                v, w = self.visit(sub, node.entry_node(e["value"]), base_uri,
-                                  child_path(e), kp)
-                return F.struct(
-                    F.coalesce(v, F.lit(False)).alias("ok"),
-                    w.cast(VIOLATION_DDL).alias("w"),
-                )
-
-            res = F.transform(kept, result)
-            pred = node.guard(
-                "object", F.coalesce(F.forall(res, lambda r: r["ok"]), F.lit(True))
-            )
-            bad = F.flatten(
-                F.transform(F.filter(res, lambda r: ~r["ok"]), lambda r: r["w"])
-            ).cast(VIOLATION_DDL)
+            allok, bad = each_member(kept, lambda e: self.visit(
+                sub, node.member(e["value"]), base_uri, child_path(e), kp))
+            pred = node.guard("object", F.coalesce(allok, F.lit(True)))
+            bad = bad.cast(VIOLATION_DDL)
         return F.coalesce(pred, F.lit(False)), F.when(pred, _EMPTY_ARR()).otherwise(bad)
 
-    def _uncovered(self, node, sub, schema, names, patterns, base_uri, ipath, kp,
-                   add, valid_aware: bool = False):
-        """``sub`` applied to the properties no name in ``names`` and no
-        regex in ``patterns`` covers ('' covers every name). With
-        ``valid_aware`` (variant unevaluatedProperties) a sibling covers
-        a key only where it evaluated it validly; an
-        additionalProperties:true sibling then leaves only the
-        name-matched but failed keys unevaluated."""
+    def _uncovered(self, node, sub, applies_to, base_uri, ipath, kp, add):
+        """``sub`` applied to every present property where
+        ``applies_to(name, child)`` holds (True, False or a Column; the
+        name is a str for a struct field, else the entry's key)."""
         if node.fields is not None:
-            rxs = [re.compile(p) for p in patterns]
             for name in node.fields:
-                if name not in names and not any(rx.search(name) for rx in rxs):
-                    self._property(node, name, sub, base_uri, ipath, kp, add)
+                self._property(node, name, sub, base_uri, ipath, kp, add, applies_to)
             return
         if sub is True:
             return
-        props = schema.get("properties") or {}
-        pats = schema.get("patternProperties") or {}
-        ap_true = valid_aware and schema.get("additionalProperties") is True
-
-        def keep(e: Column) -> Column:
-            cond = F.lit(True)
-            name_match = F.lit(False)
-            for name in names:
-                m = e["key"] == F.lit(name)
-                if ap_true:
-                    name_match = name_match | m
-                if valid_aware:
-                    m = m & self.passes(props[name], node.entry_node(e["value"]), base_uri)
-                cond = cond & ~m
-            for p in patterns:
-                m = rlike(e["key"], p) if p else F.lit(True)
-                if ap_true:
-                    name_match = name_match | m
-                if valid_aware:
-                    m = m & self.passes(pats[p], node.entry_node(e["value"]), base_uri)
-                cond = cond & ~m
-            return cond & name_match if ap_true else cond
-
-        add(*self._entries(node, keep, sub, base_uri, ipath, kp))
+        add(*self._entries(node, lambda e: _col(applies_to(e["key"], node.member(e["value"]))),
+                           sub, base_uri, ipath, kp))
 
     def _property_names(self, node, sub, base_uri, ipath, kp, add):
         """Evaluator parity: a failing name emits the 'propertyNames'
@@ -700,22 +757,16 @@ class KeywordWalker:
             return
         from jschon_spark.lowering.columns import TypedNode
 
-        keys = node.keys
-
         def name_result(k: Column):
-            return self.visit(sub, TypedNode(k, T.StringType()), base_uri, ipath, kp)
-
-        def per_name(k: Column) -> Column:
-            ok, w = name_result(k)
-            return F.when(ok, _EMPTY_ARR()).otherwise(F.concat(
+            ok, w = self.visit(sub, TypedNode(k, T.StringType()), base_uri, ipath, kp)
+            return ok, F.concat(
                 F.array(_violation("propertyNames", ipath, kp, k,
                                    message("propertyNames"))).cast(VIOLATION_DDL),
-                w.cast(VIOLATION_DDL),
-            ))
+                w.cast(VIOLATION_DDL))
 
-        pred = node.guard("object", F.forall(keys, lambda k: name_result(k)[0]))
-        viol = F.when(node.is_type("object") & ~F.coalesce(pred, F.lit(True)),
-                      F.flatten(F.transform(keys, per_name))
+        allok, bad = each_member(node.keys, name_result)
+        pred = node.guard("object", allok)
+        viol = F.when(node.is_type("object") & ~F.coalesce(pred, F.lit(True)), bad
                       ).otherwise(_EMPTY_ARR()).cast(VIOLATION_DDL)
         add(F.coalesce(pred, F.lit(False)), viol)
 
@@ -743,16 +794,11 @@ class KeywordWalker:
         if rest_kw in schema:
             add(*self.each_item(node, schema[rest_kw], len(prefix), base_uri, ipath,
                                 f"{kpath}/{rest_kw}"))
-        # built ahead of contains (whose checks it follows): the typed
-        # coverage refuses contains siblings before any Column is built
-        unevaluated = (node.unevaluated_items(self, schema, base_uri, ipath, kpath)
-                       if "unevaluatedItems" in schema else [])
 
         if "contains" in schema:
             sub = schema["contains"]
-            n_match = node.count_matching(
-                lambda e: self.visit(sub, e, base_uri, ipath, f"{kpath}/contains")[0]
-            )
+            n_match = F.size(F.filter(node.arr, lambda e: F.coalesce(self.visit(
+                sub, node.member(e), base_uri, ipath, f"{kpath}/contains")[0], F.lit(False))))
             # evaluator parity: a bare contains miss reports "contains";
             # explicit bounds report min/maxContains
             min_c = schema.get("minContains", 1)
@@ -766,8 +812,6 @@ class KeywordWalker:
             if "minContains" in schema:
                 add(*_check(node.guard("array", n_match >= min_c), "minContains", ipath,
                             kpath, n_match, message("minContains", min_c)))
-        for pair in unevaluated:
-            add(*pair)
 
     def item_keywords(self, schema):
         """(positional subschemas, their keyword, the rest-schema
@@ -780,11 +824,23 @@ class KeywordWalker:
             return items, "items", "additionalItems"
         return schema.get("prefixItems", []), "prefixItems", "items"
 
-    def each_item(self, node, sub, start: int, base_uri, ipath, kp):
+    def each_item(self, node, sub, start: int, base_uri, ipath, kp, covered=None):
         """``sub`` applied to every element at index >= start, with
-        positions in the ORIGINAL array for violation paths."""
-        return node.each_item(start, lambda e, i: self.visit(
-            sub, e, base_uri, F.concat(ipath, F.lit("/"), i.cast("string")), kp))
+        positions in the ORIGINAL array for violation paths; an element
+        ``covered(index, child)`` marks passes (unevaluatedItems)."""
+        def visit(e: Column, i: Column):
+            child, at = node.member(e), i + start
+            v, w = self.visit(sub, child, base_uri,
+                              F.concat(ipath, F.lit("/"), at.cast("string")), kp)
+            return (v if covered is None else _col(_any(covered(at, child), v))), w
+
+        rest = F.slice(node.arr, start + 1, F.greatest(node.size - start, F.lit(0)))
+        # "v": the field name the variant items plans have always carried
+        allok, bad = each_member(rest, visit, ok="v")
+        pred = node.guard("array", F.coalesce(allok, F.lit(True)))
+        viol = F.when(node.is_type("array") & ~F.coalesce(allok, F.lit(True)), bad
+                      ).otherwise(_EMPTY_ARR()).cast(VIOLATION_DDL)
+        return F.coalesce(pred, F.lit(False)), viol
 
     # -- combinators -----------------------------------------------------------
     def _combinators(self, schema, node, base_uri, ipath, kpath, add):
@@ -836,75 +892,82 @@ class KeywordWalker:
                 add(F.when(~cond, v).otherwise(F.lit(True)),
                     F.when(~cond, w).otherwise(_EMPTY_ARR()))
 
-    # -- unevaluated* coverage ----------------------------------------------------
-    def static_coverage(self, schema, base_uri: str, item: bool, _seen=frozenset()):
-        """Coverage contributed by this schema and its unconditional
-        in-place children (allOf, $ref) — the compile-time annotation
-        algebra for unevaluatedProperties (``item=False``: the covered
-        names and patterns) and unevaluatedItems (``item=True``: the
-        covered prefix length and whether the rest is covered).
-        Branch applicators stay static when EVERY arm contributes
-        identical coverage (annotations from a failed `if` don't count,
-        so the taken-branch coverage is (if ∪ then) vs (else)); other
-        branch-dependent coverage, and contains next to
-        unevaluatedItems (per-element dynamic), -> CannotLower.
-
-        Verdicts match the evaluator exactly; on documents that ALREADY
-        fail a covering branch the violation list may omit redundant
-        unevaluated* entries (the document is invalid either way)."""
+    # -- unevaluated* ------------------------------------------------------------
+    def _unevaluated(self, schema, node, base_uri, ipath, kpath, item: bool, add) -> None:
+        """``unevaluatedItems`` (``item``) or ``unevaluatedProperties``
+        applied to the present members its siblings leave unevaluated."""
         kw = "unevaluatedItems" if item else "unevaluatedProperties"
-        if id(schema) in _seen:
-            raise CannotLower("cyclic coverage -> batch")
-        _seen = _seen | {id(schema)}
-        if not isinstance(schema, dict):
-            return (0, False) if item else (frozenset(), frozenset())
-        if "dependentSchemas" in schema:
-            raise CannotLower(f"{kw} with branch-dependent coverage -> batch")
+        sub, kp = schema[kw], f"{kpath}/{kw}"
+        if sub is True:
+            return
+        # base_uri is already this schema's: its $id must not apply twice
+        siblings = {k: v for k, v in schema.items() if k not in (kw, "$id")}
+
+        def covered(key, child):
+            return self.evaluated(siblings, node, base_uri, key, child, item)
+
         if item:
-            if "contains" in schema:
-                raise CannotLower("unevaluatedItems alongside contains -> batch")
-            prefix, _, rest_kw = self.item_keywords(schema)
-            cov = (len(prefix), rest_kw in schema)
+            add(*self.each_item(node, sub, 0, base_uri, ipath, kp, covered))
         else:
-            patterns = set(schema.get("patternProperties", {}))
+            self._uncovered(node, sub, lambda key, child: _not(covered(key, child)),
+                            base_uri, ipath, kp, add)
+
+    def evaluated(self, schema, node, base_uri: str, key, child, item: bool):
+        """Whether the annotations of ``schema`` at ``node`` mark its
+        member ``key`` (an index with ``item``, else a property name; a
+        str for a struct field, else a Column) as evaluated, ``child``
+        being the member's node: True, False or a Column. The
+        evaluator's rule (``_Frame.located`` and ``merge``): a keyword
+        marks the members it passes on, and an in-place subschema
+        passes its marks up only where it passes."""
+        if not isinstance(schema, dict):
+            return False
+        base_uri = _base(schema, base_uri)
+
+        def mark(cond, sub):
+            return False if cond is False else _all(cond, self.passes(sub, child, base_uri))
+
+        if item:
+            prefix, _, rest_kw = self.item_keywords(schema)
+            marks = [mark(key == j, sub) for j, sub in enumerate(prefix)]
+            if rest_kw in schema:
+                marks.append(mark(key >= len(prefix), schema[rest_kw]))
+            if "contains" in schema and self.dialect != "2019-09":
+                # 2019-09 collects only items/additionalItems annotations
+                marks.append(mark(True, schema["contains"]))
+        else:
+            props = schema.get("properties", {})
+            pats = schema.get("patternProperties", {})
+            marks = [mark(key == name, sub) for name, sub in props.items()]
+            marks += [mark(_search(p, key), sub) for p, sub in pats.items()]
             if "additionalProperties" in schema:
-                patterns.add("")  # covers everything it applies to
-            cov = (frozenset(schema.get("properties", {})), frozenset(patterns))
+                marks.append(mark(_unnamed(key, props, pats), schema["additionalProperties"]))
+        kw = "unevaluatedItems" if item else "unevaluatedProperties"
+        if kw in schema:
+            # it marks where it passes among the members its siblings
+            # leave: with theirs, every member marked or passing
+            marks.append(mark(True, schema[kw]))
 
-        def join(a, b):
-            if item:
-                return max(a[0], b[0]), a[1] or b[1]
-            return a[0] | b[0], a[1] | b[1]
+        def in_place(sub, cond=True, base=base_uri):
+            inner = False if cond is False else self.evaluated(sub, node, base, key, child, item)
+            return False if inner is False else _all(cond, self.passes(sub, node, base), inner)
 
-        def sub_cov(sub, base=base_uri):
-            return self.static_coverage(sub, base, item, _seen)
-
-        for sub in schema.get("allOf", []):
-            cov = join(cov, sub_cov(sub))
-        for _, target, tbase in self._ref_targets(schema, base_uri):
-            cov = join(cov, sub_cov(target, tbase))
-        empty = sub_cov(True)
-        arms = []
+        for kw, target, tbase in self._ref_targets(schema, base_uri):
+            marks.append(self._inline(kw, target, "", lambda: in_place(target, base=tbase)))
+        for comb in ("allOf", "anyOf", "oneOf"):
+            marks += [in_place(sub) for sub in schema.get(comb, [])]
         if "if" in schema:
-            taken = join(sub_cov(schema["if"]), sub_cov(schema.get("then", True)))
-            arms.append([taken, sub_cov(schema.get("else", True))])
-        for comb in ("anyOf", "oneOf"):
-            if comb in schema:
-                arms.append([sub_cov(sub) for sub in schema[comb]] or [empty])
-        for covs in arms:
-            if any(c != covs[0] for c in covs[1:]):
-                raise CannotLower(f"{kw} with branch-dependent coverage -> batch")
-            cov = join(cov, covs[0])
-        return cov
-
-    def local_coverage_gate(self, schema, kw: str) -> None:
-        """The conservative rule: ``kw`` lowers only when NOTHING else
-        can contribute annotations at this level — in-place applicators
-        and references merge child coverage the Column algebra can't
-        see."""
-        blockers = {*_REFS, "allOf", *_BRANCHES} & set(schema)
-        if blockers:
-            raise CannotLower(f"{kw} with {sorted(blockers)} -> batch")
+            cond = self.passes(schema["if"], node, base_uri)
+            marks.append(in_place(schema["if"]))
+            if "then" in schema:
+                marks.append(in_place(schema["then"], cond))
+            if "else" in schema:
+                marks.append(in_place(schema["else"], _not(cond)))
+        if not item:
+            for k, sub in schema.get("dependentSchemas", {}).items():
+                if node.fields is None or k in node.fields:
+                    marks.append(in_place(sub, node.present(k)))
+        return _any(*marks)
 
 
 def _key_matches(pattern: str) -> Callable[[Column], Column]:

@@ -19,14 +19,14 @@ through:
     element and entry keywords lower onto higher-order functions.
 
 Compound enum/const lower to recursive structural equality.
-``unevaluatedProperties``/``unevaluatedItems`` are conservatively
-GATED (lowerable when no in-place applicator can merge child
-annotations at the same level); genuinely dynamic ``$dynamicRef``/
-``$recursiveRef`` and keywords outside the variant vocabulary raise
-CannotLower → the engine runs the Arrow batch evaluator. Violations are
-the batch evaluator's records: the same message table, value rule and
-sort. Numbers follow the one numeric rule of keywords.py; a
-variant value always takes its general, runtime-tiered form.
+``unevaluatedProperties``/``unevaluatedItems`` take the walker's
+annotation rule, tested per object entry and per element. Genuinely
+dynamic ``$dynamicRef``/``$recursiveRef`` and keywords outside the
+variant vocabulary raise CannotLower → the engine runs the Arrow batch
+evaluator. Violations are the batch evaluator's records: the same
+message table, value rule and sort. Numbers follow the one numeric
+rule of keywords.py; a variant value always takes its general,
+runtime-tiered form.
 """
 
 from __future__ import annotations
@@ -45,7 +45,6 @@ from jschon_spark.lowering.keywords import (
     KEYWORDS,
     VIOLATION_DDL,
     CannotLower,
-    _EMPTY_ARR,
     _check,
     _violation,
     is_integral,
@@ -119,6 +118,7 @@ class VariantNode:
         self.col = val
         self.raw = raw
         self._tags: dict[str, Column] = {}
+        self._props: dict[str, tuple] = {}
 
     def admit(self, schema: dict, dialect: str) -> None:
         allowed = KEYWORDS - {"uniqueItems"}
@@ -226,71 +226,6 @@ class VariantNode:
     def item(self, j: int):
         return VariantNode(F.get(self.arr, j)), self.is_type("array") & (self.size > j)
 
-    def each_item(self, start: int, lower):
-        def result(e: Column, i: Column) -> Column:
-            v, w = lower(VariantNode(e), i + start)
-            return F.struct(
-                F.coalesce(v, F.lit(False)).alias("v"),
-                w.cast(VIOLATION_DDL).alias("w"),
-            )
-
-        rest = F.slice(self.arr, start + 1, F.greatest(self.size - start, F.lit(0)))
-        per = F.transform(rest, result)
-        allok = F.forall(per, lambda s: s["v"])
-        pred = self.guard("array", F.coalesce(allok, F.lit(True)))
-        wcol = F.when(
-            self.is_type("array") & ~F.coalesce(allok, F.lit(True)),
-            F.flatten(F.transform(F.filter(per, lambda s: ~s["v"]), lambda s: s["w"])),
-        ).otherwise(_EMPTY_ARR()).cast(VIOLATION_DDL)
-        return F.coalesce(pred, F.lit(False)), wcol
-
-    def count_matching(self, pred) -> Column:
-        return F.size(F.filter(
-            self.arr, lambda e: F.coalesce(pred(VariantNode(e)), F.lit(False))
-        ))
-
-    def unevaluated_items(self, walker, schema, base_uri, ipath, kpath):
-        """Conservative gate (mirroring unevaluatedProperties): no
-        in-place applicator may merge child item annotations at this
-        level, and (2020-12) no contains sibling — its matches count as
-        evaluated there, a per-element dynamic fact; 2019-09 collects
-        only items/additionalItems/unevaluatedItems annotations, so
-        contains is inert (reference legacy.py:115-147). Coverage is
-        valid-aware like the evaluator's: evaluated_items.add(i) happens
-        only when the sibling application SUCCEEDED on the element."""
-        walker.local_coverage_gate(schema, "unevaluatedItems")
-        if walker.dialect != "2019-09" and "contains" in schema:
-            raise CannotLower("unevaluatedItems with contains -> batch")
-        uei = schema["unevaluatedItems"]
-        if uei is True:
-            return []
-        prefix, _, rest_kw = walker.item_keywords(schema)
-
-        def result(e: Column, i: Column) -> Column:
-            node = VariantNode(e)
-            covered = F.lit(False)
-            for j, psub in enumerate(prefix):
-                covered = F.when(i == j, walker.passes(psub, node, base_uri)).otherwise(covered)
-            if rest_kw in schema:
-                covered = F.when(
-                    i >= len(prefix), walker.passes(schema[rest_kw], node, base_uri)
-                ).otherwise(covered)
-            cv, cw = walker.visit(uei, node, base_uri,
-                                  F.concat(ipath, F.lit("/"), i.cast("string")),
-                                  f"{kpath}/unevaluatedItems")
-            ok = covered | F.coalesce(cv, F.lit(False))
-            return F.struct(
-                ok.alias("ok"),
-                F.when(ok, _EMPTY_ARR()).otherwise(cw).cast(VIOLATION_DDL).alias("w"),
-            )
-
-        res = F.transform(self.arr, result)
-        pred = self.guard("array", F.coalesce(F.forall(res, lambda r: r["ok"]), F.lit(True)))
-        bad = F.flatten(
-            F.transform(F.filter(res, lambda r: ~r["ok"]), lambda r: r["w"])
-        ).cast(VIOLATION_DDL)
-        return [(F.coalesce(pred, F.lit(False)), F.when(pred, _EMPTY_ARR()).otherwise(bad))]
-
     # -- objects -------------------------------------------------------------------
     @cached_property
     def keys(self) -> Column:
@@ -315,26 +250,18 @@ class VariantNode:
         return self.is_type("object") & self.has(name)
 
     def prop(self, name: str):
-        child = VariantNode(self._child(name))
-        return child, self.present(name)
+        """(child node, present), one per name."""
+        if name not in self._props:
+            self._props[name] = VariantNode(self._child(name)), self.present(name)
+        return self._props[name]
 
     @cached_property
     def entries(self) -> Column:
         return F.map_entries(F.try_variant_get(self.col, "$", "map<string, variant>"))
 
-    def entry_node(self, value: Column) -> "VariantNode":
+    def member(self, value: Column) -> "VariantNode":
+        """An array element or an object entry's value."""
         return VariantNode(value)
-
-    def unevaluated_properties(self, walker, schema, base_uri):
-        """Conservative gate: additionalProperties:true evaluates every
-        uncovered key (handled by the walker); any other form -> batch.
-        Coverage counts only VALIDLY evaluated siblings."""
-        walker.local_coverage_gate(schema, "unevaluatedProperties")
-        if schema.get("additionalProperties", True) is not True:
-            raise CannotLower(
-                "unevaluatedProperties alongside non-trivial additionalProperties -> batch")
-        return (list(schema.get("properties") or {}),
-                list(schema.get("patternProperties") or {}), True)
 
 
 def variant_node(json_col: str) -> VariantNode:

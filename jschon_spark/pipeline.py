@@ -209,10 +209,7 @@ def validate_corpus_checkpointed(
                 (F.col("warc_ts") >= start) & (F.col("warc_ts") < end)
             )
         validated = compiled.apply_typed(part_docs, PAGE_DOC_COLS)
-        row = validated.agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.when(~F.col("passed"), 1).otherwise(0)).alias("n_failed"),
-        ).collect()[0]
+        row = validated.agg(*engine.verdict_counts()).collect()[0]
         return {"n_docs": row["n_docs"], "n_failed": row["n_failed"] or 0}
 
     from jschon_spark.plans.manifests import run_partitioned

@@ -65,10 +65,7 @@ def partition_verdicts_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = engine.compiled(DOC_SCHEMA).apply_typed(docs, DOC_COLS)
     return (
         out.groupBy(F.col("source").alias("src"))
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.when(~F.col("passed"), 1).otherwise(0)).alias("n_failed"),
-        )
+        .agg(*engine.verdict_counts())
         .withColumn("passed", F.col("n_failed") == 0)
     )
 

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from jschon_spark.engine import verdict_counts
+
 
 def windowed_verdicts(
     validated: DataFrame,
@@ -34,10 +36,7 @@ def windowed_verdicts(
     return (
         validated.withWatermark(ts_col, watermark)
         .groupBy(F.window(ts_col, window).alias("win"))
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.when(~F.col("passed"), 1).otherwise(0)).alias("n_failed"),
-        )
+        .agg(*verdict_counts())
         .select(
             F.col("win.start").alias("window_start"),
             F.col("win.end").alias("window_end"),

@@ -109,7 +109,8 @@ NUMERIC_SCHEMAS = [
 
 
 def _random_schemas():
-    from tests.test_random_differential import _rand_schema, typed_schema
+    from tests.test_random_differential import (
+        UNEVAL_DDL, _rand_schema, typed_schema, uneval_schema)
 
     for i in range(40):
         yield f"rand/variant/{i}", _rand_schema(random.Random(2000 + i), depth=2), None
@@ -119,6 +120,8 @@ def _random_schemas():
         yield (f"rand/map/{i}",
                {"properties": {"m": _rand_schema(random.Random(777000 + i), depth=2)}},
                "struct<m:map<string,bigint>>")
+    for i in range(40):
+        yield f"rand/uneval/{i}", uneval_schema(i), UNEVAL_DDL
     for tag, uri, dialect in (
         ("2019-09", "https://json-schema.org/draft/2019-09/schema", "2019-09"),
         ("next", "https://json-schema.org/draft/next/schema", "2020-12"),

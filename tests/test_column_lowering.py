@@ -68,7 +68,7 @@ SCHEMAS = [
     {"propertyNames": {"pattern": "^[a-z]+$"}},
     {"$ref": "#/$defs/page", "$defs": {"page": {"required": ["url"], "properties": {"url": {"pattern": "^https"}}}}},
     {"properties": {"url": {"type": "string"}}, "unevaluatedProperties": True},
-    # unevaluatedItems: static coverage through prefixItems and allOf
+    # unevaluatedItems: coverage through prefixItems and allOf
     {"properties": {"nums": {"prefixItems": [{"minimum": 1}], "unevaluatedItems": {"maximum": 2}}}},
     {"properties": {"nums": {"allOf": [{"prefixItems": [{"minimum": 0}, {"minimum": 0}]}], "unevaluatedItems": False}}},
     {"properties": {"nums": {"items": {"type": "integer"}, "unevaluatedItems": False}}},
@@ -343,9 +343,9 @@ def test_float_map_values_read_as_written(spark):
 
 
 def test_static_coverage_schemas_lower_without_fallback(spark, typed_df):
-    """The unevaluated* static-coverage schemas must take the typed
-    Column path — falling back to batch would hide a lowering
-    regression (the differential above passes either way)."""
+    """The unevaluated* schemas must take the typed Column path —
+    falling back to batch would hide a lowering regression (the
+    differential above passes either way)."""
     lowerable = [
         {"properties": {"nums": {"prefixItems": [{"minimum": 1}], "unevaluatedItems": {"maximum": 2}}}},
         {"properties": {"nums": {"allOf": [{"prefixItems": [{"minimum": 0}]}], "unevaluatedItems": False}}},
@@ -376,7 +376,11 @@ def test_static_coverage_schemas_lower_without_fallback(spark, typed_df):
     ]:
         compiled = eng.compile(dict(schema))
         compiled.lower_columns(typed_df.schema, F.struct(*typed_df.columns))
-    # branch-DIVERGENT coverage must still refuse the typed path
+    # branch-DIVERGENT coverage lowers too, with the evaluator's records:
+    # a member counts as evaluated per row, where its marking branch passed
+    rows = typed_df.collect()
+    ev = Evaluator()
+    cols = ["url", "lang", "n", "score", "flag", "tags", "nums"]
     for schema in [
         {"properties": {"nums": {"contains": {"minimum": 2}, "unevaluatedItems": False}}},
         {"if": {"required": ["url"]}, "then": {"properties": {"lang": True}},
@@ -385,8 +389,15 @@ def test_static_coverage_schemas_lower_without_fallback(spark, typed_df):
          "unevaluatedProperties": False},
     ]:
         compiled = eng.compile(dict(schema))
-        with pytest.raises(CannotLower):
-            compiled.lower_columns(typed_df.schema, F.struct(*typed_df.columns))
+        compiled.lower_columns(typed_df.schema, F.struct(*typed_df.columns))
+        got = compiled.apply_typed(typed_df).select("passed", "violations").collect()
+        for r, g in zip(rows, got):
+            inst = {c: v for c, v in zip(cols, r) if v is not None}
+            o = ev.validate(schema, inst)
+            want = [(e.keyword, e.instance_path, e.keyword_path, e.value, e.error)
+                    for e in o.errors]
+            assert (g.passed, [tuple(v) for v in g.violations]) == (o.valid, want), (
+                f"schema={schema} row={inst}")
 
 
 # one valid value per built-in format, mutated by the fuzz below

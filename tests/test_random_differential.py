@@ -601,3 +601,120 @@ def test_format_assertion_vocabulary_equivalence_fuzz():
             assert got == want, (fmt, v, got, want)
             checked += 1
     assert checked >= 200
+
+
+# ---- unevaluated* beside the keywords that mark members (seeded) -------
+
+# the row of the unevaluated* population: static keys (the row's
+# fields), dynamic keys (``m``) and array indices (``nums``)
+UNEVAL_DDL = "struct<a:bigint,b:string,m:map<string,bigint>,nums:array<bigint>>"
+_UNEVAL_LEAVES = [True, False, {}, {"type": "integer"}, {"type": "string"},
+                  {"minimum": 2}, {"maximum": 5}, {"const": 1}]
+
+
+def _uneval_object(rng: random.Random, keys: list, depth: int) -> dict:
+    """An object schema over ``keys``: members marked by properties,
+    patternProperties and additionalProperties, in-place allOf, anyOf,
+    if/then/else and dependentSchemas children, and at most levels an
+    unevaluatedProperties."""
+    schema: dict = {}
+    pool = ["properties", "patternProperties", "additionalProperties"]
+    if depth > 0:
+        pool += ["allOf", "anyOf", "if", "dependentSchemas"]
+    for kw in rng.sample(pool, rng.randrange(1, 4)):
+        if kw == "properties":
+            schema[kw] = {k: rng.choice(_UNEVAL_LEAVES)
+                          for k in rng.sample(keys, rng.randrange(1, 3))}
+        elif kw == "patternProperties":
+            schema[kw] = {rng.choice(["^a", "b", "^x", "1$"]): rng.choice(_UNEVAL_LEAVES)}
+        elif kw == "additionalProperties":
+            schema[kw] = rng.choice(_UNEVAL_LEAVES)
+        elif kw in ("allOf", "anyOf"):
+            schema[kw] = [_uneval_object(rng, keys, depth - 1)
+                          for _ in range(rng.randrange(1, 3))]
+        elif kw == "if":
+            schema["if"] = _uneval_object(rng, keys, depth - 1)
+            for branch in ("then", "else"):
+                if rng.random() < 0.6:
+                    schema[branch] = _uneval_object(rng, keys, depth - 1)
+        else:
+            schema[kw] = {rng.choice(keys): _uneval_object(rng, keys, depth - 1)}
+    if rng.random() < 0.7:
+        schema["unevaluatedProperties"] = rng.choice([False, *_UNEVAL_LEAVES])
+    return schema
+
+
+def _uneval_array(rng: random.Random, depth: int) -> dict:
+    """An array schema: elements marked by prefixItems, items and
+    contains, in-place allOf, anyOf and if/then/else children, and at
+    most levels an unevaluatedItems."""
+    schema: dict = {}
+    pool = ["prefixItems", "items", "contains"]
+    if depth > 0:
+        pool += ["allOf", "anyOf", "if"]
+    for kw in rng.sample(pool, rng.randrange(1, 4)):
+        if kw == "prefixItems":
+            schema[kw] = [rng.choice(_UNEVAL_LEAVES) for _ in range(rng.randrange(1, 3))]
+        elif kw in ("items", "contains"):
+            schema[kw] = rng.choice(_UNEVAL_LEAVES)
+        elif kw in ("allOf", "anyOf"):
+            schema[kw] = [_uneval_array(rng, depth - 1) for _ in range(rng.randrange(1, 3))]
+        else:
+            schema["if"] = _uneval_array(rng, depth - 1)
+            for branch in ("then", "else"):
+                if rng.random() < 0.6:
+                    schema[branch] = _uneval_array(rng, depth - 1)
+    if rng.random() < 0.7:
+        schema["unevaluatedItems"] = rng.choice([False, *_UNEVAL_LEAVES])
+    return schema
+
+
+def uneval_schema(s_i: int) -> dict:
+    """Schema ``s_i`` of the unevaluated* population over UNEVAL_DDL:
+    an object schema over the row, with object schemas under
+    ``properties.m`` and array schemas under ``properties.nums``."""
+    rng = random.Random(555000 + s_i)
+    schema = _uneval_object(rng, ["a", "b", "m", "nums"], 1)
+    schema.setdefault("unevaluatedProperties", False)
+    props = schema.setdefault("properties", {})
+    props["m"] = _uneval_object(rng, ["a", "b", "c", "x1"], 1)
+    props["nums"] = _uneval_array(rng, 1)
+    return schema
+
+
+def test_typed_unevaluated_matches_evaluator_seeded_population(spark):
+    """unevaluated* on the typed route takes the evaluator's annotation
+    rule: full ordered records against the evaluator's, over struct
+    fields (static keys), a ``map<string,bigint>`` (dynamic keys) and
+    an ``array<bigint>`` (element indices)."""
+    from pyspark.sql import types as T
+
+    rng = random.Random(13)
+    vals = [0, 1, 5, 7, None]
+    rows = []
+    for _ in range(40):
+        rows.append((
+            rng.choice([0, 1, 5, 7, None]),
+            rng.choice(["x", "ab", "", None]),
+            rng.choice([None, {}] + [
+                {rng.choice(["a", "b", "c", "x1"]): rng.choice(vals)
+                 for _ in range(rng.randrange(1, 4))} for _ in range(4)]),
+            rng.choice([None, [], [1], [1, 2], [5, 1, 7], [2, None], [7, 7, 0, 1]]),
+        ))
+    cols = ["a", "b", "m", "nums"]
+    insts = [{c: v for c, v in zip(cols, r) if v is not None} for r in rows]
+    df = spark.createDataFrame(rows, T._parse_datatype_string(UNEVAL_DDL)).cache()
+    ev = Evaluator()
+    n_lowered = 0
+    for s_i in range(40):
+        schema = uneval_schema(s_i)
+        compiled = ConstraintEngine().compile(dict(schema), validate_schema=False)
+        got = compiled.apply_typed(df).select("passed", "violations").collect()
+        if compiled.explain()[("apply_typed", UNEVAL_DDL)]["route"] != "typed":
+            continue
+        n_lowered += 1
+        for inst, r in zip(insts, got):
+            o = ev.validate(schema, inst)
+            assert (r.passed, _records(r.violations)) == (o.valid, _records(o.errors)), (
+                f"schema={json.dumps(schema)} inst={inst}")
+    assert n_lowered >= 36, f"only {n_lowered} schemas took the typed route"

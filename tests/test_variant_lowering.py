@@ -427,62 +427,51 @@ UEI_DOCS = ['[1, 2]', '[1, "x"]', '["a"]', '[]', '[1, 2, 3, 4]', '[null]',
             None]
 
 UEI_CASES = [
-    # (lowers?, schema)
-    (True, {"unevaluatedItems": False}),
-    (True, {"unevaluatedItems": {"type": "integer"}}),
-    (True, {"prefixItems": [{"type": "integer"}], "unevaluatedItems": False}),
-    (True, {"prefixItems": [{"type": "integer"}, {"type": "string"}],
-            "unevaluatedItems": {"type": "boolean"}}),
+    {"unevaluatedItems": False},
+    {"unevaluatedItems": {"type": "integer"}},
+    {"prefixItems": [{"type": "integer"}], "unevaluatedItems": False},
+    {"prefixItems": [{"type": "integer"}, {"type": "string"}],
+     "unevaluatedItems": {"type": "boolean"}},
     # a FAILED prefix application leaves the item unevaluated -> uei
     # also applies to it (valid-aware coverage)
-    (True, {"prefixItems": [{"type": "integer"}],
-            "unevaluatedItems": {"type": "string"}}),
-    (True, {"items": {"type": "integer"},
-            "unevaluatedItems": {"type": "string"}}),
-    (True, {"items": True, "unevaluatedItems": False}),
-    (True, {"prefixItems": [{"type": "integer"}], "unevaluatedItems": True}),
-    # 2020-12: contains matches count as evaluated (dynamic) -> batch
-    (False, {"contains": {"type": "integer"}, "unevaluatedItems": False}),
-    # in-place applicators merge child annotations -> batch
-    (False, {"allOf": [{"minItems": 0}], "unevaluatedItems": False}),
+    {"prefixItems": [{"type": "integer"}], "unevaluatedItems": {"type": "string"}},
+    {"items": {"type": "integer"}, "unevaluatedItems": {"type": "string"}},
+    {"items": True, "unevaluatedItems": False},
+    {"prefixItems": [{"type": "integer"}], "unevaluatedItems": True},
+    # 2020-12: the elements contains matches count as evaluated, per row
+    {"contains": {"type": "integer"}, "unevaluatedItems": False},
+    # in-place applicators pass up the marks of the children that pass
+    {"allOf": [{"minItems": 0}], "unevaluatedItems": False},
     # 2019-09 tuple forms; contains is annotation-inert there
-    (True, {"$schema": "https://json-schema.org/draft/2019-09/schema",
-            "items": [{"type": "integer"}],
-            "unevaluatedItems": {"type": "string"}}),
-    (True, {"$schema": "https://json-schema.org/draft/2019-09/schema",
-            "items": [{"type": "integer"}],
-            "additionalItems": {"type": "number"},
-            "unevaluatedItems": False}),
-    (True, {"$schema": "https://json-schema.org/draft/2019-09/schema",
-            "contains": {"type": "integer"},
-            "unevaluatedItems": {"type": "integer"}}),
+    {"$schema": "https://json-schema.org/draft/2019-09/schema",
+     "items": [{"type": "integer"}],
+     "unevaluatedItems": {"type": "string"}},
+    {"$schema": "https://json-schema.org/draft/2019-09/schema",
+     "items": [{"type": "integer"}],
+     "additionalItems": {"type": "number"},
+     "unevaluatedItems": False},
+    {"$schema": "https://json-schema.org/draft/2019-09/schema",
+     "contains": {"type": "integer"},
+     "unevaluatedItems": {"type": "integer"}},
 ]
 
 
-@pytest.mark.parametrize(
-    "lowers,schema", UEI_CASES, ids=[str(i) for i in range(len(UEI_CASES))]
-)
-def test_unevaluated_items_gated_lowering(spark, lowers, schema):
-    """Round 5: unevaluatedItems lowers on the variant path when no
-    in-place applicator (and, under 2020-12, no contains) can feed item
-    annotations — verdicts AND violation sites must match batch; the
-    gated shapes must refuse."""
+@pytest.mark.parametrize("schema", UEI_CASES, ids=[str(i) for i in range(len(UEI_CASES))])
+def test_unevaluated_items_gated_lowering(spark, schema):
+    """unevaluatedItems lowers on the variant path beside every sibling
+    that marks items (prefixItems, items, contains, in-place
+    applicators), with the batch route's verdicts and ordered records."""
     df = spark.createDataFrame([(d,) for d in UEI_DOCS], "doc string")
     eng = ConstraintEngine()
     compiled = eng.compile(dict(schema), validate_schema=False)
     var = compiled.apply_json(df, "doc")
-    if _route(compiled)[0] != "variant":
-        assert not lowers, f"expected {schema} to lower"
-        assert var.count() == len(UEI_DOCS)  # the engine fell back
-        return
-    assert lowers, f"expected {schema} to fall back"
+    assert _route(compiled) == ("variant", None), f"expected {schema} to lower"
     batch = compiled.apply_json(df, "doc", prefer_variant=False)
     vmap = {r.doc: r for r in var.select("doc", "passed", "violations").collect()}
     bmap = {r.doc: r for r in batch.select("doc", "passed", "violations").collect()}
     for d in UEI_DOCS:
         v, b = vmap[d], bmap[d]
         assert v.passed == b.passed, f"{schema} doc={d!r}: {v.passed} != {b.passed}"
-        if v.passed is False:
-            vk = sorted((x.keyword, x.instance_path) for x in v.violations)
-            bk = sorted((x.keyword, x.instance_path) for x in b.violations)
-            assert vk == bk, f"{schema} doc={d!r}: {vk} != {bk}"
+        vk = [tuple(x) for x in v.violations or []]
+        bk = [tuple(x) for x in b.violations or []]
+        assert vk == bk, f"{schema} doc={d!r}: {vk} != {bk}"

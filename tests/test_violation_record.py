@@ -38,6 +38,54 @@ PROBES = {
         "b bigint, a bigint",
         [(1, 2), (None, 3), (0, None)],
     ),
+    # unevaluated* covers only what a sibling PASSED on: a failed
+    # properties/prefixItems/items application leaves its member
+    # unevaluated, and a failed in-place subschema passes no marks up
+    "uneval_properties": (
+        {"properties": {"a": {"type": "string"}}, "unevaluatedProperties": False},
+        "a bigint, b string",
+        [(1, "x"), (None, "x"), (2, None), (None, None)],
+    ),
+    "uneval_all_of": (
+        {"allOf": [{"properties": {"a": {"type": "string"}}}], "unevaluatedProperties": False},
+        "a bigint, b string",
+        [(1, "x"), (None, "x"), (2, None), (None, None)],
+    ),
+    "uneval_map": (
+        {"properties": {"m": {"properties": {"a": {"type": "string"}},
+                              "unevaluatedProperties": False}}},
+        "m map<string,bigint>",
+        [({"a": 1, "b": 2},), ({"a": 1},), ({},), (None,)],
+    ),
+    "uneval_prefix_items": (
+        {"properties": {"nums": {"prefixItems": [{"type": "string"}],
+                                 "unevaluatedItems": False}}},
+        "nums array<bigint>",
+        [([1, 2],), ([1],), ([],), (None,)],
+    ),
+    "uneval_items": (
+        {"properties": {"nums": {"items": {"maximum": 1}, "unevaluatedItems": False}}},
+        "nums array<bigint>",
+        [([1, 2],), ([0, 1],), ([3],), (None,)],
+    ),
+    # branch-dependent coverage: lowers on both Column routes
+    "uneval_any_of": (
+        {"anyOf": [{"properties": {"a": {"minimum": 5}}}, {"properties": {"b": True}}],
+         "unevaluatedProperties": False},
+        "a bigint, b bigint, c bigint",
+        [(1, 2, None), (7, None, 3), (7, 2, None), (1, None, None), (None, None, None)],
+    ),
+    # a $ref beside unevaluatedProperties resolves against its schema's
+    # relative $id once
+    "uneval_ref_under_id": (
+        {"$id": "http://example.com/root.json",
+         "properties": {"o": {"$id": "sub/o.json", "$ref": "t.json",
+                              "unevaluatedProperties": False}},
+         "$defs": {"t": {"$id": "http://example.com/sub/t.json",
+                         "properties": {"a": {"maximum": 1}}}}},
+        "o struct<a:bigint,b:bigint>",
+        [({"a": 1, "b": 2},), ({"a": 3, "b": 0},), (None,)],
+    ),
 }
 
 
